@@ -1,8 +1,9 @@
-"""Brazilian national holiday dimension, built driver-side.
+"""Brazilian national holiday dates, computed driver-side.
 
 Replaces the reference's per-row ``x in holidays.Brazil()`` Python call
-(reference dag.py:161, C5) with a tiny holiday dimension that the
-transform broadcast-joins against — no per-row Python at any scale.
+(reference dag.py:161, C5) with a list of dates that the transform tests
+with one set-membership expression (``functions.derive.is_holiday``) —
+no per-row Python at any scale.
 
 Movable feasts use the anonymous Gregorian Easter computus (public
 algorithm); fixed dates are the Brazilian national holidays the
@@ -12,8 +13,6 @@ algorithm); fixed dates are the Brazilian national holidays the
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import DataFrame, SparkSession
 
 FIXED_HOLIDAYS = (
     (1, 1),    # Confraternização Universal
@@ -57,12 +56,3 @@ def national_holidays(year: int, include_optional: bool = False) -> list[dt.date
     fixed = [dt.date(year, m, d) for m, d in FIXED_HOLIDAYS]
     return sorted(fixed + movable)
 
-
-def holiday_dim(
-    spark: SparkSession,
-    years: range | list[int],
-    include_optional: bool = False,
-) -> DataFrame:
-    """One-column (holiday_date: date) dimension for the given years."""
-    rows = [(d,) for y in years for d in national_holidays(y, include_optional)]
-    return spark.createDataFrame(rows, "holiday_date date")

@@ -3,21 +3,33 @@
 Reference shape (dag.py): per-year merge → clean → transform, 5 CSV
 materializations per lane, union, star schema, row-wise Postgres load.
 Spark shape: the whole chain is a single DataFrame lineage per year,
-unioned lazily; the only actions are the two-pass medians and the sink
-writes.  Persist only the post-union table (re-read 6× by the star
-builder, dag.py:220-261).
+unioned lazily.  Each piece of shared work runs once per run:
+
+- each year's raw CSVs are scanned, joined and deduplicated once: the
+  merged lane is persisted, and everything downstream of it (clean,
+  transform) is narrow, so its consumers recompute it cheaply;
+- the only actions are one median action per year lane (the three
+  imputed columns, ``clean``) and the sink writes;
+- one aggregation builds all five dimensions; it is persisted, and the
+  dimension writes and the fact's five broadcast joins all read it.
 
 Stage map (SURVEY §2 ids in parens):
 
   merge_year      J1 right join + D1 dedup + P2 drops       (dag.py:44-57)
+                  — persisted by run_pipeline
   clean           C9 imputation, C10 domains, F1-F3 filters (dag.py:59-129)
-  transform       C1-C8, C11-C14 derivations                (dag.py:131-202)
+                  — the lane's one median action
+  transform       C1-C8, C11-C14 derivations; C5 holiday    (dag.py:131-202)
+                  flag as an IN-list expression (no join)
   union_years     U1                                        (dag.py:204-213)
-  build_star      D2/D3, W1, J2-J6, C18/C19                 (dag.py:215-287)
+  build_star      D2/D3, W1, J2-J6, C18/C19: one persisted  (dag.py:215-287)
+                  multi-dimension aggregate feeds dims + fact
 """
 
 from __future__ import annotations
 
+import datetime as dt
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +62,17 @@ DIM_DESCRITIVO_KEY = [
     "condicao_metereologica",
 ]
 DIM_VEICULO_KEY = ["tipo_veiculo", "marca", "modelo", "ano_fabricacao_veiculo"]
+# Surrogate id column → natural key, in the fact's FK order.
+DIM_KEYS = {
+    "id_tempo": DIM_TEMPO_KEY,
+    "id_rodovia": DIM_RODOVIA_KEY,
+    "id_local": DIM_LOCAL_KEY,
+    "id_descritivo": DIM_DESCRITIVO_KEY,
+    "id_veiculo": DIM_VEICULO_KEY,
+}
+
+# F1/F2 (dag.py:116-119): (lhs, rhs) pairs, keep rows where lhs <= rhs.
+CONSTRAINTS = (("mortos", "pessoas"), ("feridos", "pessoas"))
 
 
 @dataclass
@@ -75,12 +98,36 @@ def merge_year(ocorrencia: DataFrame, causas: DataFrame) -> DataFrame:
 
 
 def clean(df: DataFrame) -> DataFrame:
-    """dag.py:59-129: parse, impute, validate domains, filter constraints."""
+    """dag.py:59-129: parse, impute, validate domains, filter constraints.
+
+    All three medians come from ONE action over the input (the persisted
+    merged lane).  The pessoas/veiculos medians are taken over the rows
+    the constraint filters keep (dag.py:122-127): those filters read only
+    raw mortos/feridos/pessoas, which nothing before them changes, so
+    their predicate can be evaluated up front as a ``FILTER`` clause.
+    The imputed values are still applied at the reference's two
+    positions: imputing pessoas before the filters would change which
+    rows survive them.
+    """
+    kept = " AND ".join(f"{lhs} <= {rhs}" for lhs, rhs in CONSTRAINTS)
+    medians = cleaning.exact_medians(
+        df,
+        {
+            # The reference's ano median excludes != 0 (dag.py:79).
+            "ano_fabricacao_veiculo": "ano_fabricacao_veiculo <> 0",
+            "pessoas": f"{kept} AND pessoas > 0",
+            "veiculos": f"{kept} AND veiculos > 0",
+        },
+    )
     out = df.withColumn("data_inversa", F.to_date("data_inversa"))
     out = out.withColumn("hora", F.hour(F.to_timestamp("horario", "HH:mm:ss")))
-    # C9/A1: null/0 → median (two-pass literal injection; the reference's
-    # ano median excludes != 0, dag.py:79).
-    out = cleaning.impute_median(out, ["ano_fabricacao_veiculo"], exclude="nonzero")
+    # C9/A1: null/0 → median (two-pass literal injection).
+    out = out.withColumn(
+        "ano_fabricacao_veiculo",
+        cleaning.impute_null_or_zero(
+            "ano_fabricacao_veiculo", medians["ano_fabricacao_veiculo"]
+        ),
+    )
     # C9: null sentinels.
     out = cleaning.fill_sentinels(
         out,
@@ -91,15 +138,19 @@ def clean(df: DataFrame) -> DataFrame:
     # C10/F5: 7 domain allow-lists.
     out = cleaning.apply_domains(out, schemas.DOMAINS)
     # F1/F2: cross-field constraints.
-    out = cleaning.constraint_filter_le(out, "mortos", "pessoas")
-    out = cleaning.constraint_filter_le(out, "feridos", "pessoas")
+    for lhs, rhs in CONSTRAINTS:
+        out = cleaning.constraint_filter_le(out, lhs, rhs)
     # dag.py:122-127: 0-markers in pessoas/veiculos → median of >0 subset.
-    out = cleaning.impute_median(out, ["pessoas", "veiculos"])
-    return out
+    return out.withColumns(
+        {c: cleaning.impute_null_or_zero(c, medians[c]) for c in ("pessoas", "veiculos")}
+    )
 
 
-def transform(df: DataFrame, holidays_df: DataFrame) -> DataFrame:
-    """dag.py:131-202: derive, decode, split; drop consumed source cols."""
+def transform(df: DataFrame, holidays: Sequence[dt.date]) -> DataFrame:
+    """dag.py:131-202: derive, decode, split; drop consumed source cols.
+
+    ``holidays``: the national holiday dates of the run's years (C5).
+    """
     parts = derive.date_parts("data_inversa")
     out = df.withColumns(
         {
@@ -108,12 +159,12 @@ def transform(df: DataFrame, holidays_df: DataFrame) -> DataFrame:
             "trimestre": parts["trimestre"],
             "mes": derive.month_name_pt("data_inversa"),
             "fase_dia": derive.fase_dia("hora"),
+            "feriado": derive.is_holiday("data_inversa", holidays),
             "dia_util": derive.dia_util("dia_semana"),
             "uso_solo": derive.recode("uso_solo", {"Não": "Rural", "Sim": "Urbano"}),
             "lat_log": text.lat_log("latitude", "longitude"),
         }
     )
-    out = derive.with_holiday_flag(out, "data_inversa", holidays_df, out_col="feriado")
     out = text.multilabel_flags(out, "tracado_via")
     out = text.split_make_model(out, "marca")
     out = out.withColumnsRenamed({"br": "rodovia", "km": "posicao_rodovia"})
@@ -132,18 +183,22 @@ def union_years(dfs: list[DataFrame]) -> DataFrame:
 def build_star(unioned: DataFrame) -> StarSchema:
     """dag.py:215-287: 5 dims (distinct + surrogate) + fact via broadcast joins.
 
-    ``unioned`` should be persisted by the caller — it feeds 6 outputs.
+    The five dimensions come from ONE persisted aggregate over
+    ``unioned`` (caller-owned, session-lifetime: one cache entry per
+    distinct input plan); the dimension writes and the fact's broadcast
+    joins all read it, so ``unioned`` is scanned twice — once by that
+    aggregate, once by the fact.  Write the dimensions before the fact
+    (the reference's FK load order): the first dimension write fills the
+    aggregate's cache.  A fact computed first starts its five broadcasts
+    at once, and more than one of them may compute the aggregate before
+    the cache is filled (measured: twice).
     ``id_veiculo`` is kept in the fact although the reference DDL omits it
     (dag.py:372-381 vs 261) — documented deviation, FIXTURES.md.
     """
-    dims = {
-        "id_tempo": (star.build_dimension(unioned, DIM_TEMPO_KEY, "id_tempo"), DIM_TEMPO_KEY),
-        "id_rodovia": (star.build_dimension(unioned, DIM_RODOVIA_KEY, "id_rodovia"), DIM_RODOVIA_KEY),
-        "id_local": (star.build_dimension(unioned, DIM_LOCAL_KEY, "id_local"), DIM_LOCAL_KEY),
-        "id_descritivo": (star.build_dimension(unioned, DIM_DESCRITIVO_KEY, "id_descritivo"), DIM_DESCRITIVO_KEY),
-        "id_veiculo": (star.build_dimension(unioned, DIM_VEICULO_KEY, "id_veiculo"), DIM_VEICULO_KEY),
-    }
-    fact = star.attach_fks(unioned, dims)
+    dims = star.build_dimensions(unioned, DIM_KEYS, persist=True)
+    fact = star.attach_fks(
+        unioned, {id_col: (dims[id_col], key) for id_col, key in DIM_KEYS.items()}
+    )
     fact = fact.select(
         "id_descritivo", "id_tempo", "id_rodovia", "id_local", "id_veiculo",
         F.col("pessoas").cast("int").alias("pessoas_envolvidas"),
@@ -157,35 +212,32 @@ def build_star(unioned: DataFrame) -> StarSchema:
         order_by=["id_veiculo"],
     )
     return StarSchema(
-        dim_tempo=dims["id_tempo"][0],
-        dim_rodovia=dims["id_rodovia"][0],
-        dim_local=dims["id_local"][0],
-        dim_descritivo=dims["id_descritivo"][0],
-        dim_veiculo=dims["id_veiculo"][0],
+        dim_tempo=dims["id_tempo"],
+        dim_rodovia=dims["id_rodovia"],
+        dim_local=dims["id_local"],
+        dim_descritivo=dims["id_descritivo"],
+        dim_veiculo=dims["id_veiculo"],
         fato_acidentes=fact,
     )
 
 
 def run_pipeline(
-    spark: SparkSession,
-    year_files: dict[int, dict[str, str]],
-    holidays_df: DataFrame | None = None,
+    spark: SparkSession, year_files: dict[int, dict[str, str]]
 ) -> StarSchema:
-    """End-to-end: raw CSVs → star schema, one lazy program + 3 scalar medians.
+    """End-to-end: raw CSVs → star schema, one lazy program + one median
+    action per year.
 
     ``year_files``: {year: {'ocorrencia': path, 'causas': path}} — the
-    urls.json analogue (dag.py:449-466).
+    urls.json analogue (dag.py:449-466).  Each year's merged lane is
+    persisted here (caller-owned, session-lifetime: one cache entry per
+    distinct input plan, released by ``spark.catalog.clearCache``).
     """
-    if holidays_df is None:
-        holidays_df = holidays_br.holiday_dim(
-            spark, sorted(year_files)
-        )
+    holidays = [d for y in sorted(year_files) for d in holidays_br.national_holidays(y)]
     lanes = []
     for year in sorted(year_files):
         paths = year_files[year]
         ocorr = readers.read_raw_csv(spark, paths["ocorrencia"], schemas.OCORRENCIA_SCHEMA)
         causas = readers.read_raw_csv(spark, paths["causas"], schemas.CAUSAS_SCHEMA)
-        lane = transform(clean(merge_year(ocorr, causas)), holidays_df)
-        lanes.append(lane)
-    unioned = union_years(lanes).persist()
-    return build_star(unioned)
+        merged = merge_year(ocorr, causas).persist()
+        lanes.append(transform(clean(merged), holidays))
+    return build_star(union_years(lanes))

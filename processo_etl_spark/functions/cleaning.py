@@ -12,8 +12,11 @@ Scale note: the median is an aggregate consumed as a scalar.  We compute
 it in one tiny job and inject it as a literal (two-pass), which re-plans
 the main job with a constant — cheaper at 100 TB than a windowed
 ``median() OVER ()`` (global window = single-partition exchange) or a
-cross-join subquery.  This is the ONLY place the engine calls an action
-outside sinks.
+cross-join subquery.  :func:`exact_medians` owns that pattern: every
+median of one frame comes from ONE action, each column with its own
+``FILTER`` predicate, so a caller can take medians meant for different
+positions of its lineage in a single pass (the star pipeline's ``clean``
+does, etl/pipeline.py).
 """
 
 from __future__ import annotations
@@ -24,15 +27,26 @@ from pyspark.sql import functions as F
 NOT_INFORMED = "não informado"
 
 
-def exact_median(df: DataFrame, col: str, exclude_zero: bool = True) -> float:
-    """Exact median (pandas-parity: interpolates even-count middles).
+def exact_medians(df: DataFrame, predicates: dict[str, str]) -> dict[str, float]:
+    """Exact medians of several columns in ONE action: column → median of
+    the rows where its SQL ``predicate`` holds (``percentile ... FILTER``).
 
-    Uses exact ``percentile`` — matches pandas/DuckDB ``median``.  At the
-    100 TB scale swap for ``percentile_approx`` (documented deviation).
+    Exact ``percentile`` matches pandas/DuckDB ``median`` (interpolates
+    even-count middles).  A column with no qualifying row gets 0.0.  At
+    the 100 TB scale swap for ``percentile_approx`` (documented deviation).
     """
-    src = df.filter(F.col(col) > 0) if exclude_zero else df
-    row = src.select(F.expr(f"percentile({col}, 0.5)").alias("m")).first()
-    return float(row["m"]) if row and row["m"] is not None else 0.0
+    row = df.select(
+        *[
+            F.expr(f"percentile({c}, 0.5) FILTER (WHERE {pred})").alias(c)
+            for c, pred in predicates.items()
+        ]
+    ).first()
+    return {c: float(row[c]) if row[c] is not None else 0.0 for c in predicates}
+
+
+def exact_median(df: DataFrame, col: str, exclude_zero: bool = True) -> float:
+    """Exact median of one column; ``exclude_zero`` keeps ``col > 0`` rows."""
+    return exact_medians(df, {col: f"{col} > 0" if exclude_zero else "true"})[col]
 
 
 def impute_null_or_zero(col: str, value: float | int) -> Column:
@@ -46,26 +60,16 @@ def impute_median(
 ) -> DataFrame:
     """Two-pass median imputation for null/zero markers (dag.py:79-81, 122-127).
 
-    ALL medians compute in ONE action (aggregate FILTER clauses), not one
-    job per column — the two-pass pattern costs a single tiny job
-    regardless of how many columns are imputed.
+    ALL medians compute in ONE action (:func:`exact_medians`), not one
+    job per column.
 
     ``exclude``: 'positive' keeps ``c > 0`` rows for the median (pessoas/
     veiculos, dag.py:122-123); 'nonzero' keeps ``c != 0`` (the reference's
     ano_fabricacao_veiculo filter, dag.py:79 — ``!= 0``, not ``> 0``).
     """
     pred = {"positive": "> 0", "nonzero": "<> 0"}[exclude]
-    row = df.select(
-        *[
-            F.expr(f"percentile({c}, 0.5) FILTER (WHERE {c} {pred})").alias(c)
-            for c in cols
-        ]
-    ).first()
-    out = df
-    for col in cols:
-        med = float(row[col]) if row[col] is not None else 0.0
-        out = out.withColumn(col, impute_null_or_zero(col, med))
-    return out
+    medians = exact_medians(df, {c: f"{c} {pred}" for c in cols})
+    return df.withColumns({c: impute_null_or_zero(c, m) for c, m in medians.items()})
 
 
 def fill_sentinels(

@@ -5,14 +5,17 @@ date parts (dag.py:156-160, C3), Portuguese month names (dag.py:140-157,
 C4), day-phase case expression (dag.py:106-113, C7), weekday/holiday
 flags (dag.py:161-162, C5/C6), value recodes (dag.py:165, C8).
 
-The holiday flag is a broadcast join against a driver-built holiday
-dimension (see ``etl.holidays_br``) instead of the reference's per-row
-``x in holidays.Brazil()`` Python call — no UDF, scales to any data size.
+The holiday flag is a set-membership expression over the driver-computed
+holiday dates (see ``etl.holidays_br``) instead of the reference's per-row
+``x in holidays.Brazil()`` Python call — no UDF, no relation, no join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import datetime as dt
+from collections.abc import Sequence
+
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # dag.py:140-153 — deterministic month-name map (no cluster-locale dependency).
@@ -88,17 +91,12 @@ def recode(c: Column | str, mapping: dict[str, str], keep_unmatched: bool = True
     return expr.otherwise(col) if keep_unmatched else expr
 
 
-def with_holiday_flag(
-    df: DataFrame, date_col: str, holidays_df: DataFrame, out_col: str = "feriado"
-) -> DataFrame:
-    """Holiday flag via broadcast left join on a holiday dim (replaces dag.py:161).
-
-    ``holidays_df`` has a single ``holiday_date`` date column (tiny) —
-    broadcast join + null test; no per-row Python.
-    """
-    dim = F.broadcast(holidays_df.select(F.col("holiday_date")).distinct())
-    joined = df.join(dim, df[date_col] == dim["holiday_date"], "left")
-    return joined.withColumn(out_col, F.col("holiday_date").isNotNull()).drop("holiday_date")
+def is_holiday(date_col: Column | str, holidays: Sequence[dt.date]) -> Column:
+    """Holiday flag (replaces dag.py:161): ``date IN (<holidays>)``, a
+    literal test (Catalyst hashes it into an InSet above 10 dates, i.e. from
+    two years on); a NULL date → False."""
+    c = F.col(date_col) if isinstance(date_col, str) else date_col
+    return F.coalesce(c.isin(*holidays), F.lit(False))
 
 
 def hour_decimal(ts: Column | str) -> Column:

@@ -149,10 +149,16 @@ def bloom_filter_words(
     return words
 
 
+# Column of the one-row filter relation.  Reserved (``__pe_`` prefix): it
+# is cross-joined onto caller frames, so a plain name such as ``words``
+# would be ambiguous with — and then dropped along with — a caller column.
+WORDS_COL = "__pe_bloom_words"
+
+
 def bloom_words_relation(
     df: DataFrame, key_col: str | Column, n_bits: int = 1 << 16, k: int = 4
 ) -> DataFrame:
-    """The filter as a ONE-ROW relation (``words``: dense array<long>,
+    """The filter as a ONE-ROW relation (``WORDS_COL``: dense array<long>,
     length m/32) — the in-plan twin of :func:`bloom_filter_words`: the
     same dense word array, built by the same fixed-grid groupBy, but it
     stays IN the plan and attaches to consumers as a broadcast one-row
@@ -178,7 +184,7 @@ def bloom_words_relation(
                 lambda i: F.coalesce(
                     F.element_at("_m", i), F.lit(0).cast("long")
                 ),
-            ).alias("words")
+            ).alias(WORDS_COL)
         )
     )
 
@@ -191,7 +197,7 @@ def bloom_hit_expr(
     shuffle, whole-stage-codegen friendly (constant-table loops are
     unrolled, not HOF-folded; see SCALE.md on HOFs over constants).
 
-    ``words`` may also be a Column (the ``words`` array of a
+    ``words`` may also be a Column (the ``WORDS_COL`` array of a
     :func:`bloom_words_relation` row attached by a broadcast crossJoin)
     — identical arithmetic, the array is just read from the joined row
     instead of a plan literal."""
@@ -248,10 +254,10 @@ def join_bloom_pruned(
         left.crossJoin(F.broadcast(filt))
         .filter(
             bloom_hit_expr(
-                F.col("words"), F.col(left_key).cast("string"), n_bits, k
+                F.col(WORDS_COL), F.col(left_key).cast("string"), n_bits, k
             )
         )
-        .drop("words")
+        .drop(WORDS_COL)
     )
     return pruned.join(right, pruned[left_key] == right[right_key])
 
@@ -327,8 +333,8 @@ def bloom_contamination(
         ).alias("gram"),
     ).crossJoin(F.broadcast(filt))
     flagged = corpus_grams.withColumn(
-        "bloom_hit", bloom_hit_expr(F.col("words"), F.col("gram"), n_bits, k)
-    ).drop("words")
+        "bloom_hit", bloom_hit_expr(F.col(WORDS_COL), F.col("gram"), n_bits, k)
+    ).drop(WORDS_COL)
     exact = flagged.join(
         F.broadcast(eval_grams.withColumn("exact_hit", F.lit(1))), "gram", "left"
     )

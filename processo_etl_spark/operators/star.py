@@ -14,8 +14,9 @@ prefix-sum offsets), so there is NO single-partition window at any
 dimension size (r2: replaces the r1 global-window + 1M-row zipWithIndex
 fallback; the fallback remains for order-insensitive bulk ids).
 
-Fact joins broadcast the dimensions explicitly — 5 broadcast hash joins,
-zero shuffles of the fact table.
+All dimensions of a star can come from one aggregation
+(:func:`build_dimensions`).  Fact joins broadcast the dimensions
+explicitly — 5 broadcast hash joins, zero shuffles of the fact table.
 """
 
 from __future__ import annotations
@@ -24,27 +25,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def build_dimensions(
+    df: DataFrame, keys_by_id: dict[str, list[str]], persist: bool = False
+) -> dict[str, DataFrame]:
+    """Several dimensions from ONE aggregation: id_col → dimension
+    (natural key columns + contiguous deterministic surrogate, D2+W1).
+
+    Ids are ``row_number() OVER (ORDER BY natural_key)`` semantics.  One
+    ``agg`` holds a map-side partial ``collect_set`` per dimension (each
+    partition dedups its own keys); each merged set is ``array_sort``-ed
+    (struct order = natural-key order; keys are non-null post-imputation)
+    and ``posexplode`` numbers it 1..N.  No unpartitioned window, no extra
+    sampling/counts jobs — one shuffle for all the dimensions, whose
+    payload is the distinct domains themselves, which is what a dimension
+    IS.  ``persist`` keeps that one-row aggregate (caller-owned), so every
+    consumer of every dimension shares one computation.  The single
+    combiner holds every |domain|, correct for classic dimensions by
+    definition; a degenerate near-fact-cardinality "dimension" must use
+    ``build_dimension_rank``/``build_dimension_auto`` instead."""
+    packed = df.agg(
+        *[
+            F.array_sort(F.collect_set(F.struct(*key))).alias(f"__ks{i}")
+            for i, key in enumerate(keys_by_id.values())
+        ]
+    )
+    if persist:
+        packed = packed.persist()
+    return {
+        id_col: packed.select(F.posexplode(f"__ks{i}").alias("__pos", "__k")).select(
+            F.col("__k.*"), (F.col("__pos") + 1).cast("int").alias(id_col)
+        )
+        for i, id_col in enumerate(keys_by_id)
+    }
+
+
 def build_dimension(
     df: DataFrame, natural_key: list[str], id_col: str
 ) -> DataFrame:
-    """Distinct natural key + contiguous deterministic surrogate (D2+W1).
-
-    Ids are ``row_number() OVER (ORDER BY natural_key)`` semantics,
-    computed by ONE aggregation job: map-side partial ``collect_set``
-    dedups each partition, the merged set is ``array_sort``-ed (struct
-    order = natural-key order; keys are non-null post-imputation) and
-    ``posexplode`` numbers it 1..N.  No unpartitioned window, no extra
-    sampling/counts jobs — one shuffle whose payload is the distinct
-    domain itself, which is what a dimension IS.  The single combiner
-    holds |domain| rows, correct for a classic dimension by definition;
-    a degenerate near-fact-cardinality "dimension" must use
-    ``build_dimension_rank``/``build_dimension_auto`` instead."""
-    packed = df.select(F.struct(*natural_key).alias("__k")).agg(
-        F.array_sort(F.collect_set("__k")).alias("__ks")
-    )
-    return packed.select(
-        F.posexplode("__ks").alias("__pos", "__k")
-    ).select(F.col("__k.*"), (F.col("__pos") + 1).cast("int").alias(id_col))
+    """One dimension: the single-dimension case of :func:`build_dimensions`."""
+    return build_dimensions(df, {id_col: natural_key})[id_col]
 
 
 def build_dimension_rank(

@@ -91,6 +91,40 @@ _ETL_GOLDEN = """
 """
 
 
+def _fixture_files() -> dict[int, dict[str, str]]:
+    """The fixture CSVs in a content-addressed directory (same bytes →
+    same path).  Every call then builds the same scan plans, so the
+    pipeline's persists (one merged lane per year + the dimension
+    aggregate) dedup into the CacheManager's existing entries instead of
+    adding new ones per call."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    from processo_etl_spark.etl import fixtures
+
+    tmp = tempfile.mkdtemp(prefix="datatran_fixture_")
+    files = fixtures.write_fixture(tmp)
+    digest = hashlib.sha256()
+    for name in sorted(os.listdir(tmp)):
+        with open(os.path.join(tmp, name), "rb") as f:
+            digest.update(name.encode() + b"\0" + f.read())
+    dest = os.path.join(
+        tempfile.gettempdir(), f"datatran_fixture_{digest.hexdigest()[:16]}"
+    )
+    try:
+        os.rename(tmp, dest)
+    except OSError:
+        if not os.path.isdir(dest):
+            raise
+        shutil.rmtree(tmp)  # written by an earlier (or a concurrent) call
+    return {
+        year: {kind: os.path.join(dest, os.path.basename(p)) for kind, p in paths.items()}
+        for year, paths in files.items()
+    }
+
+
 @register("etl_star_pipeline", oracle=_ETL_GOLDEN)
 def etl_star_pipeline(spark, sf_dir):
     """The FULL reference pipeline (dag.py end-to-end): dirty raw CSVs →
@@ -102,13 +136,9 @@ def etl_star_pipeline(spark, sf_dir):
     the oracle is its golden table; the 11 notebook invariants are
     asserted in tests/test_etl_pipeline.py.
     """
-    import tempfile
+    from processo_etl_spark.etl import pipeline
 
-    from processo_etl_spark.etl import fixtures, pipeline
-
-    dest = tempfile.mkdtemp(prefix="datatran_fixture_")
-    files = fixtures.write_fixture(dest)
-    ss = pipeline.run_pipeline(spark, files)
+    ss = pipeline.run_pipeline(spark, _fixture_files())
     return (
         ss.fato_acidentes.join(F.broadcast(ss.dim_tempo), on="id_tempo")
         .select(

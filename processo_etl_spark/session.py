@@ -11,6 +11,8 @@ at test scale:
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle (naive-UTC).
 - Arrow enabled for any pandas interchange (Pandas UDFs, toPandas).
+- Driver heap sized to the machine: half of physical RAM, capped at 24g
+  (:func:`default_driver_memory`); ``$SPARK_DRIVER_MEMORY`` overrides.
 """
 
 from __future__ import annotations
@@ -18,6 +20,26 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+DRIVER_MEMORY_CAP_MB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: ``$SPARK_DRIVER_MEMORY`` if set,
+    else half of ``MemTotal`` (the driver JVM shares the machine with its
+    Python workers and the OS page cache), capped at
+    ``DRIVER_MEMORY_CAP_MB``; the cap alone where ``meminfo`` is
+    unreadable."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{DRIVER_MEMORY_CAP_MB}m"
+    return f"{min(total_kb // 2048, DRIVER_MEMORY_CAP_MB)}m"
 
 
 def get_spark(
@@ -44,7 +66,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Whole-stage-codegen COMPILE cache (r15): the default 100

@@ -55,6 +55,56 @@ def test_http_zip_ingest_local(tmp_path):
         assert f.readline().strip() == "id;uf"
 
 
+def test_clean_fused_medians_equal_two_step(spark):
+    # clean() takes all three medians in one action on the pre-filter
+    # frame; pessoas/veiculos must still be the medians over the rows the
+    # constraint filters keep (dag.py:122-127).  Row 5 fails mortos <=
+    # pessoas and holds pessoas=100 / veiculos=50, which would move both
+    # medians (3 → 3.5, 2 → 2.5) if counted.
+    from processo_etl_spark.functions import cleaning
+
+    empty = pipeline.merge_year(
+        spark.createDataFrame([], schemas.OCORRENCIA_SCHEMA),
+        spark.createDataFrame([], schemas.CAUSAS_SCHEMA),
+    )
+    cols = ("id", "mortos", "feridos", "pessoas", "veiculos", "ano_fabricacao_veiculo")
+    vals = [
+        (1, 0, 0, 2, 1, 2000),
+        (2, 0, 1, 3, 0, 2010),
+        (3, 0, 0, 0, 2, None),
+        (4, 0, 0, 4, 3, 0),
+        (5, 200, 0, 100, 50, 2005),
+        (6, 0, 0, None, 1, 2001),
+    ]
+    rows = [{**dict.fromkeys(empty.columns), **dict(zip(cols, v))} for v in vals]
+    df = spark.createDataFrame(rows, empty.schema)
+
+    ref = cleaning.impute_median(df, ["ano_fabricacao_veiculo"], exclude="nonzero")
+    for lhs, rhs in pipeline.CONSTRAINTS:
+        ref = cleaning.constraint_filter_le(ref, lhs, rhs)
+    ref = cleaning.impute_median(ref, ["pessoas", "veiculos"])
+
+    got = {r["id"]: tuple(r) for r in pipeline.clean(df).select(*cols).collect()}
+    assert got == {r["id"]: tuple(r) for r in ref.select(*cols).collect()}
+    assert set(got) == {1, 2, 3, 4}
+    assert got[3][3] == 3.0 and got[2][4] == 2.0   # not 3.5 / 2.5
+    # the ano median is pre-filter: {2000, 2010, 2005, 2001} → 2003.
+    assert got[3][5] == got[4][5] == 2003.0
+
+
+def test_run_pipeline_one_execution_per_year(spark, tmp_path):
+    # The only actions run_pipeline takes are the per-lane median actions;
+    # everything else stays lazy until the sinks.
+    files = fixtures.write_fixture(str(tmp_path))
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    pipeline.run_pipeline(spark, files)
+    bus.waitUntilEmpty()
+    assert store.executionsCount() - before == len(files) == 2
+
+
 def test_constraint_filters_hold(star):
     # Análise.ipynb:1140/1150: no feridos>pessoas or mortos(obitos)>pessoas rows.
     f = star.fato_acidentes

@@ -108,19 +108,28 @@ def test_dia_util_and_recode(spark):
     assert got2 == {"Não": "Rural", "Sim": "Urbano", "Outro": "Outro"}
 
 
-def test_holiday_dim(spark):
+def test_national_holidays_and_flag(spark):
+    import datetime as dt
+
     from processo_etl_spark.etl import holidays_br
 
-    dim = holidays_br.holiday_dim(spark, [2023])
-    dates = {str(r["holiday_date"]) for r in dim.collect()}
+    dates = {str(d) for d in holidays_br.national_holidays(2023)}
     assert "2023-01-01" in dates and "2023-12-25" in dates
     assert "2023-04-07" in dates      # Good Friday 2023 (Easter Apr 9)
     # Carnival / Corpus Christi are the holidays lib's OPTIONAL category:
     # excluded by default (matching holidays.Brazil()), opt-in flag adds them.
     assert "2023-02-21" not in dates
-    opt = {str(r["holiday_date"])
-           for r in holidays_br.holiday_dim(spark, [2023], include_optional=True).collect()}
+    opt = {str(d) for d in holidays_br.national_holidays(2023, include_optional=True)}
     assert "2023-02-21" in opt and "2023-06-08" in opt
+
+    # The flag: set membership over the dates; a NULL date is not a holiday.
+    df = spark.createDataFrame(
+        [(1, dt.date(2023, 1, 1)), (2, dt.date(2023, 1, 2)), (3, None)],
+        "k int, d date",
+    )
+    flag = derive.is_holiday("d", holidays_br.national_holidays(2023))
+    got = {r["k"]: r["f"] for r in df.select("k", flag.alias("f")).collect()}
+    assert got == {1: True, 2: False, 3: False}
 
 
 def test_pandas_udf_extensibility_parity(spark):

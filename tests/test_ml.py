@@ -1812,6 +1812,42 @@ def test_bloom_contamination_null_text_row_survives(spark):
     assert out[2]["contaminated"] == (out[2]["n_bloom_hits"] > 0)
 
 
+def test_bloom_reserved_filter_column_keeps_caller_words(spark):
+    """The one-row filter relation's column is reserved: a caller column
+    named ``words`` survives the pruned join and can be the corpus id of
+    bloom_contamination (a plain ``words`` filter column was ambiguous
+    with it, and its ``drop`` removed the caller's column too)."""
+    from processo_etl_spark.ml import bloom
+
+    left = spark.createDataFrame(
+        [(1, "a b"), (2, "c d"), (3, "e f")], ["k", "words"]
+    )
+    right = spark.createDataFrame([(1, "x"), (3, "y")], ["rk", "v"])
+    out = bloom.join_bloom_pruned(left, right, "k", "rk", n_bits=1 << 12, k=4)
+    assert out.columns == ["k", "words", "rk", "v"]
+    assert sorted((r["k"], r["words"], r["v"]) for r in out.collect()) == [
+        (1, "a b", "x"), (3, "e f", "y"),
+    ]
+
+    corpus = spark.createDataFrame(
+        [(1, "shared five gram text here today ok"), (2, "nothing in common")],
+        ["words", "text"],
+    )
+    eval_set = spark.createDataFrame(
+        [(100, "shared five gram text here today ok")], ["doc_id", "text"]
+    )
+
+    def run(df, id_col):
+        res = bloom.bloom_contamination(
+            df, eval_set, "text", id_col, n=5, n_bits=1 << 12, k=4
+        )
+        return {r[id_col]: tuple(r)[1:] for r in res.collect()}
+
+    by_words = run(corpus, "words")
+    assert by_words == run(corpus.withColumnRenamed("words", "doc_id"), "doc_id")
+    assert by_words[1][-1] and set(by_words) == {1, 2}
+
+
 def test_pagerank_broadcast_and_shuffle_modes_bitequal(spark):
     """r14 vertex-mirroring dispatch: the broadcast-mode superstep
     (rank vector mirrored to dst-partitioned edges, zero shuffle) and

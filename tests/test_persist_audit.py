@@ -18,6 +18,10 @@ steady-pass sharing model and freed by session clearCache):
 - plans/textlm.heaps_vocab_growth     (ranked, bounds)
 - ml/selection.importance_weights     (toks, bstats)
 - operators/ranking.distributed_rank  (the ranked relation)
+- etl/pipeline.run_pipeline  (each year's merged lane; the one-row
+  five-dimension aggregate of build_star) — etl_star_pipeline writes its
+  fixture to a content-addressed directory, so re-runs build the same
+  plans
 
 The audit: run a sweep of every persist-owning headline query TWICE and
 assert (a) the second sweep adds ZERO cache entries — no per-call
@@ -38,6 +42,7 @@ QUERIES = [
     "dedup_minhash_lsh",
     "decontaminate_bloom",
     "graph_pagerank_distributed",
+    "etl_star_pipeline",
 ]
 
 # One entry per DISTINCT persisted plan reachable from the sweep: the

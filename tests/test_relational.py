@@ -53,6 +53,31 @@ def test_build_dimension_contiguous_deterministic(spark):
     assert rows == sorted((r["id"], r["k1"]) for r in dim.collect())
 
 
+def test_build_dimensions_equals_build_dimension(spark):
+    # One aggregate for several dimensions == one build_dimension each ==
+    # row_number() over the distinct natural key (ids 1..N in key order),
+    # persisted or not.
+    from pyspark.sql import Window
+
+    df = spark.createDataFrame(
+        [("b", 1, "x"), ("a", 2, "y"), ("b", 1, "x"), ("c", 3, "w"), ("a", 1, "y")],
+        ["k1", "k2", "k3"],
+    )
+    keys = {"id_a": ["k1", "k2"], "id_b": ["k3"], "id_c": ["k2", "k1"]}
+    for persist in (False, True):
+        dims = star.build_dimensions(df, keys, persist=persist)
+        assert list(dims) == list(keys)
+        for id_col, key in keys.items():
+            one = star.build_dimension(df, key, id_col)
+            ref = df.select(*key).distinct().withColumn(
+                id_col, F.row_number().over(Window.orderBy(*key))
+            )
+            assert dims[id_col].columns == one.columns == [*key, id_col]
+            got = sorted(tuple(r) for r in dims[id_col].collect())
+            assert got == sorted(tuple(r) for r in one.collect())
+            assert got == sorted(tuple(r) for r in ref.collect())
+
+
 def test_attach_fks_broadcast_no_loss(spark):
     fact = spark.createDataFrame([("a",), ("b",), ("a",)], ["k"])
     dim = star.build_dimension(fact, ["k"], "id_k")

@@ -9,9 +9,10 @@ It is deliberately a SEPARATE artifact from bench.py (the headline
 contract is untouched): same noop-sink methodology, same
 $SPARK_GRAFT_SF_DIR override (default /tmp/sf2.5, built by
 ``python tools/gen_scale.py 25 /tmp/sf2.5``), core counts from
-$SPARK_GRAFT_SCALE_CPUS (default "32,8").  Each core count runs in its
+$SPARK_GRAFT_SCALE_CPUS (default: the cores this process may use, and a
+quarter of them — "4,1" on a 4-core host).  Each core count runs in its
 own subprocess so every measurement gets a fresh JVM at exactly
-local[N].
+local[N]; a failed subprocess stops the tool with its stderr.
 
 Usage:
     python tools/gen_scale.py 25 /tmp/sf2.5     # once
@@ -77,13 +78,20 @@ def inner(cpus: int, sf_dir: str, names: list[str]) -> int:
     return 0
 
 
+def default_cpus() -> str:
+    """High and low core counts this host can grant: all usable cores and
+    a quarter of them."""
+    n = len(os.sched_getaffinity(0))
+    return f"{n},{max(1, n // 4)}"
+
+
 def main() -> int:
     if len(sys.argv) > 1 and sys.argv[1] == "--inner":
         return inner(int(sys.argv[2]), sys.argv[3], sys.argv[4].split(","))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sf2.5")
     cpu_list = [
         int(c)
-        for c in os.environ.get("SPARK_GRAFT_SCALE_CPUS", "32,8").split(",")
+        for c in os.environ.get("SPARK_GRAFT_SCALE_CPUS", default_cpus()).split(",")
     ]
     names = (
         sys.argv[1].split(",") if len(sys.argv) > 1 else DEFAULT_QUERIES
@@ -104,15 +112,20 @@ def main() -> int:
             text=True,
             env=dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)),
         )
-        line = [
-            ln for ln in p.stdout.splitlines() if ln.startswith("{")
-        ][-1]
-        runs[cpus] = json.loads(line)
+        lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+        if p.returncode != 0 or not lines:
+            print(
+                f"bench_scaling: local[{cpus}] run failed (exit {p.returncode})\n"
+                + p.stderr[-4000:],
+                file=sys.stderr,
+            )
+            return 1
+        runs[cpus] = json.loads(lines[-1])
     hi, lo = max(cpu_list), min(cpu_list)
     ratios = {
         n: round(runs[lo]["steady"][n] / runs[hi]["steady"][n], 2)
         for n in names
-        if runs[hi]["steady"].get(n)
+        if runs[hi]["steady"].get(n) and runs[lo]["steady"].get(n)
     }
     art = {
         "metric": "scaling_spot_wall",
