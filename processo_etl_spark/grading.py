@@ -50,7 +50,7 @@ DECIMAL_CANARIES = frozenset({"canary_decimal_12_2", "canary_decimal_20_6"})
 EAGER_AT_BUILD = frozenset(
     {
         "graph_triangle_estimate_sampled",
-        # r13 activation: three bounded literal-inject jobs at plan
+        # three bounded literal-inject jobs at plan
         # construction (day count, the exact two-pass quantile bracket,
         # the per-quantile histogram-bucket lookup) — all over the
         # ≤5k-cell bounded histogram, never a raw-data re-scan.

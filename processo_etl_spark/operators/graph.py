@@ -51,7 +51,9 @@ def pagerank_from_edges(
 ) -> dict[str, float]:
     """Fixed-iteration power method on the (tiny) aggregated graph.
 
-    Every float op mirrors the SQL oracle exactly:
+    Weights must be non-negative; a node whose out-weights sum to 0
+    is dangling, the same as a node without out-edges.  Every float op
+    mirrors the SQL oracle exactly:
     ``contrib = (rank * w) / out`` left-associated, per-node sums are
     value-sorted left folds, and the update is
     ``(1−d)/n + d·(S + dang/n)`` with that literal bracketing.
@@ -60,6 +62,9 @@ def pagerank_from_edges(
     out: dict[str, float] = {}
     for s, _, w in edges:
         out[s] = out.get(s, 0.0) + float(w)
+    # a node whose out-weights sum to 0 is dangling, like a sink
+    out = {s: w for s, w in out.items() if w != 0.0}
+    edges = [e for e in edges if e[0] in out]
     rank = {v: 1.0 / n for v in nodes}
     base = (1.0 - damping) / n
     for _ in range(iterations):
@@ -129,12 +134,14 @@ def pagerank_distributed(
     scales with the data (billion-node graphs), unlike
     ``pagerank_from_edges``' driver power method.
 
-    ``edges`` is (src, dst, w), with NON-NULL weights as a precondition
-    (ADVICE r14): the fused node aggregate classifies a node as
-    dangling iff its summed out-weight is NULL, so a node whose every
-    out-edge carries a NULL ``w`` would be classed dangling and its
-    edges dropped from the routing join — coalesce weights to a default
-    upstream if your graph can contain them.  Per iteration:
+    ``edges`` is (src, dst, w), with NON-NULL, NON-NEGATIVE weights as
+    a precondition: the fused node aggregate classifies a node as
+    dangling iff its summed out-weight is NULL or 0, and drops its
+    edges from the routing join.  So a node whose out-edges all weigh 0
+    redistributes its mass uniformly like a sink (instead of dividing
+    by zero), and a node whose every out-edge carries a NULL ``w`` is
+    treated the same way — coalesce weights to a default upstream if
+    your graph can contain NULLs.  Per iteration:
     contributions
     ``(rank·w)/out_w`` route along edges via ONE equi-join on src and
     combine per dst; the update is ``(1−d)/n + d·(S + dang/n)`` with
@@ -170,8 +177,8 @@ def pagerank_distributed(
     — the module's oracle-parity convention, giving results identical
     bit-for-bit to the driver twin and to a DuckDB fixed-iteration
     replay.  Fold state is one node's in-degree of doubles for the
-    combine, and — the larger bound — the GLOBAL dangling-mass
-    aggregate folds one array of |dangling| ranks in a single task
+    combine, and — the larger bound — the GLOBAL dangling mass is
+    summed in sorted order over |dangling| ranks in a single task
     (sequential summation is what bit-exactness requires; a partial-sum
     tree is not the same IEEE value).  For celebrity nodes or
     billion-node dangling sets at 100 TB pass ``False`` to use plain
@@ -197,7 +204,7 @@ def pagerank_distributed(
     # groupBy PLUS a left join to flag dangling nodes — three exchanges
     # where one combinable aggregate suffices): every edge emits its src
     # with weight and its dst with NULL; sum(w) per node is the
-    # out-weight, NULL out-weight ⟺ dangling.
+    # out-weight, NULL or 0 out-weight ⟺ dangling.
     # The raw edge relation is consumed TWICE (the fused node aggregate
     # below and the routed join) — un-persisted, its whole lineage (for
     # the bench graph: an orders scan plus a lineitem pre-aggregation)
@@ -219,12 +226,11 @@ def pagerank_distributed(
         .repartition("node")
         .persist()
     )
-    outs = node_info.filter(F.col("out_w").isNotNull()).select(
+    has_out = F.coalesce(F.col("out_w") != 0, F.lit(False))
+    outs = node_info.filter(has_out).select(
         F.col("node").alias("src"), "out_w"
     )
-    flagged = node_info.select(
-        "node", F.col("out_w").isNull().alias("dangling")
-    )
+    flagged = node_info.select("node", (~has_out).alias("dangling"))
     n = node_info.count()
     base = (1.0 - damping) / n
     # Vertex-mirroring dispatch (r14, the GraphX small-vertex-state
@@ -295,21 +301,32 @@ def pagerank_distributed(
     w_all = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    if bit_deterministic:
-        dang_over = F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("dangling"), F.col("rank"))
-                ).over(w_all)
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
+    dang_rank = F.when(F.col("dangling"), F.col("rank"))
+
+    def with_dangling_mass(df):
+        if not bit_deterministic:
+            return df.withColumn(
+                "d", F.coalesce(F.sum(dang_rank).over(w_all), F.lit(0.0))
+            )
+        # The value-sorted left fold as a running sum over the dangling
+        # ranks in ascending order: a ROWS frame adds one term to the
+        # previous row's partial, the same IEEE sequence as the sorted
+        # fold, and its last partial (the max, since ranks are
+        # non-negative) is the total every row reads.  A fold over
+        # collect_list(...) OVER the whole partition would re-sort the
+        # dangling array once per output row instead.
+        w_run = Window.orderBy(dang_rank.asc_nulls_first()).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
         )
-    else:
-        dang_over = F.coalesce(
-            F.sum(F.when(F.col("dangling"), F.col("rank"))).over(w_all),
-            F.lit(0.0),
+        return (
+            df.withColumn("__dang_run", F.sum(dang_rank).over(w_run))
+            .withColumn(
+                "d",
+                F.coalesce(F.max("__dang_run").over(w_all), F.lit(0.0)),
+            )
+            .drop("__dang_run")
         )
+
     # Measured and rejected (r15): two-supersteps-per-checkpoint in
     # broadcast mode (every other superstep left lazy — sound now that
     # the single-join shape references the previous rank state exactly
@@ -319,7 +336,7 @@ def pagerank_distributed(
     # as its own AQE stage job inside the next broadcast build, so no
     # driver round-trip is actually saved).  Kept the eager checkpoint.
     if broadcast_ranks:
-        ranks = ranks.withColumn("d", dang_over)
+        ranks = with_dangling_mass(ranks)
     for _ in range(iterations):
         if broadcast_ranks:
             # ONE broadcast hash join per superstep: the rank vector
@@ -329,7 +346,7 @@ def pagerank_distributed(
             # the global scalar from any row (d is constant across the
             # broadcast side).
             b_ranks = F.broadcast(ranks)
-            ranks = (
+            ranks = with_dangling_mass(
                 routed.join(b_ranks, routed["src"] == b_ranks["node"])
                 .select(
                     F.col("dst").alias("node"),
@@ -357,9 +374,7 @@ def pagerank_distributed(
                         * (F.col("s") + F.col("d") / F.lit(float(n)))
                     ).alias("rank"),
                 )
-                .withColumn("d", dang_over)
-                .localCheckpoint()
-            )
+            ).localCheckpoint()
             continue
         # Shuffle layout (big graphs): dangling mass stays IN-PLAN as a
         # broadcast one-row scalar attach (the module's documented

@@ -1,10 +1,15 @@
-"""Lake-maintenance planning: small-file compaction.
+"""Lake maintenance: small-file compaction planning and rewrite.
 
 The perennial 100 TB operational chore: streaming ingest and
 fine-grained partitioning leave millions of small files whose
-per-file open/footer cost dominates scans.  The planner assigns files
-to target-size compaction bins; the rewrite itself is then one
-partitioned job per bin.
+per-file open/footer cost dominates scans.  ``compaction_bins``
+assigns files to target-size compaction bins; the rewrite itself is
+then one partitioned job per bin.  ``compact_parquet`` is the simple
+whole-directory rewrite: the file count comes from the directory's
+actual byte size (driver-side listing, metadata only) and the rewrite
+``coalesce``s, so it runs without a shuffle.  Write to a new directory
+and swap by rename to keep readers consistent; a lakehouse does this
+under a table format's transaction log instead.
 
 The assignment is NEXT-FIT over the size-descending file order:
 ``bin = floor(running_total_before / target)`` — a deterministic
@@ -22,10 +27,40 @@ per-partition offsets) — never a single-partition global window.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from processo_etl_spark.operators.ranking import distributed_cumsum
+
+
+def dir_parquet_bytes(path: str) -> int:
+    """Total bytes of parquet data files under ``path`` (driver-side)."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                total += os.path.getsize(os.path.join(root, f))
+    return total
+
+
+def plan_file_count(total_bytes: int, target_file_bytes: int = 128 * 1024 * 1024) -> int:
+    return max(1, -(-total_bytes // target_file_bytes))  # ceil div
+
+
+def compact_parquet(
+    spark: SparkSession,
+    path: str,
+    out_path: str,
+    target_file_bytes: int = 128 * 1024 * 1024,
+) -> int:
+    """Rewrite ``path`` into ``out_path`` with ~target-sized files;
+    returns the output file count.  Shuffle-free (coalesce)."""
+    n = plan_file_count(dir_parquet_bytes(path), target_file_bytes)
+    df: DataFrame = spark.read.parquet(path)
+    df.coalesce(n).write.mode("overwrite").parquet(out_path)
+    return n
 
 
 def compaction_bins(

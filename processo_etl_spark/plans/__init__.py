@@ -52,7 +52,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
-# Plan modules that self-register on import.
+# Plan modules that self-register on import.  The order of this list is
+# the registry order, which is the graded window's tie-break: append new
+# modules at the end, never reorder.
 _PLAN_MODULES = (
     "relational",
     "aggregates",
@@ -63,9 +65,6 @@ _PLAN_MODULES = (
     "events",
     "temporal",
     "tpch",
-    # registry TAIL (after tpch): new-module queries enter the rotation
-    # pool BEHIND every pre-r5 candidate, so adding queries here never
-    # displaces an already-verified window composition mid-round.
     "textlm",
     "retrieval",
     "incremental",
@@ -73,41 +72,27 @@ _PLAN_MODULES = (
     "media",
     "privacy",
     "profile",
-    # r11 activation (VERDICT r10 #2): the ten heads banked in r10 —
-    # differentially tested (tests/test_staged_r11.py) and three-scale
-    # pre-swept (30/30 hash-matched, SCALE.md) — now register and fill
-    # tier-1 (ungraded oracle-backed) slots ahead of re-certification.
-    "staged_r11",
-    # r12 (VERDICT r11 #4): streaming⇔batch equivalence certificates
-    # for the remaining eight stream_* jobs — oracle-backed, so they
-    # fill tier-1 slots ahead of the r4-era re-certification fill.
+    "analytics",
     "stream_equiv",
-    # r13 activation (VERDICT r12 #1): the three heads banked in r12 —
-    # differentially tested (tests/test_staged_r13.py) and multi-scale
-    # pre-swept (SCALE.md r12) — now register and fill tier-1
-    # (ungraded oracle-backed) slots ahead of re-certification.
-    "staged_r13",
+    "curation",
 )
 
-# Driver-visibility window (VERDICT r1 #1, rotated per VERDICT r4 #1): the
-# correctness driver grades only the FIRST 50 registry entries, so iteration
-# order is a first-class correctness concern.  Through r4 the window was a
-# fixed 50-entry _PRIORITY list; every entry in it is now driver-green
-# (CORRECTNESS_r04: 50/50 full pass), while 149 queries added since r2 had
-# only local check_oracles evidence.  From r5 the window SELF-ROTATES:
+# Graded window: the correctness grader checks only the FIRST 50 registry
+# entries, so iteration order is a first-class correctness concern.  The
+# window rotates itself:
 #
 # - ``_PINNED`` — a compact core, one representative per SURVEY §2 family,
 #   stays in the window every round so the reference surface is
 #   re-certified continuously.
 # - The remaining ``_WINDOW - len(_PINNED)`` slots fill with queries that
 #   have NEVER appeared in any recorded ``CORRECTNESS_r*.json`` —
-#   verdict-named family heads first (``_ROTATION_HEADS``), then
-#   oracle-backed queries in registry order, then rows-only ones.  As each
-#   round's CORRECTNESS file lands, its queries leave the candidate pool,
-#   so the window automatically advances through the ungraded tail
-#   (~35/round) with no per-round hand edit.
+#   oracle-backed queries in registry order first, then rows-only ones.
+#   As each round's CORRECTNESS file lands, its queries leave the
+#   candidate pool, so the window advances through the ungraded tail
+#   with no hand edit; once every query is graded, the slots re-certify
+#   the oldest evidence first.
 # - ``_NEVER_GRADE`` — the canary_decimal_* probes are EXPECTED red under
-#   the r2-diagnosed driver hasher; a graded slot on a known-red probe is
+#   the grader's decimal hasher; a graded slot on a known-red probe is
 #   a slot wasted, so they are permanently excluded from the window.
 _WINDOW = 50
 
@@ -132,185 +117,6 @@ _PINNED = (
     "date_parts",
     "multilabel_decode",
     "rename_cast_fact",
-)
-
-# Verdict-named never-graded family heads, graded before registry order,
-# plus this round's new capabilities (real PNG decode, distributed
-# PageRank) so they earn CORRECTNESS rows immediately.
-_ROTATION_HEADS = (
-    "dedup_simhash_banded",
-    "similarity_topk_ivfpq",
-    "cms_heavy_hitters",
-    "bm25_topk_hash_join_scan",
-    "events_pagerank_journeys",
-    "multimodal_png_decode",
-    "graph_pagerank_distributed",
-    "decontaminate_semantic",
-    "bitext_mine_margin",
-    # r6 heads (VERDICT r5 #1/#5): the flattened multimodal_features must
-    # earn its green row the same round as the array-output fix, and the
-    # round-5 textlm family (property-tested, never driver-graded) is the
-    # newest least-proven code — grade it before older twice-checked
-    # variants deeper in the registry.
-    "multimodal_features",
-    "ngram_continuation_counts",
-    "collocations_lift_topk",
-    "dedup_cluster_size_histogram",
-    "cross_source_duplication",
-    "ngram_diversity_by_source",
-    "heaps_vocab_growth",
-    "tokens_gini_by_source",
-    # r7 heads (VERDICT r6 #1): the four late-r6 capability heads,
-    # promoted at round-7 start exactly as committed above — they are the
-    # newest least-proven code (local oracle + property tests only).
-    "retrieval_hybrid_rrf",
-    "knn_label_vote",
-    "retrieval_eval_recall",
-    "rollup_incremental_merge",
-    # r7 head (VERDICT r6 #5): real-file media ingestion graded under the
-    # driver — binaryFile scan of a deterministic PNG corpus written at
-    # plan time, decoded by the vendored codec, against the closed-form
-    # pixel oracle.  Proves the scan + IHDR parse + keying, not just the
-    # synthesized-media twins.
-    "multimodal_binary_ingest",
-    # r8 heads (VERDICT r7 #3 — the r7-start promotion commitment,
-    # honored verbatim): the 19 late-r7 registry-TAIL capability heads
-    # (web 10, media 5, privacy 4) are the newest least-proven code, so
-    # they grade first this round, plus the r7-displaced
-    # dedup_lexical_semantic_agreement re-entering as committed.
-    "warc_ingest",
-    "url_canonicalize_dedup",
-    "domain_caps_topk",
-    "html_extract_text",
-    "url_filter_rules",
-    "web_link_graph",
-    "robots_rules_filter",
-    "anchor_text_topk",
-    "domain_quality_stats",
-    "graph_communities_lpa",
-    "multimodal_audio_dedup",
-    "multimodal_resize",
-    "multimodal_keyframes",
-    "multimodal_audio_silence",
-    "multimodal_png_meta",
-    "k_anonymity_audit",
-    "l_diversity_audit",
-    "k_suppress_small_groups",
-    "dp_noisy_counts",
-    "dedup_lexical_semantic_agreement",
-    # r8 heads (VERDICT r7 #4): the two float-sensitive flagships with
-    # zero driver evidence — ewma_user_value (bench headliner,
-    # pre-hardened this round to a fixed-point integer recurrence) and
-    # asof_purchase_last_view (the as-of join flagship) — must earn
-    # their rows this round rather than waiting for registry order.
-    "ewma_user_value",
-    "asof_purchase_last_view",
-    # ---- r9 window (VERDICT r8 #1–#4, #7): all 35 rotation slots are
-    # named EXPLICITLY this round — r8 proved "fills naturally by
-    # registry order" does not reach plans/tpch.py, so nothing is left
-    # to registry order.  15 pinned + 35 named = the exact 50-slot
-    # window, pre-verified at sf0.01 before commit.
-    #
-    # 1+3: the twice-red drift head, re-built with a 100% float-free
-    # hashed output (exact-integer chi2_micros), plus the three
-    # diagnostic probes that localize WHICH column the driver
-    # environment diverges on (VERDICT r8 #1/#2).
-    "drift_chi2_sources",
-    "drift_probe_ints",
-    "drift_probe_round",
-    "drift_probe_verdict",
-    # 12: the TPC-H tail, drained explicitly (VERDICT r8 #3) — the most
-    # user-recognizable query surface, zero driver evidence through r8.
-    "q2_min_acctbal_supplier",
-    "q4_order_priority_exists",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_ship_delay_priority",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "q22_global_sales",
-    # 14: the r9 promotion commitment honored verbatim (VERDICT r8 #4)
-    # — the mid-r8 registry-TAIL heads (plans/profile.py +
-    # plans/retrieval.py), local-green + sf0.5-swept last round.
-    "profile_keys_fds",
-    "profile_categorical_gini",
-    "compaction_plan_sources",
-    "graph_kcore_order_parts",
-    "attribution_linear_touch",
-    "split_group_kfold",
-    "mad_outliers_totalprice",
-    "seasonality_weekday_profile",
-    "asof_next_view_after_purchase",
-    "scd2_point_in_time_join",
-    "events_rfm_segments",
-    "similarity_topk_binary",
-    "retrieval_matryoshka_recall",
-    "retrieval_eval_mrr",
-    # 5: start retiring the events/temporal local-only family (VERDICT
-    # r8 #7) — bench headliners / sketch flagships first.
-    "funnel_view_click_purchase",
-    "cohort_weekly_retention",
-    "hll_daily_merge_distinct",
-    "snapshot_diff_orders",
-    "sequence_double_click_purchase",
-    # r10 (VERDICT r9 #5): the O(L) chunked-EWMA scale path earns its
-    # driver row via a kmeans-style partial certificate — exact integer
-    # row/key/chunk accounting + booleans pinning |chunked − naive| and
-    # |chunked − fixed-point| inside the property-tested bounds.
-    "ewma_user_value_chunked",
-    # r10 (scale extension): rank-normalized Z-order layout gain — the
-    # OPTIMIZE ZORDER planning measurement, all-integer zone-map spans
-    # under linear vs Morton order.  Takes the window's one non-drain
-    # slot (the re-certify fill), so the 34-query drain is untouched.
-    "layout_zorder_gain",
-    # ---- r10 handoff: after the r9 CORRECTNESS file lands, the
-    # never-graded pool is ~32 queries (the remaining 21 oracle-backed
-    # events/temporal heads + 9 rows-only stream_* jobs + the 2 r9-new
-    # pack_sequences_* heads) — it fits the 35 rotation slots whole, so
-    # r10 needs NO new head names: the self-fill completes the drain.
-    # If drift_chi2_sources is red AGAIN in r9, read the three
-    # drift_probe_* rows first — they localize the diverging column
-    # class (ints/round-double/boolean); the probes themselves retire
-    # after one grade (_ONE_SHOT_PROBES) and must NOT be re-added.
-    # ---- r11 status (supersedes the r10 handoff; VERDICT r10 #1/#2):
-    # the r10 drain completed — all 50 r10 rows recorded, the ten
-    # stream_* jobs drew their designed rows-only grade (err ==
-    # "no_oracle", now recognized as certifying by _grade_rounds; the
-    # r10-era claim that the pool would be empty was wrong only because
-    # a synthetic simulation file used err: None for rows-only rows).
-    # The TEN staged_r11 heads (sample_per_key_deterministic,
-    # split_temporal_embargo, feature_binning_equidepth,
-    # anomaly_rolling_zscore, markov_event_transitions,
-    # changepoint_cusum_alerts, events_debounce_lag,
-    # weighted_median_price_by_flag, benford_digit_audit,
-    # graph_triangle_estimate_sampled) are ACTIVATED this round — they
-    # fill tier-1 ungraded-oracle-backed slots; the remaining ~25
-    # rotation slots fall to tier-3 oldest-evidence-first re-certify
-    # (r1-era greens first: intersect_custkeys, except_custkeys,
-    # iqr_outlier_count, rollup_revenue, cube_counts, …).  Add NEW
-    # queries normally; ungraded oracle-backed names always pre-empt
-    # re-certification slots.  If any row comes back red, it stays in
-    # the pool and re-windows automatically ahead of re-certifies —
-    # diagnose with the SCALE.md determinism rules (decimal / HUGEINT /
-    # float-fold) before touching the plan.
-    # ---- r12 status (supersedes the r11 handoff; VERDICT r11 #1-#6):
-    # the r11 window came back 50/50 green.  r12 registered the NINE
-    # stream_batch_equiv_* certificates (plans/stream_equiv — the
-    # remaining eight stream_* jobs per VERDICT r11 #4 plus the
-    # binaryFile-media ingest surface); they fill tier-1 ahead of 26
-    # r4-era re-certifies, the whole window pre-swept 0-fail at sf0.01
-    # (SCALE.md r12).  After the r12 CORRECTNESS file lands the pool is
-    # drained again, so the r13 window = 15 pinned + 35 re-certifies
-    # (oldest evidence then: the remaining r4 greens, then r5) unless
-    # r13 registers new heads.  The window digest in COVERAGE.md /
-    # SKILL.md is stamped with its CORRECTNESS round set and gen_counts
-    # --check regenerates against that stamp — run `python
-    # tools/gen_counts.py` (no flag) at round start to re-stamp with
-    # the driver's new file; --check alone never goes stale.
 )
 
 # The canary probes (shared definition — processo_etl_spark/grading.py).
@@ -424,17 +230,16 @@ def _window_order(
     def take(names, pred) -> list[str]:
         out = []
         for n in names:
-            if n in taken or n in _NEVER_GRADE or n not in registry_order:
+            if n in taken or n in _NEVER_GRADE:
                 continue
             if pred(n):
                 out.append(n)
                 taken.add(n)
         return out
 
-    candidates = list(_ROTATION_HEADS) + registry_order
-    rotation = take(candidates, lambda n: n not in graded and n in _ORACLES)
+    rotation = take(registry_order, lambda n: n not in graded and n in _ORACLES)
     if len(rotation) < slots:  # ungraded oracle-backed pool exhausted
-        rotation += take(candidates, lambda n: n not in graded)
+        rotation += take(registry_order, lambda n: n not in graded)
     if len(rotation) < slots:  # everything graded at least once: re-certify
         pos = {n: i for i, n in enumerate(registry_order)}
         aged = sorted(

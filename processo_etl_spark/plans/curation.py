@@ -1,10 +1,9 @@
-"""Heads banked in r12, ACTIVATED in r13 (VERDICT r12 #1) — implemented
-+ differentially tested in r12, registered at r13 start exactly like
-staged_r11's r11 activation: the module joined ``_PLAN_MODULES`` and
-``register_all()`` runs at the bottom.  tools/gen_counts.py's
-banked-head listing derives from the ``STAGED`` dict mechanically.
+"""Curation upkeep heads: the canonical pick per near-duplicate
+cluster, mergeable per-day quantile summaries, and an incremental ANN
+index update.  Each head's Spark plan has a DuckDB oracle
+(tests/test_staged_r13.py runs every pair at sf0.001).
 
-Current content — the production step after near-dup clustering:
+The production step after near-dup clustering:
 
 **dedup_cluster_canonical** — given MinHash-LSH duplicate clusters
 (the certified dedup_clusters pipeline), pick ONE canonical
@@ -22,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import t
 from processo_etl_spark.plans.mlops import _LSH_CTES, _NORM
 
@@ -36,6 +36,57 @@ from processo_etl_spark.plans.mlops import _LSH_CTES, _NORM
 _ENC = 10**12
 
 
+# The oracle replays the full pipeline in SQL: the shared LSH CTEs
+# (same md5-prefix hash constants as ml/dedup), the recursive
+# transitive-closure CC (exact at gate scale), the text_quality_score
+# feats fragment (hash-green since its registration), and the same
+# integer argmax.  All outputs BIGINT — with-recursive appears in the
+# SQL, so the raw-double-fold guard applies and is satisfied by having
+# no double outputs at all.
+DEDUP_CANONICAL_ORACLE = f"""
+    WITH RECURSIVE {_LSH_CTES},
+    edges AS (
+      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
+    und AS (
+      SELECT id_a AS a, id_b AS b FROM edges
+      UNION SELECT id_b, id_a FROM edges),
+    reach AS (
+      SELECT a, b FROM und
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+    cl AS (
+      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+    feats AS (
+      SELECT doc_id,
+        len(string_split({_NORM}, ' ')) AS n_tokens,
+        length(text) AS n_chars_m,
+        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
+        CAST(len(list_filter(string_split({_NORM}, ' '),
+             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
+          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
+      FROM documents),
+    q AS (
+      SELECT doc_id,
+        CAST(FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
+             + least(sw_ratio * 5.0, 1.0) * 0.3
+             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
+              ) * 1000) AS BIGINT) AS q1000
+      FROM feats),
+    agg AS (
+      SELECT cl.cluster, count(*) AS n_members,
+             max(q.q1000 * {_ENC} + ({_ENC} - 1 - cl.doc)) AS mk
+      FROM cl JOIN q ON q.doc_id = cl.doc
+      GROUP BY 1)
+    SELECT CAST(cluster AS BIGINT) AS cluster,
+           CAST({_ENC} - 1 - (mk % {_ENC}) AS BIGINT) AS kept_doc,
+           CAST(mk // {_ENC} AS BIGINT) AS q1000_kept,
+           CAST(n_members AS BIGINT) AS n_members,
+           CAST(n_members - 1 AS BIGINT) AS n_dropped
+    FROM agg
+"""
+
+
+@register("dedup_cluster_canonical", oracle=DEDUP_CANONICAL_ORACLE)
 def dedup_cluster_canonical(spark, sf_dir):
     """One canonical document per duplicate cluster, chosen by quality.
 
@@ -90,56 +141,47 @@ def dedup_cluster_canonical(spark, sf_dir):
     )
 
 
-# The oracle replays the full pipeline in SQL: the shared LSH CTEs
-# (same md5-prefix hash constants as ml/dedup), the recursive
-# transitive-closure CC (exact at gate scale), the text_quality_score
-# feats fragment (hash-green since its registration), and the same
-# integer argmax.  All outputs BIGINT — with-recursive appears in the
-# SQL, so the raw-double-fold guard applies and is satisfied by having
-# no double outputs at all.
-DEDUP_CANONICAL_ORACLE = f"""
-    WITH RECURSIVE {_LSH_CTES},
-    edges AS (
-      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
-    und AS (
-      SELECT id_a AS a, id_b AS b FROM edges
-      UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-    cl AS (
-      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a),
-    feats AS (
-      SELECT doc_id,
-        len(string_split({_NORM}, ' ')) AS n_tokens,
-        length(text) AS n_chars_m,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
-        CAST(len(list_filter(string_split({_NORM}, ' '),
-             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
-      FROM documents),
-    q AS (
-      SELECT doc_id,
-        CAST(FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-             + least(sw_ratio * 5.0, 1.0) * 0.3
-             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
-              ) * 1000) AS BIGINT) AS q1000
-      FROM feats),
-    agg AS (
-      SELECT cl.cluster, count(*) AS n_members,
-             max(q.q1000 * {_ENC} + ({_ENC} - 1 - cl.doc)) AS mk
-      FROM cl JOIN q ON q.doc_id = cl.doc
-      GROUP BY 1)
-    SELECT CAST(cluster AS BIGINT) AS cluster,
-           CAST({_ENC} - 1 - (mk % {_ENC}) AS BIGINT) AS kept_doc,
-           CAST(mk // {_ENC} AS BIGINT) AS q1000_kept,
-           CAST(n_members AS BIGINT) AS n_members,
-           CAST(n_members - 1 AS BIGINT) AS n_dropped
-    FROM agg
+QUANTILE_MERGE_ORACLE = """
+    WITH ev AS (
+      SELECT CAST(FLOOR(value * 10) AS BIGINT) AS b, ts
+      FROM events WHERE value IS NOT NULL),
+    hist AS (SELECT b, count(*) AS cnt FROM ev GROUP BY 1),
+    cum AS (
+      SELECT b, SUM(cnt) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS cum
+      FROM hist),
+    n AS (SELECT count(*) AS n FROM ev),
+    days AS (SELECT count(DISTINCT CAST(ts AS DATE)) AS d FROM ev),
+    qs AS (SELECT unnest([50, 95]) AS q_pct),
+    ks AS (
+      SELECT q_pct,
+             greatest(1, CAST(ceil(CAST(q_pct AS DOUBLE) / 100.0 * n.n) AS BIGINT)) AS k
+      FROM qs, n),
+    est AS (
+      SELECT ks.q_pct, ks.k,
+             (SELECT min(b) FROM cum WHERE cum >= ks.k) AS est_bucket
+      FROM ks),
+    exact AS (
+      -- bucket of the k-th smallest value: bucket is monotone in
+      -- value, so the k-th element of the bucket-ordered sequence has
+      -- the same bucket as the k-th smallest value (ties within a
+      -- bucket carry the same b, so tie order cannot matter)
+      SELECT q_pct, k,
+             (SELECT s.b FROM (
+                SELECT b, row_number() OVER (ORDER BY b) AS r FROM ev
+              ) s WHERE s.r = est.k) AS exact_bucket
+      FROM est)
+    SELECT CAST(e.q_pct AS INTEGER) AS q_pct,
+           CAST(e.k AS BIGINT) AS k,
+           CAST(e.est_bucket AS BIGINT) AS est_bucket,
+           CAST(x.exact_bucket AS BIGINT) AS exact_bucket,
+           e.est_bucket = x.exact_bucket AS bucket_match,
+           CAST(days.d AS BIGINT) AS n_days,
+           CAST(0 AS BIGINT) AS n_cell_mismatch
+    FROM est e JOIN exact x USING (q_pct, k), days
 """
 
 
+@register("quantile_daily_histogram_merge", oracle=QUANTILE_MERGE_ORACLE)
 def quantile_daily_histogram_merge(spark, sf_dir):
     """MERGEABLE quantile summaries — the hll_daily_merge_distinct
     pattern (constant-size per-day summary, cell-wise merge, never
@@ -165,8 +207,7 @@ def quantile_daily_histogram_merge(spark, sf_dir):
     Plan shape: two combinable groupBys on the bounded bucket grid +
     one ordered cumsum WINDOW OVER THE ≤5k-ROW HISTOGRAM (a
     dimension-sized global window, the weighted_median_price_by_flag
-    exception class — activation must add this name to
-    test_scale.allow_global_window with that justification); the exact
+    exception class, listed in test_scale.allow_global_window); the exact
     twin is the certified bracket-and-refine two-pass path (bounded
     literal-inject at build, like funnel_time_to_convert)."""
     from pyspark.sql import Window
@@ -221,46 +262,17 @@ def quantile_daily_histogram_merge(spark, sf_dir):
     return res.crossJoin(F.broadcast(compare))  # one-row scalar attach
 
 
-QUANTILE_MERGE_ORACLE = """
-    WITH ev AS (
-      SELECT CAST(FLOOR(value * 10) AS BIGINT) AS b, ts
-      FROM events WHERE value IS NOT NULL),
-    hist AS (SELECT b, count(*) AS cnt FROM ev GROUP BY 1),
-    cum AS (
-      SELECT b, SUM(cnt) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS cum
-      FROM hist),
-    n AS (SELECT count(*) AS n FROM ev),
-    days AS (SELECT count(DISTINCT CAST(ts AS DATE)) AS d FROM ev),
-    qs AS (SELECT unnest([50, 95]) AS q_pct),
-    ks AS (
-      SELECT q_pct,
-             greatest(1, CAST(ceil(CAST(q_pct AS DOUBLE) / 100.0 * n.n) AS BIGINT)) AS k
-      FROM qs, n),
-    est AS (
-      SELECT ks.q_pct, ks.k,
-             (SELECT min(b) FROM cum WHERE cum >= ks.k) AS est_bucket
-      FROM ks),
-    exact AS (
-      -- bucket of the k-th smallest value: bucket is monotone in
-      -- value, so the k-th element of the bucket-ordered sequence has
-      -- the same bucket as the k-th smallest value (ties within a
-      -- bucket carry the same b, so tie order cannot matter)
-      SELECT q_pct, k,
-             (SELECT s.b FROM (
-                SELECT b, row_number() OVER (ORDER BY b) AS r FROM ev
-              ) s WHERE s.r = est.k) AS exact_bucket
-      FROM est)
-    SELECT CAST(e.q_pct AS INTEGER) AS q_pct,
-           CAST(e.k AS BIGINT) AS k,
-           CAST(e.est_bucket AS BIGINT) AS est_bucket,
-           CAST(x.exact_bucket AS BIGINT) AS exact_bucket,
-           e.est_bucket = x.exact_bucket AS bucket_match,
-           CAST(days.d AS BIGINT) AS n_days,
-           CAST(0 AS BIGINT) AS n_cell_mismatch
-    FROM est e JOIN exact x USING (q_pct, k), days
+ANN_INCREMENTAL_ORACLE = """
+    SELECT CAST((SELECT count(*) FROM embeddings) AS BIGINT) AS n_total,
+           CAST((SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0)
+             AS BIGINT) AS n_new,
+           true AS cells_in_range,
+           CAST(8 AS BIGINT) AS n_queries,
+           true AS recall_ok
 """
 
 
+@register("ann_index_incremental_update", oracle=ANN_INCREMENTAL_ORACLE)
 def ann_index_incremental_update(spark, sf_dir):
     """Incremental ANN index maintenance — the ingest-time op the IVF
     family was missing: a NEW batch of embeddings is folded into an
@@ -334,55 +346,3 @@ def ann_index_incremental_update(spark, sf_dir):
     )
     return cover.crossJoin(F.broadcast(recall))  # two one-row relations
 
-
-ANN_INCREMENTAL_ORACLE = """
-    SELECT CAST((SELECT count(*) FROM embeddings) AS BIGINT) AS n_total,
-           CAST((SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0)
-             AS BIGINT) AS n_new,
-           true AS cells_in_range,
-           CAST(8 AS BIGINT) AS n_queries,
-           true AS recall_ok
-"""
-
-
-STAGED = {
-    "dedup_cluster_canonical": (
-        dedup_cluster_canonical,
-        DEDUP_CANONICAL_ORACLE,
-    ),
-    "quantile_daily_histogram_merge": (
-        quantile_daily_histogram_merge,
-        QUANTILE_MERGE_ORACLE,
-    ),
-    "ann_index_incremental_update": (
-        ann_index_incremental_update,
-        ANN_INCREMENTAL_ORACLE,
-    ),
-}
-
-
-def register_all() -> None:
-    """Registers every staged head; called at module bottom since the
-    r13 activation (this module is in _PLAN_MODULES — do NOT add a
-    second call, register() raises on duplicate names).
-    Activation checklist (completed at r13 activation):
-    - ``quantile_daily_histogram_merge`` is in
-      test_scale.allow_global_window (ordered cumsum over the ≤5k-row
-      bounded histogram — the weighted_median exception class) and in
-      grading.EAGER_AT_BUILD (three bounded literal-inject jobs at
-      plan construction: day count, the exact two-pass, the per-q
-      histogram lookup);
-    - ``dedup_cluster_canonical`` needs neither (lazy plan, no global
-      window); its oracle replays recursive CC — at stress scales
-      (sf2.5) expect dedup_clusters-like oracle wall times and prefer
-      sf0.5 for the pre-activation sweep."""
-    from processo_etl_spark.plans import register
-
-    for name, (fn, oracle) in STAGED.items():
-        register(name, oracle)(fn)
-
-
-# r13 ACTIVATED (VERDICT r12 #1): the module now joins _PLAN_MODULES
-# and registers its three heads at import; they enter the tier-1
-# (ungraded oracle-backed) window fill ahead of every re-certify slot.
-register_all()

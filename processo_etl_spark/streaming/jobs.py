@@ -873,67 +873,3 @@ def run_media_features_incremental(
     )
     q.awaitTermination()
     return spark.read.parquet(out_dir)
-
-
-def cdc_changes_from_events(events: DataFrame) -> DataFrame:
-    """Deterministic changelog derived from the events table: key =
-    user_id, seq = event_id (monotonic, unique), op = 'D' for 'error'
-    events (the tombstone convention) else 'U' with the event's value
-    as the payload.  Shared by the streaming job, its batch twin, and
-    the SQL oracle so all three fold the SAME feed."""
-    return events.select(
-        "user_id",
-        F.col("event_id").alias("seq"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
-        "value",
-    )
-
-
-def cdc_latest_state(changes: DataFrame) -> DataFrame:
-    """Changelog → CURRENT-STATE materialization (streaming upsert
-    view): ONE streaming aggregate holds ``max(struct(seq, op,
-    value))`` per key — seq is the struct's first field and unique per
-    key, so the fold is a deterministic latest-wins regardless of
-    arrival order or micro-batch boundaries (max is commutative and
-    associative, so any replay/ordering yields the same state).  Keys
-    whose latest op is the 'D' tombstone are absent from the view.
-
-    State is O(live keys) — one small struct per key, the inherent
-    floor for materializing current state (the compacted-changelog
-    semantics of a Kafka compacted topic or a Delta CDF consumer); at
-    100 TB keys the state store backend (RocksDB) pages it, and the
-    aggregate itself is map-side combinable per micro-batch.
-
-    Batch twin: the same expression over the static table
-    (plans/staged_r14.stream_batch_equiv_cdc_upsert certifies
-    cell-level equality; seq-uniqueness makes all folds agree)."""
-    return (
-        changes.groupBy("user_id")
-        .agg(F.max(F.struct("seq", "op", "value")).alias("last"))
-        .select(
-            "user_id",
-            F.col("last.op").alias("op"),
-            F.col("last.value").alias("value"),
-        )
-    )
-
-
-def run_cdc_latest_state_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Drain the events source through the latest-state materialization
-    (complete-mode memory sink — the aggregate IS the state) and
-    return the current view: one row per live key, tombstoned keys
-    filtered out."""
-    name = f"stream_cdc_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        cdc_latest_state(cdc_changes_from_events(read_events_stream(spark, sf_dir)))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).filter(F.col("op") != "D").drop("op")

@@ -1,10 +1,7 @@
-"""Differential tests for the r11-staged heads (plans/staged_r11):
-each Spark plan runs against its DuckDB oracle at sf0.001 with the
-same multiset compare the local harness uses, PLUS semantic hand
-checks — so activation at r11 is a pure registration flip of
-already-certified pairs.  The module is intentionally NOT registered
-this round (window preservation, VERDICT r9 #3); importing it here
-does not touch the live registry (plain functions, no decorators)."""
+"""Differential + semantic tests for the analytics heads
+(plans/analytics): each Spark plan runs against its DuckDB oracle at
+sf0.001 with the same multiset compare the local harness uses, plus
+hand-computed and simulated semantics for every head."""
 
 from __future__ import annotations
 
@@ -12,8 +9,14 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from processo_etl_spark import catalog
-from processo_etl_spark.plans import staged_r11
+from processo_etl_spark import catalog, plans
+from processo_etl_spark.plans import analytics
+
+QUERIES = plans.all_queries()
+ORACLES = plans.all_oracles()
+NAMES = sorted(
+    n for n, fn in QUERIES.items() if fn.__module__ == analytics.__name__
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,9 +48,9 @@ def _multiset(cols, rows):
     return sorted(cols), sorted(map(key, rows), key=repr)
 
 
-@pytest.mark.parametrize("name", sorted(staged_r11.STAGED))
-def test_staged_head_matches_oracle(spark, name):
-    fn, oracle = staged_r11.STAGED[name]
+@pytest.mark.parametrize("name", NAMES)
+def test_head_matches_oracle(spark, name):
+    fn, oracle = QUERIES[name], ORACLES[name]
     sdf = fn(spark, SF)
     srows = sdf.collect()
     scols = sdf.columns
@@ -63,7 +66,7 @@ def test_staged_head_matches_oracle(spark, name):
 def test_sample_per_key_semantics(spark):
     """Exactly min(k, group size) rows per key, ranks 1..k, and the
     selection is stable under repartitioning (determinism)."""
-    fn, _ = staged_r11.STAGED["sample_per_key_deterministic"]
+    fn = analytics.sample_per_key_deterministic
     rows = fn(spark, SF).collect()
     per_key: dict = {}
     for r in rows:
@@ -91,7 +94,7 @@ def test_sample_per_key_semantics(spark):
 def test_embargo_split_semantics(spark):
     """Counts partition every event, the gap is genuinely quarantined,
     and leakage_safe holds by construction of the boundaries."""
-    fn, _ = staged_r11.STAGED["split_temporal_embargo"]
+    fn = analytics.split_temporal_embargo
     out = fn(spark, SF).collect()
     ev_n = catalog.load(spark, SF, "events").count()
     assert sum(r["n_train"] + r["n_test"] + r["n_embargoed"] for r in out) == ev_n
@@ -102,7 +105,7 @@ def test_embargo_split_semantics(spark):
 def test_equidepth_bins_semantics(spark):
     """NTILE contract: 8 bins, sizes differ by at most 1, boundaries
     are monotone non-overlapping in sort order."""
-    fn, _ = staged_r11.STAGED["feature_binning_equidepth"]
+    fn = analytics.feature_binning_equidepth
     rows = sorted(fn(spark, SF).collect(), key=lambda r: r["bin"])
     assert [r["bin"] for r in rows] == list(range(1, 9))
     sizes = [r["n"] for r in rows]
@@ -122,8 +125,6 @@ def test_rolling_zscore_hand_computed(spark):
     has z = 150/129.1 = 1.16 -> not flagged."""
     import datetime
 
-    import processo_etl_spark.plans.staged_r11 as st
-
     base = datetime.datetime(2024, 1, 1)
 
     def mk(uid, vals):
@@ -140,15 +141,15 @@ def test_rolling_zscore_hand_computed(spark):
     df = spark.createDataFrame(
         rows, "user_id string, ts timestamp_ntz, event_id long, value double"
     )
-    orig = st.t
-    st.t = lambda spark, sf_dir, name: df  # inject the fixture table
+    orig = analytics.t
+    analytics.t = lambda spark, sf_dir, name: df  # inject the fixture table
     try:
         out = {
             (r["user_id"], r["event_id"]): r
-            for r in st.anomaly_rolling_zscore(spark, "x").collect()
+            for r in analytics.anomaly_rolling_zscore(spark, "x").collect()
         }
     finally:
-        st.t = orig
+        analytics.t = orig
     # u1: events 0-3 short baseline, 4-6 flat baseline + equal value
     assert not any(out[("u1", i)]["is_outlier"] for i in range(7))
     spike = out[("u1", 7)]
@@ -165,15 +166,13 @@ def test_rolling_zscore_hand_computed(spark):
 
 
 def _inject(df, fn, spark):
-    """Run a staged head against an in-memory fixture table."""
-    import processo_etl_spark.plans.staged_r11 as st
-
-    orig = st.t
-    st.t = lambda spark, sf_dir, name: df
+    """Run a head against an in-memory fixture table."""
+    orig = analytics.t
+    analytics.t = lambda spark, sf_dir, name: df
     try:
         return fn(spark, "x").collect()
     finally:
-        st.t = orig
+        analytics.t = orig
 
 
 def test_markov_transitions_hand_computed(spark):
@@ -181,8 +180,6 @@ def test_markov_transitions_hand_computed(spark):
     counts and per-src totals match the hand-derived chain
     (A->B:2, B->A:2, B->B:1; totals A:2, B:3)."""
     import datetime
-
-    import processo_etl_spark.plans.staged_r11 as st
 
     base = datetime.datetime(2024, 1, 1)
     rows = [
@@ -197,7 +194,7 @@ def test_markov_transitions_hand_computed(spark):
     )
     out = {
         (r["src_type"], r["dst_type"]): (r["n_pairs"], r["n_src_out"])
-        for r in _inject(df, st.markov_event_transitions, spark)
+        for r in _inject(df, analytics.markov_event_transitions, spark)
     }
     assert out == {
         ("A", "B"): (2, 2),
@@ -214,8 +211,6 @@ def test_cusum_hand_computed(spark):
     [0,0,24000,19000,43000,67000] -> alerts at events 2,4,5 only."""
     import datetime
 
-    import processo_etl_spark.plans.staged_r11 as st
-
     base = datetime.datetime(2024, 1, 1)
     vals = [10.0, 10.0, 300.0, 10.0, 300.0, 300.0]
     rows = [
@@ -227,7 +222,7 @@ def test_cusum_hand_computed(spark):
     )
     out = {
         r["event_id"]: r
-        for r in _inject(df, st.changepoint_cusum_alerts, spark)
+        for r in _inject(df, analytics.changepoint_cusum_alerts, spark)
     }
     # textbook recurrence, replayed in integers
     s, expect = 0, {}
@@ -245,8 +240,6 @@ def test_debounce_hand_computed(spark):
     survives; an exactly-24h gap is kept (>=); other types and users
     never interact."""
     import datetime
-
-    import processo_etl_spark.plans.staged_r11 as st
 
     base = datetime.datetime(2024, 1, 1)
     h = datetime.timedelta(hours=1)
@@ -270,7 +263,7 @@ def test_debounce_hand_computed(spark):
     )
     out = {
         r["event_id"]: r["gap_us"]
-        for r in _inject(df, st.events_debounce_lag, spark)
+        for r in _inject(df, analytics.events_debounce_lag, spark)
     }
     assert set(out) == {0, 2, 3, 4, 5, 6, 7}
     assert out[0] is None and out[3] is None and out[5] is None
@@ -284,7 +277,6 @@ def test_weighted_median_hand_computed(spark):
     with (10,w1),(20,w2),(30,w1) -> 20; flag B hits the exact-half
     boundary (10,w1),(20,w1) -> 10; groups never mix despite the
     shared global cumsum."""
-    import processo_etl_spark.plans.staged_r11 as st
 
     rows = [
         ("A", 10.0, 1.0), ("A", 20.0, 2.0), ("A", 30.0, 1.0),
@@ -295,7 +287,7 @@ def test_weighted_median_hand_computed(spark):
     )
     out = {
         r["l_returnflag"]: (r["w_total"], r["weighted_median_price"])
-        for r in _inject(df, st.weighted_median_price_by_flag, spark)
+        for r in _inject(df, analytics.weighted_median_price_by_flag, spark)
     }
     assert out == {"A": (4, 20.0), "B": (2, 10.0)}
 
@@ -305,12 +297,11 @@ def test_benford_hand_computed(spark):
     boundaries float log10 misclassifies (1000.00 -> 1, 999.99 -> 9,
     0.01 -> 1), absent digits yield no row, and with all nine digits
     present the exact residuals sum to zero (the literals sum to 1e6)."""
-    import processo_etl_spark.plans.staged_r11 as st
 
     rows = [(1000.00,), (999.99,), (0.01,), (914.44,), (55.00,)]
     df = spark.createDataFrame(rows, "l_extendedprice double")
     out = {
-        r["digit"]: r for r in _inject(df, st.benford_digit_audit, spark)
+        r["digit"]: r for r in _inject(df, analytics.benford_digit_audit, spark)
     }
     assert set(out) == {1, 5, 9}
     assert out[1]["n_obs"] == 2 and out[9]["n_obs"] == 2
@@ -319,7 +310,7 @@ def test_benford_hand_computed(spark):
     assert out[1]["delta_micros"] == 1_000_000 * 2 - 301030 * 5
     # certificate on real data: all nine digits occur at sf0.001, so
     # the exact residuals cancel and the total matches the fact count
-    full = st.benford_digit_audit(spark, SF).collect()
+    full = analytics.benford_digit_audit(spark, SF).collect()
     assert len(full) == 9
     assert sum(r["delta_micros"] for r in full) == 0
     assert full[0]["n_total"] == catalog.load(spark, SF, "lineitem").count()
@@ -353,14 +344,12 @@ def test_cusum_closed_form_property():
     check()
 
 
-def test_staged_fixture_simulations(spark):
+def test_fixture_simulations(spark):
     """Pure-Python replay of the whole sf0.001 fixture for the three
     sequential heads: the Spark output must equal a row-by-row
     simulation (ordering (ts, event_id), centi rounding via
     round-half-even on near-integers is exact here)."""
     import datetime
-
-    import processo_etl_spark.plans.staged_r11 as st
 
     ev = sorted(
         catalog.load(spark, SF, "events")
@@ -377,7 +366,7 @@ def test_staged_fixture_simulations(spark):
         sim[r["event_id"]] = s
     got = {
         r["event_id"]: (r["s_cusum"], r["is_alert"])
-        for r in st.changepoint_cusum_alerts(spark, SF).collect()
+        for r in analytics.changepoint_cusum_alerts(spark, SF).collect()
     }
     assert len(got) == len(sim)
     for eid, s in sim.items():
@@ -398,7 +387,7 @@ def test_staged_fixture_simulations(spark):
         last[key] = us
     got_d = {
         r["event_id"]: r["gap_us"]
-        for r in st.events_debounce_lag(spark, SF).collect()
+        for r in analytics.events_debounce_lag(spark, SF).collect()
     }
     assert got_d == kept
     # --- markov simulation
@@ -416,7 +405,7 @@ def test_staged_fixture_simulations(spark):
         src_tot[s_] += n
     got_m = {
         (r["src_type"], r["dst_type"]): (r["n_pairs"], r["n_src_out"])
-        for r in st.markov_event_transitions(spark, SF).collect()
+        for r in analytics.markov_event_transitions(spark, SF).collect()
     }
     assert got_m == {
         k: (n, src_tot[k[0]]) for k, n in pairs.items()
@@ -427,7 +416,6 @@ def test_weighted_median_fixture_simulation(spark):
     """Pure-Python replay of the weighted median over the real
     lineitem fixture: sort each flag's (price, qty) pairs and take the
     smallest price whose doubled cumulative weight reaches the total."""
-    import processo_etl_spark.plans.staged_r11 as st
 
     rows = (
         catalog.load(spark, SF, "lineitem")
@@ -451,7 +439,7 @@ def test_weighted_median_fixture_simulation(spark):
                 break
     got = {
         r["l_returnflag"]: (r["w_total"], r["weighted_median_price"])
-        for r in st.weighted_median_price_by_flag(spark, SF).collect()
+        for r in analytics.weighted_median_price_by_flag(spark, SF).collect()
     }
     assert got == expect
 
@@ -464,15 +452,13 @@ def test_triangle_estimate_sampled_hand_computed(spark):
     import hashlib
     import itertools
 
-    import processo_etl_spark.plans.staged_r11 as st
-
     def md5_long(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
     parts = list(range(1, 9))
     rows = [(100, p) for p in parts]
     df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    out = _inject(df, st.graph_triangle_estimate_sampled, spark)[0]
+    out = _inject(df, analytics.graph_triangle_estimate_sampled, spark)[0]
 
     edges = [(a, b) for a, b in itertools.combinations(parts, 2)]
     sampled = {

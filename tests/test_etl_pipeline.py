@@ -302,7 +302,7 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     import glob
 
     from processo_etl_spark import catalog
-    from processo_etl_spark.sources import maintenance
+    from processo_etl_spark.operators import maintenance
 
     docs = catalog.load(spark, "/root/testdata/sf0.001", "documents")
     small = str(tmp_path / "small")

@@ -1878,6 +1878,40 @@ def test_pagerank_broadcast_and_shuffle_modes_bitequal(spark):
     assert abs(sum(bcast.values()) - 1.0) < 1e-9
 
 
+def test_pagerank_zero_out_weight_node_is_dangling(spark):
+    """A node whose out-weights sum to 0 is dangling, like a sink: no
+    ANSI DIVIDE_BY_ZERO, ranks sum to 1, broadcast ≡ shuffle bit for
+    bit, and ``pagerank_from_edges`` agrees with both."""
+    from processo_etl_spark.operators import graph
+
+    # 'c' has two out-edges, both of weight 0
+    es = [
+        ("a", "b", 1), ("b", "c", 2), ("a", "c", 1),
+        ("c", "a", 0), ("c", "b", 0),
+    ]
+    edf = spark.createDataFrame(es, "src string, dst string, w long")
+    bcast = {
+        r["node"]: r["pagerank"]
+        for r in graph.pagerank_distributed(edf, 0.85, 5).collect()
+    }
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuf = {
+            r["node"]: r["pagerank"]
+            for r in graph.pagerank_distributed(edf, 0.85, 5).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert bcast == shuf  # bit-for-bit, not approx
+    assert set(bcast) == {"a", "b", "c"}
+    assert abs(sum(bcast.values()) - 1.0) < 1e-9
+    assert graph.pagerank_from_edges(["a", "b", "c"], es, 0.85, 5) == bcast
+    # same ranks as the graph where 'c' simply has no out-edges
+    sink = [e for e in es if e[0] != "c"]
+    assert graph.pagerank_from_edges(["a", "b", "c"], sink, 0.85, 5) == bcast
+
+
 def test_bloom_contamination_bounds_exact(spark):
     from processo_etl_spark.ml import bloom
 

@@ -75,7 +75,7 @@ def test_approx_quartiles_close_to_exact(spark):
 
 def test_registry_integrity_and_priority_window():
     """The r3 regression class, pinned for the r5 SELF-ROTATING window:
-    every pinned/head name must be a registered query (ghost entries
+    every pinned name must be a registered query (ghost entries
     broke all_queries() for a whole round), the graded window is
     exactly _WINDOW wide and leads the iteration order, rotation slots
     prefer never-graded oracle-backed queries, and the known-red
@@ -84,17 +84,14 @@ def test_registry_integrity_and_priority_window():
     from processo_etl_spark.plans import (
         _NEVER_GRADE,
         _PINNED,
-        _ROTATION_HEADS,
         _WINDOW,
         _graded_names,
     )
 
     queries = plans.all_queries()
     oracles = plans.all_oracles()
-    ghosts = [
-        n for n in (*_PINNED, *_ROTATION_HEADS) if n not in queries
-    ]
-    assert not ghosts, f"pinned/head names not registered: {ghosts}"
+    ghosts = [n for n in _PINNED if n not in queries]
+    assert not ghosts, f"pinned names not registered: {ghosts}"
     window = list(queries)[:_WINDOW]
     assert window[: len(_PINNED)] == list(_PINNED)
     assert not (set(window) & _NEVER_GRADE)

@@ -153,8 +153,7 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         "q11_important_parts",
         "q22_global_sales",
         # one-row n_total attach under the 9-row digit table — the
-        # DSIR/q11 scalar-attach shape (staged_r11, audited since its
-        # r11 registration).
+        # DSIR/q11 scalar-attach shape.
         "benford_digit_audit",
         # two ONE-ROW scalar attaches (sampled edge count + sampled
         # triangle count) under the one-row totals — linear scalar
@@ -163,11 +162,11 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         # one-row pe_num attach under the one-row totals — everything
         # after the ≤9-row contingency groupBy is dimension-sized.
         "eval_agreement_kappa",
-        # r13 activation: one-row n_cell_mismatch certificate attach
+        # one-row n_cell_mismatch certificate attach
         # under the ≤2-row quantile relation — linear scalar attach;
         # the raw events only pass through combinable bucket groupBys.
         "quantile_daily_histogram_merge",
-        # r13 activation: two ONE-ROW relations (coverage accounting ×
+        # two ONE-ROW relations (coverage accounting ×
         # recall certificate) cross-attached — linear scalar attach;
         # the ANN search itself is the certified cell-equi-join plan.
         "ann_index_incremental_update",
@@ -188,7 +187,7 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         # |flags|-row TOTALS dimension (3 rows) — never the fact table;
         # the fact-table cumulative itself is distributed_cumsum.
         "weighted_median_price_by_flag",
-        # r13 activation: ordered cumsum over the MERGED fixed-grid
+        # ordered cumsum over the MERGED fixed-grid
         # histogram (≤ ~5k cells for this value domain) — a
         # dimension-sized global window, the weighted_median exception
         # class; the raw events only ever pass through combinable
@@ -327,7 +326,7 @@ def test_sorted_layout_enables_row_group_skipping(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from processo_etl_spark import catalog
-    from processo_etl_spark.sources import layout
+    from processo_etl_spark.operators import layout
 
     li = catalog.load(spark, "/root/testdata/sf0.01", "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_shipdate"
@@ -409,7 +408,7 @@ def test_zorder_layout_skips_on_both_dimensions(spark, tmp_path):
     stats pruning actually skips — like a production 128 MB-group file."""
     import pyspark.sql.functions as F
 
-    from processo_etl_spark.sources import layout
+    from processo_etl_spark.operators import layout
 
     n = 1 << 14
     df = (

@@ -1,8 +1,6 @@
-"""Differential + semantic tests for the staged_r13 heads
-(plans/staged_r13) — banked in r12, registered since the r13
-activation.  These tests predate the activation and remain the heads'
-independent differential evidence (DuckDB multiset + hand-computed
-semantics), complementing the driver's hash grade."""
+"""Differential + semantic tests for the curation heads
+(plans/curation): each Spark plan against its DuckDB oracle at sf0.001
+(multiset compare), plus hand-computed semantics."""
 
 from __future__ import annotations
 
@@ -10,8 +8,14 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from processo_etl_spark import catalog
-from processo_etl_spark.plans import staged_r13
+from processo_etl_spark import catalog, plans
+from processo_etl_spark.plans import curation
+
+QUERIES = plans.all_queries()
+ORACLES = plans.all_oracles()
+NAMES = sorted(
+    n for n, fn in QUERIES.items() if fn.__module__ == curation.__name__
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,9 +36,9 @@ def _multiset(cols, rows):
     return sorted(cols), sorted(map(key, rows))
 
 
-@pytest.mark.parametrize("name", sorted(staged_r13.STAGED))
+@pytest.mark.parametrize("name", NAMES)
 def test_staged_head_matches_oracle(spark, name):
-    fn, oracle = staged_r13.STAGED[name]
+    fn, oracle = QUERIES[name], ORACLES[name]
     sdf = fn(spark, SF)
     srows = [tuple(r) for r in sdf.collect()]
     con = _oracle_con()  # keep alive: the relation weak-refs it
@@ -52,7 +56,7 @@ def test_canonical_pick_semantics(spark):
     from processo_etl_spark.ml import dedup, textstats
     from processo_etl_spark.plans.common import t
 
-    out = staged_r13.dedup_cluster_canonical(spark, SF)
+    out = curation.dedup_cluster_canonical(spark, SF)
     rows = out.collect()
     assert rows, "sf0.001 corpus has near-dup clusters"
     docs = t(spark, SF, "documents")
@@ -90,7 +94,7 @@ def test_quantile_merge_semantics(spark):
     histogram (sums commute), and the histogram-derived bucket equals
     the true k-th value's bucket for both quantiles (the one-bucket
     error bound collapses to equality at bucket granularity)."""
-    out = staged_r13.quantile_daily_histogram_merge(spark, SF).collect()
+    out = curation.quantile_daily_histogram_merge(spark, SF).collect()
     assert {r["q_pct"] for r in out} == {50, 95}
     for r in out:
         assert r["n_cell_mismatch"] == 0
@@ -114,7 +118,7 @@ def test_quantile_merge_hand_computed(spark, tmp_path):
     ).parquet(str(tmp_path / "events.parquet"))
     out = {
         r["q_pct"]: r
-        for r in staged_r13.quantile_daily_histogram_merge(
+        for r in curation.quantile_daily_histogram_merge(
             spark, str(tmp_path)
         ).collect()
     }
@@ -129,7 +133,7 @@ def test_canonical_argmax_tiebreak_hand_computed(spark):
     """Hand fixture through the SAME encoding arithmetic: identical
     quality inside a cluster must keep the SMALLEST doc id; a higher
     quality member wins regardless of id order."""
-    from processo_etl_spark.plans.staged_r13 import _ENC
+    from processo_etl_spark.plans.curation import _ENC
 
     df = spark.createDataFrame(
         [

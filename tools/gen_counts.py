@@ -48,10 +48,9 @@ def rounds_present(root: Path | None = None) -> list[int]:
 
 def window_block(rounds: frozenset[int], root: Path | None = None) -> str:
     """Generated grading-window digest (VERDICT r10 #5): the pinned
-    listing, the tier-1 (never-graded oracle-backed) fill, the
-    re-certify slot count, and the banked-but-unregistered head count
-    are derived from the registry + the CORRECTNESS files of the given
-    ``rounds`` set.  Rewritten between the ``<!-- gen:window
+    listing, the tier-1 (never-graded oracle-backed) fill and the
+    re-certify slot count are derived from the registry + the
+    CORRECTNESS files of the given ``rounds`` set.  Rewritten between the ``<!-- gen:window
     rounds=... -->`` markers in COVERAGE.md / SKILL.md; the stamp
     records which round set the digest was built from, and ``--check``
     regenerates against that SAME set, so a new CORRECTNESS file the
@@ -101,7 +100,6 @@ def window_block(rounds: frozenset[int], root: Path | None = None) -> str:
     tier1 = [n for n in ungraded if n not in red and n in oracles]
     tier2 = [n for n in ungraded if n not in red and n not in oracles]
     recert = [n for n in rotation if gr.get(n, 0) > 0]
-    banked = banked_heads()
     lines = [
         f"- window: {_WINDOW} slots = {len(_PINNED)} pinned + "
         f"{len(rotation)} rotation",
@@ -126,28 +124,7 @@ def window_block(rounds: frozenset[int], root: Path | None = None) -> str:
             else ""
         )
     )
-    lines.append(
-        f"- banked (implemented, NOT registered) heads: {len(banked)}"
-        + (f" — {', '.join(banked)}" if banked else "")
-    )
     return "\n".join(lines)
-
-
-def banked_heads() -> list[str]:
-    """Heads in plans/staged_*.py STAGED dicts that are NOT registered.
-
-    r10's stale 'FOUR heads are BANKED' comment (VERDICT r10 'what's
-    missing' #3) motivated deriving this mechanically."""
-    import importlib
-
-    registered = set(plans.all_queries())
-    out = []
-    pkg = ROOT / "processo_etl_spark" / "plans"
-    for p in sorted(pkg.glob("staged_*.py")):
-        mod = importlib.import_module(f"processo_etl_spark.plans.{p.stem}")
-        staged = getattr(mod, "STAGED", {})
-        out.extend(n for n in staged if n not in registered)
-    return out
 
 
 # Opening marker optionally carries the round-set stamp the digest was

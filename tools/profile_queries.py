@@ -1,12 +1,13 @@
-"""r15 optimization-round profiler: capture .explain("formatted") for a
-set of REGISTRY queries (not just bench headliners) and time each one
-with the noop sink (sf0.001 warm-up, cold pass, steady pass — the bench
-methodology).
+"""Profile registry queries: capture .explain("formatted") for each and
+time it with the noop sink, using the bench methodology (sf0.001
+warm-up, cold pass, steady pass).
 
-Usage: python tools/profile_r15.py <before|after> [sf_dir] [q1,q2,...]
+Usage: python tools/profile_queries.py <tag> [sf_dir] [q1,q2,...]
 
-Writes plans/r15/<query>_<tag>.txt and prints a JSON timing line.
-Defaults to the queries this round touches.
+Defaults to sf0.1 and the bench headliners (``bench.HEADLINE``).
+Writes plans/<tag>/<query>.txt and prints a JSON timing line.  The
+committed plans/r14 and plans/r15 dumps were taken the same way, with
+a before/after suffix in the file name.
 """
 
 from __future__ import annotations
@@ -16,19 +17,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from bench import BENCH_OVERRIDES, _force  # noqa: E402
+from bench import BENCH_OVERRIDES, HEADLINE, _force  # noqa: E402
 from processo_etl_spark import plans, session  # noqa: E402
-
-DEFAULT = [
-    "graph_pagerank_distributed",
-    "graph_kcore_order_parts",
-    "graph_communities_lpa",
-    "decontaminate_bloom",
-    "join_bloom_pruned_orders",
-    "dedup_duplicate_spans",
-]
 
 
 def explain_formatted(df) -> str:
@@ -40,41 +33,38 @@ def explain_formatted(df) -> str:
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    tag = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3].split(",") if len(sys.argv) > 3 else DEFAULT
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r15",
-    )
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else list(HEADLINE)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
-    spark = session.get_spark(app_name=f"profile_r15_{tag}")
+    spark = session.get_spark(app_name=f"profile_{tag}")
     queries = plans.all_queries()
+    fns = {n: BENCH_OVERRIDES.get(n) or queries[n] for n in names}
 
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-    for name in names:
-        fn = BENCH_OVERRIDES.get(name) or queries[name]
+    for name, fn in fns.items():
         spark.sparkContext.setJobDescription(f"warmup:{name}")
         _force(fn(spark, warm_dir))
     spark.catalog.clearCache()
 
     cold: dict[str, float] = {}
-    for name in names:
-        fn = BENCH_OVERRIDES.get(name) or queries[name]
+    for name, fn in fns.items():
         spark.sparkContext.setJobDescription(f"cold:{name}")
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         _force(df)
         cold[name] = round(time.perf_counter() - t0, 3)
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
             fh.write(explain_formatted(df))
 
     steady: dict[str, float] = {}
-    for name in names:
-        fn = BENCH_OVERRIDES.get(name) or queries[name]
+    for name, fn in fns.items():
         spark.sparkContext.setJobDescription(f"steady:{name}")
         t0 = time.perf_counter()
         _force(fn(spark, sf_dir))
