@@ -78,7 +78,10 @@ HEADLINE = (
 # graph_pagerank_distributed benches with plain map-side-combinable
 # F.sum (bit_deterministic=False — the documented 100 TB posture,
 # tested on dangling graphs) instead of the value-sorted fold the
-# DuckDB bit-exact oracle requires.
+# DuckDB bit-exact oracle requires.  Kept because the fold costs far
+# more than the noise: sf0.1, 4 vCPU / 15.7 GB, 2026-10-17, 9 interleaved
+# steady pairs: 5.66 s median (min 4.61) fold vs 3.89 s (min 2.80) plain,
+# +46%, fold slower in every pair; cold 7.69 vs 4.39 s.
 def _pagerank_plain(spark, sf_dir):
     from processo_etl_spark.operators import graph
     from processo_etl_spark.plans.events import pagerank_order_graph_edges
@@ -93,17 +96,80 @@ def _pagerank_plain(spark, sf_dir):
 
 BENCH_OVERRIDES = {"graph_pagerank_distributed": _pagerank_plain}
 
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
-def _env_fingerprint() -> dict:
+
+# The run protocol, shared with tools/profile_queries.py and bench_scaling.py.
+
+
+def resolve(names) -> dict:
+    """Registry names → the callables a measurement runs, in order: the
+    bench override where one exists, else the registry query."""
+    queries = plans.all_queries()
+    return {n: BENCH_OVERRIDES.get(n) or queries[n] for n in names}
+
+
+def warm_dir(sf_dir: str) -> str:
+    """The warm-up scale: the ``sf0.001`` sibling of ``sf_dir``, else
+    that of the default testdata (a ``tools/gen_scale.py`` output has
+    no sibling), else ``sf_dir`` itself."""
+    for base in (sf_dir, DEFAULT_SF_DIR):
+        d = os.path.join(os.path.dirname(base.rstrip("/")), "sf0.001")
+        if os.path.isdir(d):
+            return d
+    return sf_dir
+
+
+def timed_run(spark, name, fn, sf_dir, tag="bench"):
+    """Build and fully execute one plan (noop sink: no driver collect)
+    with the job description ``tag:name``; returns (seconds, DataFrame).
+    Deliberately NO cache clear afterwards: Spark's cache manager
+    substitutes any persisted plan that matches a subtree of a later
+    plan, so queries sharing lineage (the gram shuffle under
+    dedup_duplicate_spans / dedup_excise_spans, the minhash signature
+    base, the shared tokenized-corpus relation) reuse each other's
+    materialized intermediates exactly like stages of one pipeline over
+    the same corpus — the VERDICT r4 #7 sharing model.  Measured at
+    sf0.1: per-query isolation via clearCache costs the suite ~19%
+    (37.5 s vs 31.5 s steady)."""
+    spark.sparkContext.setJobDescription(f"{tag}:{name}")
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3), df
+    finally:
+        spark.sparkContext.setJobDescription(None)
+
+
+def timed_pass(spark, fns: dict, sf_dir, tag="bench") -> dict[str, float]:
+    """One timed run of every query in ``fns``: name → seconds."""
+    return {n: timed_run(spark, n, fn, sf_dir, tag)[0] for n, fn in fns.items()}
+
+
+def warm_up(spark, fns: dict, sf_dir, tag="bench") -> None:
+    """One pass at :func:`warm_dir` (JVM/codegen bring-up), then
+    ``clearCache``: persisted warm-up blocks are useless at the target
+    sf (the cache manager matches plans per path), so the timed passes
+    must not measure block-manager pressure from them."""
+    timed_pass(spark, fns, warm_dir(sf_dir), tag)
+    spark.catalog.clearCache()
+
+
+def _env_fingerprint(spark) -> dict:
     """Machine-state snapshot (VERDICT r6 #2): makes a uniform
     round-over-round drift attributable to host load / memory pressure /
-    competing JVMs in one read, instead of inferred from variance bands."""
-    import os
-
+    competing JVMs in one read, instead of inferred from variance bands.
+    Also the parallelism and driver heap the session got (VERDICT r15 #1)."""
+    sc = spark.sparkContext
     fp: dict = {
         "loadavg_1m_5m_15m": [round(x, 2) for x in os.getloadavg()],
         "cpus_granted": len(os.sched_getaffinity(0)),
         "cpu_count": os.cpu_count(),
+        "master": sc.master,
+        "parallelism": sc.defaultParallelism,
+        "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+        "driver_memory": sc.getConf().get("spark.driver.memory"),
     }
     try:
         with open("/proc/meminfo") as fh:
@@ -157,11 +223,6 @@ def _calibrate(spark) -> dict:
         "calib_sched_job_ms": round(sorted(sched)[len(sched) // 2] * 1000, 2),
         "calib_cpu_2m_ms": round(sorted(cpu)[len(cpu) // 2] * 1000, 2),
     }
-
-
-def _force(df) -> None:
-    """Fully execute a plan without collecting to the driver."""
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _prior_stable_run(root: str) -> dict | None:
@@ -285,33 +346,15 @@ def _regression_gate_2r(
     return out
 
 
-def _run(spark, queries, name, sf_dir) -> None:
-    """One query execution.  Deliberately NO cache clear afterwards:
-    Spark's cache manager substitutes any persisted plan that matches a
-    subtree of a later plan, so queries sharing lineage (the gram
-    shuffle under dedup_duplicate_spans / dedup_excise_spans, the
-    minhash signature base, the shared tokenized-corpus relation) reuse
-    each other's materialized intermediates exactly like stages of one
-    pipeline over the same corpus — the VERDICT r4 #7 sharing model.
-    Measured at sf0.1: per-query isolation via clearCache costs the
-    suite ~19% (37.5 s vs 31.5 s steady)."""
-    fn = BENCH_OVERRIDES.get(name) or queries[name]
-    spark.sparkContext.setJobDescription(f"bench:{name}")
-    try:
-        _force(fn(spark, sf_dir))
-    finally:
-        spark.sparkContext.setJobDescription(None)
-
-
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     try:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
     spark = session.get_spark(app_name="bench")
-    env = _env_fingerprint()
+    env = _env_fingerprint(spark)
     try:
         with open(
             os.path.join(
@@ -322,7 +365,7 @@ def main() -> int:
     except (OSError, ValueError):
         blessed = None  # fresh checkout — no blessed artifact yet
 
-    queries = plans.all_queries()
+    fns = resolve(HEADLINE)
     # Methodology (r5, after the dedup_minhash_lsh regression audit):
     # the r2–r4 warm-up ran each plan once at sf0.001, but AQE re-plans
     # at the target scale, so the first sf0.1 execution still pays
@@ -338,15 +381,7 @@ def main() -> int:
     #           kept for cross-round comparison
     #   pass B: second timed run at target sf — reported as
     #           queries/value (the headline)
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for name in HEADLINE:
-        _run(spark, queries, name, warm_dir)
-    # sf0.001 persisted blocks are useless at the target sf (the cache
-    # manager matches plans per path) — free them so the timed passes
-    # don't measure block-manager pressure from warm-up leftovers.
-    spark.catalog.clearCache()
+    warm_up(spark, fns, sf_dir)
     env.update(_calibrate(spark))  # post-warm-up: measures the hot JVM
 
     # Calibration gate (VERDICT r11 #3): r11's artifact convicted a
@@ -368,18 +403,12 @@ def main() -> int:
         if len(gate) > 1:
             env["calib_gate_attempts"] = gate
 
-    cold: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        _run(spark, queries, name, sf_dir)
-        cold[name] = round(time.perf_counter() - t0, 3)
+    cold = timed_pass(spark, fns, sf_dir)
 
     timings: dict[str, float] = {}
     stall_retries: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        _run(spark, queries, name, sf_dir)
-        timings[name] = round(time.perf_counter() - t0, 3)
+    for name, fn in fns.items():
+        timings[name] = timed_run(spark, name, fn, sf_dir)[0]
         # Stall probe (r10): one-off scheduler/GC hiccups occasionally
         # inflate a single warm query far past its own COLD time (the
         # session that added this measured heaps_vocab_growth at 6.06 s
@@ -391,9 +420,7 @@ def main() -> int:
         # the r5 steady-pass sum, comparable across rounds); only the
         # noise-robust `value_best` companion reads the retry.
         if timings[name] > max(1.0, 2.5 * cold[name]):
-            t0 = time.perf_counter()
-            _run(spark, queries, name, sf_dir)
-            stall_retries[name] = round(time.perf_counter() - t0, 3)
+            stall_retries[name] = timed_run(spark, name, fn, sf_dir)[0]
 
     env["loadavg_after"] = [round(x, 2) for x in os.getloadavg()]
     # Second calibration at the END of the run (r11): this container's
@@ -499,10 +526,14 @@ def main() -> int:
     ) as fh:
         json.dump(full, fh, indent=1)
         fh.write("\n")
-    line = dict(full)
-    del line["queries_cold"]
-    print(json.dumps(line))
+    print(_printed_line(full))
     return 0
+
+
+def _printed_line(full: dict) -> str:
+    """The one stdout line: the artifact without its per-query cold
+    dict (its total stays as ``cold_value``)."""
+    return json.dumps({k: v for k, v in full.items() if k != "queries_cold"})
 
 
 if __name__ == "__main__":

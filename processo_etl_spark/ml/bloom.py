@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from processo_etl_spark.ml.dedup import MERSENNE_P, md5_long, perm_constants
+from processo_etl_spark.session import persist_once
 
 WORD_BITS = 32
 
@@ -308,7 +309,7 @@ def bloom_contamination(
             F.explode(F.array_distinct(word_shingles(text_col, n))).alias("gram")
         )
         .distinct()
-        .persist()
+        .transform(persist_once)
     )
     # The filter attaches IN-PLAN as a broadcast one-row scalar (r15,
     # VERDICT r14 #3): the old bloom_filter_words collect was a blocking

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from processo_etl_spark.session import persist_once
+
 
 def md5_long(c: Column) -> Column:
     """Deterministic 60-bit integer hash: first 15 hex chars of md5."""
@@ -153,7 +155,7 @@ def boilerplate_chunk_removal(
     # pipeline over the whole corpus.
     exploded = df.select(
         F.col(id_col), F.posexplode(chunks).alias("pos", "chunk")
-    ).persist()
+    ).transform(persist_once)
     boiler = (
         exploded.groupBy("chunk")
         .agg(F.count_distinct(F.col(id_col)).alias("df_docs"))
@@ -295,7 +297,7 @@ def minhash_lsh_pairs(
     ).withColumn("sig", minhash_signature(F.col("sh"), k))
     # The self-join + verify re-read this lineage 4×; materialize once.
     # At cluster scale this would be a parquet signature table instead.
-    base = base.persist()
+    base = base.transform(persist_once)
 
     banded = base.select(
         "doc",
@@ -808,8 +810,8 @@ def duplicate_spans(
     also switch the join key to ``md5_long(g)`` to cut shuffle bytes
     ~2.5× (not worth it at bench scale where grams are ~20 bytes).
     """
-    grams = _positional_grams(df, text_col, id_col, n, toks_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    grams = _positional_grams(df, text_col, id_col, n, toks_col).transform(
+        persist_once, StorageLevel.MEMORY_AND_DISK
     )
     dup = _dup_gram_keys(grams, min_docs)
     return (
@@ -923,8 +925,8 @@ def excise_duplicate_spans(
     """
     words = F.split(normalize_text(text_col), " ")
     base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"))
-    grams = _positional_grams(df, text_col, id_col, n, toks_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    grams = _positional_grams(df, text_col, id_col, n, toks_col).transform(
+        persist_once, StorageLevel.MEMORY_AND_DISK
     )
     dup = _dup_gram_keys(grams, min_docs)
     starts = (

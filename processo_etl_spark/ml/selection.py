@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from processo_etl_spark.ml.dedup import md5_long, normalize_text
+from processo_etl_spark.session import persist_once
 
 
 def importance_weights(
@@ -80,7 +81,7 @@ def importance_weights(
         F.explode(tok_arr).alias("tok"),
     ).select(
         "doc_id", "is_t", (md5_long(F.col("tok")) % b).alias("b")
-    ).persist()
+    ).transform(persist_once)
 
     # Global totals are the column sums of the B-row bucket stats, so
     # derive them there instead of a third pass over the exploded token
@@ -89,7 +90,7 @@ def importance_weights(
     bstats = toks.groupBy("b").agg(
         F.count(F.when(F.col("is_t"), 1)).alias("ct"),
         F.count(F.lit(1)).alias("cr"),
-    ).persist()
+    ).transform(persist_once)
     totals = bstats.agg(
         F.sum("ct").alias("nt"),
         F.sum("cr").alias("nr"),

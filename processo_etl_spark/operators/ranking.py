@@ -27,6 +27,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.session import persist_once
+
 
 def _ranked_with_total(
     df: DataFrame,
@@ -47,7 +49,7 @@ def _ranked_with_total(
     # deduplicates the upstream computation.)
     ranged = df.repartitionByRange(int(parts), *cols).withColumn(
         "__pid", F.spark_partition_id()
-    ).persist()
+    ).transform(persist_once)
     # Tiny job: one row per partition → prefix sums on the driver.
     counts = {
         r["__pid"]: r["n"]
@@ -370,7 +372,7 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     ranged = (
         g.repartitionByRange(parts, F.col("__x"))
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
+        .transform(persist_once)
     )
     pmins = {
         r["__pid"]: r["m"]

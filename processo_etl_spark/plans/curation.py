@@ -1,7 +1,7 @@
 """Curation upkeep heads: the canonical pick per near-duplicate
 cluster, mergeable per-day quantile summaries, and an incremental ANN
 index update.  Each head's Spark plan has a DuckDB oracle
-(tests/test_staged_r13.py runs every pair at sf0.001).
+(tests/test_curation.py runs every pair at sf0.001).
 
 The production step after near-dup clustering:
 

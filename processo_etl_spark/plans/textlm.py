@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import corpus
+from processo_etl_spark.session import persist_once
 
 # DuckDB mirror of ml/textstats.tokens_ws (lower + collapsed whitespace,
 # split on ' ') — the same string the mlops oracles use.
@@ -181,7 +182,7 @@ def collocations_lift_topk(spark, sf_dir):
         _bigrams(spark, sf_dir)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_ab"))
-        .persist()
+        .transform(persist_once)
     )
     uni = (
         corpus(spark, sf_dir)
@@ -189,7 +190,7 @@ def collocations_lift_topk(spark, sf_dir):
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
+        .transform(persist_once)
     )
     t_uni = uni.agg(F.sum("n").alias("t_uni"))
     t_bg = nab.agg(F.sum("n_ab").alias("t_bg"))
@@ -532,7 +533,7 @@ def heaps_vocab_growth(spark, sf_dir):
     # sf0.1; the executed plan held three copies of the rank subtree).
     # Cache cost is docs-sized / 10 rows; the cache manager shares them
     # across the session like the corpus relation itself.
-    ranked = distributed_rank(docs, ["doc_id"], "rn").persist()
+    ranked = distributed_rank(docs, ["doc_id"], "rn").transform(persist_once)
     n_df = docs.agg(F.count(F.lit(1)).alias("n"))
     deciles = n_df.select(
         F.explode(F.sequence(F.lit(1), F.lit(10))).alias("decile"), "n"
@@ -548,7 +549,7 @@ def heaps_vocab_growth(spark, sf_dir):
             F.col("target_rank").alias("docs_seen"),
             F.col("doc_id").alias("boundary"),
         )
-        .persist()
+        .transform(persist_once)
     )
     tok_first = (
         c.select("doc_id", F.explode("toks").alias("tok"))

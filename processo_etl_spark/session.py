@@ -19,7 +19,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 DRIVER_MEMORY_CAP_MB = 24 * 1024
@@ -85,3 +86,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def persist_once(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """``df.persist(level)`` unless the session's cache manager already
+    holds ``df``'s plan (a re-run of the same query, or a sibling query
+    sharing the relation), where Spark keeps the first entry anyway and
+    only logs "Asked to cache already cached data".  Chains with
+    ``df.transform(persist_once)``; ``unpersist`` frees the shared entry
+    either way."""
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist(level)
+    return df

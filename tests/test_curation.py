@@ -37,7 +37,7 @@ def _multiset(cols, rows):
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_staged_head_matches_oracle(spark, name):
+def test_head_matches_oracle(spark, name):
     fn, oracle = QUERIES[name], ORACLES[name]
     sdf = fn(spark, SF)
     srows = [tuple(r) for r in sdf.collect()]

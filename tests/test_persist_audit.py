@@ -2,8 +2,10 @@
 bounded — either released inside the operator (pagerank unpersists its
 edge/node/routed caches) or deduplicated by Spark's CacheManager so that
 REPEATED invocations of the same query never grow the cached-relation
-set (the bench's blessed sharing model: identical plans re-persist into
-the SAME InMemoryRelation entry, "Asked to cache already cached data").
+set (the bench's blessed sharing model: identical plans share the SAME
+InMemoryRelation entry, and ``session.persist_once`` skips the persist
+call when the plan is already cached, so Spark never logs "Asked to
+cache already cached data").
 
 Documented caller-owned persists that intentionally outlive their call
 (one cache entry per distinct plan, session-lifetime, relied on by the
@@ -103,3 +105,43 @@ def test_registry_sweep_persists_are_bounded_and_idempotent(spark):
     spark.catalog.clearCache()
     common._CORPUS_CACHE.clear()
     assert _n_cached(spark) == 0
+
+
+def test_dedup_span_queries_share_one_gram_entry_without_recaching(
+    spark, monkeypatch
+):
+    """dedup_duplicate_spans and dedup_excise_spans persist the same
+    positional-gram plan.  Run back to back, the second finds it cached:
+    it adds no cache entry and makes no persist call on an already
+    cached plan — the call behind the CacheManager warning."""
+    from pyspark import StorageLevel
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from processo_etl_spark import plans
+    from processo_etl_spark.plans import common
+
+    recached = []
+    persist = DataFrame.persist
+
+    def spy(self, *args, **kwargs):
+        if self.storageLevel != StorageLevel.NONE:
+            recached.append(self.columns)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", spy)
+    queries = plans.all_queries()
+    spark.catalog.clearCache()
+    common._CORPUS_CACHE.clear()
+    try:
+        queries["dedup_duplicate_spans"](spark, SF_DIR).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        after_first = _n_cached(spark)
+        queries["dedup_excise_spans"](spark, SF_DIR).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        assert recached == []
+        assert _n_cached(spark) == after_first
+    finally:
+        spark.catalog.clearCache()
+        common._CORPUS_CACHE.clear()

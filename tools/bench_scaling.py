@@ -28,7 +28,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,33 +46,14 @@ DEFAULT_QUERIES = [
 
 def inner(cpus: int, sf_dir: str, names: list[str]) -> int:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    from bench import BENCH_OVERRIDES, _force  # noqa: E402
-    from processo_etl_spark import plans, session  # noqa: E402
+    from bench import resolve, timed_pass, warm_up  # noqa: E402
+    from processo_etl_spark import session  # noqa: E402
 
     spark = session.get_spark(app_name=f"bench_scaling_{cpus}")
-    queries = plans.all_queries()
-    # Warm-up at sf0.001 (JVM/codegen bring-up, the bench convention).
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for name in names:
-        fn = BENCH_OVERRIDES.get(name) or queries[name]
-        _force(fn(spark, warm_dir))
-    spark.catalog.clearCache()
-    out: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    for name in names:  # cold pass primes the shared caches
-        fn = BENCH_OVERRIDES.get(name) or queries[name]
-        spark.sparkContext.setJobDescription(f"scaling_cold:{name}")
-        t0 = time.perf_counter()
-        _force(fn(spark, sf_dir))
-        cold[name] = round(time.perf_counter() - t0, 3)
-    for name in names:  # steady pass = the reported number
-        fn = BENCH_OVERRIDES.get(name) or queries[name]
-        spark.sparkContext.setJobDescription(f"scaling:{name}")
-        t0 = time.perf_counter()
-        _force(fn(spark, sf_dir))
-        out[name] = round(time.perf_counter() - t0, 3)
+    fns = resolve(names)
+    warm_up(spark, fns, sf_dir, tag="scaling_warmup")
+    cold = timed_pass(spark, fns, sf_dir, tag="scaling_cold")  # primes caches
+    out = timed_pass(spark, fns, sf_dir, tag="scaling")  # the reported number
     print(json.dumps({"cpus": cpus, "steady": out, "cold": cold}))
     return 0
 
