@@ -10,6 +10,7 @@ Layout
 ------
 - ``session``    — SparkSession factory tuned for local[N] and cluster use.
 - ``catalog``    — loaders / temp-view registry over a testdata directory.
+- ``columns``    — the reserved prefix for engine-internal column names.
 - ``sources``    — CSV (both reference dialects), JDBC upsert, HTTP landing.
 - ``functions``  — scalar column library (cleaning, derivation, text surgery).
 - ``operators``  — relational building blocks (joins, dedup, star schema).

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.ml.dedup import MERSENNE_P, md5_long, perm_constants
 from processo_etl_spark.session import persist_once
 
@@ -116,7 +117,7 @@ def bloom_probe(
     """
     key = F.col(key_col) if isinstance(key_col, str) else key_col
     others = list(items.columns)
-    rid = "__bloom_rid"
+    rid = internal("bloom_rid")
     probed = items.withColumn(rid, F.monotonically_increasing_id()).select(
         rid, *others, F.explode(_word_masks(key, k, n_bits)).alias("c")
     ).select(
@@ -150,10 +151,10 @@ def bloom_filter_words(
     return words
 
 
-# Column of the one-row filter relation.  Reserved (``__pe_`` prefix): it
-# is cross-joined onto caller frames, so a plain name such as ``words``
+# Column of the one-row filter relation.  Reserved (``columns.internal``):
+# it is cross-joined onto caller frames, so a plain name such as ``words``
 # would be ambiguous with — and then dropped along with — a caller column.
-WORDS_COL = "__pe_bloom_words"
+WORDS_COL = internal("bloom_words")
 
 
 def bloom_words_relation(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+
 
 def target_encode_loo(
     df: DataFrame,
@@ -51,26 +53,27 @@ def target_encode_loo(
     """
     y = F.round(F.col(target_col), scale).cast(f"decimal(12,{scale})")
     valid = df.filter(F.col(target_col).isNotNull())
-    per_cat = valid.groupBy(F.col(category_col).alias("__c")).agg(
-        F.sum(y).alias("__sum"), F.count(F.lit(1)).alias("__n")
+    cat, cat_sum, cat_n = internal("c"), internal("sum"), internal("n")
+    per_cat = valid.groupBy(F.col(category_col).alias(cat)).agg(
+        F.sum(y).alias(cat_sum), F.count(F.lit(1)).alias(cat_n)
     )
     g = valid.agg(
         F.sum(y).cast("double").alias("s"), F.count(F.lit(1)).alias("n")
     ).first()
     gmean = (g["s"] / g["n"]) if g["n"] else 0.0
     joined = df.join(
-        F.broadcast(per_cat), df[category_col] == F.col("__c"), "left"
-    ).drop("__c")
+        F.broadcast(per_cat), df[category_col] == F.col(cat), "left"
+    ).drop(cat)
     has_y = F.col(target_col).isNotNull()
     num = (
-        (F.col("__sum") - F.when(has_y, y).otherwise(F.lit(0))).cast("double")
+        (F.col(cat_sum) - F.when(has_y, y).otherwise(F.lit(0))).cast("double")
         + F.lit(smoothing) * F.lit(gmean)
     )
     den = (
-        (F.col("__n") - F.when(has_y, F.lit(1)).otherwise(F.lit(0))).cast(
+        (F.col(cat_n) - F.when(has_y, F.lit(1)).otherwise(F.lit(0))).cast(
             "double"
         )
         + F.lit(smoothing)
     )
     enc = F.coalesce(num / den, F.lit(gmean))
-    return joined.withColumn(out_col, enc).drop("__sum", "__n")
+    return joined.withColumn(out_col, enc).drop(cat_sum, cat_n)

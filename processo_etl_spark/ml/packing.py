@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.ml.dedup import md5_long
 
 
@@ -47,19 +48,20 @@ def pack_sequences(
     shard, one shuffle total.
     """
     c = F.col(key).cast("string")
-    df = df.withColumn("_h", md5_long(c)).withColumn(
+    h = internal("h")
+    df = df.withColumn(h, md5_long(c)).withColumn(
         "shard", (md5_long(F.concat(F.lit("pack:"), c)) % F.lit(n_shards)).cast("int")
     )
     w = (
         Window.partitionBy("shard")
-        .orderBy("_h", key)
+        .orderBy(h, key)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prev = F.coalesce(F.sum(token_col).over(w), F.lit(0))
     return (
         df.withColumn("pack_id", F.floor(prev / F.lit(max_tokens)).cast("long"))
         .withColumn("offset", (prev % F.lit(max_tokens)).cast("long"))
-        .drop("_h")
+        .drop(h)
     )
 
 
@@ -100,20 +102,19 @@ def concat_split_stats(
     from processo_etl_spark.operators.ranking import distributed_cumsum
 
     w = int(window)
-    per = df.select(
-        F.col(id_col).alias("__id"), token_count.cast("long").alias("__n")
-    )
+    doc, n, c = internal("id"), internal("n"), internal("c")
+    per = df.select(F.col(id_col).alias(doc), token_count.cast("long").alias(n))
     cum = distributed_cumsum(
-        per, order_by=[F.col("__id").asc()], value_col="__n", out_col="__c"
+        per, order_by=[F.col(doc).asc()], value_col=n, out_col=c
     )
-    split = (F.col("__n") > 0) & (
-        F.expr(f"(__c - 1) div {w}") > F.expr(f"(__c - __n) div {w}")
+    split = (F.col(n) > 0) & (
+        F.expr(f"({c} - 1) div {w}") > F.expr(f"({c} - {n}) div {w}")
     )
     agg = cum.agg(
         F.count(F.lit(1)).alias("n_docs"),
         # coalesce: F.sum over zero rows is NULL — an empty frame must
         # still honor the all-integer contract (0 tokens, 0 sequences)
-        F.coalesce(F.sum("__n"), F.lit(0)).alias("total_tokens"),
+        F.coalesce(F.sum(n), F.lit(0)).alias("total_tokens"),
         F.coalesce(F.sum(F.when(split, 1).otherwise(0)), F.lit(0)).alias(
             "n_docs_split"
         ),

@@ -41,7 +41,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.similarity import cosine, l2_norm
+from processo_etl_spark.columns import internal
+from processo_etl_spark.ml.similarity import cosine
+
+_INV = internal("pq_inv")
 
 
 def _lloyd(x, ksub: int, iters: int, seed: int):
@@ -141,14 +144,6 @@ def _sub_dists_sql(
     return "array(" + ", ".join(codes) + ")"
 
 
-def _normalized(vec: Column) -> Column:
-    """HOF-based normalize — test/assert surface only, NOT the hot path."""
-    nrm = l2_norm(vec)
-    return F.transform(
-        vec, lambda x: x.cast("double") / F.when(nrm == 0.0, 1.0).otherwise(nrm)
-    )
-
-
 def _inv_norm_sql(vec: str, d: int) -> str:
     """SQL text for 1/‖vec[1..d]‖₂ (1.0 for the zero vector)."""
     sq = " + ".join(
@@ -186,18 +181,18 @@ def pq_encode(
     inv = (
         F.expr(_inv_norm_sql(vec, m * dsub)) if normalize else F.lit(1.0)
     )
-    staged = df.withColumn("_pq_inv", inv)
+    staged = df.withColumn(_INV, inv)
     # Distances per subspace land in their own projected column: the
     # argmin references each twice (array_position + array_min), and a
     # separate non-trivial alias stops CollapseProject from cloning the
     # whole distance tree into both references.
     tmp = []
     for s in range(m):
-        col = f"_pq_d{s}"
+        col = internal(f"pq_d{s}")
         tmp.append(col)
         staged = staged.withColumn(
             col,
-            F.expr(_sub_dists_sql(vec, s * dsub, codebooks[s], "`_pq_inv`")),
+            F.expr(_sub_dists_sql(vec, s * dsub, codebooks[s], f"`{_INV}`")),
         )
     codes = ", ".join(
         f"CAST(array_position(`{c}`, array_min(`{c}`)) - 1 AS TINYINT)"
@@ -205,7 +200,7 @@ def pq_encode(
     )
     return (
         staged.withColumn(out_col, F.expr(f"array({codes})"))
-        .drop("_pq_inv", *tmp)
+        .drop(_INV, *tmp)
     )
 
 
@@ -291,11 +286,11 @@ def ivfpq_topk(
     vec = f"`{vec_col}`"
     probed = (
         queries.withColumn(
-            "_pq_inv", F.expr(_inv_norm_sql(vec, m * dsub))
+            _INV, F.expr(_inv_norm_sql(vec, m * dsub))
         )
         .select(
             F.col(id_col).alias("query_id"),
-            F.expr(_query_lut_sql(vec, codebooks, "`_pq_inv`")).alias("lut"),
+            F.expr(_query_lut_sql(vec, codebooks, f"`{_INV}`")).alias("lut"),
             F.explode(
                 F.slice(
                     F.array_sort(_cell_dists(vec_col, centers)), 1, nprobe

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.operators.relational import dedup_keep_first
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a[i]·b[i] in double precision, left-to-right (deterministic)."""
@@ -440,10 +442,9 @@ def margin_bitext_pairs(
             / ((F.col("avg_l") + F.col("avg_r")) / F.lit(2.0)),
         )
     )
-    best = Window.partitionBy("lid").orderBy(F.desc("margin"), F.asc("rid"))
     return (
-        margined.withColumn("__b", F.row_number().over(best))
-        .filter((F.col("__b") == 1) & (F.col("margin") >= margin_threshold))
+        dedup_keep_first(margined, ["lid"], [F.desc("margin"), F.asc("rid")])
+        .filter(F.col("margin") >= margin_threshold)
         .select(
             F.col("lid").alias("src_id"),
             F.col("rid").alias("tgt_id"),

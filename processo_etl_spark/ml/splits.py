@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.ml.dedup import md5_long
 
 #: Split/sample granularity: 10_000 buckets = 0.01% resolution.
@@ -70,11 +71,6 @@ def with_split(
     last = F.lit(names[-1])
     expr = last if expr is None else expr.otherwise(names[-1])
     return df.withColumn(out_col, expr)
-
-
-def sample_by_hash(df: DataFrame, key: str, fraction: float) -> DataFrame:
-    """Deterministic ~``fraction`` sample: keep iff bucket < f·N."""
-    return df.filter(hash_bucket(key) < int(round(fraction * N_BUCKETS)))
 
 
 def stratified_sample_by_hash(
@@ -153,22 +149,23 @@ def temperature_mixture_sample(
     bit-identical thresholds (a generic ``pow`` is NOT guaranteed
     identical across libms; keep T=2 for oracle-checked paths).
     """
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n"))
-    n_max = counts.agg(F.max("__n")).first()[0]
+    n, thr_col = internal("n"), internal("thr")
+    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias(n))
+    n_max = counts.agg(F.max(n)).first()[0]
     if temperature == 2.0:
-        rate = F.sqrt(F.col("__n").cast("double") / F.lit(float(n_max)))
+        rate = F.sqrt(F.col(n).cast("double") / F.lit(float(n_max)))
     else:
         rate = F.pow(
-            F.col("__n").cast("double") / F.lit(float(n_max)),
+            F.col(n).cast("double") / F.lit(float(n_max)),
             1.0 / temperature,
         )
     thr = counts.select(
-        source_col, F.floor(F.lit(n_buckets) * rate).cast("long").alias("__thr")
+        source_col, F.floor(F.lit(n_buckets) * rate).cast("long").alias(thr_col)
     )
     return (
         df.join(F.broadcast(thr), on=source_col)
-        .filter(hash_bucket(key, n_buckets) < F.col("__thr"))
-        .drop("__thr")
+        .filter(hash_bucket(key, n_buckets) < F.col(thr_col))
+        .drop(thr_col)
     )
 
 
@@ -360,24 +357,25 @@ def weighted_sample_aes(
     )
     aes_key = F.log(u) / w.cast("double")
     salt = md5_long(F.concat(F.lit("salt:"), kc)) % F.lit(salt_buckets)
+    aes, salt_col, r1 = internal("aes"), internal("salt"), internal("r1")
     base = (
         df.filter(w.isNotNull() & (w > 0))
-        .withColumn("_aes", aes_key)
-        .withColumn("_salt", salt)
+        .withColumn(aes, aes_key)
+        .withColumn(salt_col, salt)
     )
-    w1 = Window.partitionBy(group_col, "_salt").orderBy(
-        F.col("_aes").desc(), F.col(key)
+    w1 = Window.partitionBy(group_col, salt_col).orderBy(
+        F.col(aes).desc(), F.col(key)
     )
     survivors = (
-        base.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
+        base.withColumn(r1, F.row_number().over(w1))
+        .filter(F.col(r1) <= k)
+        .drop(r1, salt_col)
     )
-    w2 = Window.partitionBy(group_col).orderBy(F.col("_aes").desc(), F.col(key))
+    w2 = Window.partitionBy(group_col).orderBy(F.col(aes).desc(), F.col(key))
     return (
         survivors.withColumn("rnk", F.row_number().over(w2))
         .filter(F.col("rnk") <= k)
-        .drop("_aes")
+        .drop(aes)
     )
 
 

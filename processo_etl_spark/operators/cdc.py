@@ -16,22 +16,20 @@ lexicographically — replays produce identical snapshots.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from processo_etl_spark.columns import internal
+from processo_etl_spark.operators.relational import dedup_keep_first
 
 
 def latest_changes(
     changes: DataFrame, key_cols: list[str], seq_col: str, op_col: str = "op"
 ) -> DataFrame:
     """One winning change row per key: max seq, deletes win seq ties."""
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(seq_col).desc(),
-        F.when(F.col(op_col) == "D", 0).otherwise(1).asc(),
-    )
-    return (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    deletes_first = F.when(F.col(op_col) == "D", 0).otherwise(1)
+    return dedup_keep_first(
+        changes, key_cols, [F.col(seq_col).desc(), deletes_first.asc()]
     )
 
 
@@ -74,19 +72,20 @@ def table_diff(
     exactly key + compared columns at the scans.
     """
     cmp_cols = compare_cols or [c for c in old.columns if c not in key_cols]
+    in_old, in_new = internal("in_old"), internal("in_new")
     o = old.select(
         *key_cols, *[F.col(c).alias(f"old_{c}") for c in cmp_cols]
-    ).withColumn("__in_old", F.lit(True))
+    ).withColumn(in_old, F.lit(True))
     n = new.select(
         *key_cols, *[F.col(c).alias(f"new_{c}") for c in cmp_cols]
-    ).withColumn("__in_new", F.lit(True))
+    ).withColumn(in_new, F.lit(True))
     j = o.join(n, key_cols, "full_outer")
     same = F.struct(*[F.col(f"old_{c}") for c in cmp_cols]).eqNullSafe(
         F.struct(*[F.col(f"new_{c}") for c in cmp_cols])
     )
     change = (
-        F.when(F.col("__in_old").isNull(), F.lit("insert"))
-        .when(F.col("__in_new").isNull(), F.lit("delete"))
+        F.when(F.col(in_old).isNull(), F.lit("insert"))
+        .when(F.col(in_new).isNull(), F.lit("delete"))
         .when(~same, F.lit("update"))
     )
     return (

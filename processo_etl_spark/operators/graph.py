@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+
 
 def transition_edges(
     events: DataFrame,
@@ -318,13 +320,11 @@ def pagerank_distributed(
         w_run = Window.orderBy(dang_rank.asc_nulls_first()).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
+        run = internal("dang_run")
         return (
-            df.withColumn("__dang_run", F.sum(dang_rank).over(w_run))
-            .withColumn(
-                "d",
-                F.coalesce(F.max("__dang_run").over(w_all), F.lit(0.0)),
-            )
-            .drop("__dang_run")
+            df.withColumn(run, F.sum(dang_rank).over(w_run))
+            .withColumn("d", F.coalesce(F.max(run).over(w_all), F.lit(0.0)))
+            .drop(run)
         )
 
     # Measured and rejected (r15): two-supersteps-per-checkpoint in
@@ -472,7 +472,8 @@ def label_propagation(
     persisted; each round is ONE equi-join (labels onto the neighbor
     side) + TWO combinable groupBys (vote sum per (node, label), then
     argmax per node as ``min(struct(-votes, label))`` — no windows, no
-    driver collect, all-integer arithmetic).  ``localCheckpoint``
+    per-round driver collect, all-integer arithmetic; the one driver
+    action is the dispatch probe below).  ``localCheckpoint``
     truncates lineage per round.  Votes are exact int64 sums, so any
     engine agrees bit-for-bit.
 
@@ -487,6 +488,11 @@ def label_propagation(
     shape exchanged labels into the join plus two aggregate exchanges
     per round).  Past the threshold the r14 layout stays: neighbor view
     partitioned by **nbr** (the join key), shuffled vote aggregation.
+    The probe is a DISPATCH probe, as in ``pagerank_auto``: one eager
+    ``approx_count_distinct(...).first()`` job runs while the plan is
+    being BUILT, before any action on the result (and even when the
+    result is never executed), because the layout it picks is part of
+    the plan.
     The seed's eager ``localCheckpoint`` is gone in both modes (it
     re-materialized a projection of the persisted neighbor view; the
     r14 pagerank change measured that job as pure overhead).  Both

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+
 
 def _write(df: DataFrame, path: str, parquet_block_bytes: int | None) -> None:
     w = df.write.mode("overwrite")
@@ -150,13 +152,14 @@ def write_zordered(
     column to its low ``bits`` bits, so out-of-range values alias onto
     in-range cells instead of saturating at the edge.  The stored rows
     are the same either way; only the clustering degrades."""
-    keyed = df.withColumn("__z", zorder_key([col1, col2], bits))
+    z = internal("z")
+    keyed = df.withColumn(z, zorder_key([col1, col2], bits))
     out = (
-        keyed.repartitionByRange(num_files, "__z")
+        keyed.repartitionByRange(num_files, z)
         if num_files
-        else keyed.repartitionByRange("__z")
+        else keyed.repartitionByRange(z)
     )
-    _write(out.sortWithinPartitions("__z").drop("__z"), path, parquet_block_bytes)
+    _write(out.sortWithinPartitions(z).drop(z), path, parquet_block_bytes)
 
 
 def zorder_key_sql(cols: list[str], bits: int = 20) -> str:
@@ -187,8 +190,8 @@ def file_spans(
 ) -> DataFrame:
     """Assign rows to fixed-capacity files under the ``order_by`` total
     order and emit each file's zone-map stats: one row per file with
-    ``__file``, ``n`` and min/max per stat column (``min_<c>`` /
-    ``max_<c>``).
+    the file id (column ``internal("file")``), ``n`` and min/max per
+    stat column (``min_<c>`` / ``max_<c>``).
 
     ``order_by`` must be a total order (append unique tiebreakers) for
     deterministic file membership.  The global rank is distributed
@@ -198,12 +201,13 @@ def file_spans(
         raise ValueError(f"capacity must be >= 1, got {capacity!r}")
     from processo_etl_spark.operators.ranking import distributed_rank
 
-    ranked = distributed_rank(df, list(order_by), out_col="__rk")
+    rk, file_id = internal("rk"), internal("file")
+    ranked = distributed_rank(df, list(order_by), out_col=rk)
     agg = [F.count(F.lit(1)).alias("n")]
     for c in stat_cols:
         agg += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
     return (
-        ranked.withColumn("__file", F.expr(f"(__rk - 1) div {capacity}"))
-        .groupBy("__file")
+        ranked.withColumn(file_id, F.expr(f"({rk} - 1) div {capacity}"))
+        .groupBy(file_id)
         .agg(*agg)
     )

@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.operators.ranking import distributed_cumsum
 
 
@@ -76,6 +77,7 @@ def compaction_bins(
     boundary).  Sizes must be non-negative integers."""
     if target_bytes <= 0:
         raise ValueError(f"target_bytes must be positive, got {target_bytes}")
+    cum = internal("cum")
     with_cum = distributed_cumsum(
         inventory.select(
             F.col(id_col).alias("file_id"),
@@ -83,14 +85,14 @@ def compaction_bins(
         ),
         order_by=[F.col("n_bytes").desc(), F.col("file_id").asc()],
         value_col="n_bytes",
-        out_col="__cum",
+        out_col=cum,
     )
     # `div` is INTEGER division (operands are non-negative longs), so
     # the bin id never touches a float — exact on any engine.
     return with_cum.select(
         "file_id",
         "n_bytes",
-        F.expr(f"(__cum - n_bytes) div {int(target_bytes)}")
+        F.expr(f"({cum} - n_bytes) div {int(target_bytes)}")
         .cast("long")
         .alias("bin"),
     )

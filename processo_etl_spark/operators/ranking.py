@@ -27,6 +27,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.session import persist_once
 
 
@@ -38,6 +40,7 @@ def _ranked_with_total(
 ) -> tuple[DataFrame, int]:
     """Range-partitioned exact global rank + total row count (one tiny
     counts job; the ranked frame itself stays lazy/distributed)."""
+    pid_col = internal("pid")
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
     parts = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -48,34 +51,35 @@ def _ranked_with_total(
     # between the boundary-sampling job and the main pass, which already
     # deduplicates the upstream computation.)
     ranged = df.repartitionByRange(int(parts), *cols).withColumn(
-        "__pid", F.spark_partition_id()
+        pid_col, F.spark_partition_id()
     ).transform(persist_once)
     # Tiny job: one row per partition → prefix sums on the driver.
     counts = {
-        r["__pid"]: r["n"]
-        for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
+        r[pid_col]: r["n"]
+        for r in ranged.groupBy(pid_col).agg(F.count(F.lit(1)).alias("n")).collect()
     }
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
     # Local rank inside each range partition: the window partitions by
-    # __pid, so WindowExec sees per-partition data — no global exchange.
-    w = Window.partitionBy("__pid").orderBy(*cols)
+    # range-partition id, so WindowExec sees per-partition data — no
+    # global exchange.
+    w = Window.partitionBy(pid_col).orderBy(*cols)
     # Broadcast the offsets as a literal map — no join, stays narrow.
     # Empty-input edge: a literal map() is VOID-keyed and map()[int]
     # fails analysis — with no partitions every offset is 0.
     offset_map = (
         F.create_map(
             *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-        )[F.col("__pid")]
+        )[F.col(pid_col)]
         if offsets
         else F.lit(None).cast("long")
     )
     ranked = ranged.withColumn(
         rank_col,
         (F.coalesce(offset_map, F.lit(0)) + F.row_number().over(w)).cast("long"),
-    ).drop("__pid")
+    ).drop(pid_col)
     return ranked, acc
 
 
@@ -122,10 +126,11 @@ def distributed_ntile(
     Same two-phase rank as :func:`distributed_rank`; the total row count
     the bucket formula needs falls out of the same per-partition counts
     job, so no extra pass over the data."""
-    ranked, n_rows = _ranked_with_total(df, order_by, "__grank", num_partitions)
+    grank = internal("grank")
+    ranked, n_rows = _ranked_with_total(df, order_by, grank, num_partitions)
     return ranked.withColumn(
-        out_col, ntile_from_rank(F.col("__grank"), n_rows, k)
-    ).drop("__grank")
+        out_col, ntile_from_rank(F.col(grank), n_rows, k)
+    ).drop(grank)
 
 
 def exact_quantiles_twopass(
@@ -298,11 +303,8 @@ def grouped_exact_quantiles(
             F.col("cum") >= F.col("k") - F.coalesce("anchor", F.lit(0))
         )
     )
-    pick = Window.partitionBy("g", "q").orderBy("v")
-    picked = (
-        walked.withColumn("__rn", F.row_number().over(pick))
-        .filter(F.col("__rn") == 1)
-        .select("g", "q", "k", F.col("v").alias("value"))
+    picked = dedup_keep_first(walked, ["g", "q"], ["v"]).select(
+        "g", "q", "k", F.col("v").alias("value")
     )
     # Loud bracket-violation check (ADVICE r4): the ungrouped twin
     # exact_quantiles_twopass raises RuntimeError when the sketch bracket
@@ -361,22 +363,24 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     Ties: equal (x, y) duplicates dominate each other only weakly, so
     all stay — matching the strict-dominance NOT EXISTS definition.
     """
+    gx, gmin = internal("x"), internal("miny")
+    pid_col, pre = internal("pid"), internal("prefix")
     x, y = F.col(x_col), F.col(y_col)
     # NULL criteria have no dominance semantics — and a NULL x group
     # would sort first and poison the prefix min.  Excluded up front.
     df = df.filter(x.isNotNull() & y.isNotNull())
-    g = df.groupBy(x.alias("__x")).agg(F.min(y).alias("__miny"))
+    g = df.groupBy(x.alias(gx)).agg(F.min(y).alias(gmin))
     parts = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     ranged = (
-        g.repartitionByRange(parts, F.col("__x"))
-        .withColumn("__pid", F.spark_partition_id())
+        g.repartitionByRange(parts, F.col(gx))
+        .withColumn(pid_col, F.spark_partition_id())
         .transform(persist_once)
     )
     pmins = {
-        r["__pid"]: r["m"]
-        for r in ranged.groupBy("__pid").agg(F.min("__miny").alias("m")).collect()
+        r[pid_col]: r["m"]
+        for r in ranged.groupBy(pid_col).agg(F.min(gmin).alias("m")).collect()
     }
     prior: dict[int, float] = {}
     best = None
@@ -389,27 +393,27 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     # prior-min is simply NULL everywhere.
     prior_map = (
         F.create_map(*[F.lit(v) for pid in prior for v in (pid, prior[pid])])[
-            F.col("__pid")
+            F.col(pid_col)
         ]
         if prior
         else F.lit(None).cast("double")
     )
     w = (
-        Window.partitionBy("__pid")
-        .orderBy("__x")
+        Window.partitionBy(pid_col)
+        .orderBy(gx)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prefix = F.least(
-        F.min("__miny").over(w), prior_map
+        F.min(gmin).over(w), prior_map
     )  # least() ignores NULLs; NULL prefix = no smaller x anywhere
     sky = (
-        ranged.withColumn("__prefix", prefix)
-        .filter(F.col("__prefix").isNull() | (F.col("__miny") < F.col("__prefix")))
-        .select("__x", "__miny")
+        ranged.withColumn(pre, prefix)
+        .filter(F.col(pre).isNull() | (F.col(gmin) < F.col(pre)))
+        .select(gx, gmin)
     )
     return df.join(
-        sky, (x == F.col("__x")) & (y == F.col("__miny"))
-    ).drop("__x", "__miny")
+        sky, (x == F.col(gx)) & (y == F.col(gmin))
+    ).drop(gx, gmin)
 
 
 def grouped_topk(
@@ -450,12 +454,13 @@ def grouped_topk(
             "\x1f", *[F.col(c).cast("string") for c in df.columns]
         )
     salt = md5_long(F.concat(F.lit("topk:"), skc)) % F.lit(salt_buckets)
-    w1 = Window.partitionBy(*group_cols, "__salt").orderBy(*order_by)
+    salt_col, r1 = internal("salt"), internal("r1")
+    w1 = Window.partitionBy(*group_cols, salt_col).orderBy(*order_by)
     survivors = (
-        df.withColumn("__salt", salt)
-        .withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__r1", "__salt")
+        df.withColumn(salt_col, salt)
+        .withColumn(r1, F.row_number().over(w1))
+        .filter(F.col(r1) <= k)
+        .drop(r1, salt_col)
     )
     w2 = Window.partitionBy(*group_cols).orderBy(*order_by)
     return survivors.withColumn(
@@ -485,18 +490,19 @@ def distributed_cumsum(
     window does this); aggregate consumers (max/min of the running sum)
     are tie-safe when ties share a sign, as in the concurrency sweep.
     """
+    pid_col = internal("pid")
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
     parts = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     ranged = (
         df.repartitionByRange(int(parts), *cols)
-        .withColumn("__pid", F.spark_partition_id())
+        .withColumn(pid_col, F.spark_partition_id())
         .persist()
     )
     totals = {
-        r["__pid"]: r["s"]
-        for r in ranged.groupBy("__pid")
+        r[pid_col]: r["s"]
+        for r in ranged.groupBy(pid_col)
         .agg(F.sum(value_col).alias("s"))
         .collect()
     }
@@ -508,16 +514,16 @@ def distributed_cumsum(
     offset = (
         F.create_map(
             *[F.lit(x) for pid in prior for x in (pid, prior[pid])]
-        )[F.col("__pid")]
+        )[F.col(pid_col)]
         if prior
         else F.lit(None).cast("long")
     )
     w = (
-        Window.partitionBy("__pid")
+        Window.partitionBy(pid_col)
         .orderBy(*cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return ranged.withColumn(
         out_col,
         F.coalesce(offset, F.lit(0)) + F.sum(value_col).over(w),
-    ).drop("__pid")
+    ).drop(pid_col)

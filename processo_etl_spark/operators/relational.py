@@ -7,18 +7,19 @@ concat-union (dag.py:208, U1), value_counts top-k (Análise.ipynb:1374,
 A3/A4/O2/O3).
 
 Determinism: pandas ``drop_duplicates(keep='first')`` is deterministic by
-file order; Spark's ``dropDuplicates`` keeps an arbitrary row.  The engine
-offers both: ``dedup_arbitrary`` (cheapest — map-side partial aggregate)
-and ``dedup_keep_first`` (``row_number`` over an explicit tiebreaker —
-exact, reproducible, oracle-comparable).
+file order; Spark's ``dropDuplicates`` keeps an arbitrary row.
+``dedup_keep_first`` (``row_number`` over an explicit tiebreaker — exact,
+reproducible, oracle-comparable) is the engine's one keep-first.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from processo_etl_spark.columns import internal
 
 
 def right_outer_join(
@@ -35,24 +36,19 @@ def right_outer_join(
     return left.join(right, on=on, how="right")
 
 
-def dedup_arbitrary(df: DataFrame, subset: list[str]) -> DataFrame:
-    """D1 fast path: one row per key, arbitrary survivor (map-side combine)."""
-    return df.dropDuplicates(subset)
-
-
-def dedup_keep_first(df: DataFrame, subset: list[str], order_by: list[str]) -> DataFrame:
+def dedup_keep_first(
+    df: DataFrame, subset: list[str], order_by: list[str | Column]
+) -> DataFrame:
     """D1/D3 exact path: keep the first row per key under an explicit order.
 
     ``row_number`` over (partitionBy subset, orderBy tiebreaker) == 1.
     One shuffle on the key — same cost class as dropDuplicates, but
-    deterministic and reproducible at any scale.
+    deterministic and reproducible at any scale.  ``order_by`` entries
+    are column names or sort expressions (``F.desc(c)``).
     """
+    rn = internal("rn")
     w = Window.partitionBy(*subset).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) == 1).drop(rn)
 
 
 def distinct_rows(df: DataFrame, cols: list[str]) -> DataFrame:

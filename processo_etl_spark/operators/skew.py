@@ -17,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_COL = "__salt"
+from processo_etl_spark.columns import internal
+
+SALT_COL = internal("salt")
 
 
 def salted_join(

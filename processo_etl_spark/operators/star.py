@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+
 
 def build_dimensions(
     df: DataFrame, keys_by_id: dict[str, list[str]], persist: bool = False
@@ -43,19 +45,21 @@ def build_dimensions(
     combiner holds every |domain|, correct for classic dimensions by
     definition; a degenerate near-fact-cardinality "dimension" must use
     ``build_dimension_rank``/``build_dimension_auto`` instead."""
+    keys = [internal(f"ks{i}") for i in range(len(keys_by_id))]
+    pos, key = internal("pos"), internal("k")
     packed = df.agg(
         *[
-            F.array_sort(F.collect_set(F.struct(*key))).alias(f"__ks{i}")
-            for i, key in enumerate(keys_by_id.values())
+            F.array_sort(F.collect_set(F.struct(*natural))).alias(ks)
+            for ks, natural in zip(keys, keys_by_id.values())
         ]
     )
     if persist:
         packed = packed.persist()
     return {
-        id_col: packed.select(F.posexplode(f"__ks{i}").alias("__pos", "__k")).select(
-            F.col("__k.*"), (F.col("__pos") + 1).cast("int").alias(id_col)
+        id_col: packed.select(F.posexplode(ks).alias(pos, key)).select(
+            F.col(f"{key}.*"), (F.col(pos) + 1).cast("int").alias(id_col)
         )
-        for i, id_col in enumerate(keys_by_id)
+        for ks, id_col in zip(keys, keys_by_id)
     }
 
 

@@ -27,8 +27,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_SIDE = "__asof_side"
-_CARRY = "__asof_carry"
+from processo_etl_spark.columns import internal
+
+_SIDE = internal("asof_side")
+_CARRY = internal("asof_carry")
 
 
 def asof_join(
@@ -114,8 +116,8 @@ def range_join_bucketed(
     small.  All original columns from both sides survive (names must not
     collide apart from the ``on`` keys).
     """
-    b = "__range_bucket"
-    pt, st, en = "__range_point", "__range_start", "__range_end"
+    b = internal("range_bucket")
+    pt, st, en = (internal(f"range_{n}") for n in ("point", "start", "end"))
     p = points.withColumn(pt, point.cast("long")).withColumn(
         b, (F.col(pt) / bucket_width).cast("long")
     )
@@ -226,9 +228,10 @@ def ewma_per_key(
     (negative accumulators still floor consistently under arithmetic
     shift, but document it).
     """
+    xv, hist, states = internal("x"), internal("h"), internal("s")
     a = float(alpha)
     struct_fields = [F.col(c) for c in order_cols] + [
-        F.col(value_col).alias("__x")
+        F.col(value_col).alias(xv)
     ]
     arr = F.sort_array(F.collect_list(F.struct(*struct_fields)))
     if fixed_point_scale is not None:
@@ -246,7 +249,7 @@ def ewma_per_key(
         ten_s = 10**fixed_point_scale
         comp = (1 << m) - k
         v_int = lambda x: F.round(  # noqa: E731
-            x["__x"].cast("double") * F.lit(float(ten_s)), 0
+            x[xv].cast("double") * F.lit(float(ten_s)), 0
         ).cast("long")
         acc_t = "array<bigint>"
         fold = F.aggregate(
@@ -268,16 +271,16 @@ def ewma_per_key(
         grouped = (
             df.filter(F.col(value_col).isNotNull())
             .groupBy(key_col)
-            .agg(arr.alias("__h"), fold.alias("__s"))
+            .agg(arr.alias(hist), fold.alias(states))
         )
         zipped = grouped.select(
-            key_col, F.explode(F.arrays_zip("__h", "__s")).alias("z")
+            key_col, F.explode(F.arrays_zip(hist, states)).alias("z")
         )
         return zipped.select(
             key_col,
-            *[F.col(f"z.__h.{c}").alias(c) for c in order_cols],
-            F.col("z.__h.__x").alias(value_col),
-            (F.col("z.__s").cast("double") / F.lit(float(ten_s))).alias(
+            *[F.col(f"z.{hist}.{c}").alias(c) for c in order_cols],
+            F.col(f"z.{hist}.{xv}").alias(value_col),
+            (F.col(f"z.{states}").cast("double") / F.lit(float(ten_s))).alias(
                 out_col
             ),
         )
@@ -289,10 +292,10 @@ def ewma_per_key(
             acc,
             F.array(
                 F.when(
-                    F.size(acc) == 0, x["__x"].cast("double")
+                    F.size(acc) == 0, x[xv].cast("double")
                 ).otherwise(
                     F.element_at(acc, -1) * F.lit(1.0 - a)
-                    + x["__x"].cast("double") * F.lit(a)
+                    + x[xv].cast("double") * F.lit(a)
                 )
             ),
         ),
@@ -300,16 +303,16 @@ def ewma_per_key(
     grouped = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(key_col)
-        .agg(arr.alias("__h"), fold.alias("__s"))
+        .agg(arr.alias(hist), fold.alias(states))
     )
     zipped = grouped.select(
-        key_col, F.explode(F.arrays_zip("__h", "__s")).alias("z")
+        key_col, F.explode(F.arrays_zip(hist, states)).alias("z")
     )
     return zipped.select(
         key_col,
-        *[F.col(f"z.__h.{c}").alias(c) for c in order_cols],
-        F.col("z.__h.__x").alias(value_col),
-        F.col("z.__s").alias(out_col),
+        *[F.col(f"z.{hist}.{c}").alias(c) for c in order_cols],
+        F.col(f"z.{hist}.{xv}").alias(value_col),
+        F.col(f"z.{states}").alias(out_col),
     )
 
 
@@ -370,38 +373,41 @@ def ewma_per_key_chunked(
     max_chunk = max(2, int(512.0 * math.log(2.0) / -math.log(r)))
     c_len = min(chunk, max_chunk) if chunk is not None else min(1024, max_chunk)
 
+    i_col, c_col, j_col, p_col, n_col, su_col, ss_col, s0_col = (
+        internal(n) for n in ("i", "c", "j", "p", "n", "su", "ss", "s0")
+    )
     wk = Window.partitionBy(key_col).orderBy(*order_cols)
     rows = (
         df.filter(F.col(value_col).isNotNull())
-        .withColumn("__i", F.row_number().over(wk) - 1)
+        .withColumn(i_col, F.row_number().over(wk) - 1)
         # integral division (ADVICE r9): `div` is exact by construction;
         # double-divide-then-cast truncates a correctly-rounded float
         # quotient, which only happens to be exact for realistic lengths
-        .withColumn("__c", F.expr(f"__i div {c_len}"))
-        .withColumn("__j", F.col("__i") % c_len)
+        .withColumn(c_col, F.expr(f"{i_col} div {c_len}"))
+        .withColumn(j_col, F.col(i_col) % c_len)
     )
     u = (
-        F.when(F.col("__i") == 0, F.lit(1.0)).otherwise(F.lit(a))
+        F.when(F.col(i_col) == 0, F.lit(1.0)).otherwise(F.lit(a))
         * F.col(value_col).cast("double")
-        * F.pow(F.lit(r), -F.col("__j").cast("double"))
+        * F.pow(F.lit(r), -F.col(j_col).cast("double"))
     )
     wc = (
-        Window.partitionBy(key_col, "__c")
+        Window.partitionBy(key_col, c_col)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    rows = rows.withColumn("__p", F.sum(u).over(wc))
+    rows = rows.withColumn(p_col, F.sum(u).over(wc))
     # chunk summaries: a = (1−α)^len, b = zero-start state after the
     # chunk's last element = (1−α)^(len−1) · (chunk Σ u)
-    summaries = rows.groupBy(key_col, "__c").agg(
-        F.count(F.lit(1)).alias("__n"), F.sum(u).alias("__su")
+    summaries = rows.groupBy(key_col, c_col).agg(
+        F.count(F.lit(1)).alias(n_col), F.sum(u).alias(su_col)
     )
     pair = F.struct(
-        F.col("__c").alias("c"),
-        F.pow(F.lit(r), F.col("__n").cast("double")).alias("a"),
+        F.col(c_col).alias("c"),
+        F.pow(F.lit(r), F.col(n_col).cast("double")).alias("a"),
         (
-            F.pow(F.lit(r), F.col("__n").cast("double") - 1.0)
-            * F.col("__su")
+            F.pow(F.lit(r), F.col(n_col).cast("double") - 1.0)
+            * F.col(su_col)
         ).alias("b"),
     )
     # per-key fold over the (L/C)-row summary list: S_0 = 0,
@@ -415,20 +421,20 @@ def ewma_per_key_chunked(
     )
     starts = (
         summaries.groupBy(key_col)
-        .agg(chain.alias("__ss"))
+        .agg(chain.alias(ss_col))
         .select(
             key_col,
-            F.posexplode(F.expr("slice(__ss, 1, size(__ss) - 1)")).alias(
-                "__c", "__s0"
-            ),
+            F.posexplode(
+                F.expr(f"slice({ss_col}, 1, size({ss_col}) - 1)")
+            ).alias(c_col, s0_col),
         )
-        .withColumn("__c", F.col("__c").cast("long"))
+        .withColumn(c_col, F.col(c_col).cast("long"))
     )
-    out = rows.join(starts, on=[key_col, "__c"])
-    jf = F.col("__j").cast("double")
-    s = F.pow(F.lit(r), jf + 1.0) * F.col("__s0") + F.pow(
+    out = rows.join(starts, on=[key_col, c_col])
+    jf = F.col(j_col).cast("double")
+    s = F.pow(F.lit(r), jf + 1.0) * F.col(s0_col) + F.pow(
         F.lit(r), jf
-    ) * F.col("__p")
+    ) * F.col(p_col)
     return out.select(
         key_col, *order_cols, value_col, s.alias(out_col)
     )
@@ -462,12 +468,13 @@ def event_sequence_match(
     Output: (key, n_events, journey, matched, n_matches) with
     ``n_matches`` the non-overlapping greedy match count.
     """
+    code_f = internal("c")
     arr = F.sort_array(
         F.collect_list(
-            F.struct(*[F.col(c) for c in order_cols], code.alias("__c"))
+            F.struct(*[F.col(c) for c in order_cols], code.alias(code_f))
         )
     )
-    journey = F.array_join(F.transform(arr, lambda x: x["__c"]), "")
+    journey = F.array_join(F.transform(arr, lambda x: x[code_f]), "")
     g = df.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("n_events"), journey.alias("journey")
     )
@@ -503,35 +510,38 @@ def interval_union_length(
 
     Output: (key, n_intervals, n_islands, covered_us).
     """
-    s, e = start_us.alias("__s"), end_us.alias("__e")
-    base = df.select(F.col(key_col).alias("__k"), s, e).filter(
-        F.col("__e") >= F.col("__s")
+    k_col, s_col, e_col, new_col, isl_col, is_col, ie_col, n_col = (
+        internal(n) for n in ("k", "s", "e", "new", "isl", "is", "ie", "n")
     )
-    w = Window.partitionBy("__k").orderBy("__s", "__e")
-    prev_max_end = F.max("__e").over(
+    s, e = start_us.alias(s_col), end_us.alias(e_col)
+    base = df.select(F.col(key_col).alias(k_col), s, e).filter(
+        F.col(e_col) >= F.col(s_col)
+    )
+    w = Window.partitionBy(k_col).orderBy(s_col, e_col)
+    prev_max_end = F.max(e_col).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     flag = (
-        F.when(prev_max_end.isNull() | (F.col("__s") > prev_max_end), 1)
+        F.when(prev_max_end.isNull() | (F.col(s_col) > prev_max_end), 1)
         .otherwise(0)
     )
-    flagged = base.withColumn("__new", flag)
-    island = F.sum("__new").over(
+    flagged = base.withColumn(new_col, flag)
+    island = F.sum(new_col).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     islands = (
-        flagged.withColumn("__isl", island)
-        .groupBy("__k", "__isl")
+        flagged.withColumn(isl_col, island)
+        .groupBy(k_col, isl_col)
         .agg(
-            F.min("__s").alias("__is"),
-            F.max("__e").alias("__ie"),
-            F.count(F.lit(1)).alias("__n"),
+            F.min(s_col).alias(is_col),
+            F.max(e_col).alias(ie_col),
+            F.count(F.lit(1)).alias(n_col),
         )
     )
-    return islands.groupBy(F.col("__k").alias(key_col)).agg(
-        F.sum("__n").alias("n_intervals"),
+    return islands.groupBy(F.col(k_col).alias(key_col)).agg(
+        F.sum(n_col).alias("n_intervals"),
         F.count(F.lit(1)).alias("n_islands"),
-        F.sum(F.col("__ie") - F.col("__is")).alias("covered_us"),
+        F.sum(F.col(ie_col) - F.col(is_col)).alias("covered_us"),
     )
 
 
@@ -552,34 +562,35 @@ def peak_concurrency(
 
     Output: (key, n_intervals, peak).
     """
-    s, e = start_us.alias("__s"), end_us.alias("__e")
-    base = df.select(F.col(key_col).alias("__k"), s, e).filter(
-        F.col("__e") >= F.col("__s")
+    k_col, s_col, e_col = internal("k"), internal("s"), internal("e")
+    s, e = start_us.alias(s_col), end_us.alias(e_col)
+    base = df.select(F.col(key_col).alias(k_col), s, e).filter(
+        F.col(e_col) >= F.col(s_col)
     )
     deltas = base.select(
-        "__k",
+        k_col,
         F.explode(
             F.array(
                 F.struct(
-                    F.col("__s").alias("t"),
+                    F.col(s_col).alias("t"),
                     F.lit(1).alias("ord"),  # ends (ord 0) sort first
                     F.lit(1).alias("d"),
                 ),
                 F.struct(
-                    F.col("__e").alias("t"),
+                    F.col(e_col).alias("t"),
                     F.lit(0).alias("ord"),
                     F.lit(-1).alias("d"),
                 ),
             )
         ).alias("ev"),
-    ).select("__k", "ev.t", "ev.ord", "ev.d")
+    ).select(k_col, "ev.t", "ev.ord", "ev.d")
     w = (
-        Window.partitionBy("__k")
+        Window.partitionBy(k_col)
         .orderBy("t", "ord")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     running = deltas.withColumn("live", F.sum("d").over(w))
-    return running.groupBy(F.col("__k").alias(key_col)).agg(
+    return running.groupBy(F.col(k_col).alias(key_col)).agg(
         (F.count(F.lit(1)) / 2).cast("long").alias("n_intervals"),
         F.max("live").alias("peak"),
     )
@@ -608,18 +619,19 @@ def linear_touch_attribution(
     credit_per_touch); conversions with zero prior touches carry
     n_touches = 0 and NULL credit (unattributable, not dropped).
     """
+    is_touch = internal("is_touch")
     flagged = events.filter(touch_pred | conversion_pred).withColumn(
-        "__is_touch", touch_pred.cast("long")
+        is_touch, touch_pred.cast("long")
     )
     w = (
         Window.partitionBy(key_col)
         .orderBy(
             *[F.col(c) for c in order_cols],
-            F.desc("__is_touch"),
+            F.desc(is_touch),
         )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    counted = flagged.withColumn("n_touches", F.sum("__is_touch").over(w))
+    counted = flagged.withColumn("n_touches", F.sum(is_touch).over(w))
     return (
         counted.filter(conversion_pred)
         .withColumn(
@@ -629,5 +641,5 @@ def linear_touch_attribution(
                 F.lit(1.0) / F.col("n_touches").cast("double"),
             ),
         )
-        .drop("__is_touch")
+        .drop(is_touch)
     )

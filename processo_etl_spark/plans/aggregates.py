@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import avg_exact, dec, dsum, t
 from processo_etl_spark.quality import audit
@@ -304,16 +305,17 @@ def grouping_sets_revenue(spark, sf_dir):
     """Explicit GROUPING SETS (the general form rollup/cube specialize):
     per-status, per-priority, and grand-total revenue in one pass.
     Exact decimal sum internally, DOUBLE out (r2 hash-mismatch fix)."""
-    t(spark, sf_dir, "orders").createOrReplaceTempView("__orders_gs")
+    view = internal("orders_gs")
+    t(spark, sf_dir, "orders").createOrReplaceTempView(view)
     # Pre-aggregated to (status, priority) first (r14): the grouping-set
     # Expand then runs over the handful of exact-decimal partials
     # instead of 3x the fact rows — sum-of-sums is lossless in decimal.
     return spark.sql(
-        """
+        f"""
         WITH base AS (
           SELECT o_orderstatus, o_orderpriority,
                  SUM(CAST(ROUND(o_totalprice, 2) AS DECIMAL(12,2))) AS _rev
-          FROM __orders_gs GROUP BY o_orderstatus, o_orderpriority
+          FROM {view} GROUP BY o_orderstatus, o_orderpriority
         )
         SELECT o_orderstatus, o_orderpriority,
                CAST(SUM(_rev) AS DOUBLE) AS revenue
@@ -570,11 +572,11 @@ def orders_above_avg_price(spark, sf_dir):
     """Scalar subquery: Catalyst plans the inner aggregate once and
     broadcasts the scalar into the filter (a ReusedSubquery at scale —
     no per-row re-evaluation)."""
-    o = t(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_sq")
+    view = internal("orders_sq")
+    t(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders_sq
-           WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders_sq)"""
+        f"""SELECT o_orderkey, o_totalprice FROM {view}
+           WHERE o_totalprice > (SELECT avg(o_totalprice) FROM {view})"""
     )
 
 
@@ -590,13 +592,12 @@ def orders_above_avg_price(spark, sf_dir):
 def customers_with_urgent_orders(spark, sf_dir):
     """EXISTS subquery → left-semi join: the filter on orders is pushed
     below the semi-join, so only urgent orders' keys shuffle."""
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders")
-    c.createOrReplaceTempView("customer_sq")
-    o.createOrReplaceTempView("orders_sq2")
+    cv, ov = internal("customer_sq"), internal("orders_sq2")
+    t(spark, sf_dir, "customer").createOrReplaceTempView(cv)
+    t(spark, sf_dir, "orders").createOrReplaceTempView(ov)
     return spark.sql(
-        """SELECT c_custkey, c_name FROM customer_sq c
-           WHERE EXISTS (SELECT 1 FROM orders_sq2 o
+        f"""SELECT c_custkey, c_name FROM {cv} c
+           WHERE EXISTS (SELECT 1 FROM {ov} o
                          WHERE o.o_custkey = c.c_custkey
                            AND o.o_orderpriority = '1-URGENT')"""
     )
@@ -622,18 +623,17 @@ def q17_small_quantity_revenue(spark, sf_dir):
     sides before the heavy join.  Exercises scalar-subquery
     decorrelation, the remaining subquery family member r1 lacked.
     """
-    li = t(spark, sf_dir, "lineitem")
-    p = t(spark, sf_dir, "part")
-    li.createOrReplaceTempView("lineitem_q17")
-    p.createOrReplaceTempView("part_q17")
+    lv, pv = internal("lineitem_q17"), internal("part_q17")
+    t(spark, sf_dir, "lineitem").createOrReplaceTempView(lv)
+    t(spark, sf_dir, "part").createOrReplaceTempView(pv)
     return spark.sql(
-        """
+        f"""
         SELECT CAST(SUM(CAST(ROUND(l.l_extendedprice, 2) AS DECIMAL(12,2)))
                     AS DOUBLE) / 7.0 AS avg_yearly
-        FROM lineitem_q17 l JOIN part_q17 p ON p.p_partkey = l.l_partkey
+        FROM {lv} l JOIN {pv} p ON p.p_partkey = l.l_partkey
         WHERE p.p_brand = 'Brand#23'
           AND l.l_quantity < (SELECT 0.2 * avg(CAST(l2.l_quantity AS DOUBLE))
-                              FROM lineitem_q17 l2
+                              FROM {lv} l2
                               WHERE l2.l_partkey = p.p_partkey)
         """
     )
@@ -659,19 +659,17 @@ def q16_supplier_cnt_by_type(spark, sf_dir):
     anti join on the (tiny) excluded-supplier set; the distinct count
     shuffles once on the group key after the anti join prunes.
     """
-    li = t(spark, sf_dir, "lineitem")
-    p = t(spark, sf_dir, "part")
-    s = t(spark, sf_dir, "supplier")
-    li.createOrReplaceTempView("lineitem_q16")
-    p.createOrReplaceTempView("part_q16")
-    s.createOrReplaceTempView("supplier_q16")
+    lv, pv, sv = (internal(f"{n}_q16") for n in ("lineitem", "part", "supplier"))
+    t(spark, sf_dir, "lineitem").createOrReplaceTempView(lv)
+    t(spark, sf_dir, "part").createOrReplaceTempView(pv)
+    t(spark, sf_dir, "supplier").createOrReplaceTempView(sv)
     return spark.sql(
-        """
+        f"""
         SELECT p.p_type, p.p_size,
                CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-        FROM lineitem_q16 l JOIN part_q16 p ON p.p_partkey = l.l_partkey
+        FROM {lv} l JOIN {pv} p ON p.p_partkey = l.l_partkey
         WHERE p.p_size IN (1, 2, 3, 4, 5)
-          AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier_q16
+          AND l.l_suppkey NOT IN (SELECT s_suppkey FROM {sv}
                                   WHERE s_acctbal < 0)
         GROUP BY p.p_type, p.p_size
         """
@@ -910,8 +908,9 @@ def skyline_parts_price_size(spark, sf_dir):
     part = t(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice", "p_size"
     )
-    neg = part.withColumn("__negsize", -F.col("p_size"))
-    return ranking.skyline_2d(neg, "p_retailprice", "__negsize").select(
+    negsize = internal("negsize")
+    neg = part.withColumn(negsize, -F.col("p_size"))
+    return ranking.skyline_2d(neg, "p_retailprice", negsize).select(
         "p_partkey", "p_retailprice", "p_size"
     )
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import t
 
@@ -66,11 +67,10 @@ def sample_per_key_deterministic(spark, sf_dir):
     from processo_etl_spark.operators.ranking import grouped_topk
 
     ev = t(spark, sf_dir, "events").select("user_id", "event_id")
-    hk = F.col("__h")
+    h = internal("h")
+    hk = F.col(h)
     picked = grouped_topk(
-        ev.withColumn(
-            "__h", _md5_rank(F.col("event_id"))
-        ),
+        ev.withColumn(h, _md5_rank(F.col("event_id"))),
         ["user_id"],
         [hk.asc(), F.col("event_id").asc()],
         _SAMPLE_K,
@@ -126,14 +126,15 @@ def split_temporal_embargo(spark, sf_dir):
     test_start = F.lit(_TEST_START).cast("timestamp_ntz")
     is_train = F.col("ts") < cutoff
     is_test = F.col("ts") >= test_start
+    mx_tr, mn_te = internal("mx_tr"), internal("mn_te")
     return (
         ev.groupBy("user_id")
         .agg(
             F.sum(is_train.cast("long")).alias("n_train"),
             F.sum(is_test.cast("long")).alias("n_test"),
             F.sum((~is_train & ~is_test).cast("long")).alias("n_embargoed"),
-            F.max(F.when(is_train, F.col("ts"))).alias("__mx_tr"),
-            F.min(F.when(is_test, F.col("ts"))).alias("__mn_te"),
+            F.max(F.when(is_train, F.col("ts"))).alias(mx_tr),
+            F.min(F.when(is_test, F.col("ts"))).alias(mn_te),
         )
         .select(
             "user_id",
@@ -141,11 +142,11 @@ def split_temporal_embargo(spark, sf_dir):
             "n_test",
             "n_embargoed",
             (
-                F.col("__mx_tr").isNull()
-                | F.col("__mn_te").isNull()
+                F.col(mx_tr).isNull()
+                | F.col(mn_te).isNull()
                 | (
-                    F.col("__mx_tr") + F.expr(f"INTERVAL {_EMBARGO_DAYS} DAYS")
-                    <= F.col("__mn_te")
+                    F.col(mx_tr) + F.expr(f"INTERVAL {_EMBARGO_DAYS} DAYS")
+                    <= F.col(mn_te)
                 )
             ).alias("leakage_safe"),
         )
@@ -279,14 +280,15 @@ def anomaly_rolling_zscore(spark, sf_dir):
         .orderBy("ts", "event_id")
         .rowsBetween(-_Z_WIN, -1)
     )
+    x_col = internal("x")
     d = (
-        ev.withColumn("__x", x)
+        ev.withColumn(x_col, x)
         .withColumn("n_base", F.count(F.lit(1)).over(w))
-        .withColumn("s_centi", F.coalesce(F.sum("__x").over(w), F.lit(0)))
+        .withColumn("s_centi", F.coalesce(F.sum(x_col).over(w), F.lit(0)))
         .withColumn(
             "q_centi",
             F.coalesce(
-                F.sum(F.col("__x") * F.col("__x")).over(w), F.lit(0)
+                F.sum(F.col(x_col) * F.col(x_col)).over(w), F.lit(0)
             ),
         )
     )
@@ -294,7 +296,7 @@ def anomaly_rolling_zscore(spark, sf_dir):
         F.col("n_base"),
         F.col("s_centi"),
         F.col("q_centi"),
-        F.col("__x"),
+        F.col(x_col),
     )
     var_n2 = n * q - s * s  # n²·σ² in centi² — exact integer
     dev = n * xv - s        # n·(x − μ) in centi — exact integer
@@ -354,12 +356,13 @@ def markov_event_transitions(spark, sf_dir):
         "user_id", "ts", "event_id", "event_type"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    dst = internal("dst")
     pairs = (
-        ev.withColumn("__dst", F.lead("event_type").over(w))
-        .filter(F.col("__dst").isNotNull())
+        ev.withColumn(dst, F.lead("event_type").over(w))
+        .filter(F.col(dst).isNotNull())
         .groupBy(
             F.col("event_type").alias("src_type"),
-            F.col("__dst").alias("dst_type"),
+            F.col(dst).alias("dst_type"),
         )
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -431,10 +434,11 @@ def changepoint_cusum_alerts(spark, sf_dir):
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    d = ev.withColumn("__p", F.sum(x - F.lit(_C_K)).over(w)).withColumn(
-        "__m", F.min("__p").over(w)
+    p, m = internal("p"), internal("m")
+    d = ev.withColumn(p, F.sum(x - F.lit(_C_K)).over(w)).withColumn(
+        m, F.min(p).over(w)
     )
-    s = F.col("__p") - F.least(F.lit(0).cast("long"), F.col("__m"))
+    s = F.col(p) - F.least(F.lit(0).cast("long"), F.col(m))
     return d.select(
         "user_id",
         "event_id",
@@ -489,13 +493,14 @@ def events_debounce_lag(spark, sf_dir):
         "ts", "event_id"
     )
     gap = us - F.lag(us).over(w)
+    gap_col = internal("gap")
     return (
-        ev.withColumn("__gap", gap)
-        .filter(F.col("__gap").isNull() | (F.col("__gap") >= _DEBOUNCE_US))
+        ev.withColumn(gap_col, gap)
+        .filter(F.col(gap_col).isNull() | (F.col(gap_col) >= _DEBOUNCE_US))
         .select(
             "user_id",
             "event_id",
-            F.col("__gap").cast("long").alias("gap_us"),
+            F.col(gap_col).cast("long").alias("gap_us"),
         )
     )
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import dec, t
 
@@ -1191,17 +1192,18 @@ def ewma_user_value_chunked(spark, sf_dir):
     )
     on = ["user_id", "ts", "event_id"]
     wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    rn, chunk = internal("rn"), internal("chunk")
     joined = (
         chunked.join(naive.select(*on, "e_f"), on)
         .join(fixed.select(*on, "e_q"), on)
-        .withColumn("__rn", F.row_number().over(wk))
-        .withColumn("__chunk", F.expr("(__rn - 1) div 16"))
+        .withColumn(rn, F.row_number().over(wk))
+        .withColumn(chunk, F.expr(f"({rn} - 1) div 16"))
     )
     tol_f = F.lit(1e-9) * F.greatest(F.lit(1.0), F.abs(F.col("e_f")))
     return joined.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("user_id").alias("n_keys"),
-        F.countDistinct("user_id", "__chunk").alias("n_chunks"),
+        F.countDistinct("user_id", chunk).alias("n_chunks"),
         F.bool_and(F.abs(F.col("e_c") - F.col("e_f")) <= tol_f).alias(
             "within_float_bound"
         ),

@@ -20,10 +20,10 @@ the rotation pool behind every earlier ungraded candidate.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from processo_etl_spark.ml import fusion, invindex, similarity
+from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import t
 from processo_etl_spark.plans.mlops import (
@@ -191,14 +191,9 @@ def knn_label_vote(spark, sf_dir):
         .groupBy("query_id", "label")
         .agg(F.count(F.lit(1)).cast("int").alias("n_votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("n_votes"), F.asc("label"))
-    return (
-        votes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "query_id", F.col("label").cast("int").alias("pred_label"), "n_votes"
-        )
-    )
+    return dedup_keep_first(
+        votes, ["query_id"], [F.desc("n_votes"), F.asc("label")]
+    ).select("query_id", F.col("label").cast("int").alias("pred_label"), "n_votes")
 
 
 @register(

@@ -32,7 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.ml.dedup import MERSENNE_P, perm_constants
+from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import t
 from processo_etl_spark.plans.mlops import _md5_long_sql, _NORM
@@ -411,12 +413,13 @@ def stream_batch_equiv_ewma(spark, sf_dir):
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
+    rn = internal("rn")
     batch = (
-        folded.withColumn("__rn", F.row_number().over(w))
+        folded.withColumn(rn, F.row_number().over(w))
         .withColumn(
             "b_rows", F.count(F.lit(1)).over(Window.partitionBy("user_id"))
         )
-        .filter(F.col("__rn") == 1)
+        .filter(F.col(rn) == 1)
         .select("user_id", "b_rows", F.col("ewma").alias("b_ewma"))
     )
     joined = stream.join(batch, "user_id", "full_outer")
@@ -549,10 +552,8 @@ def stream_batch_equiv_sessionize_tws(spark, sf_dir):
     from processo_etl_spark.streaming import jobs
 
     raw = jobs.run_sessionize_tws_or_twin_availablenow(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     stream = (
-        raw.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        dedup_keep_first(raw, ["user_id"], [F.desc("n_events")])
         .select(
             "user_id",
             F.col("n_sessions").alias("s_sessions"),

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+
 
 def null_counts(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """A2 (Análise.ipynb:1089): per-column null count, single pass, one row."""
@@ -166,13 +168,14 @@ def poisson_bootstrap_mean_ci(
     entries = F.concat(
         F.array(F.struct(F.lit(-1).alias("b"), F.lit(1).alias("w"))), drawn
     )
-    ex = df.select(x.alias("__x"), F.explode(entries).alias("r"))
+    xv = internal("x")
+    ex = df.select(x.alias(xv), F.explode(entries).alias("r"))
     means = (
         ex.filter(F.col("r.w") > 0)
         .groupBy(F.col("r.b").alias("b"))
         .agg(
             (
-                F.sum(F.col("__x") * F.col("r.w")).cast("double")
+                F.sum(F.col(xv) * F.col("r.w")).cast("double")
                 / F.sum("r.w").cast("double")
             ).alias("mean")
         )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
+
 
 def _k_bucket(k: Column) -> Column:
     """Re-identifiability bands: '1' is a unique (directly linkable)
@@ -93,16 +95,17 @@ def suppress_small_groups(
         raise ValueError("qi_cols must name at least one quasi-identifier")
     if k < 2:
         raise ValueError(f"k={k} suppresses nothing (every group has ≥ 1 row)")
+    qi_n = internal("qi_n")
     sizes = (
         df.groupBy(*qi_cols)
-        .agg(F.count(F.lit(1)).alias("_qi_n"))
-        .select(*[F.col(c).alias(f"_qi_{c}") for c in qi_cols], "_qi_n")
+        .agg(F.count(F.lit(1)).alias(qi_n))
+        .select(*[F.col(c).alias(internal(f"qi_{c}")) for c in qi_cols], qi_n)
     )
     cond = None
     for c in qi_cols:
-        eq = F.col(c).eqNullSafe(F.col(f"_qi_{c}"))
+        eq = F.col(c).eqNullSafe(F.col(internal(f"qi_{c}")))
         cond = eq if cond is None else cond & eq
-    small = F.col("_qi_n") < k
+    small = F.col(qi_n) < k
     out_cols = [
         (
             F.when(small, F.lit(None)).otherwise(F.col(c)).alias(c)

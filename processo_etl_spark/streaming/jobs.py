@@ -13,6 +13,7 @@ the batch-replay trigger used by tests and the rows-only driver check.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -20,7 +21,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from processo_etl_spark import catalog
+from processo_etl_spark.columns import internal
+from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.plans.common import dec
+
+
+def _drain(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Run ``stream`` to completion once (``availableNow``) into a memory
+    sink and return the sink's table.  The checkpoint is a fresh temp
+    directory, removed once the query has stopped."""
+    name = internal(f"drain_{uuid.uuid4().hex[:8]}")
+    checkpoint = tempfile.mkdtemp(prefix="ck_")
+    query = None
+    try:
+        query = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        if query is not None:
+            query.stop()
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    return stream.sparkSession.table(name)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,46 +181,23 @@ def run_sessionize_stateful_availablenow(
 ) -> DataFrame:
     """Drain the events source through the stateful sessionizer; the
     memory sink holds one final row per user (update mode, single drain)."""
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stateful(read_events_stream(spark, sf_dir), gap_seconds)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    out = _drain(
+        sessionize_stateful(read_events_stream(spark, sf_dir), gap_seconds),
+        "update",
     )
-    q.awaitTermination()
     # update mode can emit a user several times across micro-batches;
     # the row with the highest n_events per user is the final state.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return dedup_keep_first(out, ["user_id"], [F.desc("n_events")])
 
 
 def run_tumbling_count_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the whole source once (availableNow) into a memory sink and
     return the result table — a real streaming execution, used by tests
     and the rows-only driver check."""
-    name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    q = (
-        tumbling_counts(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    return _drain(
+        tumbling_counts(read_events_stream(spark, sf_dir)),
+        "complete",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def dedup_within_watermark(
@@ -231,22 +235,8 @@ def run_dedup_availablenow(
     src = read_events_stream(spark, sf_dir)
     if duplicate_input:
         src = src.unionByName(read_events_stream(spark, sf_dir))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup_within_watermark(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    out = _drain(dedup_within_watermark(src), "append")
+    return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 def interval_join(
@@ -291,21 +281,9 @@ def run_interval_join_availablenow(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("event_type") == "purchase"
     )
     views = read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
-    name = f"stream_ijoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        interval_join(purchases, views)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("purchase_id", "user_id")
-        .agg(F.count(F.lit(1)).alias("n_views"))
+    out = _drain(interval_join(purchases, views), "append")
+    return out.groupBy("purchase_id", "user_id").agg(
+        F.count(F.lit(1)).alias("n_views")
     )
 
 
@@ -334,21 +312,13 @@ def run_enrich_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic, matches the batch twin)."""
     ev = read_events_stream(spark, sf_dir)
     dim = catalog.load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
+    out = _drain(
         enrich_with_dim(ev, dim, "user_id", "c_custkey")
-        .select("event_id", "value", "c_mktsegment")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+        .select("event_id", "value", "c_mktsegment"),
+        "append",
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy(F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment"))
+        out.groupBy(F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(dec("value")).cast("double").alias("total_value"),
@@ -390,18 +360,7 @@ def curate_documents_stream(docs: DataFrame, min_quality: float = 0.3) -> DataFr
 def run_curate_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the documents source through the streaming curation filter."""
     docs = read_documents_stream(spark, sf_dir)
-    name = f"stream_curate_{uuid.uuid4().hex[:8]}"
-    q = (
-        curate_documents_stream(docs)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(curate_documents_stream(docs), "append")
 
 
 def cms_sketch_stream(events: DataFrame, depth: int = 4, width: int = 256) -> DataFrame:
@@ -429,18 +388,10 @@ def run_cms_sketch_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events source through the streaming sketch build; the
     result is the full-corpus sketch, byte-identical to the batch build
     (asserted in tests) because CMS cells are order-insensitive sums."""
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    q = (
-        cms_sketch_stream(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    return _drain(
+        cms_sketch_stream(read_events_stream(spark, sf_dir)),
+        "complete",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def bloom_filter_stream(
@@ -472,18 +423,10 @@ def run_bloom_filter_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     """Drain the events source through the streaming Bloom build; the
     result equals the batch ``bloom_build`` word-for-word (asserted in
     tests) because bit-OR is order-insensitive and idempotent."""
-    name = f"stream_bloom_{uuid.uuid4().hex[:8]}"
-    q = (
-        bloom_filter_stream(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    return _drain(
+        bloom_filter_stream(read_events_stream(spark, sf_dir)),
+        "complete",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def _has_tws_runtime() -> bool:
@@ -591,20 +534,13 @@ def run_sessionize_tws_availablenow(spark: SparkSession, sf_dir: str) -> DataFra
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_tws(read_events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    out = _drain(
+        sessionize_tws(read_events_stream(spark, sf_dir)),
+        "update",
     )
-    q.awaitTermination()
     # keep a session-wide default provider for other queries
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return spark.table(name)
+    return out
 
 
 def run_sessionize_tws_or_twin_availablenow(
@@ -732,27 +668,12 @@ def run_ewma_availablenow(
     """Drain the events source through the stateful EWMA; update mode
     re-emits users across batches — keep each user's final row (max
     observed event count)."""
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-    q = (
-        ewma_stateful(read_events_stream(spark, sf_dir), alpha=alpha)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_ewma_"))
-        .start()
+    out = _drain(
+        ewma_stateful(read_events_stream(spark, sf_dir), alpha=alpha),
+        "update",
     )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc(F.col("n_settled") + F.col("n_pending"))
-    )
-    return (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return dedup_keep_first(
+        out, ["user_id"], [F.desc(F.col("n_settled") + F.col("n_pending"))]
     )
 
 
@@ -829,18 +750,10 @@ def run_media_features_availablenow(
     checkpoint + memory sink, so every call re-decodes the full
     directory).  For the incremental exactly-once pattern use
     :func:`run_media_features_incremental`."""
-    name = f"stream_media_{uuid.uuid4().hex[:8]}"
-    q = (
-        media_features_stream(read_media_stream(spark, media_dir, glob))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ck_"))
-        .start()
+    return _drain(
+        media_features_stream(read_media_stream(spark, media_dir, glob)),
+        "append",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def run_media_features_incremental(

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -770,3 +771,112 @@ def test_kcore_peel_property_matches_python_fixpoint(spark, rnd):
         ref[b] = ref.get(b, 0) + 1
     assert got == ref
     assert all(d >= k for d in got.values()) or not got
+
+
+# Caller columns named like the scratch columns operators used to add
+# (before every engine-internal name moved under ``columns.internal``).
+GHOSTS = ("__rn", "__pid", "__grank", "__k", "__pos", "__x", "__n")
+
+
+def _collision_frame(spark, ghosts: bool):
+    """Keyed rows with NULL keys/values, key groups of several rows and
+    a unique ``seq`` per key; ``ghosts`` adds one string column per
+    GHOSTS name whose value is a function of the row id."""
+    rows = [
+        (0, 1, 4, 1.5, "I"),
+        (1, 1, 7, None, "U"),
+        (2, 1, 2, 0.5, "D"),
+        (3, 2, 3, 2.0, "I"),
+        (4, 2, 9, 2.0, "D"),
+        (5, None, 1, 3.0, "I"),
+        (6, 3, 5, -1.0, "U"),
+        (7, 3, 0, 4.0, "I"),
+        (8, 3, 8, None, "U"),
+        (9, 3, 6, 0.0, "D"),
+        (10, None, 2, 1.0, "U"),
+        (11, 4, 3, 7.5, "I"),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, k long, seq long, v double, op string"
+    )
+    if ghosts:
+        df = df.select(
+            "*",
+            *[
+                F.concat(F.lit(g + ":"), F.col("id").cast("string")).alias(g)
+                for g in GHOSTS
+            ],
+        )
+    return df
+
+
+def _star_fks(df):
+    from processo_etl_spark.operators import star
+
+    keys = {"k_id": ["k"], "kop_id": ["k", "op"]}
+    dims = star.build_dimensions(df, keys)
+    return star.attach_fks(df, {c: (dims[c], keys[c]) for c in keys})
+
+
+def _asof(df):
+    from processo_etl_spark.operators import temporal
+
+    right = df.sparkSession.createDataFrame(
+        [(1, 0, 10.0), (1, 5, 11.0), (2, 3, 20.0), (3, 1, 30.0), (3, 8, None)],
+        "k long, seq long, rv double",
+    )
+    return temporal.asof_join(df, right, ["k"], "seq", ["rv"])
+
+
+def _collision_ops():
+    from processo_etl_spark.ml import encoding
+    from processo_etl_spark.operators import cdc, ranking, relational
+
+    return {
+        "dedup_keep_first": lambda df: relational.dedup_keep_first(
+            df, ["k"], [F.desc("seq"), "id"]
+        ),
+        "cdc.latest_changes": lambda df: cdc.latest_changes(
+            df, ["k"], "seq", "op"
+        ),
+        "ranking.distributed_rank": lambda df: ranking.distributed_rank(
+            df, [F.col("v").asc_nulls_first(), "id"], out_col="r"
+        ),
+        "ranking.distributed_ntile": lambda df: ranking.distributed_ntile(
+            df, ["seq", "id"], 3
+        ),
+        "ranking.skyline_2d": lambda df: ranking.skyline_2d(df, "seq", "v"),
+        "ranking.grouped_topk": lambda df: ranking.grouped_topk(
+            df, ["k"], [F.col("seq").desc(), F.col("id").asc()], 2
+        ),
+        "star.build_dimensions": _star_fks,
+        "temporal.asof_join": _asof,
+        "encoding.target_encode_loo": lambda df: encoding.target_encode_loo(
+            df, "k", "v"
+        ),
+    }
+
+
+@pytest.mark.parametrize("op_name", list(_collision_ops()))
+def test_caller_columns_named_like_internals_survive(spark, op_name):
+    """A caller column may carry any name outside the reserved prefix:
+    every such column comes back with its values unchanged, and the
+    operator's own output equals a run on the frame without them."""
+    from collections import Counter
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    op = _collision_ops()[op_name]
+    plain = op(_collision_frame(spark, ghosts=False))
+    out = op(_collision_frame(spark, ghosts=True))
+    missing = [g for g in GHOSTS if g not in out.columns]
+    assert not missing, f"{op_name} dropped caller columns {missing}"
+    rows = out.collect()
+    assert rows, op_name
+    for r in rows:
+        for g in GHOSTS:
+            assert r[g] == f"{g}:{r['id']}", (op_name, g, r)
+    got = out.drop(*GHOSTS)
+    assert got.columns == plain.columns
+    assert Counter(tuple(r) for r in got.collect()) == Counter(
+        tuple(r) for r in plain.collect()
+    )

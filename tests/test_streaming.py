@@ -513,3 +513,24 @@ def test_stream_media_ingest_incremental_across_drains(spark, tmp_path):
     # fresh ephemeral drain still sees the whole directory
     full = jobs.run_media_features_availablenow(spark, str(media)).collect()
     assert len(full) == 3
+
+
+def test_drain_removes_its_checkpoint(spark, monkeypatch):
+    """An availableNow drain runs on a fresh checkpoint directory and
+    removes it once the query has stopped, so repeated drains leave no
+    ``ck_*`` directories behind."""
+    import os
+    import tempfile
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(jobs.tempfile, "mkdtemp", recording_mkdtemp)
+    out = jobs.run_cms_sketch_availablenow(spark, SF_DIR)
+    assert out.count() > 0
+    assert len(made) == 1
+    assert not os.path.exists(made[0])
