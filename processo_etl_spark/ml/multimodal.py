@@ -1,23 +1,24 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched Pandas UDFs over ``mapInPandas`` so the (heavy) Python work
-is amortized per batch, not per row.
-
-Decode is FEATURE-FLAGGED: ``decode_image`` is the real Pillow path,
-active wherever Pillow is importable (``HAS_PIL``); this container ships
-without it, so ``_decode_image_stub`` (a deterministic fake deriving
-"pixels" from the payload bytes) carries the tests here.  The Spark-side
-plumbing (schema, partition sizing, UDF signatures, batch iteration) is
-identical for both decoders.
+metadata struct (:data:`MEDIA_SCHEMA`); decode / feature-extract /
+resize / frame-sample run as Arrow-batched Pandas UDFs over
+``mapInPandas`` so the (heavy) Python work is amortized per batch, not
+per row.  Every operator shares one batch loop (``_map_rows``), every
+fixture corpus one synthesizer (:func:`synth_media`), and every image
+stage one decoder: the vendored stdlib PNG codec (``ml/png``, 8-bit
+grayscale) behind ``png.try_decode_gray``.  Payloads the codec cannot
+decode take each operator's documented fallback — for feature
+extraction the deterministic ``_decode_image_stub`` (fake "pixels"
+derived from the payload bytes) — so every operator is total.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,6 +32,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from processo_etl_spark.ml import png
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -54,6 +57,55 @@ FEATURE_SCHEMA = StructType(
 )
 
 
+def _require_sizes(minimum: int, **sizes: int) -> None:
+    """Reject a size parameter below ``minimum`` at call time, before a
+    job would divide by it on an executor or silently degrade to an
+    all-zero result."""
+    for name, value in sizes.items():
+        if value < minimum:
+            raise ValueError(f"{name} must be >= {minimum}, got {value}")
+
+
+def _pandas_dtype(field: StructField) -> str | None:
+    """The pandas dtype a ``mapInPandas`` output column is built with.
+    Integer columns need one spelled out: inferred from Python ints
+    mixed with None they would become float64 and lose every value
+    past 2^53 (56-bit signatures); nullable fields take the masked
+    ``Int64``/``Int32``.  Everything else is inferred."""
+    kind = {LongType: "Int64", IntegerType: "Int32"}.get(type(field.dataType))
+    return kind if kind is None or field.nullable else kind.lower()
+
+
+def _map_rows(
+    df: DataFrame,
+    schema: StructType,
+    fn: Callable[..., Iterable[tuple]],
+    cols: tuple[str, ...] = ("media_id", "payload"),
+) -> DataFrame:
+    """The one Arrow batch loop behind every media operator:
+    ``fn(*row)`` over the input columns ``cols`` returns 0..n output
+    tuples in ``schema`` field order; each batch's tuples become one
+    pandas frame typed from ``schema`` (see ``_pandas_dtype``)."""
+    names = schema.fieldNames()
+    dtypes = [_pandas_dtype(f) for f in schema.fields]
+
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            rows = zip(*(pdf[c].tolist() for c in cols))
+            out = [r for row in rows for r in fn(*row)]
+            columns = list(zip(*out)) or [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    name: pd.Series(values, dtype=dtype)
+                    for name, values, dtype in zip(names, columns, dtypes)
+                }
+            )
+
+    return df.mapInPandas(batches, schema=schema)
+
+
 def read_binary_media(
     spark,
     path: str,
@@ -69,9 +121,25 @@ def read_binary_media(
     of payloads, partition sizing governed by
     ``spark.sql.files.maxPartitionBytes`` exactly like any other scan,
     and ``pathGlobFilter``/``recursiveFileLookup`` prune at the listing
-    level.  Output matches :data:`MEDIA_SCHEMA`, so
-    :func:`extract_features` / :func:`frame_sample` consume real files
-    and the synthetic tables interchangeably.
+    level.  The rows are projected by :func:`binary_file_media` (keys,
+    JVM-side IHDR dims), so :func:`extract_features` /
+    :func:`frame_sample` consume real files and the synthetic tables
+    interchangeably.
+    """
+    raw = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .option("recursiveFileLookup", "true")
+        .load(path)
+    )
+    return binary_file_media(raw, media_type, id_from_path)
+
+
+def binary_file_media(
+    raw: DataFrame, media_type: str = "image/png", id_from_path=None
+) -> DataFrame:
+    """Project Spark ``binaryFile`` rows ``(path, modificationTime,
+    length, content)`` — batch or streaming — onto :data:`MEDIA_SCHEMA`.
 
     ``media_id`` is the deterministic md5-derived long of the file
     path (the corpus-wide key convention, ml/dedup.md5_long) unless
@@ -83,23 +151,15 @@ def read_binary_media(
     media types carry NULL dims for the decoder to fill.
     """
     from processo_etl_spark.ml.dedup import md5_long
-    from processo_etl_spark.ml.png import SIGNATURE as SIGNATURE_BYTES
 
     if id_from_path is None:
         id_from_path = md5_long
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
     # Length guard (ADVICE r6): a signature-valid file truncated to 9–23
     # bytes would make substring() return 1–3 bytes and conv(hex(...))
     # yield a garbage small integer instead of NULL — require the full
     # 8-byte signature + IHDR length/type/width/height (bytes 9–24).
     is_png = (F.length(F.col("content")) >= 24) & (
-        F.expr("substring(content, 1, 8)") == F.lit(bytes(SIGNATURE_BYTES))
+        F.expr("substring(content, 1, 8)") == F.lit(bytes(png.SIGNATURE))
     )
     dim = lambda off: F.conv(  # noqa: E731 - 4 big-endian bytes -> int
         F.hex(F.expr(f"substring(content, {off}, 4)")), 16, 10
@@ -129,131 +189,122 @@ def synthesize_media(df: DataFrame, id_col: str, seed_col: str) -> DataFrame:
     )
 
 
-# Feature flag (VERDICT r3 #8): real decode activates iff Pillow is
-# importable; this container ships without it, so the deterministic stub
-# carries the tests and the real path lights up on clusters that have it.
-try:  # pragma: no cover - exercised only where Pillow exists
-    from PIL import Image as _PILImage
+def synth_media(
+    ids: DataFrame,
+    make: Callable[[int], bytes],
+    media_type: str,
+    width: int | None = None,
+    height: int | None = None,
+) -> DataFrame:
+    """The one id → MEDIA_SCHEMA synthesizer behind every deterministic
+    fixture corpus: the single column of ``ids`` becomes ``media_id``,
+    ``make(id)`` its payload bytes (built on the executors, one Arrow
+    batch at a time), with a constant ``media_type`` and dims (NULL
+    when None)."""
+    (id_col,) = ids.columns
 
-    HAS_PIL = True
-except ImportError:  # pragma: no cover
-    _PILImage = None
-    HAS_PIL = False
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            mids = pdf[id_col].astype("int64")
+            yield pd.DataFrame(
+                {
+                    "media_id": mids,
+                    "media_type": media_type,
+                    "payload": mids.map(make),
+                    "width": pd.Series(width, index=mids.index, dtype="Int32"),
+                    "height": pd.Series(height, index=mids.index, dtype="Int32"),
+                }
+            )
+
+    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
-def decode_image(payload: bytes, n_features: int = 8) -> list[float]:
-    """REAL image decode via Pillow (feature-flagged on ``HAS_PIL``).
+def _box_sums(
+    px: bytes, w: int, h: int, tw: int, th: int
+) -> list[list[tuple[int, int]]]:
+    """Integer-boundary box average of a ``w``×``h`` image onto a
+    ``tw``×``th`` grid: cell ``i`` of a dimension covers source indices
+    ``[i*size//n, max((i+1)*size//n, i*size//n + 1))`` clipped to the
+    image, so every cell spans at least one pixel when down- or
+    up-sizing.  Returns, per cell (row-major), the exact integer pixel
+    sum and pixel count; callers choose the division (a float mean, or
+    floor for exact uint8 pixels)."""
 
-    Grayscale-decodes the payload, BOX-resizes to an ``n_features``
-    square, and emits per-column mean intensities normalized to [0, 1]
-    — the same output shape/range as ``decode_image_png`` and the stub.
-    Resampling is pinned to BOX (area average) to match
-    ``decode_image_png``'s integer-boundary box average; for inputs
-    already ``n_features`` square the two real decoders agree exactly,
-    while off that fast path Pillow's fractional-weight boxes can
-    differ from the integer-boundary average in the last decimals —
-    the graded fixtures are all n×n, where the decoders are identical.
-    Raises NotImplementedError when Pillow is absent (the stub is the
-    sanctioned fallback, chosen by ``default_decoder``).
-    """
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "real image decode needs Pillow; use _decode_image_stub (the "
-            "deterministic fallback) where the library is unavailable"
+    def span(i: int, n: int, size: int) -> range:
+        lo = i * size // n
+        return range(lo, min(max((i + 1) * size // n, lo + 1), size))
+
+    cols = [span(c, tw, w) for c in range(tw)]
+    out = []
+    for r in range(th):
+        rows = span(r, th, h)
+        out.append(
+            [
+                (sum(px[rr * w + cc] for rr in rows for cc in cs), len(rows) * len(cs))
+                for cs in cols
+            ]
         )
-    # NULL/empty payloads take the stub's zero-vector path so the two
-    # decoders stay drop-in interchangeable row-for-row (a NULL payload
-    # must not kill the executor task that a stub run would survive).
-    if payload is None or len(payload) == 0:
-        return [0.0] * n_features
-    import io
-
-    box = getattr(
-        getattr(_PILImage, "Resampling", _PILImage), "BOX"
-    )
-    img = _PILImage.open(io.BytesIO(payload)).convert("L").resize(
-        (n_features, n_features), resample=box
-    )
-    data = list(img.getdata())
-    return [
-        sum(data[r * n_features + c] for r in range(n_features))
-        / (n_features * 255.0)
-        for c in range(n_features)
-    ]
+    return out
 
 
 def decode_image_png(payload: bytes, n_features: int = 8) -> list[float]:
-    """REAL image decode without Pillow: the vendored pure-stdlib PNG
-    codec (ml/png — zlib inflate + standard unfilter) handles 8-bit
-    grayscale payloads; anything that isn't a decodable PNG falls back
-    to the deterministic stub, so the decoder is total like its
-    siblings.  Output contract matches ``decode_image``: per-column mean
-    intensities of the (box-resized) ``n_features`` square, in [0, 1] —
-    exact integer sums + one IEEE division, so a closed-form oracle over
-    synthetic fixtures hash-matches bit-for-bit.
+    """REAL image decode with the vendored pure-stdlib PNG codec (ml/png
+    — zlib inflate + standard unfilter) for 8-bit grayscale payloads;
+    anything that isn't a decodable PNG falls back to the deterministic
+    stub, so the decoder is total.  Output: per-column mean intensities
+    of the (box-resized) ``n_features`` square, in [0, 1] — exact
+    integer sums + one IEEE division per cell and per column, so a
+    closed-form oracle over synthetic fixtures hash-matches
+    bit-for-bit.
     """
     if payload is None or len(payload) == 0:
         return [0.0] * n_features
-    from processo_etl_spark.ml import png
-
-    b = bytes(payload)
-    if not b.startswith(png.SIGNATURE):
+    img = png.try_decode_gray(payload)
+    if img is None:
         return _decode_image_stub(payload, n_features)
-    try:
-        w, h, px = png.decode_gray(b)
-    except ValueError:
-        return _decode_image_stub(payload, n_features)
+    w, h, px = img
     n = n_features
     if (w, h) == (n, n):
         return [
             sum(px[r * n + c] for r in range(n)) / (n * 255.0)
             for c in range(n)
         ]
-    # 2-D integer-boundary box average down/up to the n×n grid, then
-    # per-column means of the n×n cells — both dimensions are resized,
-    # matching the documented "(box-resized) n_features square" contract
-    # (ADVICE r5: the old path averaged each column band over the FULL
-    # image height, with no vertical resize at all).  The Pillow twin
-    # pins resample=BOX for the same area-average semantics; its
-    # fractional-weight boxes may still differ in the last decimals off
-    # the exact n×n fast path (documented in decode_image).
+    # Both dimensions are box-resized to the n×n grid, then each column
+    # of cell means is averaged (ADVICE r5: averaging each column band
+    # over the FULL image height left vertical structure unresized).
+    cells = _box_sums(px, w, h, n, n)
     out = []
     for c in range(n):
-        c0, c1 = c * w // n, max((c + 1) * w // n, c * w // n + 1)
         col_acc = 0.0
-        for r in range(n):
-            r0, r1 = r * h // n, max((r + 1) * h // n, r * h // n + 1)
-            acc = cnt = 0
-            for rr in range(r0, min(r1, h)):
-                for cc in range(c0, min(c1, w)):
-                    acc += px[rr * w + cc]
-                    cnt += 1
+        for row in cells:
+            acc, cnt = row[c]
             col_acc += acc / cnt if cnt else 0.0
         out.append(col_acc / (n * 255.0))
     return out
 
 
-def default_decoder(real: bool = False):
-    """Pick the decode function: Pillow when asked for AND available,
-    else the vendored PNG decoder (real pixels, stdlib-only, falling
-    back internally to the stub for non-PNG payloads), else the stub."""
-    if not real:
-        return _decode_image_stub
-    return decode_image if HAS_PIL else decode_image_png
-
-
 def _decode_image_stub(payload: bytes, n_features: int = 8) -> list[float]:
-    """Deterministic fake decoder (REAL decode NOT IMPLEMENTED here).
+    """Deterministic fake decoder: the fallback for payloads the PNG
+    codec cannot decode (non-PNG media, text, corrupt files).
 
     Derives ``n_features`` doubles from byte statistics — stable across
-    runs and engines, so the plumbing is testable.  Replace with
-    Pillow/torchvision decode when the libraries exist on the cluster.
+    runs and engines, so the plumbing is testable.
     """
     if payload is None or len(payload) == 0:
         return [0.0] * n_features
     return [
         float(sum(payload[i::n_features]) % 997) / 997.0 for i in range(n_features)
     ]
+
+
+def _fixture_pixels(mid: int, size: int) -> bytes:
+    """Closed-form ``size``×``size`` test image: pixel(r, c) =
+    (id·31 + r·7 + c·13) mod 256, row-major."""
+    return bytes(
+        (mid * 31 + r * 7 + c * 13) % 256 for r in range(size) for c in range(size)
+    )
 
 
 def synthesize_png_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -267,34 +318,12 @@ def synthesize_png_media(df: DataFrame, id_col: str) -> DataFrame:
     the decoded column means equal the formula's — which is how the
     decode path gets hash-graded rather than rows-only.
     """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from processo_etl_spark.ml import png
-
-        def make(mid: int) -> bytes:
-            px = bytes(
-                (mid * 31 + r * 7 + c * 13) % 256
-                for r in range(8)
-                for c in range(8)
-            )
-            return png.encode_gray(px, 8, 8)
-
-        for pdf in it:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "image/png",
-                    "payload": ids.map(make),
-                    "width": 8,
-                    "height": 8,
-                }
-            )
-
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        batches, schema=MEDIA_SCHEMA
+    return synth_media(
+        df.select(F.col(id_col).cast("long")),
+        lambda mid: png.encode_gray(_fixture_pixels(mid, 8), 8, 8),
+        "image/png",
+        8,
+        8,
     )
 
 
@@ -318,35 +347,16 @@ def synthesize_png_variants(
     cross-group ≥ 7, so a Hamming-4 cut separates them exactly.
     """
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def make(mid: int) -> bytes:
+        g, v = mid // variants, mid % variants
+        px = bytes(
+            (g * 37 + k * k * (3 + g % 5) + k * 7 + (v if k % 5 == 0 else 0))
+            % 256
+            for k in range(64)
+        )
+        return png.encode_gray(px, 8, 8)
 
-        from processo_etl_spark.ml import png
-
-        def make(mid: int) -> bytes:
-            g, v = mid // variants, mid % variants
-            px = bytes(
-                (g * 37 + k * k * (3 + g % 5) + k * 7 + (v if k % 5 == 0 else 0))
-                % 256
-                for k in range(64)
-            )
-            return png.encode_gray(px, 8, 8)
-
-        for pdf in it:
-            ids = pdf["id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "image/png",
-                    "payload": ids.map(make),
-                    "width": 8,
-                    "height": 8,
-                }
-            )
-
-    return spark.range(n_groups * variants).mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
+    return synth_media(spark.range(n_groups * variants), make, "image/png", 8, 8)
 
 
 def synthesize_pcm_variants(
@@ -373,39 +383,25 @@ def synthesize_pcm_variants(
     within-group fingerprint Hamming ≤ 4, cross-group ≥ 11, so a
     Hamming-5 cut separates exactly (test-pinned).
     """
+    n = frames * frame_len
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def make(mid: int) -> bytes:
+        g, v = mid // variants, mid % variants
+        k = np.arange(n, dtype=np.int64)
+        s = (
+            g * 1103
+            + k * k * (7 + g % 11)
+            + k * 31
+            + np.where(k % 13 == 0, v * 800, 0)
+        ) % 65536 - 32768
+        return s.astype("<i2").tobytes()
 
-        n = frames * frame_len
+    return synth_media(spark.range(n_groups * variants), make, "audio/pcm16")
 
-        def make(mid: int) -> bytes:
-            g, v = mid // variants, mid % variants
-            k = np.arange(n, dtype=np.int64)
-            s = (
-                g * 1103
-                + k * k * (7 + g % 11)
-                + k * 31
-                + np.where(k % 13 == 0, v * 800, 0)
-            ) % 65536 - 32768
-            return s.astype("<i2").tobytes()
 
-        for pdf in it:
-            ids = pdf["id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "audio/pcm16",
-                    "payload": ids.map(make),
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                }
-            )
-
-    return spark.range(n_groups * variants).mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
+def _pcm16(p: bytes) -> np.ndarray:
+    """PCM16LE payload → int64 samples; a trailing odd byte is ignored."""
+    return np.frombuffer(p[: len(p) // 2 * 2], dtype="<i2").astype(np.int64)
 
 
 AUDIO_FP_SCHEMA = StructType(
@@ -435,41 +431,27 @@ def audio_fingerprint(
     oracle re-deriving frames from the closed-form corpus hash-matches
     bit-for-bit.  NULL payloads yield NULL fingerprints; payloads
     shorter than the frame grid zero-fill missing samples (Σs² = 0
-    frames compare deterministically).
+    frames compare deterministically).  ``frames`` < 2 or
+    ``frame_len`` < 1 raise ValueError (no energy delta to sign).
     """
+    _require_sizes(2, frames=frames)
+    _require_sizes(1, frame_len=frame_len)
+    n = frames * frame_len
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def fp(mid, p: bytes | None):
+        if p is None:
+            return [(mid, None)]
+        s = np.zeros(n, dtype=np.int64)
+        raw = _pcm16(p)[:n]
+        s[: raw.size] = raw
+        e = (s * s).reshape(frames, frame_len).sum(axis=1)
+        sig = 0
+        for i in range(frames - 1):
+            if e[i + 1] > e[i]:
+                sig |= 1 << i
+        return [(mid, sig)]
 
-        n = frames * frame_len
-
-        def fp(p: bytes | None) -> int | None:
-            if p is None:
-                return None
-            s = np.zeros(n, dtype=np.int64)
-            raw = np.frombuffer(
-                p[: min(len(p) // 2 * 2, n * 2)], dtype="<i2"
-            ).astype(np.int64)
-            s[: raw.size] = raw
-            e = (s * s).reshape(frames, frame_len).sum(axis=1)
-            sig = 0
-            for i in range(frames - 1):
-                if e[i + 1] > e[i]:
-                    sig |= 1 << i
-            return sig
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "afp": pd.Series(
-                        [fp(p) for p in pdf["payload"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_FP_SCHEMA)
+    return _map_rows(media, AUDIO_FP_SCHEMA, fp)
 
 
 DHASH_SCHEMA = StructType(
@@ -483,47 +465,27 @@ DHASH_SCHEMA = StructType(
 def _pixel_grid(payload: bytes | None, grid: int) -> list[list[float]] | None:
     """Decode ``payload`` to a ``grid``×``grid`` intensity matrix.
 
-    PNGs go through the vendored real codec; an image already at
-    ``grid``×``grid`` is returned exactly (integer intensities), larger/
-    smaller ones are box-resized with the same integer-boundary area
-    average as ``decode_image_png``.  Non-PNG payloads get the
-    deterministic stub grid (byte at ``(r*grid+c) % len``), keeping the
-    function total; NULL/empty payloads return None.
+    PNGs go through the vendored real codec and are box-resized with
+    the same integer-boundary area average as ``decode_image_png`` (an
+    image already at ``grid``×``grid`` comes back exactly: each cell is
+    one pixel).  Non-PNG payloads get the deterministic stub grid (byte
+    at ``(r*grid+c) % len``), keeping the function total; NULL/empty
+    payloads return None.
     """
     if payload is None or len(payload) == 0:
         return None
-    from processo_etl_spark.ml import png
-
-    b = bytes(payload)
-    if not b.startswith(png.SIGNATURE):
+    img = png.try_decode_gray(payload)
+    if img is None:
+        b = bytes(payload)
         return [
             [float(b[(r * grid + c) % len(b)]) for c in range(grid)]
             for r in range(grid)
         ]
-    try:
-        w, h, px = png.decode_gray(b)
-    except ValueError:
-        return [
-            [float(b[(r * grid + c) % len(b)]) for c in range(grid)]
-            for r in range(grid)
-        ]
-    n = grid
-    if (w, h) == (n, n):
-        return [[float(px[r * n + c]) for c in range(n)] for r in range(n)]
-    out = []
-    for r in range(n):
-        r0, r1 = r * h // n, max((r + 1) * h // n, r * h // n + 1)
-        row = []
-        for c in range(n):
-            c0, c1 = c * w // n, max((c + 1) * w // n, c * w // n + 1)
-            acc = cnt = 0
-            for rr in range(r0, min(r1, h)):
-                for cc in range(c0, min(c1, w)):
-                    acc += px[rr * w + cc]
-                    cnt += 1
-            row.append(acc / cnt if cnt else 0.0)
-        out.append(row)
-    return out
+    w, h, px = img
+    return [
+        [acc / cnt if cnt else 0.0 for acc, cnt in row]
+        for row in _box_sums(px, w, h, grid, grid)
+    ]
 
 
 def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
@@ -539,56 +501,38 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
     REAL for PNG payloads (vendored codec) and the deterministic stub
     grid otherwise, so the operator is total.  NULL payloads emit NULL
     hashes (never a fake all-zeros signature that would cluster every
-    broken file into one near-dup bucket).
+    broken file into one near-dup bucket).  ``grid`` < 2 raises
+    ValueError (no adjacent pair to compare).
     """
+    _require_sizes(2, grid=grid)
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def dh(mid, p: bytes | None):
+        g = _pixel_grid(p, grid)
+        if g is None:
+            return [(mid, None)]
+        sig = 0
+        for r in range(grid):
+            for c in range(grid - 1):
+                if g[r][c + 1] > g[r][c]:
+                    sig |= 1 << (r * (grid - 1) + c)
+        return [(mid, sig)]
 
-        def dh(p: bytes | None) -> int | None:
-            g = _pixel_grid(p, grid)
-            if g is None:
-                return None
-            sig = 0
-            for r in range(grid):
-                for c in range(grid - 1):
-                    if g[r][c + 1] > g[r][c]:
-                        sig |= 1 << (r * (grid - 1) + c)
-            return sig
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "dhash": pd.Series(
-                        [dh(p) for p in pdf["payload"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=DHASH_SCHEMA)
+    return _map_rows(media, DHASH_SCHEMA, dh)
 
 
 def _box_resize_u8(
     px: bytes, w: int, h: int, tw: int, th: int
 ) -> bytes:
-    """Integer-boundary box-average resize to ``tw``×``th`` uint8 pixels
-    — the same boundary arithmetic as ``decode_image_png`` /
-    ``_pixel_grid``, but with FLOOR division (``sum // count``) so the
-    result is an exact integer pixel, reproducible in SQL with no float
-    rounding ambiguity."""
-    out = bytearray(tw * th)
-    for r in range(th):
-        r0, r1 = r * h // th, max((r + 1) * h // th, r * h // th + 1)
-        for c in range(tw):
-            c0, c1 = c * w // tw, max((c + 1) * w // tw, c * w // tw + 1)
-            acc = cnt = 0
-            for rr in range(r0, min(r1, h)):
-                for cc in range(c0, min(c1, w)):
-                    acc += px[rr * w + cc]
-                    cnt += 1
-            out[r * tw + c] = acc // cnt if cnt else 0
-    return bytes(out)
+    """Box-average resize to ``tw``×``th`` uint8 pixels — the
+    ``_box_sums`` cells of ``decode_image_png`` / ``_pixel_grid``, but
+    with FLOOR division (``sum // count``) so the result is an exact
+    integer pixel, reproducible in SQL with no float rounding
+    ambiguity."""
+    return bytes(
+        acc // cnt if cnt else 0
+        for row in _box_sums(px, w, h, tw, th)
+        for acc, cnt in row
+    )
 
 
 def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
@@ -604,48 +548,23 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     payloads pass through UNCHANGED (width/height untouched) — the
     total-operator convention, a resize stage must never destroy
     payloads it cannot parse.  Arrow-batched ``mapInPandas`` like every
-    other media stage; one Python pass, zero shuffles.
+    other media stage; one Python pass, zero shuffles.  Non-positive
+    sizes raise ValueError (a 0×0 PNG breaks the spec).
     """
+    _require_sizes(1, width=width, height=height)
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from processo_etl_spark.ml import png
-
-        def rz(p: bytes | None):
-            if p is None:
-                return None, None, None
-            b = bytes(p)
-            if not b.startswith(png.SIGNATURE):
-                return p, None, None
-            try:
-                w, h, px = png.decode_gray(b)
-            except ValueError:
-                return p, None, None
-            if (w, h) == (width, height):
-                return p, width, height
-            return (
-                png.encode_gray(
-                    _box_resize_u8(px, w, h, width, height), width, height
-                ),
-                width,
-                height,
+    def rz(mid, media_type, p: bytes | None, w0, h0):
+        img = png.try_decode_gray(p)
+        if img is None:
+            return [(mid, media_type, p, w0, h0)]
+        w, h, px = img
+        if (w, h) != (width, height):
+            p = png.encode_gray(
+                _box_resize_u8(px, w, h, width, height), width, height
             )
+        return [(mid, media_type, p, width, height)]
 
-        for pdf in it:
-            pdf = pdf.copy()
-            res = [rz(p) for p in pdf["payload"]]
-            pdf["payload"] = [r[0] for r in res]
-            # untouched (non-PNG) rows keep their original dims
-            pdf["width"] = [
-                orig if r[1] is None else r[1]
-                for r, orig in zip(res, pdf["width"])
-            ]
-            pdf["height"] = [
-                orig if r[2] is None else r[2]
-                for r, orig in zip(res, pdf["height"])
-            ]
-            yield pdf
-
-    return media.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _map_rows(media, MEDIA_SCHEMA, rz, tuple(MEDIA_SCHEMA.fieldNames()))
 
 
 PIXEL_SCHEMA = StructType(
@@ -668,39 +587,14 @@ def decode_pixels(media: DataFrame) -> DataFrame:
     width×height per image — point this at thumbnails, not originals.
     """
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def pixels(mid, p: bytes | None):
+        img = png.try_decode_gray(p)
+        if img is None:
+            return []
+        w, h, px = img
+        return [(mid, r, c, px[r * w + c]) for r in range(h) for c in range(w)]
 
-        from processo_etl_spark.ml import png
-
-        for pdf in it:
-            ids, rs, cs, vs = [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                b = bytes(p)
-                if not b.startswith(png.SIGNATURE):
-                    continue
-                try:
-                    w, h, px = png.decode_gray(b)
-                except ValueError:
-                    continue
-                for r in range(h):
-                    for c in range(w):
-                        ids.append(mid)
-                        rs.append(r)
-                        cs.append(c)
-                        vs.append(px[r * w + c])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "r": pd.Series(rs, dtype="int32"),
-                    "c": pd.Series(cs, dtype="int32"),
-                    "v": pd.Series(vs, dtype="int32"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=PIXEL_SCHEMA)
+    return _map_rows(media, PIXEL_SCHEMA, pixels)
 
 
 def write_png_corpus(directory: str, n: int = 64, size: int = 8) -> str:
@@ -717,19 +611,9 @@ def write_png_corpus(directory: str, n: int = 64, size: int = 8) -> str:
     """
     import os
 
-    from processo_etl_spark.ml import png
-
     os.makedirs(directory, exist_ok=True)
     for mid in range(n):
-        data = png.encode_gray(
-            bytes(
-                (mid * 31 + r * 7 + c * 13) % 256
-                for r in range(size)
-                for c in range(size)
-            ),
-            size,
-            size,
-        )
+        data = png.encode_gray(_fixture_pixels(mid, size), size, size)
         dest = os.path.join(directory, f"img_{mid:05d}.png")
         try:
             if os.path.getsize(dest) == len(data):
@@ -743,9 +627,7 @@ def write_png_corpus(directory: str, n: int = 64, size: int = 8) -> str:
     return directory
 
 
-def extract_features(
-    media: DataFrame, n_features: int = 8, real_decode: bool = False
-) -> DataFrame:
+def extract_features(media: DataFrame, n_features: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     ``mapInPandas``: one Python call per Arrow batch (not per row); the
@@ -753,25 +635,17 @@ def extract_features(
     sizing guidance for real payloads: repartition so a batch of rows ×
     payload size fits executor memory (e.g. ~64 MB batches).
 
-    ``real_decode=True`` uses the Pillow decoder when available
-    (``HAS_PIL`` feature flag — resolved on the EXECUTOR, where the
-    import actually happens); otherwise the deterministic stub.
+    Every payload goes through :func:`decode_image_png`: PNGs are
+    decoded for real, anything else (text, other media, NULL) takes
+    its deterministic stub.
     """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        dec = default_decoder(real_decode)
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": pdf["payload"].map(lambda p: 0 if p is None else len(p)).astype("int64"),
-                    "feature": pdf["payload"].map(lambda p: dec(p, n_features)),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return _map_rows(
+        media,
+        FEATURE_SCHEMA,
+        lambda mid, p: [
+            (mid, 0 if p is None else len(p), decode_image_png(p, n_features))
+        ],
+    )
 
 
 AUDIO_FEATURE_SCHEMA = StructType(
@@ -831,14 +705,12 @@ def strip_wav_headers(media: DataFrame) -> DataFrame:
     :func:`read_binary_media` (``glob="*.wav"``) so a real on-disk
     audio corpus flows into :func:`extract_audio_features` unchanged.
     """
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["payload"] = pdf["payload"].map(wav_pcm16)
-            yield pdf
-
-    return media.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _map_rows(
+        media,
+        MEDIA_SCHEMA,
+        lambda mid, media_type, p, w, h: [(mid, media_type, wav_pcm16(p), w, h)],
+        tuple(MEDIA_SCHEMA.fieldNames()),
+    )
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
@@ -857,45 +729,22 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     samples from ``hex(payload)`` matches bit-for-bit — the decode is
     hash-graded, not rows-only.
     """
+    import math
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
+    def feats(mid, p: bytes | None):
+        if p is None:
+            return [(mid, 0, 0.0, 0.0, 0)]
+        s = _pcm16(p)
+        n = int(s.size)
+        if n == 0:
+            return [(mid, 0, 0.0, 0.0, 0)]
+        ssq = int((s * s).sum())
+        rms = math.sqrt(ssq / n) / 32768.0
+        peak = int(np.abs(s).max()) / 32768.0
+        zc = int(((s[:-1] * s[1:]) < 0).sum()) if n > 1 else 0
+        return [(mid, n, rms, peak, zc)]
 
-        import numpy as np
-        import pandas as pd
-
-        def feats(p: bytes | None) -> tuple[int, float, float, int]:
-            if p is None:
-                return 0, 0.0, 0.0, 0
-            s = np.frombuffer(p[: (len(p) // 2) * 2], dtype="<i2").astype(
-                np.int64
-            )
-            n = int(s.size)
-            if n == 0:
-                return 0, 0.0, 0.0, 0
-            ssq = int((s * s).sum())
-            rms = math.sqrt(ssq / n) / 32768.0
-            peak = int(np.abs(s).max()) / 32768.0
-            zc = int(((s[:-1] * s[1:]) < 0).sum()) if n > 1 else 0
-            return n, rms, peak, zc
-
-        for pdf in it:
-            rows = [feats(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_samples": pd.Series(
-                        [r[0] for r in rows], dtype="int64"
-                    ),
-                    "rms": [r[1] for r in rows],
-                    "peak": [r[2] for r in rows],
-                    "zero_crossings": pd.Series(
-                        [r[3] for r in rows], dtype="int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_FEATURE_SCHEMA)
+    return _map_rows(media, AUDIO_FEATURE_SCHEMA, feats)
 
 
 KEYFRAME_SCHEMA = StructType(
@@ -926,40 +775,24 @@ def keyframe_detect(
     closed-form corpus hash-matches every energy.  Arrow-batched
     ``mapInPandas``; one map stage, zero shuffles; a trailing partial
     frame is ignored (same convention as the PCM odd-byte tail).
+    ``frame_bytes`` < 1 raises ValueError.
     """
+    _require_sizes(1, frame_bytes=frame_bytes)
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def keys(mid, p: bytes | None):
+        if p is None:
+            return []
+        b = np.frombuffer(bytes(p), dtype=np.uint8)
+        nf = b.size // frame_bytes
+        if nf == 0:
+            return []
+        frames = b[: nf * frame_bytes].reshape(nf, frame_bytes).astype(np.int64)
+        diffs = np.abs(frames[1:] - frames[:-1]).sum(axis=1)
+        return [(mid, 0, None, True)] + [
+            (mid, f, int(d), bool(d > threshold)) for f, d in enumerate(diffs, 1)
+        ]
 
-        for pdf in it:
-            ids, fis, des, keys = [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                b = np.frombuffer(bytes(p), dtype=np.uint8)
-                nf = b.size // frame_bytes
-                if nf == 0:
-                    continue
-                frames = b[: nf * frame_bytes].reshape(nf, frame_bytes)
-                diffs = np.abs(
-                    frames[1:].astype(np.int64) - frames[:-1].astype(np.int64)
-                ).sum(axis=1)
-                for f in range(nf):
-                    ids.append(mid)
-                    fis.append(f)
-                    des.append(None if f == 0 else int(diffs[f - 1]))
-                    keys.append(True if f == 0 else bool(diffs[f - 1] > threshold))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(fis, dtype="int32"),
-                    "diff_energy": pd.Series(des, dtype="Int64"),
-                    "is_key": pd.Series(keys, dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=KEYFRAME_SCHEMA)
+    return _map_rows(media, KEYFRAME_SCHEMA, keys)
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 32) -> DataFrame:
@@ -968,7 +801,9 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 32) -> DataFrame:
     For video this is the per-frame fan-out (timestamp grid × payload);
     the stub samples byte offsets.  Native explode — the fan-out happens
     JVM-side, only the decode itself would call Python.
+    ``every_n_bytes`` < 1 raises ValueError.
     """
+    _require_sizes(1, every_n_bytes=every_n_bytes)
     return media.select(
         "media_id",
         F.explode(
@@ -992,33 +827,16 @@ def synthesize_pcm_padded(
     zero) around a voiced region whose samples are
     ``((id*31 + k*17) % 4096) + 512`` — every term closed-form so a
     SQL oracle re-derives each frame's energy exactly."""
+    total = frames * frame_len
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def make(mid: int) -> bytes:
+        k = np.arange(total, dtype=np.int64)
+        f = k // frame_len
+        voiced = (f >= mid % 7) & (f < frames - mid % 5)
+        s = np.where(voiced, (mid * 31 + k * 17) % 4096 + 512, k % 3)
+        return s.astype("<i2").tobytes()
 
-        total = frames * frame_len
-
-        def make(mid: int) -> bytes:
-            k = np.arange(total, dtype=np.int64)
-            f = k // frame_len
-            voiced = (f >= mid % 7) & (f < frames - mid % 5)
-            s = np.where(voiced, (mid * 31 + k * 17) % 4096 + 512, k % 3)
-            return s.astype("<i2").tobytes()
-
-        for pdf in it:
-            ids = pdf["id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "audio/pcm16",
-                    "payload": ids.map(make),
-                    "width": pd.Series([None] * len(ids), dtype="Int32"),
-                    "height": pd.Series([None] * len(ids), dtype="Int32"),
-                }
-            )
-
-    return spark.range(n).mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return synth_media(spark.range(n), make, "audio/pcm16")
 
 
 SILENCE_SCHEMA = StructType(
@@ -1048,57 +866,32 @@ def audio_silence_trim(
     trimmable).  All-silent or NULL payloads yield NULL span columns
     with ``n_frames_voiced = 0`` / NULL.  ``frames`` is a MINIMUM grid:
     short clips zero-fill up to it, longer clips extend it, so a voiced
-    tail past ``frames*frame_len`` is never silently cut.
+    tail past ``frames*frame_len`` is never silently cut.  Non-positive
+    ``frames`` or ``frame_len`` raise ValueError.
 
     Scale shape: one Arrow ``mapInPandas`` stage, zero shuffles —
     composable in the same pass as ``audio_fingerprint``.
     """
+    _require_sizes(1, frames=frames, frame_len=frame_len)
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def trim(mid, p: bytes | None):
+        if p is None:
+            return [(mid, None, None, None)]
+        # the frame grid is a MINIMUM (short clips zero-fill up to
+        # it); longer clips extend the grid so a voiced tail past
+        # frames*frame_len is trimmed correctly, never silently cut
+        raw = _pcm16(p)
+        n_frames = max(frames, -(-raw.size // frame_len))
+        s = np.zeros(n_frames * frame_len, dtype=np.int64)
+        s[: raw.size] = raw
+        e = np.abs(s).reshape(n_frames, frame_len).sum(axis=1)
+        idx = np.nonzero(e > threshold)[0]
+        if idx.size == 0:
+            return [(mid, 0, None, None)]
+        f0, f1 = int(idx[0]), int(idx[-1])
+        return [(mid, int(idx.size), f0 * frame_len, (f1 - f0 + 1) * frame_len)]
 
-        def trim(p: bytes | None):
-            if p is None:
-                return None, None, None
-            # the frame grid is a MINIMUM (short clips zero-fill up to
-            # it); longer clips extend the grid so a voiced tail past
-            # frames*frame_len is trimmed correctly, never silently cut
-            raw = np.frombuffer(
-                p[: len(p) // 2 * 2], dtype="<i2"
-            ).astype(np.int64)
-            n_frames = max(frames, -(-raw.size // frame_len))
-            s = np.zeros(n_frames * frame_len, dtype=np.int64)
-            s[: raw.size] = raw
-            e = np.abs(s).reshape(n_frames, frame_len).sum(axis=1)
-            idx = np.nonzero(e > threshold)[0]
-            if idx.size == 0:
-                return 0, None, None
-            f0, f1 = int(idx[0]), int(idx[-1])
-            return (
-                int(idx.size),
-                f0 * frame_len,
-                (f1 - f0 + 1) * frame_len,
-            )
-
-        for pdf in it:
-            res = [trim(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_frames_voiced": pd.Series(
-                        [r[0] for r in res], dtype="Int32"
-                    ),
-                    "trim_start_samples": pd.Series(
-                        [r[1] for r in res], dtype="Int64"
-                    ),
-                    "kept_samples": pd.Series(
-                        [r[2] for r in res], dtype="Int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=SILENCE_SCHEMA)
+    return _map_rows(media, SILENCE_SCHEMA, trim)
 
 
 PNG_META_SCHEMA = StructType(
@@ -1122,42 +915,20 @@ def png_text_metadata(media: DataFrame) -> DataFrame:
     quarantine-visible, never dropped silently.  One Arrow map stage,
     zero shuffles."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(mid, p: bytes | None):
+        try:
+            if p is None:
+                raise ValueError("null payload")
+            # dims come from the validated FIRST-chunk IHDR (spec
+            # order), never a fixed byte offset — a signature-valid
+            # stream opening with some other chunk quarantines
+            # instead of mis-reading metadata bytes as dimensions.
+            w, h = png.ihdr_dims(p)
+            pairs = png.text_chunks(p)
+        except ValueError:
+            return [(mid, None, None, None, None)]
+        if not pairs:
+            return [(mid, w, h, None, None)]
+        return [(mid, w, h, k, v) for k, v in pairs]
 
-        from processo_etl_spark.ml import png
-
-        def rows(mid: int, p: bytes | None):
-            try:
-                if p is None:
-                    raise ValueError("null payload")
-                # dims come from the validated FIRST-chunk IHDR (spec
-                # order), never a fixed byte offset — a signature-valid
-                # stream opening with some other chunk quarantines
-                # instead of mis-reading metadata bytes as dimensions.
-                w, h = png.ihdr_dims(p)
-                pairs = png.text_chunks(p)
-            except ValueError:
-                return [(mid, None, None, None, None)]
-            if not pairs:
-                return [(mid, w, h, None, None)]
-            return [(mid, w, h, k, v) for k, v in pairs]
-
-        for pdf in it:
-            out = [
-                r
-                for mid, p in zip(pdf["media_id"], pdf["payload"])
-                for r in rows(int(mid), p)
-            ]
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "width", "height", "key", "value"],
-            ).astype(
-                {
-                    "media_id": "int64",
-                    "width": "Int32",
-                    "height": "Int32",
-                }
-            )
-
-    return media.mapInPandas(batches, schema=PNG_META_SCHEMA)
+    return _map_rows(media, PNG_META_SCHEMA, rows)

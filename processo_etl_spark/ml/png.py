@@ -1,7 +1,6 @@
-"""Minimal pure-stdlib PNG codec (8-bit grayscale) — the middle fallback
-between Pillow and the deterministic stub (VERDICT r4 #4), so "multimodal
-columns" actually decodes real pixels in containers without imaging
-libraries.
+"""Minimal pure-stdlib PNG codec (8-bit grayscale) — the engine's one
+image decoder (VERDICT r4 #4), so "multimodal columns" decodes real
+pixels with no imaging library installed.
 
 Scope is deliberately tiny and fully standard (PNG spec / RFC 2083,
 public knowledge): color type 0 (grayscale), bit depth 8, no interlace.
@@ -169,7 +168,10 @@ def decode_gray(payload: bytes) -> tuple[int, int, bytes]:
             break
     if width < 0:
         raise ValueError("missing IHDR")
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:  # a CRC-valid chunk can still carry bad DEFLATE
+        raise ValueError(f"corrupt IDAT stream: {e}") from None
     stride = width + 1
     if len(raw) != stride * height:
         raise ValueError("decompressed size mismatch")
@@ -198,3 +200,16 @@ def decode_gray(payload: bytes) -> tuple[int, int, bytes]:
         out[r * width : (r + 1) * width] = line
         prev = line
     return width, height, bytes(out)
+
+
+def try_decode_gray(payload: bytes | None) -> tuple[int, int, bytes] | None:
+    """:func:`decode_gray`, or ``None`` for a NULL payload and for any
+    payload it rejects (non-PNG, truncated, corrupt, unsupported shape)
+    — the one decode-or-fallback gate of the media operators; each
+    caller picks its own fallback."""
+    if payload is None:
+        return None
+    try:
+        return decode_gray(bytes(payload))
+    except ValueError:
+        return None

@@ -50,30 +50,17 @@ def multimodal_resize(spark, sf_dir):
     pipeline runs before feature extraction, and the pixel dump points
     at thumbnails (w×h rows per image), never originals.
     """
-    from processo_etl_spark.ml import multimodal
+    from processo_etl_spark.ml import multimodal, png
 
-    def synth(it):
-        import pandas as pd
-
-        from processo_etl_spark.ml import png
-
-        def make(mid: int) -> bytes:
-            px = bytes((mid * 29 + k * 5) % 256 for k in range(256))
-            return png.encode_gray(px, 16, 16)
-
-        for pdf in it:
-            ids = pdf["id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "image/png",
-                    "payload": ids.map(make),
-                    "width": 16,
-                    "height": 16,
-                }
-            )
-
-    media = spark.range(64).mapInPandas(synth, schema=multimodal.MEDIA_SCHEMA)
+    media = multimodal.synth_media(
+        spark.range(64),
+        lambda mid: png.encode_gray(
+            bytes((mid * 29 + k * 5) % 256 for k in range(256)), 16, 16
+        ),
+        "image/png",
+        16,
+        16,
+    )
     small = multimodal.resize_images(media, 8, 8)
     return multimodal.decode_pixels(small)
 
@@ -116,29 +103,15 @@ def multimodal_keyframes(spark, sf_dir):
     """
     from processo_etl_spark.ml import multimodal
 
-    def synth(it):
-        import pandas as pd
-
-        def make(vid: int) -> bytes:
-            return bytes(
-                (vid * 53 + (f // 4) * 151 + j * 7 + (f % 4)) % 256
-                for f in range(16)
-                for j in range(64)
-            )
-
-        for pdf in it:
-            ids = pdf["id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "video/raw",
-                    "payload": ids.map(make),
-                    "width": None,
-                    "height": None,
-                }
-            )
-
-    media = spark.range(64).mapInPandas(synth, schema=multimodal.MEDIA_SCHEMA)
+    media = multimodal.synth_media(
+        spark.range(64),
+        lambda vid: bytes(
+            (vid * 53 + (f // 4) * 151 + j * 7 + (f % 4)) % 256
+            for f in range(16)
+            for j in range(64)
+        ),
+        "video/raw",
+    )
     return multimodal.keyframe_detect(media, frame_bytes=64, threshold=4000)
 
 
@@ -271,33 +244,15 @@ def multimodal_png_meta(spark, sf_dir):
     step that turns an opaque binary column into queryable metadata.
     Scale shape: one Arrow map stage, zero shuffles.
     """
-    from processo_etl_spark.ml import multimodal
+    from processo_etl_spark.ml import multimodal, png
 
-    def synth(it):
-        import pandas as pd
+    langs = ("en", "pt", "es")
 
-        from processo_etl_spark.ml import png
+    def make(mid: int) -> bytes:
+        px = bytes((mid * 37 + k * 11) % 256 for k in range(64))
+        return png.encode_gray(
+            px, 8, 8, text={"title": f"doc-{mid}", "lang": langs[mid % 3]}
+        )
 
-        langs = ("en", "pt", "es")
-
-        def make(mid: int) -> bytes:
-            px = bytes((mid * 37 + k * 11) % 256 for k in range(64))
-            return png.encode_gray(
-                px, 8, 8,
-                text={"title": f"doc-{mid}", "lang": langs[mid % 3]},
-            )
-
-        for pdf in it:
-            ids = pdf["id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "image/png",
-                    "payload": ids.map(make),
-                    "width": 8,
-                    "height": 8,
-                }
-            )
-
-    media = spark.range(64).mapInPandas(synth, schema=multimodal.MEDIA_SCHEMA)
+    media = multimodal.synth_media(spark.range(64), make, "image/png", 8, 8)
     return multimodal.png_text_metadata(media)

@@ -1271,10 +1271,10 @@ def multimodal_features(spark, sf_dir):
 def multimodal_png_decode(spark, sf_dir):
     """REAL image decode, hash-graded (VERDICT r4 #4): deterministic 8×8
     grayscale PNGs (real DEFLATE streams, ml/png.encode_gray) are decoded
-    back by the vendored stdlib codec — or Pillow where it exists — and
-    reduced to per-column mean intensities.  The pixel pattern is
-    closed-form ((id·31 + r·7 + c·13) mod 256), so the oracle states the
-    expected features without any image library; a decode bug (wrong
+    back by the vendored stdlib codec and reduced to per-column mean
+    intensities.  The pixel pattern is closed-form ((id·31 + r·7 + c·13)
+    mod 256), so the oracle states the expected features without any
+    image library; a decode bug (wrong
     unfilter, wrong inflate framing, row-order flip) breaks the hash.
     Scale shape: two Arrow-batched mapInPandas stages, zero shuffles.
 
@@ -1287,7 +1287,7 @@ def multimodal_png_decode(spark, sf_dir):
 
     docs = t(spark, sf_dir, "documents")
     media = multimodal.synthesize_png_media(docs, "doc_id")
-    feats = multimodal.extract_features(media, n_features=8, real_decode=True)
+    feats = multimodal.extract_features(media, n_features=8)
     return feats.select(
         "media_id", F.posexplode("feature").alias("feature_idx", "value")
     )
@@ -1404,7 +1404,7 @@ def multimodal_binary_ingest(spark, sf_dir):
         corpus,
         id_from_path=lambda p: F.regexp_extract(p, r"img_(\d+)\.png$", 1),
     )
-    feats = multimodal.extract_features(media, n_features=8, real_decode=True)
+    feats = multimodal.extract_features(media, n_features=8)
     dims = media.select("media_id", "width", "height")
     return (
         feats.join(F.broadcast(dims), "media_id")

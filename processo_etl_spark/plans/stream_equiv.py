@@ -492,7 +492,6 @@ def stream_batch_equiv_media(spark, sf_dir):
     batch = multimodal.extract_features(
         multimodal.read_binary_media(spark, d, glob="*.png"),
         n_features=8,
-        real_decode=True,
     ).select(
         "media_id",
         F.col("n_bytes").alias("b_bytes"),

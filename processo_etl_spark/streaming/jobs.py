@@ -431,10 +431,9 @@ def run_bloom_filter_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def _has_tws_runtime() -> bool:
     """transformWithStateInPandas ships its driver-side processor over a
-    protobuf channel; this container's protobuf install is broken, so
-    the TWS path is feature-flagged exactly like the Pillow decode
-    (ml/multimodal.HAS_PIL): implemented + tested where the runtime
-    exists, skipped where it doesn't."""
+    protobuf channel, which needs a working protobuf install; where it
+    is missing the TWS path is skipped and the sessionizer runs its
+    applyInPandasWithState twin instead."""
     try:  # pragma: no cover - environment probe
         from google.protobuf import descriptor  # noqa: F401
 
@@ -716,9 +715,10 @@ def read_media_stream(spark: SparkSession, media_dir: str, glob: str = "*.png") 
 def media_features_stream(
     raw: DataFrame, n_features: int = 8, media_type: str = "image/png"
 ) -> DataFrame:
-    """Stream stage: binaryFile rows → MEDIA_SCHEMA → real-decode IMAGE
-    features.  Stateless (two narrow Arrow maps, no watermark needed),
-    so streaming output ≡ the batch ``read_binary_media`` +
+    """Stream stage: binaryFile rows → MEDIA_SCHEMA (the batch reader's
+    own projection, ``ml/multimodal.binary_file_media``) → real-decode
+    IMAGE features.  Stateless (one narrow Arrow map, no watermark
+    needed), so streaming output ≡ the batch ``read_binary_media`` +
     ``extract_features`` result over the same directory — asserted by
     the equivalence test, the module's batch-twin convention.
 
@@ -728,17 +728,9 @@ def media_features_stream(
     instead of reusing this stage with a ``*.wav`` glob.
     """
     from processo_etl_spark.ml import multimodal
-    from processo_etl_spark.ml.dedup import md5_long
 
-    media = raw.select(
-        md5_long(F.col("path")).alias("media_id"),
-        F.lit(media_type).alias("media_type"),
-        F.col("content").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-    )
     return multimodal.extract_features(
-        media, n_features=n_features, real_decode=True
+        multimodal.binary_file_media(raw, media_type), n_features
     )
 
 

@@ -465,7 +465,6 @@ def test_stream_media_ingest_equals_batch_twin(spark, tmp_path):
         for r in multimodal.extract_features(
             multimodal.read_binary_media(spark, str(tmp_path), glob="*.png"),
             n_features=8,
-            real_decode=True,
         ).collect()
     }
     assert streamed == batch and len(streamed) == 3
