@@ -3,10 +3,10 @@ suite, and the registry.
 
 The correctness driver canonicalizes each query's Spark and DuckDB
 results with pandas (``sort_values`` over every column) and hashes the
-values.  Two output-schema rules follow, enforced in three places
-(tools/check_oracles.py, tests/test_scale.py's plan audit, and the
-registry conventions) — this module is the ONE definition all of them
-import, so widening a ban or adding a canary is a single edit:
+values.  Three output-schema rules follow; :func:`output_violations` is
+the ONE check of all three, run by both tools/check_oracles.py loops and
+tests/test_scale.py's plan audit, so widening a ban or adding a canary
+is a single edit:
 
 - **No DecimalType outputs** (r2 lesson: the driver hashes Spark vs
   DuckDB decimals differently regardless of value).  The two
@@ -251,3 +251,25 @@ def double_output_cols(schema) -> list[str]:
         for f in schema.fields
         if isinstance(f.dataType, (DoubleType, FloatType))
     ]
+
+
+def output_violations(name: str, schema, oracle_sql: str) -> list[str]:
+    """One message per output-schema rule that query ``name``'s result
+    ``schema`` breaks: DecimalType columns (outside
+    :data:`DECIMAL_CANARIES`), non-scalar columns, and raw-double fold
+    outputs (``oracle_sql`` is the query's oracle, ``""`` for none).
+    Empty when the output is gradeable."""
+    out = []
+    dec = [] if name in DECIMAL_CANARIES else decimal_output_cols(schema)
+    if dec:
+        out.append(f"DecimalType output columns {dec}")
+    nonscalar = nonscalar_output_cols(schema)
+    if nonscalar:
+        out.append(f"non-scalar output columns {nonscalar}")
+    folds = raw_double_fold_hazards(name, oracle_sql, double_output_cols(schema))
+    if folds:
+        out.append(
+            f"raw-double fold output columns {folds} "
+            "(ROUND both sides or allow-list in grading.py)"
+        )
+    return out

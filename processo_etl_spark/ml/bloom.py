@@ -301,14 +301,12 @@ def bloom_contamination(
     side only while auditing; the production path drops it and with it
     the gram-set broadcast entirely.
     """
-    from processo_etl_spark.ml.dedup import word_shingles
+    from processo_etl_spark.ml.dedup import shingle_set
 
     # Materialized once: the filter build and the exact-audit broadcast
     # otherwise each re-run the shingle pipeline + distinct.
     eval_grams = (
-        eval_set.select(
-            F.explode(F.array_distinct(word_shingles(text_col, n))).alias("gram")
-        )
+        eval_set.select(F.explode(shingle_set(text_col, n)).alias("gram"))
         .distinct()
         .transform(persist_once)
     )
@@ -321,18 +319,16 @@ def bloom_contamination(
     # projection under the per-doc aggregate, so the 16 KiB array never
     # enters the exchange.
     filt = bloom_words_relation(eval_grams, "gram", n_bits=n_bits, k=k)
-    tk = F.col(toks_col) if toks_col else None
     # explode_outer, not explode (r14): word_shingles yields >= 1 gram
-    # for every non-NULL text, and the outer explode keeps NULL-text
-    # rows too, so EVERY corpus document survives into the aggregate and
-    # the old restore join (corpus ids left-joined back onto the hit
-    # counts — one more join + corpus re-scan) is provably a no-op and
-    # is gone.  NULL-gram rows contribute zero to all three counters.
+    # for every text, NULL included (['']), and the outer explode would
+    # keep even an empty array's row, so EVERY corpus document survives
+    # into the aggregate and the old restore join (corpus ids left-joined
+    # back onto the hit counts — one more join + corpus re-scan) is
+    # provably a no-op and is gone.  NULL-gram rows contribute zero to
+    # all three counters.
     corpus_grams = corpus.select(
         id_col,
-        F.explode_outer(
-            F.array_distinct(word_shingles(text_col, n, toks=tk))
-        ).alias("gram"),
+        F.explode_outer(shingle_set(text_col, n, toks_col)).alias("gram"),
     ).crossJoin(F.broadcast(filt))
     flagged = corpus_grams.withColumn(
         "bloom_hit", bloom_hit_expr(F.col(WORDS_COL), F.col("gram"), n_bits, k)

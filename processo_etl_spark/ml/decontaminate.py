@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import word_shingles
+from processo_etl_spark.ml.dedup import shingle_set
 
 
 def ngram_contamination(
@@ -44,18 +44,11 @@ def ngram_contamination(
     back to a single whole-text shingle (matching ``word_shingles``), so
     short eval strings still match verbatim copies.
     """
-    eval_grams = (
-        eval_set.select(
-            F.explode(F.array_distinct(word_shingles(text_col, n))).alias("gram")
-        )
-        .distinct()
-    )
-    tk = F.col(toks_col) if toks_col else None
+    eval_grams = eval_set.select(
+        F.explode(shingle_set(text_col, n)).alias("gram")
+    ).distinct()
     corpus_grams = corpus.select(
-        id_col,
-        F.explode(F.array_distinct(word_shingles(text_col, n, toks=tk))).alias(
-            "gram"
-        ),
+        id_col, F.explode(shingle_set(text_col, n, toks_col)).alias("gram")
     )
     hits = (
         corpus_grams.join(F.broadcast(eval_grams), "gram")

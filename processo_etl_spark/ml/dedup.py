@@ -34,6 +34,15 @@ def normalize_text(c: Column | str) -> Column:
     return F.lower(F.regexp_replace(F.trim(col), r"\s+", " "))
 
 
+def tokens_ws(text: Column | str, toks_col: str | None = None) -> Column:
+    """Whitespace tokens of the normalized text — the one tokenizer of
+    the text operators.  ``toks_col`` names a precomputed token array
+    (the plans/common.corpus tokenize-once relation): identical values,
+    but the shared lineage is persisted once and matched by the cache
+    manager across queries."""
+    return F.col(toks_col) if toks_col else F.split(normalize_text(text), " ")
+
+
 def fingerprint(c: Column | str) -> Column:
     """128-bit content fingerprint of normalized text (hex string)."""
     return F.md5(normalize_text(c))
@@ -53,6 +62,37 @@ def exact_dedup(
             F.min(id_col).alias(id_col),
             F.count(F.lit(1)).alias("n_copies"),
         )
+    )
+
+
+def word_chunks(toks: Column, chunk_tokens: int) -> Column:
+    """Consecutive ``chunk_tokens``-word chunks of a token array, each
+    re-joined with single spaces (the last one may be shorter) — narrow
+    sequence + slice HOFs, no shuffle."""
+    n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.array_join(
+            F.slice(toks, i * chunk_tokens + 1, chunk_tokens), " "
+        ),
+    )
+
+
+def _reassemble(flagged: DataFrame, id_col: str, counter: Column) -> DataFrame:
+    """One row per document from ``(id_col, pos, chunk, kept)`` rows:
+    n_chunks, ``counter`` and clean_text — the kept chunks re-joined in
+    position order."""
+    kept_struct = F.when(F.col("kept"), F.struct(F.col("pos"), F.col("chunk")))
+    return flagged.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_chunks"),
+        counter,
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(kept_struct)),
+                lambda s: s["chunk"],
+            ),
+            " ",
+        ).alias("clean_text"),
     )
 
 
@@ -79,36 +119,14 @@ def chunk_dedup(
 
     Returns one row per document: n_chunks, n_kept, clean_text.
     """
-    tk = normalize_text(text_col)
-    toks = F.split(tk, " ")
-    n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * chunk_tokens + 1, chunk_tokens), " "
-        ),
-    )
+    chunks = word_chunks(tokens_ws(text_col), chunk_tokens)
     exploded = df.select(
         F.col(id_col), F.posexplode(chunks).alias("pos", "chunk")
     )
     w = Window.partitionBy("chunk").orderBy(id_col, "pos")
     flagged = exploded.withColumn("kept", F.row_number().over(w) == 1)
-    kept_struct = F.when(
-        F.col("kept"), F.struct(F.col("pos"), F.col("chunk"))
-    )
-    return (
-        flagged.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum(F.col("kept").cast("long")).alias("n_kept"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda s: s["chunk"],
-                ),
-                " ",
-            ).alias("clean_text"),
-        )
+    return _reassemble(
+        flagged, id_col, F.sum(F.col("kept").cast("long")).alias("n_kept")
     )
 
 
@@ -138,18 +156,7 @@ def boilerplate_chunk_removal(
 
     Returns one row per document: n_chunks, n_dropped, clean_text.
     """
-    toks = (
-        F.col(toks_col)
-        if toks_col
-        else F.split(normalize_text(text_col), " ")
-    )
-    n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * chunk_tokens + 1, chunk_tokens), " "
-        ),
-    )
+    chunks = word_chunks(tokens_ws(text_col, toks_col), chunk_tokens)
     # Materialized once: the document-frequency aggregation and the
     # flag join otherwise each re-run the normalize/split/chunk HOF
     # pipeline over the whole corpus.
@@ -165,36 +172,23 @@ def boilerplate_chunk_removal(
     flagged = exploded.join(boiler, "chunk", "left").withColumn(
         "kept", F.col("_boiler").isNull()
     )
-    kept_struct = F.when(F.col("kept"), F.struct(F.col("pos"), F.col("chunk")))
-    return (
-        flagged.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum((~F.col("kept")).cast("long")).alias("n_dropped"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda s: s["chunk"],
-                ),
-                " ",
-            ).alias("clean_text"),
-        )
+    return _reassemble(
+        flagged, id_col, F.sum((~F.col("kept")).cast("long")).alias("n_dropped")
     )
 
 
 def word_shingles(
-    text_col: Column | str, n: int = 3, toks: Column | None = None
+    text_col: Column | str, n: int = 3, toks_col: str | None = None
 ) -> Column:
     """Word n-gram shingles as an array<string> — pure array expressions.
 
     tokens[i..i+n-1] for i in 1..len-n+1; rows shorter than n yield the
-    whole text as a single shingle so they still participate.  Pass a
-    precomputed ``toks`` array (the plans/common.corpus tokenize-once
-    relation) to skip the normalize+split here — identical values by
-    construction.
+    whole text as a single shingle so they still participate.  A NULL
+    and an empty text both shingle to ``['']`` (as in the DuckDB
+    oracles), so a NULL and an empty document pair at Jaccard 1.0.
+    ``toks_col`` is as in :func:`tokens_ws`.
     """
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(normalize_text(col), " ") if toks is None else toks
+    toks = tokens_ws(text_col, toks_col)
 
     # Bind the token array ONCE as a lambda value: higher-order functions
     # bypass codegen subexpression elimination, so referencing the
@@ -215,6 +209,56 @@ def word_shingles(
         )
 
     return F.element_at(F.transform(F.array(toks), make), 1)
+
+
+def shingle_set(
+    text_col: Column | str, n: int = 3, toks_col: str | None = None
+) -> Column:
+    """The distinct word n-gram set of a text (:func:`word_shingles`)."""
+    return F.array_distinct(word_shingles(text_col, n, toks_col))
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int, toks_col: str | None = None
+) -> DataFrame:
+    """(doc, sh): each document's distinct shingle set."""
+    return df.select(
+        F.col(id_col).alias("doc"), shingle_set(text_col, n, toks_col).alias("sh")
+    )
+
+
+def _overlap(sh_a: str, sh_b: str) -> Column:
+    """|A ∩ B| of two distinct-shingle-set columns."""
+    return F.size(F.array_intersect(sh_a, sh_b))
+
+
+def _jaccard(sh_a: str, sh_b: str) -> Column:
+    """Exact Jaccard |A ∩ B| / |A ∪ B| of two distinct-shingle-set columns."""
+    inter = _overlap(sh_a, sh_b)
+    union = F.size(sh_a) + F.size(sh_b) - inter
+    return inter.cast("double") / union.cast("double")
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+    keys: tuple[str, str] = ("id_a", "id_b"),
+    sh: tuple[str, str] = ("sh_a", "sh_b"),
+) -> DataFrame:
+    """Exact verify of candidate pairs: attach each side's ``(doc, sh)``
+    set to ``cand``'s two key columns and keep ``jaccard`` ≥
+    ``threshold``.  The sets re-attach per surviving pair, so shingle
+    arrays never enter the candidate shuffle."""
+    pairs = cand
+    for key, sets, name in zip(keys, (sets_a, sets_b), sh):
+        pairs = pairs.join(
+            sets.select(F.col("doc").alias(key), F.col("sh").alias(name)), on=key
+        )
+    return pairs.withColumn("jaccard", _jaccard(*sh)).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 # Universal-hash family over one md5 per shingle: h = md5_long(s) % P, then
@@ -270,6 +314,42 @@ def _band_hash(sig: Column, band: int, rows_per_band: int) -> Column:
     )
 
 
+def _minhash_base(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    shingle_n: int,
+    toks_col: str | None = None,
+) -> DataFrame:
+    """(doc, sh, sig): distinct shingle set plus its k-wide MinHash,
+    persisted — the band join and the verify re-read it (4× in the
+    self-join).  At cluster scale this is a parquet signature table."""
+    return (
+        _shingle_sets(df, id_col, text_col, shingle_n, toks_col)
+        .withColumn("sig", minhash_signature(F.col("sh"), k))
+        .transform(persist_once)
+    )
+
+
+def _lsh_bands(base: DataFrame, k: int, bands: int) -> DataFrame:
+    """(doc, band, bh): one row per document and LSH band of its
+    signature — the equi-join keys of candidate generation."""
+    rows_per_band = k // bands
+    return base.select(
+        "doc",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    _band_hash(F.col("sig"), b, rows_per_band).alias("bh"),
+                )
+                for b in range(bands)
+            ])
+        ).alias("lsh"),
+    ).select("doc", "lsh.band", "lsh.bh")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -289,31 +369,10 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    rows_per_band = k // bands
-    tk = F.col(toks_col) if toks_col else None
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(word_shingles(text_col, shingle_n, toks=tk)).alias("sh"),
-    ).withColumn("sig", minhash_signature(F.col("sh"), k))
-    # The self-join + verify re-read this lineage 4×; materialize once.
-    # At cluster scale this would be a parquet signature table instead.
-    base = base.transform(persist_once)
-
-    banded = base.select(
-        "doc",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    _band_hash(F.col("sig"), b, rows_per_band).alias("bh"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("lsh"),
-    ).select("doc", "lsh.band", "lsh.bh")
-
+    base = _minhash_base(df, id_col, text_col, k, shingle_n, toks_col)
+    banded = _lsh_bands(base, k, bands)
     # Candidate generation joins ONLY (doc, band, bh) — shingle arrays never
-    # enter this shuffle; they are re-attached per surviving pair below.
+    # enter this shuffle; the verify re-attaches them per surviving pair.
     left = banded.select(F.col("doc").alias("id_a"), "band", "bh")
     right = banded.select(F.col("doc").alias("id_b"), "band", "bh")
     cand = (
@@ -322,21 +381,8 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    shingle_sets = base.select("doc", "sh")
-    pairs = cand.join(
-        shingle_sets.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")),
-        on="id_a",
-    ).join(
-        shingle_sets.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b")),
-        on="id_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify_jaccard(cand, base, base, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -400,6 +446,21 @@ def connected_components(
     return labels
 
 
+def _block_pairs(
+    df: DataFrame, id_col: str, text_col: str, block_col: str, shingle_n: int
+) -> DataFrame:
+    """(blk, id_a, sh_a, id_b, sh_b): every id_a < id_b pair sharing a
+    blocking key, with both distinct shingle sets."""
+    base = df.select(
+        F.col(block_col).alias("blk"),
+        F.col(id_col).alias("doc"),
+        shingle_set(text_col, shingle_n).alias("sh"),
+    )
+    a = base.select("blk", F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = base.select("blk", F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
+    return a.join(b, on="blk").filter(F.col("id_a") < F.col("id_b"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -413,19 +474,9 @@ def ngram_jaccard_pairs(
     The block join keeps the candidate set linear-ish (never global
     all-pairs); use MinHash-LSH when no natural blocking key exists.
     """
-    base = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("doc"),
-        F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
-    )
-    a = base.select("blk", F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = base.select("blk", F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = a.join(b, on="blk").filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union.cast("double")
+    pairs = _block_pairs(df, id_col, text_col, block_col, shingle_n)
     return (
-        pairs.withColumn("jaccard", jac)
+        pairs.withColumn("jaccard", _jaccard("sh_a", "sh_b"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -455,24 +506,14 @@ def ngram_containment_pairs(
     bounds candidates to Σ_b |b|², one array_intersect per candidate;
     compose with MinHash banding when no blocking key exists.
     """
-    base = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("doc"),
-        F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
-    )
-    a = base.select("blk", F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = base.select("blk", F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = a.join(b, on="blk").filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    pairs = _block_pairs(df, id_col, text_col, block_col, shingle_n)
+    inter = _overlap("sh_a", "sh_b")
     c_ab = inter.cast("double") / F.size("sh_a").cast("double")
     c_ba = inter.cast("double") / F.size("sh_b").cast("double")
-    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
         pairs.withColumn("containment_ab", c_ab)
         .withColumn("containment_ba", c_ba)
-        .withColumn(
-            "jaccard", inter.cast("double") / union.cast("double")
-        )
+        .withColumn("jaccard", _jaccard("sh_a", "sh_b"))
         .filter(
             F.greatest("containment_ab", "containment_ba") >= F.lit(threshold)
         )
@@ -509,10 +550,7 @@ def prefix_filter_jaccard_pairs(
     the cost and it is linear in Σ df(prefix tokens) — the reason the
     frequency order matters: prefixes hold the RAREST tokens.
     """
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
-    )
+    base = _shingle_sets(df, id_col, text_col, shingle_n)
     ex = base.select("doc", F.explode("sh").alias("tok"))
     dfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # Per-doc token list sorted by the global (df, tok) order; struct
@@ -553,21 +591,8 @@ def prefix_filter_jaccard_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sets = base.select("doc", "sh")
-    pairs = cand.join(
-        sets.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a")),
-        on="id_a",
-    ).join(
-        sets.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b")),
-        on="id_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verify_jaccard(cand, base, base, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -614,6 +639,13 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _simhash_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc, sig): one SimHash signature per document."""
+    return df.select(
+        F.col(id_col).alias("doc"), simhash64(tokens_ws(text_col)).alias("sig")
+    )
+
+
 def simhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -628,13 +660,13 @@ def simhash_dedup_pairs(
     guaranteed-recall scale path use ``simhash_dedup_pairs_banded``
     (pigeonhole over max_hamming+1 bands).
     """
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        simhash64(F.split(normalize_text(text_col), " ")).alias("sig"),
-    ).withColumn("blk", F.shiftright("sig", 60 - prefix_bits))
     # Materialize once: the self-join would otherwise run the signature
     # lineage twice (and project-collapse re-inlines `sig` into `blk`).
-    base = base.persist()
+    base = (
+        _simhash_base(df, id_col, text_col)
+        .withColumn("blk", F.shiftright("sig", 60 - prefix_bits))
+        .transform(persist_once)
+    )
     a = base.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"), "blk")
     b = base.select(F.col("doc").alias("id_b"), F.col("sig").alias("sig_b"), "blk")
     return (
@@ -684,10 +716,7 @@ def simhash_dedup_pairs_banded(
     bucket or language) or drop to ``simhash_dedup_pairs`` where
     approximate recall is acceptable.
     """
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        simhash64(F.split(normalize_text(text_col), " ")).alias("sig"),
-    ).persist()
+    base = _simhash_base(df, id_col, text_col).transform(persist_once)
     return banded_hamming_pairs(base, sig_bits=60, max_hamming=max_hamming)
 
 
@@ -738,10 +767,9 @@ def _positional_grams(
     df: DataFrame, text_col: str, id_col: str, n: int, toks_col: str | None = None
 ) -> DataFrame:
     """(doc_id, pos, g): word n-grams with their 1-based start position."""
-    tk = F.col(toks_col) if toks_col else None
     return df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(word_shingles(F.col(text_col), n, toks=tk)).alias("pos0", "g"),
+        F.posexplode(word_shingles(text_col, n, toks_col)).alias("pos0", "g"),
     ).select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "g")
 
 
@@ -923,8 +951,7 @@ def excise_duplicate_spans(
     bounded by document length, the same bound the text column itself
     already imposes.
     """
-    words = F.split(normalize_text(text_col), " ")
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("w"))
+    base = df.select(F.col(id_col).alias("doc_id"), tokens_ws(text_col).alias("w"))
     grams = _positional_grams(df, text_col, id_col, n, toks_col).transform(
         persist_once, StorageLevel.MEMORY_AND_DISK
     )
@@ -994,53 +1021,23 @@ def minhash_lsh_incremental(
     ``dup_of`` is the LOWEST corpus id whose verified Jaccard ≥
     threshold (NULL for genuinely-new docs, which are safe to append).
     """
-
-    def prep(d: DataFrame) -> DataFrame:
-        return d.select(
-            F.col(id_col).alias("doc"),
-            F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
-        ).withColumn("sig", minhash_signature(F.col("sh"), k))
-
-    rows_per_band = k // bands
-
-    def banded(base: DataFrame) -> DataFrame:
-        return base.select(
-            "doc",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_hash(F.col("sig"), b, rows_per_band).alias("bh"),
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("lsh"),
-        ).select("doc", "lsh.band", "lsh.bh")
-
-    corpus_base = prep(corpus).persist()
-    batch_base = prep(batch).persist()
+    corpus_base = _minhash_base(corpus, id_col, text_col, k, shingle_n)
+    batch_base = _minhash_base(batch, id_col, text_col, k, shingle_n)
     cand = (
-        banded(batch_base)
+        _lsh_bands(batch_base, k, bands)
         .select(F.col("doc").alias("bid"), "band", "bh")
         .join(
-            banded(corpus_base).select(F.col("doc").alias("cid"), "band", "bh"),
+            _lsh_bands(corpus_base, k, bands).select(
+                F.col("doc").alias("cid"), "band", "bh"
+            ),
             on=["band", "bh"],
         )
         .select("bid", "cid")
         .dropDuplicates(["bid", "cid"])
     )
-    pairs = cand.join(
-        batch_base.select(F.col("doc").alias("bid"), F.col("sh").alias("sh_b")),
-        on="bid",
-    ).join(
-        corpus_base.select(F.col("doc").alias("cid"), F.col("sh").alias("sh_c")),
-        on="cid",
-    )
-    inter = F.size(F.array_intersect("sh_b", "sh_c"))
-    union = F.size("sh_b") + F.size("sh_c") - inter
-    verified = (
-        pairs.withColumn("jaccard", inter.cast("double") / union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
+    verified = _verify_jaccard(
+        cand, batch_base, corpus_base, threshold,
+        keys=("bid", "cid"), sh=("sh_b", "sh_c"),
     )
     # Lowest matching corpus id per batch doc — min over (cid, jaccard)
     # structs is deterministic because cid is unique within a bid group.

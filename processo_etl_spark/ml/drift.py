@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import md5_long, normalize_text
+from processo_etl_spark.ml.dedup import md5_long, tokens_ws
 
 
 def chi2_token_drift(
@@ -68,7 +68,7 @@ def chi2_token_drift(
     b = n_buckets
     toks = df.select(
         is_reference.alias("is_ref"),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("tok"),
+        F.explode(tokens_ws(text_col)).alias("tok"),
     ).withColumn("b", md5_long(F.col("tok")) % b)
     cells = toks.groupBy("b").agg(
         F.count(F.when(F.col("is_ref"), 1)).alias("ca"),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.similarity import cosine
+from processo_etl_spark.ml.similarity import _topk_per_query, cosine
 
 
 def l2_normalize(vec: Column) -> Column:
@@ -82,8 +82,6 @@ def brute_force_topk_quantized(
     """Exact top-k over the QUANTIZED store — same shape as
     similarity.brute_force_topk but scanning array<tinyint> codes (4-8×
     less I/O and shuffle than the float store it replaces)."""
-    from pyspark.sql import Window
-
     q = queries_q.select(
         F.col(id_col).alias("query_id"), F.col("q").alias("qq")
     )
@@ -93,11 +91,8 @@ def brute_force_topk_quantized(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", cosine_quantized(F.col("cq"), F.col("qq")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _topk_per_query(scored, "cos", k).select(
+        "query_id", "neighbor_id", "cos", "rank"
     )
 
 

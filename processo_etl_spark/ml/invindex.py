@@ -17,15 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import normalize_text
+from processo_etl_spark.ml.dedup import tokens_ws
 
 
 def tokenize_positions(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, pos, term): 0-based positions over whitespace tokens of the
     normalized text — one narrow explode, no shuffle."""
-    toks = F.split(normalize_text(text_col), " ")
     return df.select(
-        F.col(id_col).alias("doc"), F.posexplode(toks).alias("pos", "term")
+        F.col(id_col).alias("doc"),
+        F.posexplode(tokens_ws(text_col)).alias("pos", "term"),
     )
 
 

@@ -149,11 +149,26 @@ def binary_file_media(
     PNG payloads width/height are parsed JVM-side from the IHDR header
     (bytes 17–24, big-endian) — no Python boundary in the scan; other
     media types carry NULL dims for the decoder to fill.
+
+    ``media_id`` is the key every media operator groups and joins on,
+    so it must be non-NULL: a row whose ``id_from_path`` is NULL fails
+    the scan with "binary_file_media: id_from_path returned NULL for
+    <path>" instead of reaching an operator's Python worker.
     """
     from processo_etl_spark.ml.dedup import md5_long
 
     if id_from_path is None:
-        id_from_path = md5_long
+        media_id = md5_long(F.col("path"))  # md5 of a path is never NULL
+    else:
+        media_id = F.coalesce(
+            id_from_path(F.col("path")),
+            F.raise_error(
+                F.concat(
+                    F.lit("binary_file_media: id_from_path returned NULL for "),
+                    F.col("path"),
+                )
+            ),
+        )
     # Length guard (ADVICE r6): a signature-valid file truncated to 9–23
     # bytes would make substring() return 1–3 bytes and conv(hex(...))
     # yield a garbage small integer instead of NULL — require the full
@@ -165,7 +180,7 @@ def binary_file_media(
         F.hex(F.expr(f"substring(content, {off}, 4)")), 16, 10
     ).cast("int")
     return raw.select(
-        id_from_path(F.col("path")).cast("long").alias("media_id"),
+        media_id.cast("long").alias("media_id"),
         F.lit(media_type).alias("media_type"),
         F.col("content").alias("payload"),
         F.when(is_png, dim(17)).alias("width"),

@@ -168,13 +168,19 @@ def decode_gray(payload: bytes) -> tuple[int, int, bytes]:
             break
     if width < 0:
         raise ValueError("missing IHDR")
+    stride = width + 1
+    # Inflate at most one byte past the IHDR size: a few KiB of crafted
+    # DEFLATE can expand to hundreds of MiB, and the overflow byte alone
+    # proves the mismatch.
+    inflater = zlib.decompressobj()
     try:
-        raw = zlib.decompress(bytes(idat))
+        raw = inflater.decompress(bytes(idat), stride * height + 1)
     except zlib.error as e:  # a CRC-valid chunk can still carry bad DEFLATE
         raise ValueError(f"corrupt IDAT stream: {e}") from None
-    stride = width + 1
     if len(raw) != stride * height:
         raise ValueError("decompressed size mismatch")
+    if not inflater.eof:
+        raise ValueError("truncated IDAT stream")
     out = bytearray(width * height)
     prev = bytes(width)
     for r in range(height):

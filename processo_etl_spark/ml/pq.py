@@ -38,11 +38,11 @@ Vectors whose tail extends past m*dsub are ignored beyond that point
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from processo_etl_spark.columns import internal
-from processo_etl_spark.ml.similarity import cosine
+from processo_etl_spark.ml.similarity import _topk_per_query, cosine
 
 _INV = internal("pq_inv")
 
@@ -307,11 +307,8 @@ def ivfpq_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("adc", adc_score(F.col("codes"), F.col("lut"), m))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", "rank")
+    return _topk_per_query(scored, "adc", k).select(
+        "query_id", "neighbor_id", "adc", "rank"
     )
 
 
@@ -345,9 +342,6 @@ def ivfpq_topk_rerank(
         .join(cv, on="neighbor_id")
         .withColumn("cos", cosine(F.col("cv"), F.col("qv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _topk_per_query(scored, "cos", k).select(
+        "query_id", "neighbor_id", "cos", "rank"
     )

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import md5_long, normalize_text
+from processo_etl_spark.ml.dedup import md5_long, tokens_ws
 from processo_etl_spark.session import persist_once
 
 
@@ -68,9 +68,7 @@ def importance_weights(
     raw distribution is the whole input.
     """
     b = n_buckets
-    tok_arr = (
-        F.col(toks_col) if toks_col else F.split(normalize_text(text_col), " ")
-    )
+    tok_arr = tokens_ws(text_col, toks_col)
     # Persisted (r14): the hashed token stream feeds BOTH the bucket
     # stats and the final per-doc scoring join — un-persisted, the
     # explode + md5 ran twice per call.  Slimmed to the three columns

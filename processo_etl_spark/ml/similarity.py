@@ -40,6 +40,20 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _topk_per_query(
+    scored: DataFrame, score_col: str, k: int, ascending: bool = False
+) -> DataFrame:
+    """``scored`` with a per-query ``rank`` column (by ``score_col``,
+    then ``neighbor_id`` ascending), keeping ranks ≤ k.  The window is
+    partitioned by ``query_id``: bounded state per query, never a
+    global sort."""
+    score = F.asc(score_col) if ascending else F.desc(score_col)
+    w = Window.partitionBy("query_id").orderBy(score, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -65,11 +79,8 @@ def brute_force_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", cosine(F.col("cv"), F.col("qv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _topk_per_query(scored, "cos", k).select(
+        "query_id", "neighbor_id", "cos", "rank"
     )
 
 
@@ -192,11 +203,7 @@ def lsh_topk(
         ["query_id", "neighbor_id"]
     )
     scored = pool.withColumn("cos", cosine(F.col("cv"), F.col("qv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    ranked = _topk_per_query(scored, "cos", k)
     if exclude_equal:
         return ranked.select(
             "query_id",
@@ -310,11 +317,8 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos", cosine(F.col("cv"), F.col("qv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _topk_per_query(scored, "cos", k).select(
+        "query_id", "neighbor_id", "cos", "rank"
     )
 
 
@@ -528,13 +532,8 @@ def hamming_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("hamming", ham.cast("int"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "hamming", "rank", "qv")
+    topk = _topk_per_query(scored, "hamming", k, ascending=True).select(
+        "query_id", "neighbor_id", "hamming", "rank", "qv"
     )
     # exact cosine only for the k·|queries| survivors: broadcast the
     # tiny top-k set against one narrow (id, vector) corpus projection

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import fingerprint, normalize_text
+from processo_etl_spark.ml.dedup import fingerprint, tokens_ws, word_chunks
 
 # Minimal function-word lists for the n-gram/stopword language heuristic.
 STOPWORDS = {
@@ -16,20 +16,6 @@ STOPWORDS = {
     "fr": ("le", "la", "de", "et", "les", "des", "un", "une", "du", "est"),
     "de": ("der", "die", "das", "und", "in", "den", "von", "zu", "mit", "ist"),
 }
-
-
-def tokens_ws(c: Column | str) -> Column:
-    """Whitespace tokenization of normalized text."""
-    return F.split(normalize_text(c), " ")
-
-
-def _toks(text_col: Column | str, toks_col: str | None) -> Column:
-    """The token array: the precomputed ``toks_col`` when the caller has
-    a tokenize-once corpus relation (plans/common.corpus), else derived
-    from ``text_col``.  Both forms are the identical expression result —
-    ``toks_col`` just lets the shared lineage be persisted and matched
-    by the cache manager across queries."""
-    return F.col(toks_col) if toks_col else tokens_ws(text_col)
 
 
 def token_count_ws(c: Column | str) -> Column:
@@ -49,7 +35,7 @@ def token_count_bpe_regex(c: Column | str) -> Column:
 def stopword_ratio(
     c: Column | str, lang: str = "en", toks_col: str | None = None
 ) -> Column:
-    toks = _toks(c, toks_col)
+    toks = tokens_ws(c, toks_col)
     hits = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS[lang])))
     return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
@@ -96,7 +82,7 @@ def quality_features(
     Score terms use ``floor`` scaling (not round) so every engine agrees
     bit-for-bit; a single narrow projection, no shuffle.
     """
-    toks = _toks(text_col, toks_col)
+    toks = tokens_ws(text_col, toks_col)
     n_tok = F.size(toks)
     n_char = F.length(F.col(text_col))
     punct = F.size(F.regexp_extract_all(F.col(text_col), F.lit(r"[^\w\s]"), 0))
@@ -203,7 +189,7 @@ def gopher_quality_flags(
 
     One narrow projection; the token array is let-bound (HOFs skip CSE).
     """
-    toks = _toks(text_col, toks_col)
+    toks = tokens_ws(text_col, toks_col)
 
     def _feats(tk: Column) -> Column:
         n = F.size(tk)
@@ -271,7 +257,7 @@ def vocab_counts(
     term — the canonical word-count shape; at 100 TB the only shuffle
     carries (term, partial counts), never documents.
     """
-    toks = F.explode(_toks(text_col, toks_col)).alias("term")
+    toks = F.explode(tokens_ws(text_col, toks_col)).alias("term")
     return (
         df.select(toks)
         .groupBy("term")
@@ -288,7 +274,7 @@ def doc_frequency(
     return (
         df.select(
             id_col,
-            F.explode(F.array_distinct(_toks(text_col, toks_col))).alias("term"),
+            F.explode(F.array_distinct(tokens_ws(text_col, toks_col))).alias("term"),
         )
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -313,7 +299,7 @@ def tfidf_top_terms(
     """
     n_docs = df.count()  # one cheap metadata-only count (parquet rowcount)
     tf = (
-        df.select(id_col, F.explode(_toks(text_col, toks_col)).alias("term"))
+        df.select(id_col, F.explode(tokens_ws(text_col, toks_col)).alias("term"))
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -369,7 +355,7 @@ def corpus_frequency_score(
     # the per-term partial aggregation already collapses it map-side.
     freq = vocab_counts(df, text_col, toks_col=toks_col)
     tf = (
-        df.select(F.col(id_col), F.explode(_toks(text_col, toks_col)).alias("term"))
+        df.select(F.col(id_col), F.explode(tokens_ws(text_col, toks_col)).alias("term"))
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -407,22 +393,15 @@ def mixed_language_flags(
     included) and ``mixed`` (≥2 labels AND agreement below
     ``min_agreement``).
 
-    Scale shape: narrow chunking (the chunk_dedup HOF split) → one
-    combinable groupBy on (doc, lang) — at most |langs|+1 rows per doc
-    — then ONE groupBy on the doc whose dominant-pick is a sorted
-    struct-array fold over those ≤|langs|+1 rows (no window at all,
-    partitioned or otherwise).  The heuristic is the same pure-Column
-    ``detect_language`` the text_langid oracle replays, so the
-    composition stays SQL-checkable.
+    Scale shape: narrow chunking (``dedup.word_chunks``, as in
+    chunk_dedup) → one combinable groupBy on (doc, lang) — at most
+    |langs|+1 rows per doc — then ONE groupBy on the doc whose
+    dominant-pick is a sorted struct-array fold over those ≤|langs|+1
+    rows (no window at all, partitioned or otherwise).  The heuristic
+    is the same pure-Column ``detect_language`` the text_langid oracle
+    replays, so the composition stays SQL-checkable.
     """
-    toks = tokens_ws(text_col)
-    n_ch = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_ch - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * chunk_tokens + 1, chunk_tokens), " "
-        ),
-    )
+    chunks = word_chunks(tokens_ws(text_col), chunk_tokens)
     ch = df.select(F.col(id_col), F.explode(chunks).alias("chunk"))
     counts = (
         ch.select(F.col(id_col), detect_language(F.col("chunk")).alias("chunk_lang"))
@@ -538,11 +517,11 @@ def hashed_bow_features(
     time width (64 agg columns), the standard small-probe size; raise it
     and the plan just grows columns, not stages.
     """
-    from processo_etl_spark.ml.dedup import md5_long, normalize_text
+    from processo_etl_spark.ml.dedup import md5_long
 
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("tok"),
+        F.explode(tokens_ws(text_col)).alias("tok"),
     ).withColumn("b", md5_long(F.col("tok")) % dim)
     counts = [
         F.sum(F.when(F.col("b") == i, 1).otherwise(0))

@@ -32,7 +32,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import normalize_text
+from processo_etl_spark.ml.dedup import tokens_ws
 
 
 def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
@@ -40,7 +40,7 @@ def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
     one map-side-combinable groupBy; empty-string tokens dropped."""
     return (
         df.select(
-            F.explode(F.split(normalize_text(text_col), " ")).alias("word")
+            F.explode(tokens_ws(text_col)).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")
@@ -145,7 +145,7 @@ def bpe_encode(
     ranks = {p: i for i, p in enumerate(merges)}
     norm = df.select(
         F.col(id_col).alias("doc_id"),
-        F.split(normalize_text(text_col), " ").alias("words"),
+        tokens_ws(text_col).alias("words"),
     )
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

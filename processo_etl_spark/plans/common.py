@@ -29,7 +29,7 @@ _CORPUS_CACHE: dict[tuple[str, str], DataFrame] = {}
 def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``documents`` + ``toks`` (whitespace tokens of normalized text),
     persisted once per (session, sf_dir)."""
-    from processo_etl_spark.ml.textstats import tokens_ws
+    from processo_etl_spark.ml.dedup import tokens_ws
 
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _CORPUS_CACHE.get(key)

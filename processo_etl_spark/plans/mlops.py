@@ -87,9 +87,7 @@ def minhash_signature(spark, sf_dir):
     """Per-document MinHash signature (4 hash families shown; engine
     supports any k) — narrow map, no shuffle, portable md5 hashes."""
     docs = t(spark, sf_dir, "documents")
-    sig = dedup.minhash_signature(
-        F.array_distinct(dedup.word_shingles("text", 3)), k=4
-    )
+    sig = dedup.minhash_signature(dedup.shingle_set("text", 3), k=4)
     return docs.select(
         "doc_id",
         *[F.element_at(sig, i + 1).alias(f"mh{i}") for i in range(4)],
@@ -1981,9 +1979,7 @@ def cms_heavy_hitters(spark, sf_dir):
     from processo_etl_spark.ml import sketches
 
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.split(dedup.normalize_text("text"), " ")).alias("tok")
-    )
+    toks = docs.select(F.explode(dedup.tokens_ws("text")).alias("tok"))
     # ONE token-scale pass: everything downstream (sketch, top-20, N)
     # derives from the vocabulary-sized (tok, cnt) relation — the
     # weighted cms_build is cell-identical to the raw build (sums
@@ -2740,13 +2736,11 @@ def mixture_token_plan(spark, sf_dir):
     budget under T=2 temperature weights, with implied epochs (repeat
     factor) per source."""
     from processo_etl_spark.ml import splits
-    from processo_etl_spark.ml.dedup import normalize_text
-
     docs = t(spark, sf_dir, "documents")
     out = splits.mixture_token_plan(
         docs,
         "source",
-        F.size(F.split(normalize_text("text"), " ")),
+        F.size(dedup.tokens_ws("text")),
         budget=1_000_000,
     )
     # emitted weight/epochs are ROUND(·, 9) both sides (raw-double-fold
@@ -3042,13 +3036,12 @@ def vocab_coverage_curve(spark, sf_dir):
     global window; the three coverages are conditional sums in ONE
     aggregate over the ranked term table (|vocab| rows, not corpus
     rows)."""
-    from processo_etl_spark.ml.dedup import normalize_text
     from processo_etl_spark.operators import ranking
 
     docs = t(spark, sf_dir, "documents")
     counts = (
         docs.select(
-            F.explode(F.split(normalize_text("text"), " ")).alias("term")
+            F.explode(dedup.tokens_ws("text")).alias("term")
         )
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))

@@ -21,11 +21,8 @@ from pyspark.sql import functions as F
 
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import corpus
+from processo_etl_spark.plans.mlops import _NORM
 from processo_etl_spark.session import persist_once
-
-# DuckDB mirror of ml/textstats.tokens_ws (lower + collapsed whitespace,
-# split on ' ') — the same string the mlops oracles use.
-_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
 # Distinct bigram relation over normalized whitespace tokens.  DuckDB
 # lists are 1-based, Spark arrays 0-based: tk[i]/tk[i+1] at i=1..len-1

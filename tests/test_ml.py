@@ -873,6 +873,66 @@ def test_png_codec_roundtrip_and_filters():
         png.decode_gray(bytes(corrupt))
 
 
+def test_png_inflate_bounded_by_ihdr_size():
+    """A deflated zero-bomb behind a 1x1 IHDR (16 MiB of zeros in ~16
+    KiB of IDAT) is rejected after inflating at most one byte past the
+    IHDR's 2-byte image: the decode falls back to None with a traced
+    allocation peak of a few MiB, not the 16 MiB an unbounded inflate
+    holds.  A truncated stream of the right size is rejected too."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    from processo_etl_spark.ml import png
+
+    def gray_png(idat: bytes) -> bytes:
+        return (
+            png.SIGNATURE
+            + png._chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
+            + png._chunk(b"IDAT", idat)
+            + png._chunk(b"IEND", b"")
+        )
+
+    bomb = gray_png(zlib.compress(bytes(16 << 20), 9))
+    assert len(bomb) < 64 << 10
+    tracemalloc.start()
+    try:
+        assert png.try_decode_gray(bomb) is None
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20, peak
+    with pytest.raises(ValueError, match="size mismatch"):
+        png.decode_gray(bomb)
+    assert png.decode_gray(gray_png(zlib.compress(b"\x00\x2a"))) == (1, 1, b"\x2a")
+    with pytest.raises(ValueError, match="truncated"):
+        png.decode_gray(gray_png(zlib.compress(b"\x00\x2a")[:-4]))
+
+
+def test_binary_file_media_null_key_named_error(spark):
+    """``media_id`` must be non-NULL: an ``id_from_path`` returning NULL
+    fails at the source with an error naming the path, instead of an
+    opaque PythonException inside a media operator's worker."""
+    from processo_etl_spark.ml import multimodal, png
+
+    raw = spark.createDataFrame(
+        [("file:/corpus/img_x.png", png.encode_gray(bytes(4), 2, 2))],
+        "path string, content binary",
+    )
+    keyed = multimodal.binary_file_media(
+        raw,
+        id_from_path=lambda p: F.when(p.endswith("_1.png"), F.lit(1)),
+    )
+    with pytest.raises(Exception, match=(
+        "binary_file_media: id_from_path returned NULL for file:/corpus/img_x.png"
+    )):
+        keyed.collect()
+    ok = multimodal.binary_file_media(
+        raw, id_from_path=lambda p: F.length(p).cast("long")
+    ).collect()
+    assert [(r["media_id"], r["width"], r["height"]) for r in ok] == [(22, 2, 2)]
+
+
 def test_png_decoder_independent_encoder_shapes():
     """Spec-valid stream shapes an INDEPENDENT encoder may emit but our
     own ``encode_gray`` never does (VERDICT r5 #7 hardening): the zlib
@@ -1662,7 +1722,7 @@ def test_shared_corpus_relation_caches_and_matches(spark):
     """plans/common.corpus returns ONE persisted relation per
     (session, sf_dir) — same object on repeat calls — whose toks column
     equals the inline tokens_ws derivation bit-for-bit."""
-    from processo_etl_spark.ml.textstats import tokens_ws
+    from processo_etl_spark.ml.dedup import tokens_ws
     from processo_etl_spark.plans import common
 
     sf = "/root/testdata/sf0.001"

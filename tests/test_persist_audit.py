@@ -14,7 +14,12 @@ steady-pass sharing model and freed by session clearCache):
 - plans/common.corpus — the shared tokenized corpus (one per sf_dir)
 - ml/dedup._positional_grams     (duplicate_spans / excise share ONE
   entry: identical plan)
-- ml/dedup.minhash_signatures    (the banded signature base)
+- ml/dedup.minhash_lsh_pairs     (the banded signature base,
+  ``_minhash_base``; minhash_lsh_incremental persists its corpus and
+  batch bases the same way)
+- ml/dedup.boilerplate_chunk_removal (the exploded chunk rows)
+- ml/dedup.simhash_dedup_pairs / simhash_dedup_pairs_banded (the
+  signature base, ``_simhash_base``)
 - ml/bloom.bloom_contamination   (eval_grams)
 - plans/textlm.collocations_lift_topk (nab, uni)
 - plans/textlm.heaps_vocab_growth     (ranked, bounds)

@@ -7,6 +7,7 @@ strings and runs one job over the whole batch."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from hypothesis import given, settings
@@ -60,6 +61,73 @@ def test_minhash_in_range_and_permutation_independent_of_order(spark, texts):
         assert all(0 <= v <= dedup.MERSENNE_P for v in r["sig"])
         # min over a set is order-invariant.
         assert r["sig"] == r["sig_rev"]
+
+
+# NULL, empty and blank texts beside short word texts over a tiny
+# vocabulary, so near-duplicates, exact repeats and sub-trigram
+# documents all occur.
+HOSTILE_TEXTS = st.lists(
+    st.one_of(
+        st.none(),
+        st.sampled_from(["", " ", "  a  B "]),
+        st.lists(st.sampled_from(["a", "b", "c", "B"]), min_size=1, max_size=7).map(
+            " ".join
+        ),
+    ),
+    min_size=0,
+    max_size=12,
+)
+
+
+def _py_shingle_set(text: str | None, n: int = 3) -> set[str]:
+    """dedup.shingle_set for space-separated text: NULL reads as ''."""
+    toks = re.sub(r" +", " ", (text or "").strip(" ")).lower().split(" ")
+    return {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1))}
+
+
+@settings(max_examples=5, deadline=None)
+@given(HOSTILE_TEXTS, st.sampled_from([0.3, 0.5, 0.8, 1.0]))
+def test_jaccard_pair_operators_match_naive_all_pairs(spark, texts, threshold):
+    """On hostile input (NULL, '', blank and repeated texts, the empty
+    relation) under ANSI mode, the exact pair operators equal a naive
+    all-pairs Jaccard over the same shingle sets, and MinHash-LSH
+    returns a subset of it with the same values.  NULL and '' both
+    shingle to {''}, so they pair with each other at Jaccard 1.0."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    texts = texts + texts[: len(texts) // 2]  # exact repeats
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    sets = [_py_shingle_set(t) for t in texts]
+    naive = {}
+    for a in range(len(texts)):
+        for b in range(a + 1, len(texts)):
+            inter = len(sets[a] & sets[b])
+            jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+            if jac >= threshold:
+                naive[(a, b)] = jac
+
+    def pairs(out):
+        rows = out.collect()
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows}
+        assert len(got) == len(rows)  # no duplicate pairs
+        return got
+
+    assert pairs(
+        dedup.prefix_filter_jaccard_pairs(df, "doc_id", "text", threshold=threshold)
+    ) == naive
+    one_block = df.withColumn("blk", F.lit(0))
+    assert pairs(
+        dedup.ngram_jaccard_pairs(
+            one_block, "doc_id", "text", "blk", threshold=threshold
+        )
+    ) == naive
+    lsh = pairs(
+        dedup.minhash_lsh_pairs(
+            df, "doc_id", "text", k=8, bands=4, threshold=threshold
+        )
+    )
+    assert lsh.items() <= naive.items()
 
 
 @settings(max_examples=5, deadline=None)

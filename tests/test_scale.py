@@ -198,14 +198,11 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
     # canonicalizer throws on unhashable cells, so every registry output
     # column must be scalar — no array/map/struct — and no DecimalType
     # (r2 hasher lesson) outside the two documented canary probes.
-    # Shared definitions: processo_etl_spark/grading.py (one edit point).
-    from processo_etl_spark.grading import (
-        DECIMAL_CANARIES,
-        decimal_output_cols,
-        double_output_cols,
-        nonscalar_output_cols,
-        raw_double_fold_hazards,
-    )
+    # The raw-double-fold guard (r7 drift lesson, VERDICT r7 #2) rides
+    # along: a multi-term float-reduction oracle may not hash a raw
+    # double — ROUND on both sides or an explicit grading.py allow-list
+    # entry.  One check: processo_etl_spark/grading.output_violations.
+    from processo_etl_spark.grading import output_violations
 
     oracles = plans.all_oracles()
     bad = []
@@ -213,17 +210,8 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         if name.startswith(skip_prefix) or name == "etl_star_pipeline":
             continue
         df = fn(spark, sf)
-        bad += [(name, f"non-scalar output column {c}")
-                for c in nonscalar_output_cols(df.schema)]
-        if name not in DECIMAL_CANARIES:
-            bad += [(name, f"decimal output column {c}")
-                    for c in decimal_output_cols(df.schema)]
-        # Raw-double-fold guard (r7 drift lesson, VERDICT r7 #2): a
-        # multi-term float-reduction oracle may not hash a raw double —
-        # ROUND on both sides or an explicit grading.py allow-list entry.
-        bad += [(name, f"raw-double fold output column {c}")
-                for c in raw_double_fold_hazards(
-                    name, oracles.get(name, ""), double_output_cols(df.schema))]
+        bad += [(name, v)
+                for v in output_violations(name, df.schema, oracles.get(name, ""))]
         plan = df._jdf.queryExecution().executedPlan().toString()
         for smell in ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"):
             if smell == "BroadcastNestedLoopJoin" and name in allow_nested_loop:
@@ -249,6 +237,45 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
                         bad.append((name, "unpartitioned-window"))
                         break
     assert not bad, f"scale smells in plans: {bad}"
+
+
+def test_output_violations_flags_each_rule_once():
+    """grading.output_violations: one seeded violation of each rule is
+    reported, the decimal canaries keep only their decimal exemption,
+    and a clean scalar schema passes."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DecimalType,
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from processo_etl_spark.grading import DECIMAL_CANARIES, output_violations
+
+    fold = "WITH t AS (SELECT list_reduce(xs, (a, b) -> a + b) AS s FROM v) "
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("amount", DecimalType(12, 2)),
+        StructField("tags", ArrayType(StringType())),
+        StructField("s", DoubleType()),
+    ])
+    got = output_violations("q", schema, fold + "SELECT id, amount, tags, s FROM t")
+    assert len(got) == 3, got
+    assert got[0].startswith("DecimalType output columns ['amount']")
+    assert got[1].startswith("non-scalar output columns ['tags']")
+    assert got[2].startswith("raw-double fold output columns ['s']")
+    # no fold marker in the oracle (or no oracle): doubles are fine
+    assert len(output_violations("q", schema, "")) == 2
+    canary = sorted(DECIMAL_CANARIES)[0]
+    assert [v.split(" ")[0] for v in output_violations(canary, schema, "")] == [
+        "non-scalar"
+    ]
+    clean = StructType([StructField("id", LongType()), StructField("s", DoubleType())])
+    rounded = fold + "SELECT id, ROUND(s, 6) AS s FROM t"
+    assert output_violations("q", clean, rounded) == []
 
 
 def test_raw_double_fold_guard_semantics():

@@ -64,13 +64,9 @@ def decimal_cast_hazards(oracle_sql: str) -> list[str]:
 # package so this harness, the plan-audit test, and the registry can
 # never drift apart.
 from processo_etl_spark.grading import (  # noqa: E402
-    DECIMAL_CANARIES as DECIMAL_OUTPUT_EXEMPT,
     EAGER_AT_BUILD,
     HUGEINT_PROBE_EXEMPT,
-    decimal_output_cols,
-    double_output_cols,
-    nonscalar_output_cols,
-    raw_double_fold_hazards,
+    output_violations,
 )
 
 
@@ -162,7 +158,8 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     name_filter = argv[1:]
     if schema_only:
-        # Fast sweep: build every plan lazily, flag DecimalType outputs.
+        # Fast sweep: build every plan lazily, flag output-schema
+        # violations (grading.output_violations).
         # stream_* registrations DRAIN their availableNow query (and the
         # k-means/IVF plans run driver-side sampling jobs) at build time,
         # so skip the streaming family here — their batch twins carry the
@@ -172,8 +169,7 @@ def main() -> int:
         bad = []
         for name, fn in plans.all_queries().items():
             if (
-                name in DECIMAL_OUTPUT_EXEMPT
-                or name in EAGER_AT_BUILD  # literal-inject heads run
+                name in EAGER_AT_BUILD  # literal-inject heads run
                 # their full upstream job at plan construction (ADVICE
                 # r11: the triangle head's 30M-edge build) — the main
                 # differential path still grades them
@@ -181,26 +177,16 @@ def main() -> int:
             ):
                 continue
             try:
-                schema = fn(spark, sf_dir).schema
-                cols = decimal_output_cols(schema)
-                ns_cols = nonscalar_output_cols(schema)
-                ff_cols = raw_double_fold_hazards(
-                    name, all_oracles.get(name, ""), double_output_cols(schema)
+                violations = output_violations(
+                    name, fn(spark, sf_dir).schema, all_oracles.get(name, "")
                 )
             except Exception as e:  # noqa: BLE001
                 bad.append(name)
                 print(f"FAIL  {name}: plan error {type(e).__name__}: {str(e)[:160]}")
                 continue
-            if cols:
-                print(f"FAIL  {name}: DecimalType output columns {cols}")
-            if ns_cols:
-                print(f"FAIL  {name}: non-scalar output columns {ns_cols}")
-            if ff_cols:
-                print(
-                    f"FAIL  {name}: raw-double fold output columns {ff_cols} "
-                    "(ROUND both sides or allow-list in grading.py)"
-                )
-            if cols or ns_cols or ff_cols:  # one bad entry per query (ADVICE r7)
+            for v in violations:
+                print(f"FAIL  {name}: {v}")
+            if violations:  # one bad entry per query (ADVICE r7)
                 bad.append(name)
         print(f"\n{len(bad)} schema failures: {bad}")
         return 1 if bad else 0
@@ -230,30 +216,12 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            dec_cols = (
-                [] if name in DECIMAL_OUTPUT_EXEMPT else decimal_output_cols(sdf.schema)
-            )
-            if dec_cols:
+            violations = output_violations(name, sdf.schema, oracles.get(name, ""))
+            if violations:
                 failures.append(name)
-                record(name, "fail", err=f"DecimalType output columns {dec_cols}")
-                print(f"FAIL  {name}: DecimalType output columns {dec_cols}")
-                continue
-            ns_cols = nonscalar_output_cols(sdf.schema)
-            if ns_cols:
-                failures.append(name)
-                record(name, "fail", err=f"non-scalar output columns {ns_cols}")
-                print(f"FAIL  {name}: non-scalar output columns {ns_cols}")
-                continue
-            ff_cols = raw_double_fold_hazards(
-                name, oracles.get(name, ""), double_output_cols(sdf.schema)
-            )
-            if ff_cols:
-                failures.append(name)
-                record(name, "fail", err=f"raw-double fold output columns {ff_cols}")
-                print(
-                    f"FAIL  {name}: raw-double fold output columns {ff_cols} "
-                    "(ROUND both sides or allow-list in grading.py)"
-                )
+                record(name, "fail", err="; ".join(violations))
+                for v in violations:
+                    print(f"FAIL  {name}: {v}")
                 continue
             srows = sdf.collect()
             scols = sdf.columns
