@@ -1,18 +1,16 @@
-"""Grading-contract definitions shared by the local harness, the test
-suite, and the registry.
+"""Grading-contract definitions shared by the local harness and the
+test suite.
 
 The correctness driver canonicalizes each query's Spark and DuckDB
 results with pandas (``sort_values`` over every column) and hashes the
 values.  Three output-schema rules follow; :func:`output_violations` is
-the ONE check of all three, run by both tools/check_oracles.py loops and
-tests/test_scale.py's plan audit, so widening a ban or adding a canary
-is a single edit:
+the ONE check of all three, run by tools/check_oracles.py and
+tests/test_scale.py's plan audit, so widening a ban is a single edit.
+They hold for every registered query; the raw-double rule's per-column
+allow-list below is the only carve-out:
 
 - **No DecimalType outputs** (r2 lesson: the driver hashes Spark vs
-  DuckDB decimals differently regardless of value).  The two
-  ``canary_decimal_*`` probes are the deliberate exception — they exist
-  to document that driver behavior and are never placed in a graded
-  window slot.
+  DuckDB decimals differently regardless of value).
 - **No array/map/struct outputs** (r5 lesson: pandas ``sort_values``
   throws ``unhashable type: 'list'``, so any non-scalar column is an
   automatic driver ERR even when the values match).  Flatten with
@@ -34,38 +32,6 @@ is a single edit:
 from __future__ import annotations
 
 import re
-
-# The driver-normalization probes: the ONLY queries allowed DecimalType
-# outputs, and permanently excluded from graded window slots.
-DECIMAL_CANARIES = frozenset({"canary_decimal_12_2", "canary_decimal_20_6"})
-
-# Queries whose PLAN CONSTRUCTION executes bounded eager jobs (the
-# documented two-pass literal-inject class: fold a scalar, inject it as
-# a literal, release the cache before returning).  Schema-only sweeps
-# (tools/check_oracles.py --schema) must skip them alongside stream_*:
-# "build the plan lazily, read the schema" would otherwise run the full
-# upstream job — for the triangle head that is the 30M-edge distinct
-# co-purchase build at stress scales (ADVICE r11).  The main
-# differential path still runs and grades them.
-EAGER_AT_BUILD = frozenset(
-    {
-        "graph_triangle_estimate_sampled",
-        # three bounded literal-inject jobs at plan
-        # construction (day count, the exact two-pass quantile bracket,
-        # the per-quantile histogram-bucket lookup) — all over the
-        # ≤5k-cell bounded histogram, never a raw-data re-scan.
-        "quantile_daily_histogram_merge",
-    }
-)
-
-# The r9 one-shot diagnostic whose PURPOSE was emitting bare
-# ``sum(BIGINT)`` (DuckDB HUGEINT) to localize the drift_chi2_sources
-# hash divergence — its red driver row is the recorded proof that the
-# driver canonicalizes int128 differently from Spark LongType.  It is
-# retired from rotation (plans._ONE_SHOT_PROBES) and is the only oracle
-# exempt from the structural HUGEINT output ban; every other oracle
-# must CAST integer aggregates AS BIGINT.
-HUGEINT_PROBE_EXEMPT = frozenset({"drift_probe_ints"})
 
 
 def decimal_output_cols(schema) -> list[str]:
@@ -255,12 +221,11 @@ def double_output_cols(schema) -> list[str]:
 
 def output_violations(name: str, schema, oracle_sql: str) -> list[str]:
     """One message per output-schema rule that query ``name``'s result
-    ``schema`` breaks: DecimalType columns (outside
-    :data:`DECIMAL_CANARIES`), non-scalar columns, and raw-double fold
-    outputs (``oracle_sql`` is the query's oracle, ``""`` for none).
-    Empty when the output is gradeable."""
+    ``schema`` breaks: DecimalType columns, non-scalar columns, and
+    raw-double fold outputs (``oracle_sql`` is the query's oracle,
+    ``""`` for none).  Empty when the output is gradeable."""
     out = []
-    dec = [] if name in DECIMAL_CANARIES else decimal_output_cols(schema)
+    dec = decimal_output_cols(schema)
     if dec:
         out.append(f"DecimalType output columns {dec}")
     nonscalar = nonscalar_output_cols(schema)

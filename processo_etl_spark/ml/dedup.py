@@ -951,7 +951,9 @@ def excise_duplicate_spans(
     bounded by document length, the same bound the text column itself
     already imposes.
     """
-    base = df.select(F.col(id_col).alias("doc_id"), tokens_ws(text_col).alias("w"))
+    base = df.select(
+        F.col(id_col).alias("doc_id"), tokens_ws(text_col, toks_col).alias("w")
+    )
     grams = _positional_grams(df, text_col, id_col, n, toks_col).transform(
         persist_once, StorageLevel.MEMORY_AND_DISK
     )

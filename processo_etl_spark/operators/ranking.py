@@ -498,7 +498,7 @@ def distributed_cumsum(
     ranged = (
         df.repartitionByRange(int(parts), *cols)
         .withColumn(pid_col, F.spark_partition_id())
-        .persist()
+        .transform(persist_once)
     )
     totals = {
         r[pid_col]: r["s"]

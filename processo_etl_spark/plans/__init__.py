@@ -9,35 +9,17 @@ itself here as a named pair:
   parquet tables (omitted only for genuinely non-SQL-expressible ops,
   where the driver records a weaker rows-only check).
 
-Numeric-parity convention (hardened after the r2 driver verdict):
-aggregates run in exact, order-insensitive DECIMAL internally — never
-raw double sums (double summation order is nondeterministic across
-partitions) — but **no registry query emits a DecimalType output
-column**: every final numeric output is ``.cast("double")`` on the
-Spark side and ``CAST(... AS DOUBLE)`` in the oracle.  The r2 judge
-proved the driver's hasher canonicalizes Spark vs DuckDB decimals
-differently regardless of value (6/6 decimal-output queries hash-failed
-with identical values; 44/44 non-decimal passed), so DOUBLE is the
-output convention; the exact decimal value maps to the same nearest
-IEEE double on both engines, and double ratios/averages derived from
-exact operands are bit-identical.  Source-column passthroughs stay raw
-(same parquet value on both sides).  Timestamps are TIMESTAMP_NTZ on
-both sides (parquet naive + UTC session).  Every computed column is
-aliased identically in both implementations.  The ``canary_decimal_*``
-probes (registered past the driver's 50-slot graded window, still
-exercised by tools/check_oracles.py) document the driver's decimal
-normalization behavior; they are the only DecimalType-output queries
-and are exempt from the check_oracles ban.
-
-HUGEINT rule (r9 conviction, probes drift_probe_{ints,round,verdict}):
-the driver hasher ALSO canonicalizes DuckDB HUGEINT (int128) outputs
-differently from Spark LongType — ``drift_probe_ints`` (bare
-``sum(BIGINT)``, HUGEINT-typed) hash-failed while the round-double and
-boolean probes passed.  So every integer aggregate in an oracle must be
-``CAST(... AS BIGINT)``; tools/check_oracles.py structurally fails any
-oracle whose DuckDB result schema contains HUGEINT/UHUGEINT (mirroring
-the DecimalType output ban) so the q12 class can never burn a graded
-slot again.
+Numeric-parity convention: aggregates run in exact, order-insensitive
+DECIMAL internally — never raw double sums, whose order varies across
+partitions — but no registry query emits a DecimalType output column:
+every final numeric output is ``.cast("double")`` on the Spark side and
+``CAST(... AS DOUBLE)`` in the oracle, so the exact decimal maps to the
+same nearest IEEE double on both engines.  Integer aggregates in an
+oracle are ``CAST(... AS BIGINT)`` (DuckDB would type them HUGEINT).
+Source-column passthroughs stay raw, timestamps are TIMESTAMP_NTZ on
+both sides (parquet naive + UTC session), and every computed column is
+aliased identically in both implementations.  ``grading.py`` owns the
+output-schema checks that enforce these rules.
 """
 
 from __future__ import annotations
@@ -52,9 +34,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
-# Plan modules that self-register on import.  The order of this list is
-# the registry order, which is the graded window's tie-break: append new
-# modules at the end, never reorder.
+# Plan modules that self-register on import.  Registry order is this
+# list's import order, then definition order within each module.
 _PLAN_MODULES = (
     "relational",
     "aggregates",
@@ -77,181 +58,6 @@ _PLAN_MODULES = (
     "curation",
 )
 
-# Graded window: the correctness grader checks only the FIRST 50 registry
-# entries, so iteration order is a first-class correctness concern.  The
-# window rotates itself:
-#
-# - ``_PINNED`` — a compact core, one representative per SURVEY §2 family,
-#   stays in the window every round so the reference surface is
-#   re-certified continuously.
-# - The remaining ``_WINDOW - len(_PINNED)`` slots fill with queries that
-#   have NEVER appeared in any recorded ``CORRECTNESS_r*.json`` —
-#   oracle-backed queries in registry order first, then rows-only ones.
-#   As each round's CORRECTNESS file lands, its queries leave the
-#   candidate pool, so the window advances through the ungraded tail
-#   with no hand edit; once every query is graded, the slots re-certify
-#   the oldest evidence first.
-# - ``_NEVER_GRADE`` — the canary_decimal_* probes are EXPECTED red under
-#   the grader's decimal hasher; a graded slot on a known-red probe is
-#   a slot wasted, so they are permanently excluded from the window.
-_WINDOW = 50
-
-_PINNED = (
-    # P1–P4 projection, F1–F8 filters (two shapes: range + null-predicate)
-    "projection",
-    "filter_constraint_le",
-    "filter_eq_or_null",
-    # J1–J6 joins, W1 surrogate keys via the star build, full pipeline
-    "join_right_outer",
-    "star_fact_assembly",
-    "etl_star_pipeline",
-    # D1–D3 dedup, U1 union, S9 set-based upsert
-    "dedup_keep_first",
-    "union_years",
-    "anti_join_new_keys",
-    # O1–O3 ordering/top-K, A1–A10 aggregates (top-K + grouped agg + median)
-    "top_brands",
-    "q1_pricing_summary",
-    "median_quantity",
-    # C1–C19 scalar derivations (dates + the multilabel HOF flagship)
-    "date_parts",
-    "multilabel_decode",
-    "rename_cast_fact",
-)
-
-# The canary probes (shared definition — processo_etl_spark/grading.py).
-from processo_etl_spark.grading import DECIMAL_CANARIES as _NEVER_GRADE  # noqa: E402
-
-
-# Diagnostic one-shot probes: their PURPOSE is the first recorded grade
-# (green or red — a red probe row is the experiment's RESULT, not a
-# failure to retry), so unlike normal queries they leave the rotation
-# pool after ANY recorded row.  Without this, an expected-red probe
-# (drift_probe_round replays the exact emission the r8 driver failed)
-# would re-enter the window every round forever, wasting a graded slot.
-_ONE_SHOT_PROBES = frozenset(
-    {"drift_probe_ints", "drift_probe_round", "drift_probe_verdict"}
-)
-
-
-def _grade_rounds(root=None, rounds=None) -> dict[str, int]:
-    """name -> latest round with a PASSING row in CORRECTNESS_r*.json.
-
-    ``root`` (tests only) overrides the directory scanned for
-    ``CORRECTNESS_r*.json``; production callers use the repo root.
-    ``rounds`` (optional iterable of ints) restricts the scan to those
-    round numbers — tools/gen_counts.py uses it to regenerate the
-    committed window digest against the exact CORRECTNESS round set the
-    digest was built from (VERDICT r11 #1: the driver drops a NEW
-    CORRECTNESS file after the docs freeze every round, so an
-    unrestricted regeneration could never match the committed text).
-
-    A row certifies its query only if it recorded no error and no
-    explicit check failure.  ``err == "no_oracle"`` is NOT an error:
-    it is the driver's DESIGNED verdict for oracle-less (rows-only)
-    jobs — the real r10 file records all ten ``stream_*`` rows as
-    ``{"err": "no_oracle", "spark_rows": N, ...}`` and that row IS the
-    grade the r10 drain existed to obtain (VERDICT r10 #1), so it
-    certifies.  Any OTHER non-None ``err`` means the driver crashed
-    before comparing — zero signal, the query stays in the pool.
-    A query that FAILED a past round stays in the
-    rotation pool, so it re-enters the window until it earns a green
-    row instead of being retired by the attempt — EXCEPT the
-    ``_ONE_SHOT_PROBES``, which retire on any recorded row.  The round
-    number feeds oldest-evidence-first re-certification (r9 verdict
-    #6): once every query has been graded at least once, re-certify
-    fill refreshes r4-era greens before r9 ones."""
-    import json
-    import re
-    from pathlib import Path
-
-    graded: dict[str, int] = {}
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
-    allowed = None if rounds is None else frozenset(rounds)
-    for p in sorted(Path(root).glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)", p.stem)
-        rnd = int(m.group(1)) if m else 0
-        if allowed is not None and rnd not in allowed:
-            continue
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict):
-                if row.get("err") not in (None, "no_oracle"):
-                    # a crash row ran no comparison — zero signal, so
-                    # even a one-shot probe retries after an infra
-                    # crash.  "no_oracle" is excluded: it is the
-                    # driver's rows-only GRADE, not a crash (r10 #1).
-                    continue
-                if row.get("err") == "no_oracle" and name in _ORACLES:
-                    # ADVICE r11: "no_oracle" certifies only queries
-                    # that are rows-only BY DESIGN (no registered
-                    # oracle).  For an oracle-backed query it means the
-                    # driver failed to ship/read the oracle — zero
-                    # signal, so the query re-windows until it earns a
-                    # real hash grade instead of being silently retired
-                    # on a rows-only count.
-                    continue
-                if name not in _ONE_SHOT_PROBES and any(
-                    row.get(k) is False
-                    for k in ("rows_match", "schema_match", "hash_match")
-                ):
-                    continue
-            graded[name] = max(graded.get(name, 0), rnd)
-    return graded
-
-
-def _graded_names() -> frozenset:
-    """Query names with a certifying row in any CORRECTNESS_r*.json."""
-    return frozenset(_grade_rounds())
-
-
-def _window_order(
-    registry_order: list[str], root=None, rounds=None
-) -> list[str]:
-    """The first-_WINDOW grading order: pinned core + rotation slots.
-
-    Fill priority: (1) never-graded oracle-backed, (2) never-graded
-    rows-only, (3) re-certification of already-graded queries in
-    OLDEST-evidence-first order (last grade round ascending, registry
-    order as the tie-break) so stale r4-era greens refresh before
-    recent ones.  ``root`` / ``rounds`` pass through to
-    ``_grade_rounds`` so tools/gen_counts.py can reproduce the window
-    as of a recorded CORRECTNESS round set (VERDICT r11 #1)."""
-    grade_rounds = _grade_rounds(root=root, rounds=rounds)
-    graded = frozenset(grade_rounds)
-    pinned = [n for n in _PINNED if n in registry_order]
-    taken = set(pinned)
-    slots = _WINDOW - len(pinned)
-
-    def take(names, pred) -> list[str]:
-        out = []
-        for n in names:
-            if n in taken or n in _NEVER_GRADE:
-                continue
-            if pred(n):
-                out.append(n)
-                taken.add(n)
-        return out
-
-    rotation = take(registry_order, lambda n: n not in graded and n in _ORACLES)
-    if len(rotation) < slots:  # ungraded oracle-backed pool exhausted
-        rotation += take(registry_order, lambda n: n not in graded)
-    if len(rotation) < slots:  # everything graded at least once: re-certify
-        pos = {n: i for i, n in enumerate(registry_order)}
-        aged = sorted(
-            registry_order,
-            key=lambda n: (grade_rounds.get(n, 0), pos[n]),
-        )
-        # retired diagnostics never re-certify: their one recorded row
-        # IS their purpose (the red drift_probe_ints row documents the
-        # HUGEINT conviction; regrading it would burn a slot red forever)
-        rotation += take(aged, lambda n: n not in _ONE_SHOT_PROBES)
-    return pinned + rotation[:slots]
-
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a named query (and optionally its DuckDB oracle)."""
@@ -272,21 +78,13 @@ def _load() -> None:
         importlib.import_module(f"{__name__}.{mod}")
 
 
-def _prioritized(d: dict) -> dict:
-    missing = [n for n in _PINNED if n not in _QUERIES]
-    if missing:
-        raise RuntimeError(f"_PINNED names not registered: {missing}")
-    window = _window_order(list(_QUERIES))
-    out = {n: d[n] for n in window if n in d}
-    out.update((n, v) for n, v in d.items() if n not in out)
-    return out
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """A copy of the registry, in registration order."""
     _load()
-    return _prioritized(_QUERIES)
+    return dict(_QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
+    """A copy of the oracle map, in registration order."""
     _load()
-    return _prioritized(_ORACLES)
+    return dict(_ORACLES)

@@ -4,9 +4,8 @@ EDA/data-quality workload (SURVEY.md §2.5 A1–A10) and OLAP extensions.
 Numeric convention (plans/__init__): exact DECIMAL arithmetic internally
 for order-insensitive sums, but every final output column is DOUBLE
 (``dsum``/``avg_exact``/``.cast("double")``, mirrored by ``CAST(... AS
-DOUBLE)`` in the oracles) — the driver's hasher canonicalizes Spark and
-DuckDB decimals differently (r2 verdict), so DecimalType never leaves a
-registry query except the two ``canary_decimal_*`` probes.
+DOUBLE)`` in the oracles) — DecimalType never leaves a registry query
+(``grading.output_violations`` rejects one).
 """
 
 from __future__ import annotations
@@ -713,37 +712,6 @@ def q18_large_quantity_orders(spark, sf_dir):
         .agg(F.sum(dec("l_quantity")).cast("double").alias("total_qty"))
         .withColumn("o_totalprice", dec("o_totalprice", 18, 2).cast("double"))
         .select("o_orderkey", "o_orderdate", "o_totalprice", "total_qty")
-    )
-
-
-# --- driver-normalization canaries (VERDICT r2 #2 / _PRIORITY tail) ----------
-@register(
-    "canary_decimal_12_2",
-    oracle="SELECT CAST(1234567.89 AS DECIMAL(12,2)) AS v",
-)
-def canary_decimal_12_2(spark, sf_dir):
-    """One-row constant DECIMAL(12,2) probe of the driver's decimal hashing.
-
-    Expected RED under the r2-diagnosed hasher (Spark vs DuckDB decimal
-    canonicalization differs regardless of value); if it ever grades
-    green, the no-decimal-output convention (plans/common.dec) can be
-    lifted.  Exempt from the check_oracles.py DecimalType-output ban.
-    """
-    return spark.range(1).select(
-        F.lit("1234567.89").cast("decimal(12,2)").alias("v")
-    )
-
-
-@register(
-    "canary_decimal_20_6",
-    oracle="SELECT CAST(12345678901234.654321 AS DECIMAL(20,6)) AS v",
-)
-def canary_decimal_20_6(spark, sf_dir):
-    """High-precision twin of canary_decimal_12_2 (DECIMAL(20,6) exceeds
-    the int64-representable unscaled range only at full precision; this
-    value exercises a >double-mantissa unscaled integer)."""
-    return spark.range(1).select(
-        F.lit("12345678901234.654321").cast("decimal(20,6)").alias("v")
     )
 
 

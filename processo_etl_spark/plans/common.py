@@ -83,9 +83,8 @@ def dec(c: Column | str, precision: int = 12, scale: int = 2) -> Column:
     converts to the same nearest IEEE double on both engines, and any
     subsequent double arithmetic (ratios, averages) is bit-identical
     because both engines execute the same IEEE operations on the same
-    operands.  tools/check_oracles.py enforces the no-decimal-output
-    rule; the canary_decimal_* queries empirically re-test the driver's
-    decimal handling each round.
+    operands.  ``grading.output_violations`` enforces the
+    no-decimal-output rule.
     """
     col = F.col(c) if isinstance(c, str) else c
     return col.cast(f"decimal({precision},{scale})")

@@ -16,9 +16,6 @@ Oracle-parity design: partial sums run in exact DECIMAL (order- and
 grouping-insensitive), cast to DOUBLE only at the output boundary
 (plans/common.dec convention), so the two-level Spark merge and the
 one-level DuckDB recompute agree bit-for-bit.
-
-Registered in the registry TAIL (after retrieval in _PLAN_MODULES), so
-pre-verified grading windows are undisturbed.
 """
 
 from __future__ import annotations

@@ -1,13 +1,10 @@
-"""Media near-duplicate queries — registry-TAIL module (added late r7).
+"""Media near-duplicate queries.
 
 Extension surface beyond the reference (its data is tabular CSV;
 multimodal training corpora need content-level near-dup detection for
 images and audio, not just key-level dedup).  The image twin
 (``multimodal_phash_dedup``) registers in plans/mlops next to the other
-multimodal heads; THIS module exists so queries added after the r7
-window was pre-verified enter the rotation pool behind every existing
-candidate and cannot displace a verified slot (see the registry-tail
-note on ``_PLAN_MODULES``).
+multimodal heads.
 """
 
 from __future__ import annotations

@@ -1700,15 +1700,13 @@ def embedding_pca_project(spark, sf_dir):
     )
 
 
-# --- drift family: shared CTEs + critical value -------------------------
+# --- drift: oracle CTEs + critical value -----------------------------------
 #
-# One definition for the graded head AND the three diagnostic probes, so
-# the driver grades literally the same pipeline four ways.  ``terms``
-# carries BOTH statistics: ``qb`` is the exact-integer per-bucket
-# contribution (10⁶·d²) // (na·nb·rb) with d = ca·nb − na·cb — the
-# algebraic collapse of Pearson's (o−e)²/e, see ml/drift.py — and ``t``
-# is the historical per-bucket double term whose value-sorted fold the
-# r7/r8 drivers hash-failed despite bit-identical local runs.
+# ``terms`` carries BOTH statistics: ``qb`` is the exact-integer
+# per-bucket contribution (10⁶·d²) // (na·nb·rb) with d = ca·nb − na·cb —
+# the algebraic collapse of Pearson's (o−e)²/e, see ml/drift.py — and
+# ``t`` is the per-bucket double term whose value-sorted fold feeds only
+# the ``drift_detected`` comparison.
 _DRIFT_CTES = f"""
     WITH toks AS (
       SELECT length(source) = 4 AS is_ref,
@@ -1761,15 +1759,6 @@ _DRIFT_INNER = (
 _DRIFT_CRIT = f"{_DRIFT_DFD} * {_DRIFT_INNER} * {_DRIFT_INNER} * {_DRIFT_INNER}"
 
 
-def _drift_result(spark, sf_dir):
-    from processo_etl_spark.ml import drift
-
-    docs = t(spark, sf_dir, "documents")
-    return drift.chi2_token_drift(
-        docs, "text", F.length("source") == 4, n_buckets=256
-    )
-
-
 @register(
     "drift_chi2_sources",
     oracle=f"""
@@ -1796,71 +1785,18 @@ def drift_chi2_sources(spark, sf_dir):
     (magnitude guard: needs |d_b| < 10¹⁶, satisfied while slice token
     totals stay under ~10⁸ each; d_b is a per-bucket deviation, far
     smaller in practice).  The totals are CAST to BIGINT in the oracle
-    (DuckDB sum(BIGINT) is HUGEINT-typed — one of the driver-divergence
-    suspects the probes isolate).  ``drift_detected`` still compares
-    the raw fold to the Wilson–Hilferty critical value: the planted
+    (DuckDB types sum(BIGINT) as HUGEINT).  ``drift_detected`` still
+    compares the raw fold to the Wilson–Hilferty critical value: the planted
     shift keeps χ² a judge-measured 2.3× above threshold, so no
     cross-build ULP drift can flip the boolean.  The 2×256 contingency
     shuffle is skew-proof by construction (fixed bucket grid, map-side
     combinable)."""
-    return _drift_result(spark, sf_dir).select(
-        "n_ref", "n_cand", "n_buckets_hit", "chi2_micros", "drift_detected"
-    )
+    from processo_etl_spark.ml import drift
 
-
-@register(
-    "drift_probe_ints",
-    oracle=f"""
-    {_DRIFT_CTES}
-    SELECT n_ref, n_cand, n_buckets_hit FROM agg
-    """,
-)
-def drift_probe_ints(spark, sf_dir):
-    """Diagnostic probe 1/3 for the drift_chi2_sources driver mystery
-    (VERDICT r8 #2): the three integer columns ONLY, with the totals
-    deliberately left in their natural DuckDB type (sum(BIGINT) →
-    HUGEINT) exactly as the twice-failed oracle emitted them.  A red
-    row here with a green drift_chi2_sources (which CASTs to BIGINT)
-    convicts HUGEINT canonicalization; green here exonerates the
-    integer columns entirely."""
-    return _drift_result(spark, sf_dir).select(
-        "n_ref", "n_cand", "n_buckets_hit"
-    )
-
-
-@register(
-    "drift_probe_round",
-    oracle=f"""
-    {_DRIFT_CTES}
-    SELECT ROUND(chi2_raw, 6) AS chi2 FROM agg
-    """,
-)
-def drift_probe_round(spark, sf_dir):
-    """Diagnostic probe 2/3: the r8-style ROUND(chi2, 6) double ALONE
-    (the value-sorted 31-term fold at sf0.01, judge-measured
-    bit-identical locally with a rounding margin of 3.4·10⁻⁷ — three
-    decimal orders above any ULP drift).  This is the column the r7/r8
-    theories blamed; its solo grade settles whether the driver
-    environment truly evaluates this fold differently or the failure
-    lived in a neighboring column all along."""
-    return _drift_result(spark, sf_dir).select("chi2")
-
-
-@register(
-    "drift_probe_verdict",
-    oracle=f"""
-    {_DRIFT_CTES}
-    SELECT chi2_raw > {_DRIFT_CRIT} AS drift_detected FROM agg
-    """,
-)
-def drift_probe_verdict(spark, sf_dir):
-    """Diagnostic probe 3/3: the drift boolean ALONE — raw fold vs the
-    Wilson–Hilferty sqrt-based critical value (the remaining suspect
-    idiom: libm sqrt is IEEE-correctly-rounded everywhere, and the
-    2.3× planted-shift margin dwarfs any conceivable drift, so this
-    probe is EXPECTED green; a red row here would indicate a driver
-    divergence far larger than any float theory allows)."""
-    return _drift_result(spark, sf_dir).select("drift_detected")
+    docs = t(spark, sf_dir, "documents")
+    return drift.chi2_token_drift(
+        docs, "text", F.length("source") == 4, n_buckets=256
+    ).select("n_ref", "n_cand", "n_buckets_hit", "chi2_micros", "drift_detected")
 
 
 @register(

@@ -12,10 +12,6 @@ Oracle-parity design: both heads emit only exact integers and doubles
 from single deterministic IEEE expressions over exact integer ranks /
 counts (ROUND 10 where a sum of divisions is involved); ranks
 tiebreak by id, votes by label — no order-dependent accumulation.
-
-Registered in the registry TAIL (after textlm in _PLAN_MODULES) so
-the round-6 pre-verified grading window is undisturbed; these enter
-the rotation pool behind every earlier ungraded candidate.
 """
 
 from __future__ import annotations

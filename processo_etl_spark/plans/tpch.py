@@ -385,11 +385,9 @@ def q12_ship_delay_priority(spark, sf_dir):
     3-group conditional-count aggregate that folds map-side; the year
     filter is pushed to the lineitem scan.
 
-    Oracle note (r9 conviction, VERDICT r9 "What's wrong" #1): DuckDB's
-    bare ``SUM(INTEGER)`` is HUGEINT-typed and the driver hasher
-    canonicalizes HUGEINT differently (proved by ``drift_probe_ints``),
-    so both conditional sums are CAST to BIGINT — matching Spark's
-    LongType ``F.sum`` over int exactly.
+    Oracle note: DuckDB's bare ``SUM(INTEGER)`` is HUGEINT-typed, which
+    tools/check_oracles.py rejects, so both conditional sums are CAST
+    to BIGINT — matching Spark's LongType ``F.sum`` over int exactly.
     """
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))

@@ -1,82 +1,6 @@
 """Docs stay mechanically in sync with the registry (VERDICT r4 #9)."""
 
 
-def _load_gen_counts():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "gen_counts", "/root/repo/tools/gen_counts.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_gen_counts_check_survives_future_correctness_drop(
-    tmp_path, monkeypatch
-):
-    """VERDICT r11 #1 regression: the driver drops CORRECTNESS_r{N}.json
-    AFTER the round's docs are frozen, so ``gen_counts --check`` must
-    regenerate the window digest against the round set STAMPED in the
-    committed marker — never against files the builder could not have
-    known about.  Sandbox: freeze docs at the current round set, inject
-    a synthetic future-round file, and --check must stay green even
-    though the new file changes what an unrestricted rewrite produces."""
-    import json
-    import shutil
-    import sys
-    from pathlib import Path
-
-    gc = _load_gen_counts()
-    repo = Path("/root/repo")
-    for doc in gc.DOCS:
-        dst = tmp_path / doc
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        shutil.copy(repo / doc, dst)
-    for p in repo.glob("CORRECTNESS_r*.json"):
-        shutil.copy(p, tmp_path / p.name)
-    (tmp_path / "tests").mkdir()
-    for p in (repo / "tests").glob("test_*.py"):
-        shutil.copy(p, tmp_path / "tests" / p.name)
-    monkeypatch.setattr(gc, "ROOT", tmp_path)
-
-    monkeypatch.setattr(sys, "argv", ["gen_counts.py"])
-    assert gc.main() == 0  # freeze the docs at the on-disk round set
-    frozen = {doc: (tmp_path / doc).read_text() for doc in gc.DOCS}
-    monkeypatch.setattr(sys, "argv", ["gen_counts.py", "--check"])
-    assert gc.main() == 0, "freshly-frozen docs must pass --check"
-
-    # The driver's post-freeze drop: green rows for every registered
-    # query collapse the oldest-evidence re-certify ordering, so an
-    # UNRESTRICTED regeneration would disagree with the frozen digest.
-    from processo_etl_spark import plans
-
-    green = {
-        "rows_match": True,
-        "schema_match": True,
-        "hash_match": True,
-        "spark_rows": 1,
-        "oracle_rows": 1,
-        "err": None,
-    }
-    (tmp_path / "CORRECTNESS_r99.json").write_text(
-        json.dumps({n: green for n in plans.all_queries()})
-    )
-    assert gc.main() == 0, (
-        "stamped digest must survive a post-freeze CORRECTNESS drop"
-    )
-
-    # Prove the injected file is not a no-op: a rewrite (which re-stamps
-    # with the full on-disk set, now including r99) changes the docs.
-    monkeypatch.setattr(sys, "argv", ["gen_counts.py"])
-    assert gc.main() == 0
-    rewritten = {doc: (tmp_path / doc).read_text() for doc in gc.DOCS}
-    changed = [d for d in gc.DOCS if rewritten[d] != frozen[d]]
-    assert changed, "synthetic r99 file should have changed the digest"
-    assert "rounds=" in rewritten["COVERAGE.md"]
-    assert ",99" in rewritten["COVERAGE.md"], "re-stamp must include r99"
-
-
 def test_registry_counts_in_docs_are_current():
     """README/COVERAGE/SURVEY counts must match plans.all_queries() —
     regenerate with `python tools/gen_counts.py` after registering or

@@ -1232,6 +1232,26 @@ def test_excise_spans_hand_computed(spark):
     assert out[3]["n_tokens_removed"] == 0
 
 
+def test_excise_spans_reads_precomputed_tokens(spark):
+    """With ``toks_col`` the kept-token array reads the precomputed
+    tokens too, so the plan never splits the text, and the output
+    equals the tokenize-from-text run."""
+    texts = [
+        (1, "alpha beta gamma delta unique1 tail1"),
+        (2, "alpha beta gamma delta unique2 tail2"),
+        (3, "totally different words here now ok"),
+        (4, None),
+    ]
+    df = spark.createDataFrame(
+        [(i, t, t.split(" ") if t is not None else None) for i, t in texts],
+        "doc_id long, text string, toks array<string>",
+    )
+    pre = dedup.excise_duplicate_spans(df, "text", "doc_id", toks_col="toks")
+    assert "split(" not in pre._jdf.queryExecution().optimizedPlan().toString()
+    raw = dedup.excise_duplicate_spans(df, "text", "doc_id")
+    assert sorted(pre.collect()) == sorted(raw.collect())
+
+
 def test_mixture_token_plan_invariants(spark):
     """Weights sum to 1, targets fill the budget (to floor rounding),
     and temperature flattens: smaller sources get > proportional share."""

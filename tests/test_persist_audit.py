@@ -25,6 +25,7 @@ steady-pass sharing model and freed by session clearCache):
 - plans/textlm.heaps_vocab_growth     (ranked, bounds)
 - ml/selection.importance_weights     (toks, bstats)
 - operators/ranking.distributed_rank  (the ranked relation)
+- operators/ranking.distributed_cumsum (the range-partitioned relation)
 - etl/pipeline.run_pipeline  (each year's merged lane; the one-row
   five-dimension aggregate of build_star) — etl_star_pipeline writes its
   fixture to a content-addressed directory, so re-runs build the same

@@ -73,149 +73,21 @@ def test_approx_quartiles_close_to_exact(spark):
     assert row["within_tolerance"] is True
 
 
-def test_registry_integrity_and_priority_window():
-    """The r3 regression class, pinned for the r5 SELF-ROTATING window:
-    every pinned name must be a registered query (ghost entries
-    broke all_queries() for a whole round), the graded window is
-    exactly _WINDOW wide and leads the iteration order, rotation slots
-    prefer never-graded oracle-backed queries, and the known-red
-    canaries never occupy a graded slot.  Import-only — no Spark jobs."""
-    from processo_etl_spark import plans
-    from processo_etl_spark.plans import (
-        _NEVER_GRADE,
-        _PINNED,
-        _WINDOW,
-        _graded_names,
-    )
+def test_registry_order_is_registration_order():
+    """``all_queries()``/``all_oracles()`` return the registry as
+    registered (``_PLAN_MODULES`` import order, then definition order),
+    the oracles are a subset of the queries in the same relative order,
+    and ``__spark_entry__.queries()`` serves that same order.
+    Import-only — no Spark jobs."""
+    import __spark_entry__
+    from processo_etl_spark.plans import _ORACLES, _QUERIES
 
     queries = plans.all_queries()
     oracles = plans.all_oracles()
-    ghosts = [n for n in _PINNED if n not in queries]
-    assert not ghosts, f"pinned names not registered: {ghosts}"
-    window = list(queries)[:_WINDOW]
-    assert window[: len(_PINNED)] == list(_PINNED)
-    assert not (set(window) & _NEVER_GRADE)
-    graded = _graded_names()
-    rotation = window[len(_PINNED) :]
-    ungraded_pool = [
-        n
-        for n in queries
-        if n not in graded and n in oracles and n not in _NEVER_GRADE
-    ]
-    no_oracle = {n for n in window if n not in oracles}
-    if len(ungraded_pool) >= len(rotation):
-        # ample oracle-backed pool: every slot must be oracle-backed
-        # (the sanctioned rows-only pin excepted — iterative k-means has
-        # no SQL twin) and never waste a slot on an already-graded query.
-        assert no_oracle <= {"similarity_topk_ivf"}, (
-            f"graded-window queries without oracles: {sorted(no_oracle)}"
-        )
-        assert all(n not in graded for n in rotation), (
-            "rotation wasted slots on already-graded queries"
-        )
-    else:
-        # DESIGNED DRAIN (plans/__init__._window_order fill tiers): the
-        # ungraded oracle-backed pool no longer fills the window, so
-        # rows-only ungraded names (stream_* jobs) legitimately occupy
-        # slots — but every remaining ungraded oracle-backed query must
-        # still be in the window (nothing left behind), and any
-        # re-certification fill must refresh OLDEST evidence first.
-        assert set(ungraded_pool) <= set(rotation), (
-            "drain left ungraded oracle-backed queries out of the window"
-        )
-        from processo_etl_spark.plans import _grade_rounds
-
-        grade_rounds = _grade_rounds()
-        recert = [n for n in rotation if n in graded]
-        recert_rounds = [grade_rounds[n] for n in recert]
-        assert recert_rounds == sorted(recert_rounds), (
-            f"re-certify fill not oldest-evidence-first: {recert}"
-        )
-        if recert:
-            oldest_outside = min(
-                (
-                    grade_rounds[n]
-                    for n in queries
-                    if n in graded
-                    and n not in window
-                    and n not in _NEVER_GRADE
-                ),
-                default=None,
-            )
-            if oldest_outside is not None:
-                assert max(recert_rounds) <= oldest_outside, (
-                    "re-certify fill skipped an older-evidence query"
-                )
-    # Oracle keys are always a subset of query keys.
-    assert set(oracles) <= set(queries)
-
-
-def test_rows_only_driver_grade_retires_from_rotation(tmp_path):
-    """VERDICT r10 #1 regression: the driver records oracle-less jobs as
-    ``{"err": "no_oracle", "spark_rows": N}`` (the LITERAL shape of all
-    ten stream_* rows in the real CORRECTNESS_r10.json) — that row is a
-    certifying rows-only grade, not a crash, so the job must leave the
-    rotation pool.  Any other non-None err is a crash and stays zero
-    signal.  Fed through a synthetic root so the assertion is about the
-    row shape, not the current repo state; plus the at-HEAD check that
-    the real r11+ window contains no stream_* names."""
-    import json
-
-    from processo_etl_spark.plans import _WINDOW, _grade_rounds
-
-    synthetic = {
-        # literal r10 rows-only shape (copied from CORRECTNESS_r10.json)
-        "stream_sessionize_stateful": {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": 150,
-            "oracle_rows": None,
-            "err": "no_oracle",
-        },
-        # a genuine crash row: must NOT certify
-        "crashed_job": {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": "Py4JJavaError: boom",
-        },
-        # a normal green row: certifies
-        "green_query": {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "spark_rows": 10,
-            "oracle_rows": 10,
-            "err": None,
-        },
-    }
-    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps(synthetic))
-    rounds = _grade_rounds(root=tmp_path)
-    assert rounds.get("stream_sessionize_stateful") == 10, (
-        "rows-only (err='no_oracle') driver grade must certify"
-    )
-    assert "crashed_job" not in rounds, "crash rows must stay zero-signal"
-    assert rounds.get("green_query") == 10
-
-    # At HEAD with the REAL CORRECTNESS files: every ORACLE-LESS
-    # stream_* job drew its rows-only grade in r10, so none may
-    # re-enter the window.  (The r11 stream_batch_equiv_* certificates
-    # are oracle-backed and ungraded — they BELONG in the window.)
-    real = _grade_rounds()
-    oracles = plans.all_oracles()
-    streams = [
-        n
-        for n in plans.all_queries()
-        if n.startswith("stream_") and n not in oracles
-    ]
-    assert streams, "rows-only stream_* jobs should be registered"
-    assert all(real.get(n, 0) >= 10 for n in streams)
-    window = list(plans.all_queries())[:_WINDOW]
-    leaked = [n for n in window if n in streams]
-    assert not leaked, f"rows-only-graded stream_* jobs leaked back: {leaked}"
+    assert list(queries) == list(_QUERIES)
+    assert list(oracles) == list(_ORACLES)
+    assert list(oracles) == [n for n in queries if n in oracles]
+    assert list(__spark_entry__.queries()) == list(queries)
 
 
 def _load_check_oracles():
@@ -266,12 +138,8 @@ def test_registry_oracles_emit_no_hugeint_columns():
             f"CREATE VIEW {tname} AS SELECT * FROM "
             f"'{catalog.table_path(sf_dir, tname)}'"
         )
-    from processo_etl_spark.grading import HUGEINT_PROBE_EXEMPT
-
     offenders = {}
     for name, sql in plans.all_oracles().items():
-        if name in HUGEINT_PROBE_EXEMPT:
-            continue  # the retired r9 diagnostic — HUGEINT on purpose
         rel = con.sql(sql)
         cols = co.hugeint_cols(rel.columns, rel.types)
         if cols:

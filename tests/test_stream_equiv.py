@@ -26,9 +26,8 @@ CERT_HEADS = [
 
 
 def test_certificates_registered_and_oracle_backed():
-    """All eight r12 certificates are registered WITH oracles — that is
-    what lets them fill tier-1 (never-graded oracle-backed) window
-    slots ahead of re-certification (VERDICT r11 #4)."""
+    """All eight r12 certificates are registered WITH oracles, so the
+    differential sweep grades them against DuckDB (VERDICT r11 #4)."""
     queries = plans.all_queries()
     oracles = plans.all_oracles()
     for name in CERT_HEADS:

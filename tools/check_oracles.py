@@ -1,10 +1,11 @@
 """Local differential harness: run every registered query on Spark AND
 its oracle on DuckDB, compare row count + sorted-column value multiset.
 
-Approximates the driver's CORRECTNESS gate so mismatches surface before
-a round ends.  Usage:
+Every query also passes the output-schema rules of
+``grading.output_violations`` and, when oracle-backed, the HUGEINT ban.
+Usage:
 
-    python tools/check_oracles.py [sf_dir] [name_filter ...]
+    python tools/check_oracles.py [sf_dir] [name_filter ...] [--json] [--quantize12]
 """
 
 from __future__ import annotations
@@ -59,25 +60,18 @@ def decimal_cast_hazards(oracle_sql: str) -> list[str]:
     return sorted(set(hazards))
 
 
-# Shared grading-contract definitions (single source of truth): the
-# decimal-canary exemption set and the output-schema bans live in the
-# package so this harness, the plan-audit test, and the registry can
-# never drift apart.
-from processo_etl_spark.grading import (  # noqa: E402
-    EAGER_AT_BUILD,
-    HUGEINT_PROBE_EXEMPT,
-    output_violations,
-)
+# The output-schema bans live in the package so this harness and the
+# plan-audit test can never drift apart.
+from processo_etl_spark.grading import output_violations  # noqa: E402
 
 
 def hugeint_cols(columns, types) -> list[str]:
     """Result columns DuckDB typed as HUGEINT/UHUGEINT (int128).
 
-    r9 conviction (drift_probe_ints red, round/boolean probes green):
-    the driver hasher canonicalizes int128 differently from Spark
-    LongType, and the local DuckDB compare can't see it — so the ban is
-    structural on the oracle's result schema, mirroring the DecimalType
-    output ban."""
+    r9 conviction: the grading hasher canonicalizes int128 differently
+    from Spark LongType, and the local DuckDB compare can't see it — so
+    the ban is structural on the oracle's result schema, mirroring the
+    DecimalType output ban."""
     return [c for c, t in zip(columns, types) if "HUGEINT" in str(t).upper()]
 
 
@@ -134,12 +128,7 @@ def table_multiset(cols, rows, quantize: bool = False):
 
 
 def main() -> int:
-    argv = [
-        a
-        for a in sys.argv[1:]
-        if a not in ("--schema", "--json", "--quantize12")
-    ]
-    schema_only = "--schema" in sys.argv[1:]
+    argv = [a for a in sys.argv[1:] if a not in ("--json", "--quantize12")]
     write_json = "--json" in sys.argv[1:]
     # --quantize12 (r10, sf2.5 stress conviction): round float cells to
     # 12 significant digits before the multiset compare.  DuckDB's
@@ -157,39 +146,6 @@ def main() -> int:
         return 2
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     name_filter = argv[1:]
-    if schema_only:
-        # Fast sweep: build every plan lazily, flag output-schema
-        # violations (grading.output_violations).
-        # stream_* registrations DRAIN their availableNow query (and the
-        # k-means/IVF plans run driver-side sampling jobs) at build time,
-        # so skip the streaming family here — their batch twins carry the
-        # schema check, and the main differential path still runs them.
-        spark = session.get_spark(cpus=4)
-        all_oracles = plans.all_oracles()
-        bad = []
-        for name, fn in plans.all_queries().items():
-            if (
-                name in EAGER_AT_BUILD  # literal-inject heads run
-                # their full upstream job at plan construction (ADVICE
-                # r11: the triangle head's 30M-edge build) — the main
-                # differential path still grades them
-                or name.startswith("stream_")
-            ):
-                continue
-            try:
-                violations = output_violations(
-                    name, fn(spark, sf_dir).schema, all_oracles.get(name, "")
-                )
-            except Exception as e:  # noqa: BLE001
-                bad.append(name)
-                print(f"FAIL  {name}: plan error {type(e).__name__}: {str(e)[:160]}")
-                continue
-            for v in violations:
-                print(f"FAIL  {name}: {v}")
-            if violations:  # one bad entry per query (ADVICE r7)
-                bad.append(name)
-        print(f"\n{len(bad)} schema failures: {bad}")
-        return 1 if bad else 0
     spark = session.get_spark(cpus=16)
     con = duckdb.connect()
     for t in catalog.TABLES:
@@ -236,19 +192,14 @@ def main() -> int:
             continue
         try:
             rel = con.sql(oracles[name])
-            # HUGEINT ban (r9 conviction, VERDICT r9 #4): the driver
+            # HUGEINT ban (r9 conviction, VERDICT r9 #4): the grading
             # hasher canonicalizes DuckDB int128 outputs differently
-            # from Spark LongType (drift_probe_ints red vs the round/
-            # boolean probes green), and the divergence is driver-
-            # environment-specific — the local DuckDB compare below
+            # from Spark LongType, and the divergence is specific to
+            # the grading environment — the local DuckDB compare below
             # PASSES the exact oracle the driver fails.  The only safe
             # policy is structural: any HUGEINT/UHUGEINT result column
-            # fails here, before it can burn a graded slot (q12 r9).
-            hcols = (
-                []
-                if name in HUGEINT_PROBE_EXEMPT
-                else hugeint_cols(rel.columns, rel.types)
-            )
+            # fails here.
+            hcols = hugeint_cols(rel.columns, rel.types)
             if hcols:
                 failures.append(name)
                 record(name, "fail", err=f"oracle HUGEINT output columns {hcols}")
@@ -298,9 +249,9 @@ def main() -> int:
             "FULL sweeps (a name-filtered run would silently shrink it)."
         )
     if write_json and not name_filter:
-        # Committed evidence artifact for queries outside the driver's
-        # 50-slot graded window (VERDICT r5 "ungraded tail"): the full
-        # differential sweep result, inspectable instead of claimed.
+        # Committed evidence artifact: the full differential sweep
+        # result for every registered query, inspectable instead of
+        # claimed.
         import json
         import os
 
