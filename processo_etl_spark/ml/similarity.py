@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from processo_etl_spark.columns import internal
 from processo_etl_spark.operators.relational import dedup_keep_first
 
 
@@ -174,9 +175,10 @@ def lsh_topk(
     unchanged.
     """
     cands = []
-    extra_q = [F.col(exclude_equal).alias("_q_ex")] if exclude_equal else []
-    extra_c = [F.col(exclude_equal).alias("_c_ex")] if exclude_equal else []
-    out_extra = ["_c_ex"] if exclude_equal else []
+    c_ex, q_ex = internal("c_ex"), internal("q_ex")
+    extra_q = [F.col(exclude_equal).alias(q_ex)] if exclude_equal else []
+    extra_c = [F.col(exclude_equal).alias(c_ex)] if exclude_equal else []
+    out_extra = [c_ex] if exclude_equal else []
     for p in range(probes):
         off = p * bits
         q = queries.select(
@@ -195,7 +197,7 @@ def lsh_topk(
             F.col("neighbor_id") != F.col("query_id")
         )
         if exclude_equal:
-            cand = cand.filter(~F.col("_c_ex").eqNullSafe(F.col("_q_ex")))
+            cand = cand.filter(~F.col(c_ex).eqNullSafe(F.col(q_ex)))
         cands.append(cand.select("query_id", "neighbor_id", "cv", "qv", *out_extra))
     from functools import reduce
 
@@ -210,7 +212,7 @@ def lsh_topk(
             "neighbor_id",
             "cos",
             "rank",
-            F.col("_c_ex").alias(f"neighbor_{exclude_equal}"),
+            F.col(c_ex).alias(f"neighbor_{exclude_equal}"),
         )
     return ranked.select("query_id", "neighbor_id", "cos", "rank")
 

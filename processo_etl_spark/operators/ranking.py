@@ -4,25 +4,31 @@ single-partition ``Window.orderBy(...)`` anti-pattern.
 ``ntile(k) OVER (ORDER BY …)`` (and any unpartitioned ranking window)
 moves the ENTIRE input through one task — the classic scale-killer
 (``WindowExec: No Partition Defined``).  The exact semantics survive at
-100 TB with the classic two-phase plan:
+100 TB with the classic two-phase plan, owned by :func:`_range_prefix`:
 
 1. range-repartition on the order key (Spark samples boundaries, so
-   partitions are balanced) and rank LOCALLY per partition — the window
-   partitions by ``spark_partition_id()``, so no data moves again;
-2. collect only the per-partition COUNTS (one tiny row per partition),
-   prefix-sum them on the driver, and add the offsets back via a
-   broadcast literal map.
+   partitions are balanced) and compute LOCALLY per partition — the
+   window partitions by the persisted partition id.  That id is not a
+   clustering Spark can prove, so one ``Exchange hashpartitioning(pid,
+   N)`` moves the data again before the window (never to one task);
+2. collect one aggregate per partition, fold them into prefixes on the
+   driver, and add each partition's prefix back via a literal map.
 
 ``global_rank = partition_offset + local_row_number`` reproduces
 ``row_number() OVER (ORDER BY …)`` bit-for-bit; ``ntile_from_rank``
-applies SQL NTILE's first-buckets-get-the-remainder fill to that rank.
-The only driver-side data is one long per shuffle partition — the same
-legitimate two-pass shape as the histogram min/max probe (quality/audit).
+applies SQL NTILE's first-buckets-get-the-remainder fill to that rank;
+the running sum and the skyline's running min use the same scan with
+``+`` and ``min``.  The only driver-side data is one value per shuffle
+partition — the same legitimate two-pass shape as the histogram
+min/max probe (quality/audit).
 """
 
 from __future__ import annotations
 
 import math
+import operator
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,55 +38,48 @@ from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.session import persist_once
 
 
-def _ranked_with_total(
+_PID = internal("pid")
+
+
+def _range_prefix(
     df: DataFrame,
     order_by: list[str | Column],
-    rank_col: str,
-    num_partitions: int | None,
-) -> tuple[DataFrame, int]:
-    """Range-partitioned exact global rank + total row count (one tiny
-    counts job; the ranked frame itself stays lazy/distributed)."""
-    pid_col = internal("pid")
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
+    part_agg: Column,
+    fold: Callable[[Any, Any], Any],
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, Column, Any]:
+    """Range-repartition ``df`` on ``order_by`` with the partition id
+    persisted as ``_PID``, collect ``part_agg`` per partition (one tiny
+    driver job) and fold its non-NULL values in partition order.
+
+    Returns ``(ranged, prior, total)``: ``prior`` is, per row, the fold
+    over all EARLIER partitions — a NULL of ``part_agg``'s type where
+    none has a value — and ``total`` the fold over all (None if none).
+    """
     parts = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    # Persist the ranged frame: the counts probe and the downstream
-    # consumer then share one range shuffle.  (Measured: persisting the
-    # INPUT instead is ~45% slower — it blocks Spark's shuffle reuse
-    # between the boundary-sampling job and the main pass, which already
-    # deduplicates the upstream computation.)
-    ranged = df.repartitionByRange(int(parts), *cols).withColumn(
-        pid_col, F.spark_partition_id()
-    ).transform(persist_once)
-    # Tiny job: one row per partition → prefix sums on the driver.
-    counts = {
-        r[pid_col]: r["n"]
-        for r in ranged.groupBy(pid_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # Local rank inside each range partition: the window partitions by
-    # range-partition id, so WindowExec sees per-partition data — no
-    # global exchange.
-    w = Window.partitionBy(pid_col).orderBy(*cols)
-    # Broadcast the offsets as a literal map — no join, stays narrow.
-    # Empty-input edge: a literal map() is VOID-keyed and map()[int]
-    # fails analysis — with no partitions every offset is 0.
-    offset_map = (
-        F.create_map(
-            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-        )[F.col(pid_col)]
-        if offsets
-        else F.lit(None).cast("long")
+    # Persist the ranged frame: the probe and the downstream consumer
+    # then share one range shuffle.  (Measured: persisting the INPUT
+    # instead is ~45% slower — it blocks Spark's shuffle reuse between
+    # the boundary-sampling job and the main pass.)
+    ranged = (
+        df.repartitionByRange(int(parts), *order_by)
+        .withColumn(_PID, F.spark_partition_id())
+        .transform(persist_once)
     )
-    ranked = ranged.withColumn(
-        rank_col,
-        (F.coalesce(offset_map, F.lit(0)) + F.row_number().over(w)).cast("long"),
-    ).drop(pid_col)
-    return ranked, acc
+    agg = internal("agg")
+    per_part = ranged.groupBy(_PID).agg(part_agg.alias(agg))
+    prior, total = {}, None
+    for pid, value in sorted(map(tuple, per_part.collect())):
+        if total is not None:
+            prior[pid] = total
+        if value is not None:
+            total = value if total is None else fold(total, value)
+    # An empty literal map is VOID-keyed and map()[int] fails analysis.
+    pairs = [F.lit(x) for kv in prior.items() for x in kv]
+    lookup = F.create_map(*pairs)[F.col(_PID)] if pairs else F.lit(None)
+    return ranged, lookup.cast(per_part.schema[agg].dataType), total
 
 
 def distributed_rank(
@@ -91,12 +90,19 @@ def distributed_rank(
 ) -> DataFrame:
     """Exact global ``row_number() OVER (ORDER BY order_by)`` — distributed.
 
-    Range-partition + local rank + broadcast prefix-sum offsets (two
-    jobs, no single-partition exchange).  ``order_by`` must be a total
-    order (append a unique tiebreaker column) for deterministic output.
+    Range-partition + local rank + prior-partition row counts as
+    offsets (:func:`_range_prefix`): no single-partition exchange, but
+    one hash exchange on the partition id before the local window.
+    ``order_by`` must be a total order (append a unique tiebreaker
+    column) for deterministic output.
     """
-    ranked, _ = _ranked_with_total(df, order_by, out_col, num_partitions)
-    return ranked
+    ranged, prior, _ = _range_prefix(
+        df, order_by, F.count(F.lit(1)), operator.add, num_partitions
+    )
+    rank = F.coalesce(prior, F.lit(0)) + F.row_number().over(
+        Window.partitionBy(_PID).orderBy(*order_by)
+    )
+    return ranged.withColumn(out_col, rank.cast("long")).drop(_PID)
 
 
 def ntile_from_rank(rank: Column, n_rows: int, k: int) -> Column:
@@ -127,10 +133,17 @@ def distributed_ntile(
     the bucket formula needs falls out of the same per-partition counts
     job, so no extra pass over the data."""
     grank = internal("grank")
-    ranked, n_rows = _ranked_with_total(df, order_by, grank, num_partitions)
-    return ranked.withColumn(
-        out_col, ntile_from_rank(F.col(grank), n_rows, k)
-    ).drop(grank)
+    ranged, prior, n_rows = _range_prefix(
+        df, order_by, F.count(F.lit(1)), operator.add, num_partitions
+    )
+    rank = F.coalesce(prior, F.lit(0)) + F.row_number().over(
+        Window.partitionBy(_PID).orderBy(*order_by)
+    )
+    return (
+        ranged.withColumn(grank, rank.cast("long"))
+        .withColumn(out_col, ntile_from_rank(F.col(grank), n_rows or 0, k))
+        .drop(grank, _PID)
+    )
 
 
 def exact_quantiles_twopass(
@@ -351,11 +364,11 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 
     1. combinable groupBy x → min(y) (collapses the row count to
        |distinct x| BEFORE any ordering work);
-    2. range-repartition on x; per-partition strict-prefix running min
-       (window partitioned BY the range partition — no global
-       exchange); one tiny per-partition-min collect gives each
-       partition the min over all PRIOR partitions as a broadcast
-       literal;
+    2. range-repartition on x (:func:`_range_prefix`); per-partition
+       strict-prefix running min (window partitioned BY the range
+       partition id — one hash exchange on that id, never a
+       single-partition one); one tiny per-partition-min collect gives
+       each partition the min over all PRIOR partitions as a literal;
     3. keep x-groups whose min(y) beats the combined strict prefix;
        join back to the input on (x, y = min(y)) — same-x rows above
        the group min are dominated within the group.
@@ -363,48 +376,20 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     Ties: equal (x, y) duplicates dominate each other only weakly, so
     all stay — matching the strict-dominance NOT EXISTS definition.
     """
-    gx, gmin = internal("x"), internal("miny")
-    pid_col, pre = internal("pid"), internal("prefix")
+    gx, gmin, pre = internal("x"), internal("miny"), internal("prefix")
     x, y = F.col(x_col), F.col(y_col)
     # NULL criteria have no dominance semantics — and a NULL x group
     # would sort first and poison the prefix min.  Excluded up front.
     df = df.filter(x.isNotNull() & y.isNotNull())
     g = df.groupBy(x.alias(gx)).agg(F.min(y).alias(gmin))
-    parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ranged = (
-        g.repartitionByRange(parts, F.col(gx))
-        .withColumn(pid_col, F.spark_partition_id())
-        .transform(persist_once)
-    )
-    pmins = {
-        r[pid_col]: r["m"]
-        for r in ranged.groupBy(pid_col).agg(F.min(gmin).alias("m")).collect()
-    }
-    prior: dict[int, float] = {}
-    best = None
-    for pid in sorted(pmins):
-        if best is not None:
-            prior[pid] = best
-        best = pmins[pid] if best is None else min(best, pmins[pid])
-    # An empty literal map is VOID-keyed and map()[int] fails analysis —
-    # when no partition has a predecessor (≤1 non-empty partition), the
-    # prior-min is simply NULL everywhere.
-    prior_map = (
-        F.create_map(*[F.lit(v) for pid in prior for v in (pid, prior[pid])])[
-            F.col(pid_col)
-        ]
-        if prior
-        else F.lit(None).cast("double")
-    )
+    ranged, prior_min, _ = _range_prefix(g, [gx], F.min(gmin), min)
     w = (
-        Window.partitionBy(pid_col)
+        Window.partitionBy(_PID)
         .orderBy(gx)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prefix = F.least(
-        F.min(gmin).over(w), prior_map
+        F.min(gmin).over(w), prior_min
     )  # least() ignores NULLs; NULL prefix = no smaller x anywhere
     sky = (
         ranged.withColumn(pre, prefix)
@@ -478,9 +463,12 @@ def distributed_cumsum(
     """Exact global ``SUM(value) OVER (ORDER BY …)`` — distributed, the
     running-sum sibling of :func:`distributed_rank`: range-partition on
     the order key, per-partition local running sums, and each
-    partition's prior-partition TOTAL added back as a broadcast literal
-    (one tiny per-partition-totals job).  No single-partition window
-    anywhere.
+    partition's prior-partition TOTAL added back as a literal (one tiny
+    per-partition-totals job, :func:`_range_prefix`).  No
+    single-partition window anywhere; the local window costs one hash
+    exchange on the partition id.  NULL values are skipped as SUM
+    skips them: a row's running sum is NULL only when every value up
+    to it is NULL.
 
     Exactness: integer/decimal values sum associatively, so the split
     is value-identical to the global window; for doubles the
@@ -490,40 +478,18 @@ def distributed_cumsum(
     window does this); aggregate consumers (max/min of the running sum)
     are tie-safe when ties share a sign, as in the concurrency sweep.
     """
-    pid_col = internal("pid")
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    parts = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ranged = (
-        df.repartitionByRange(int(parts), *cols)
-        .withColumn(pid_col, F.spark_partition_id())
-        .transform(persist_once)
-    )
-    totals = {
-        r[pid_col]: r["s"]
-        for r in ranged.groupBy(pid_col)
-        .agg(F.sum(value_col).alias("s"))
-        .collect()
-    }
-    prior: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(totals):
-        prior[pid] = acc
-        acc += totals[pid] or 0
-    offset = (
-        F.create_map(
-            *[F.lit(x) for pid in prior for x in (pid, prior[pid])]
-        )[F.col(pid_col)]
-        if prior
-        else F.lit(None).cast("long")
+    ranged, prior, _ = _range_prefix(
+        df, order_by, F.sum(value_col), operator.add, num_partitions
     )
     w = (
-        Window.partitionBy(pid_col)
-        .orderBy(*cols)
+        Window.partitionBy(_PID)
+        .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    local = F.sum(value_col).over(w)
+    # Either side may be NULL: no earlier partition has a non-NULL
+    # value, or every row of this partition up to here is NULL.  SUM
+    # skips NULLs, so the running total is whichever side exists.
     return ranged.withColumn(
-        out_col,
-        F.coalesce(offset, F.lit(0)) + F.sum(value_col).over(w),
-    ).drop(pid_col)
+        out_col, F.coalesce(prior + local, prior, local)
+    ).drop(_PID)

@@ -6,6 +6,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from processo_etl_spark import catalog
+from processo_etl_spark.columns import internal
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -98,3 +99,60 @@ def dsum(c: Column | str) -> Column:
 def avg_exact(c: Column | str) -> Column:
     """Average as exact-decimal sum → double ÷ count: deterministic on both engines."""
     return F.sum(dec(c)).cast("double") / F.count(F.lit(1))
+
+
+def disagree(*pairs: tuple[str, str]) -> Column:
+    """Null-safe row-level disagreement over (stream_col, batch_col)
+    pairs: any value difference, a one-sided NULL included, flags the
+    row — ``eqNullSafe``, so a NULL-vs-value difference can never null
+    the OR out of a sum.  Both-NULL agrees: a value legitimately NULL on
+    both engines is not a divergence."""
+    d = F.lit(False)
+    for s, b in pairs:
+        d = d | ~F.col(s).eqNullSafe(F.col(b))
+    return d
+
+
+def certify(
+    stream: DataFrame,
+    batch: DataFrame,
+    on: list[str],
+    compare: list[str],
+    unit: str,
+    totals: dict[str, Column],
+) -> DataFrame:
+    """Stream ⇔ batch equivalence certificate: one row counting how far
+    a drained streaming job's result table is from its batch twin's.
+
+    Both sides are keyed on ``on`` and carry the ``compare`` columns
+    under the same names; they are aliased ``s_<c>``/``b_<c>``, each
+    side gets a presence marker, and the full-outer join on ``on`` is
+    folded into ``n_<unit>_stream`` and ``n_<unit>_batch`` (rows present
+    on each side), the ``totals`` (per-row expressions over the batch
+    side, summed, as bigint) and ``n_mismatch``: rows present on one
+    side only, or whose compared values differ null-safely.  The
+    certificate's oracle states the batch semantics in SQL and pins
+    ``n_mismatch = 0``, so any divergence is a value mismatch.
+    """
+    in_s, in_b = internal("in_stream"), internal("in_batch")
+    s = stream.select(
+        *on, *[F.col(c).alias(f"s_{c}") for c in compare], F.lit(True).alias(in_s)
+    )
+    b = batch.select(
+        *on,
+        *[F.col(c).alias(f"b_{c}") for c in compare],
+        *[e.alias(name) for name, e in totals.items()],
+        F.lit(True).alias(in_b),
+    )
+    joined = s.join(b, on, "full_outer")
+    bad = (
+        F.col(in_s).isNull()
+        | F.col(in_b).isNull()
+        | disagree(*[(f"s_{c}", f"b_{c}") for c in compare])
+    )
+    return joined.agg(
+        F.count(in_s).alias(f"n_{unit}_stream"),
+        F.count(in_b).alias(f"n_{unit}_batch"),
+        *[F.sum(name).cast("bigint").alias(name) for name in totals],
+        F.count(F.when(bad, True)).alias("n_mismatch"),
+    )

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from processo_etl_spark.columns import internal
 from processo_etl_spark.plans import register
-from processo_etl_spark.plans.common import dec, t
+from processo_etl_spark.plans.common import certify, dec, t
 
 
 @register(
@@ -1720,19 +1720,12 @@ def new_vs_returning_daily(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Streaming ⇔ batch equivalence certificates (VERDICT r10 #7): the ten
-# stream_* jobs carry rows-only driver grades by design (a memory-sink
-# drain has no DuckDB twin), so these heads give the streaming surface
-# HASH-graded driver evidence instead: run the real streaming job AND
-# its batch twin on the same source, count disagreements Spark-side,
-# and emit exact integers whose oracle is the batch semantics in pure
-# SQL plus a literal 0 mismatch count.  If the streaming engine ever
-# diverges from the batch plan (state fold bug, watermark drop, sink
-# dedup error), n_mismatch / n_users_stream moves and the driver's
-# value-hash goes red — the equivalence the tests assert becomes driver
-# -certified.  Reference relevance: the reference's monthly batch is
-# the "batch twin" contract these certificates pin (SURVEY §2.9 is a
-# scale extension, not reference parity).
+# Streaming ⇔ batch equivalence certificates for the sessionizer and
+# the tumbling window; the other heads live in plans/stream_equiv.  A
+# memory-sink drain has no DuckDB twin, so each head drains the real
+# streaming job, runs its batch twin on the same source and folds the
+# two through plans.common.certify; the oracle is the batch semantics in
+# SQL with n_mismatch pinned to 0.
 
 
 @register(
@@ -1767,32 +1760,14 @@ def stream_batch_equiv_sessionize(spark, sf_dir):
     streaming divergence is a driver hash mismatch."""
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_sessionize_stateful_availablenow(spark, sf_dir).select(
-        F.col("user_id"),
-        F.col("n_sessions").alias("s_sessions"),
-        F.col("n_events").alias("s_events"),
-    )
-    batch = sessionize_gap(spark, sf_dir).select(
-        F.col("user_id"),
-        F.col("n_sessions").alias("b_sessions"),
-        F.col("n_events").alias("b_events"),
-    )
-    joined = stream.join(batch, "user_id", "full_outer")
-    # eqNullSafe everywhere (ADVICE r11, same class as the tumbling
-    # certificate): one-sided NULLs must count as disagreement, never
-    # null out the OR and vanish from the sum.
-    disagree = (
-        F.col("s_sessions").isNull()
-        | F.col("b_sessions").isNull()
-        | ~F.col("s_sessions").eqNullSafe(F.col("b_sessions"))
-        | ~F.col("s_events").eqNullSafe(F.col("b_events"))
-    )
-    return joined.agg(
-        F.count("s_sessions").cast("bigint").alias("n_users_stream"),
-        F.count("b_sessions").cast("bigint").alias("n_users_batch"),
-        F.sum("b_sessions").cast("bigint").alias("total_sessions"),
-        F.sum("b_events").cast("bigint").alias("total_events"),
-        F.sum(disagree.cast("long")).cast("bigint").alias("n_mismatch"),
+    return certify(
+        jobs.run_sessionize_stateful_availablenow(spark, sf_dir),
+        sessionize_gap(spark, sf_dir),
+        ["user_id"], ["n_sessions", "n_events"], "users",
+        {
+            "total_sessions": F.col("n_sessions"),
+            "total_events": F.col("n_events"),
+        },
     )
 
 
@@ -1822,32 +1797,9 @@ def stream_batch_equiv_tumbling(spark, sf_dir):
     → driver hash mismatch."""
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_tumbling_count_availablenow(spark, sf_dir).select(
-        F.col("window_start"),
-        F.col("event_type"),
-        F.col("n").alias("s_n"),
-        F.col("total_value").alias("s_value"),
-    )
-    batch = tumbling_window_counts(spark, sf_dir).select(
-        F.col("window_start"),
-        F.col("event_type"),
-        F.col("n").alias("b_n"),
-        F.col("total_value").alias("b_value"),
-    )
-    joined = stream.join(batch, ["window_start", "event_type"], "full_outer")
-    # eqNullSafe, not `!=` (ADVICE r11): if exactly ONE side's value is
-    # NULL while the counts match, plain inequality yields NULL, the OR
-    # stays NULL, and sum() would skip the row — the exact
-    # value-corruption class this certificate exists to catch.
-    disagree = (
-        F.col("s_n").isNull()
-        | F.col("b_n").isNull()
-        | ~F.col("s_n").eqNullSafe(F.col("b_n"))
-        | ~F.col("s_value").eqNullSafe(F.col("b_value"))
-    )
-    return joined.agg(
-        F.count("s_n").cast("bigint").alias("n_windows_stream"),
-        F.count("b_n").cast("bigint").alias("n_windows_batch"),
-        F.sum("b_n").cast("bigint").alias("total_events"),
-        F.sum(disagree.cast("long")).cast("bigint").alias("n_mismatch"),
+    return certify(
+        jobs.run_tumbling_count_availablenow(spark, sf_dir),
+        tumbling_window_counts(spark, sf_dir),
+        ["window_start", "event_type"], ["n", "total_value"], "windows",
+        {"total_events": F.col("n")},
     )

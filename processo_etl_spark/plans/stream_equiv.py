@@ -1,18 +1,16 @@
-"""Streaming ⇔ batch equivalence certificates for the remaining eight
-``stream_*`` jobs (VERDICT r11 #4 — the r11 sessionize/tumbling pattern
-at plans/events.py:1733, extended to the whole streaming surface).
+"""Streaming ⇔ batch equivalence certificates for the ``stream_*`` jobs
+(the sessionizer and tumbling-window heads live in plans/events).
 
 Each head drains the REAL streaming job (file source → watermark/state →
-availableNow → memory sink, streaming/jobs.py) AND runs its batch twin,
-full-outer-joins the two result tables, and counts disagreements
-Spark-side with null-safe comparison (ADVICE r11: a one-sided NULL must
-bump ``n_mismatch``, never null the OR out of the sum).  The oracle
-computes the batch semantics in pure SQL and pins ``n_mismatch = 0``,
-so ANY streaming divergence — state-fold bug, watermark drop, sink
-replay duplicate, dedup miss — is a driver value-hash mismatch, not
-just a pytest assertion.  This upgrades the streaming surface from
-rows-only driver evidence (r10) to hash-graded evidence for all ten
-jobs.
+availableNow → memory sink, streaming/jobs.py), runs its batch twin on
+the same source, and hands both to ``plans.common.certify``, which
+full-outer-joins them on the twin's natural key and counts, Spark-side,
+the rows present on one side only or whose compared values differ
+null-safely.  The per-head code is the drain, the batch twin and the
+totals.  The oracle computes the batch semantics in pure SQL and pins
+``n_mismatch = 0``, so ANY streaming divergence — state-fold bug,
+watermark drop, sink replay duplicate, dedup miss — is a value
+mismatch against DuckDB, not just a pytest assertion.
 
 Reference relevance: the reference (dag.py) is batch-only; SURVEY §2.9
 treats streaming as a scale extension whose CONTRACT is the batch
@@ -36,22 +34,8 @@ from processo_etl_spark.columns import internal
 from processo_etl_spark.ml.dedup import MERSENNE_P, perm_constants
 from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.plans import register
-from processo_etl_spark.plans.common import t
+from processo_etl_spark.plans.common import certify, t
 from processo_etl_spark.plans.mlops import _md5_long_sql, _NORM
-
-
-def _disagree(*pairs: tuple[str, str]):
-    """Null-safe row-level disagreement predicate over (stream_col,
-    batch_col) pairs: any value difference — including a one-sided NULL,
-    which is what a row missing from one engine looks like after the
-    full-outer join — flags the row (ADVICE r11: eqNullSafe, so a
-    NULL-vs-value difference can never null the OR out of the sum).
-    Both-NULL agrees: a value legitimately NULL on both engines is not
-    a divergence."""
-    d = F.lit(False)
-    for s, b in pairs:
-        d = d | ~F.col(s).eqNullSafe(F.col(b))
-    return d
 
 
 @register(
@@ -76,22 +60,15 @@ def stream_batch_equiv_dedup(spark, sf_dir):
     driver hash goes red."""
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_dedup_availablenow(
-        spark, sf_dir, duplicate_input=True
-    ).select("event_type", F.col("n").alias("s_n"))
+    stream = jobs.run_dedup_availablenow(spark, sf_dir, duplicate_input=True)
     batch = (
         t(spark, sf_dir, "events")
         .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("b_n"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    joined = stream.join(batch, "event_type", "full_outer")
-    return joined.agg(
-        F.count("s_n").cast("bigint").alias("n_types_stream"),
-        F.count("b_n").cast("bigint").alias("n_types_batch"),
-        F.sum("b_n").cast("bigint").alias("total_events"),
-        F.sum(_disagree(("s_n", "b_n")).cast("long"))
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        stream, batch, ["event_type"], ["n"], "types",
+        {"total_events": F.col("n")},
     )
 
 
@@ -122,20 +99,11 @@ def stream_batch_equiv_interval_join(spark, sf_dir):
     from processo_etl_spark.plans.events import interval_join_purchase_views
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_interval_join_availablenow(spark, sf_dir).select(
-        "purchase_id", "user_id", F.col("n_views").alias("s_views")
-    )
-    batch = interval_join_purchase_views(spark, sf_dir).select(
-        "purchase_id", "user_id", F.col("n_views").alias("b_views")
-    )
-    joined = stream.join(batch, ["purchase_id", "user_id"], "full_outer")
-    return joined.agg(
-        F.count("s_views").cast("bigint").alias("n_pairs_stream"),
-        F.count("b_views").cast("bigint").alias("n_pairs_batch"),
-        F.sum("b_views").cast("bigint").alias("total_views"),
-        F.sum(_disagree(("s_views", "b_views")).cast("long"))
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        jobs.run_interval_join_availablenow(spark, sf_dir),
+        interval_join_purchase_views(spark, sf_dir),
+        ["purchase_id", "user_id"], ["n_views"], "pairs",
+        {"total_views": F.col("n_views")},
     )
 
 
@@ -163,26 +131,11 @@ def stream_batch_equiv_enrich(spark, sf_dir):
     from processo_etl_spark.plans.events import enrich_events_segment
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_enrich_availablenow(spark, sf_dir).select(
-        "segment",
-        F.col("n").alias("s_n"),
-        F.col("total_value").alias("s_value"),
-    )
-    batch = enrich_events_segment(spark, sf_dir).select(
-        "segment",
-        F.col("n").alias("b_n"),
-        F.col("total_value").alias("b_value"),
-    )
-    joined = stream.join(batch, "segment", "full_outer")
-    return joined.agg(
-        F.count("s_n").cast("bigint").alias("n_segments_stream"),
-        F.count("b_n").cast("bigint").alias("n_segments_batch"),
-        F.sum("b_n").cast("bigint").alias("total_events"),
-        F.sum(
-            _disagree(("s_n", "b_n"), ("s_value", "b_value")).cast("long")
-        )
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        jobs.run_enrich_availablenow(spark, sf_dir),
+        enrich_events_segment(spark, sf_dir),
+        ["segment"], ["n", "total_value"], "segments",
+        {"total_events": F.col("n")},
     )
 
 
@@ -224,38 +177,16 @@ def stream_batch_equiv_curate(spark, sf_dir):
     from processo_etl_spark.ml import textstats
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_curate_availablenow(spark, sf_dir).select(
-        "doc_id",
-        F.col("lang_pred").alias("s_lang"),
-        F.col("n_tokens").alias("s_tokens"),
-        F.col("quality_score").alias("s_score"),
-    )
     docs = t(spark, sf_dir, "documents")
     batch = (
         textstats.quality_features(docs, "text")
         .withColumn("lang_pred", textstats.detect_language("text"))
         .filter(F.col("quality_score") >= 0.3)
-        .select(
-            "doc_id",
-            F.col("lang_pred").alias("b_lang"),
-            F.col("n_tokens").alias("b_tokens"),
-            F.col("quality_score").alias("b_score"),
-        )
     )
-    joined = stream.join(batch, "doc_id", "full_outer")
-    return joined.agg(
-        F.count("s_tokens").cast("bigint").alias("n_docs_stream"),
-        F.count("b_tokens").cast("bigint").alias("n_docs_batch"),
-        F.sum("b_tokens").cast("bigint").alias("total_tokens"),
-        F.sum(
-            _disagree(
-                ("s_lang", "b_lang"),
-                ("s_tokens", "b_tokens"),
-                ("s_score", "b_score"),
-            ).cast("long")
-        )
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        jobs.run_curate_availablenow(spark, sf_dir), batch, ["doc_id"],
+        ["lang_pred", "n_tokens", "quality_score"], "docs",
+        {"total_tokens": F.col("n_tokens")},
     )
 
 
@@ -299,23 +230,15 @@ def stream_batch_equiv_bloom(spark, sf_dir):
     from processo_etl_spark.ml import bloom
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_bloom_filter_availablenow(spark, sf_dir).select(
-        "word", F.col("bits").alias("s_bits")
-    )
     batch = bloom.bloom_build(
         t(spark, sf_dir, "events").select(
             F.col("user_id").cast("string").alias("user_id")
         ),
         "user_id",
-    ).select("word", F.col("bits").alias("b_bits"))
-    joined = stream.join(batch, "word", "full_outer")
-    return joined.agg(
-        F.count("s_bits").cast("bigint").alias("n_words_stream"),
-        F.count("b_bits").cast("bigint").alias("n_words_batch"),
-        F.sum(F.bit_count("b_bits")).cast("bigint").alias("n_set_bits"),
-        F.sum(_disagree(("s_bits", "b_bits")).cast("long"))
-        .cast("bigint")
-        .alias("n_mismatch"),
+    )
+    return certify(
+        jobs.run_bloom_filter_availablenow(spark, sf_dir), batch, ["word"],
+        ["bits"], "words", {"n_set_bits": F.bit_count("bits")},
     )
 
 
@@ -355,20 +278,10 @@ def stream_batch_equiv_cms(spark, sf_dir):
     from processo_etl_spark.ml import sketches
     from processo_etl_spark.streaming import jobs
 
-    stream = jobs.run_cms_sketch_availablenow(spark, sf_dir).select(
-        "row", "bucket", F.col("cnt").alias("s_cnt")
-    )
-    batch = sketches.cms_build(
-        t(spark, sf_dir, "events"), "event_type"
-    ).select("row", "bucket", F.col("cnt").alias("b_cnt"))
-    joined = stream.join(batch, ["row", "bucket"], "full_outer")
-    return joined.agg(
-        F.count("s_cnt").cast("bigint").alias("n_cells_stream"),
-        F.count("b_cnt").cast("bigint").alias("n_cells_batch"),
-        F.sum("b_cnt").cast("bigint").alias("total_count"),
-        F.sum(_disagree(("s_cnt", "b_cnt")).cast("long"))
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        jobs.run_cms_sketch_availablenow(spark, sf_dir),
+        sketches.cms_build(t(spark, sf_dir, "events"), "event_type"),
+        ["row", "bucket"], ["cnt"], "cells", {"total_count": F.col("cnt")},
     )
 
 
@@ -402,8 +315,8 @@ def stream_batch_equiv_ewma(spark, sf_dir):
         .filter((F.col("n_settled") + F.col("n_pending")) > 0)
         .select(
             "user_id",
-            (F.col("n_settled") + F.col("n_pending")).alias("s_rows"),
-            F.col("ewma").alias("s_ewma"),
+            (F.col("n_settled") + F.col("n_pending")).alias("rows"),
+            "ewma",
         )
     )
     ev = t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
@@ -417,23 +330,13 @@ def stream_batch_equiv_ewma(spark, sf_dir):
     batch = (
         folded.withColumn(rn, F.row_number().over(w))
         .withColumn(
-            "b_rows", F.count(F.lit(1)).over(Window.partitionBy("user_id"))
+            "rows", F.count(F.lit(1)).over(Window.partitionBy("user_id"))
         )
         .filter(F.col(rn) == 1)
-        .select("user_id", "b_rows", F.col("ewma").alias("b_ewma"))
     )
-    joined = stream.join(batch, "user_id", "full_outer")
-    return joined.agg(
-        F.count("s_rows").cast("bigint").alias("n_users_stream"),
-        F.count("b_rows").cast("bigint").alias("n_users_batch"),
-        F.sum("b_rows").cast("bigint").alias("total_rows"),
-        F.sum(
-            _disagree(("s_rows", "b_rows"), ("s_ewma", "b_ewma")).cast(
-                "long"
-            )
-        )
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        stream, batch, ["user_id"], ["rows", "ewma"], "users",
+        {"total_rows": F.col("rows")},
     )
 
 
@@ -484,34 +387,16 @@ def stream_batch_equiv_media(spark, sf_dir):
         with open(os.path.join(d, sub, f"img_{i:03d}.png"), "wb") as fh:
             fh.write(png.encode_gray(px, 8, 8))
 
-    stream = jobs.run_media_features_availablenow(spark, d).select(
-        "media_id",
-        F.col("n_bytes").alias("s_bytes"),
-        F.col("feature").alias("s_feature"),
-    )
     batch = multimodal.extract_features(
         multimodal.read_binary_media(spark, d, glob="*.png"),
         n_features=8,
-    ).select(
-        "media_id",
-        F.col("n_bytes").alias("b_bytes"),
-        F.col("feature").alias("b_feature"),
     )
-    joined = stream.join(batch, "media_id", "full_outer")
     mass = F.round(
-        F.aggregate("b_feature", F.lit(0.0), lambda a, x: a + x) * 8 * 255
+        F.aggregate("feature", F.lit(0.0), lambda a, x: a + x) * 8 * 255
     ).cast("bigint")
-    return joined.agg(
-        F.count("s_bytes").cast("bigint").alias("n_files_stream"),
-        F.count("b_bytes").cast("bigint").alias("n_files_batch"),
-        F.sum(mass).cast("bigint").alias("total_pixel_mass"),
-        F.sum(
-            _disagree(
-                ("s_bytes", "b_bytes"), ("s_feature", "b_feature")
-            ).cast("long")
-        )
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        jobs.run_media_features_availablenow(spark, d), batch, ["media_id"],
+        ["n_bytes", "feature"], "files", {"total_pixel_mass": mass},
     )
 
 
@@ -551,30 +436,12 @@ def stream_batch_equiv_sessionize_tws(spark, sf_dir):
     from processo_etl_spark.streaming import jobs
 
     raw = jobs.run_sessionize_tws_or_twin_availablenow(spark, sf_dir)
-    stream = (
-        dedup_keep_first(raw, ["user_id"], [F.desc("n_events")])
-        .select(
-            "user_id",
-            F.col("n_sessions").alias("s_sessions"),
-            F.col("n_events").alias("s_events"),
-        )
-    )
-    batch = sessionize_gap(spark, sf_dir).select(
-        "user_id",
-        F.col("n_sessions").alias("b_sessions"),
-        F.col("n_events").alias("b_events"),
-    )
-    joined = stream.join(batch, "user_id", "full_outer")
-    return joined.agg(
-        F.count("s_sessions").cast("bigint").alias("n_users_stream"),
-        F.count("b_sessions").cast("bigint").alias("n_users_batch"),
-        F.sum("b_sessions").cast("bigint").alias("total_sessions"),
-        F.sum("b_events").cast("bigint").alias("total_events"),
-        F.sum(
-            _disagree(
-                ("s_sessions", "b_sessions"), ("s_events", "b_events")
-            ).cast("long")
-        )
-        .cast("bigint")
-        .alias("n_mismatch"),
+    return certify(
+        dedup_keep_first(raw, ["user_id"], [F.desc("n_events")]),
+        sessionize_gap(spark, sf_dir),
+        ["user_id"], ["n_sessions", "n_events"], "users",
+        {
+            "total_sessions": F.col("n_sessions"),
+            "total_events": F.col("n_events"),
+        },
     )

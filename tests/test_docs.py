@@ -1,5 +1,7 @@
 """Docs stay mechanically in sync with the registry (VERDICT r4 #9)."""
 
+from pathlib import Path
+
 
 def test_registry_counts_in_docs_are_current():
     """README/COVERAGE/SURVEY counts must match plans.all_queries() —
@@ -12,6 +14,6 @@ def test_registry_counts_in_docs_are_current():
         [sys.executable, "tools/gen_counts.py", "--check"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parents[1],
     )
     assert res.returncode == 0, res.stdout + res.stderr

@@ -4,6 +4,8 @@ loses a pushdown or a broadcast fails CI."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from processo_etl_spark import plans
@@ -94,7 +96,8 @@ def _load_check_oracles():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "check_oracles", "/root/repo/tools/check_oracles.py"
+        "check_oracles",
+        Path(__file__).resolve().parents[1] / "tools" / "check_oracles.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -914,6 +914,9 @@ def _collision_ops():
             df, ["seq", "id"], 3
         ),
         "ranking.skyline_2d": lambda df: ranking.skyline_2d(df, "seq", "v"),
+        "ranking.distributed_cumsum": lambda df: ranking.distributed_cumsum(
+            df, ["seq", "id"], "k"
+        ),
         "ranking.grouped_topk": lambda df: ranking.grouped_topk(
             df, ["k"], [F.col("seq").desc(), F.col("id").asc()], 2
         ),

@@ -351,19 +351,30 @@ def test_distributed_cumsum_matches_global_window(spark):
 
     from processo_etl_spark.operators import ranking
 
-    df = spark.createDataFrame(
-        [(i * 7 % 101, 1 if i % 3 else -1) for i in range(200)],
-        "t long, d long",
-    )
-    got = ranking.distributed_cumsum(df, ["t", "d"], "d", num_partitions=7)
+    cases = {
+        "deltas": [(i * 7 % 101, 1 if i % 3 else -1) for i in range(200)],
+        # NULL values, some opening a range partition: SUM skips them,
+        # so such a row carries the earlier partitions' running total
+        "nulls": [(i, None if i % 5 == 0 else 1) for i in range(40)],
+        "leading_nulls": [(i, None if i < 12 else 1) for i in range(40)],
+        "empty": [],
+    }
     w = Window.orderBy("t", "d").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    ref = df.withColumn("cumsum", F.sum("d").over(w))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
-    # and no single-partition window in the distributed plan
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "No Partition Defined" not in plan
+    for name, rows in cases.items():
+        df = spark.createDataFrame(rows, "t long, d long")
+        got = ranking.distributed_cumsum(
+            df, ["t", "d"], "d", num_partitions=7
+        )
+        ref = df.withColumn("cumsum", F.sum("d").over(w))
+        assert got.columns == ref.columns, name
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, ref.collect())
+        ), name
+        # and no single-partition window in the distributed plan
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "No Partition Defined" not in plan, name
 
 
 def test_grouped_topk_default_salt_handles_sortorder_columns(spark):

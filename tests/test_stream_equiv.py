@@ -1,7 +1,7 @@
-"""The r12 streaming⇔batch equivalence certificates (plans/stream_equiv):
-registration contract, the null-safe disagreement predicate, and one
-executed certificate per state shape (the full family is differentially
-graded by tools/check_oracles.py / the driver)."""
+"""The streaming⇔batch equivalence certificates (plans/stream_equiv):
+registration contract, the null-safe disagreement predicate, the shared
+``certify`` fold, and one executed certificate per state shape (the
+full family is differentially graded by tools/check_oracles.py)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,7 +42,7 @@ def test_disagree_counts_one_sided_nulls(spark):
     mismatch — plain `!=` yields NULL there, the OR stays NULL, and
     sum() would silently skip the exact corruption class the
     certificates exist to catch."""
-    from processo_etl_spark.plans.stream_equiv import _disagree
+    from processo_etl_spark.plans.common import disagree
 
     df = spark.createDataFrame(
         [
@@ -57,10 +57,34 @@ def test_disagree_counts_one_sided_nulls(spark):
     )
     n = df.agg(
         F.sum(
-            _disagree(("s_n", "b_n"), ("s_v", "b_v")).cast("long")
+            disagree(("s_n", "b_n"), ("s_v", "b_v")).cast("long")
         ).alias("n")
     ).first()["n"]
     assert n == 4
+
+
+def test_certify_counts_one_sided_rows_with_null_values(spark):
+    """A key present on one side only counts once in n_mismatch and in
+    exactly one side's row count, even when its compared values are
+    NULL — counting the first compared column instead would score it
+    as present on neither side and agreeing."""
+    from processo_etl_spark.plans.common import certify
+
+    stream = spark.createDataFrame(
+        [(1, 10, 1.0), (2, None, None)], "k int, n int, v double"
+    )
+    batch = spark.createDataFrame(
+        [(1, 10, 1.0), (3, None, None)], "k int, n int, v double"
+    )
+    row = certify(
+        stream, batch, ["k"], ["n", "v"], "keys", {"total_n": F.col("n")}
+    ).first()
+    assert row.asDict() == {
+        "n_keys_stream": 2,
+        "n_keys_batch": 2,
+        "total_n": 10,
+        "n_mismatch": 2,
+    }
 
 
 @pytest.mark.parametrize(

@@ -14,10 +14,11 @@ import math
 import sys
 import time
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from processo_etl_spark import catalog, plans, session  # noqa: E402
 
