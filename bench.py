@@ -170,6 +170,10 @@ def _env_fingerprint(spark) -> dict:
         "parallelism": sc.defaultParallelism,
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
         "driver_memory": sc.getConf().get("spark.driver.memory"),
+        "java_version": sc._jvm.java.lang.System.getProperty("java.version"),
+        # Whether the driver JVM started from the class-data-sharing
+        # archive ("hit"), wrote it ("dump") or ran without it ("off").
+        "cds": session.CDS_STATE,
     }
     try:
         with open("/proc/meminfo") as fh:
@@ -532,8 +536,11 @@ def main() -> int:
 
 def _printed_line(full: dict) -> str:
     """The one stdout line: the artifact without its per-query cold
-    dict (its total stays as ``cold_value``)."""
-    return json.dumps({k: v for k, v in full.items() if k != "queries_cold"})
+    dict (its total stays as ``cold_value``), in compact JSON so that it
+    fits a 2,000-char stdout tail."""
+    return json.dumps(
+        {k: v for k, v in full.items() if k != "queries_cold"}, separators=(",", ":")
+    )
 
 
 if __name__ == "__main__":

@@ -47,8 +47,9 @@ def test_printed_line_fits_the_stdout_tail(spark):
     committed line, BENCH_quiet_r15.json, printed 1,818 chars before the
     fingerprint grew its session fields)."""
     env = bench._env_fingerprint(spark)
-    for key in ("master", "parallelism", "SPARK_GRAFT_CPUS", "driver_memory"):
+    for key in ("master", "parallelism", "SPARK_GRAFT_CPUS", "driver_memory", "java_version"):
         assert key in env
+    assert env["cds"] in ("hit", "dump", "off")
     assert env["master"] == spark.sparkContext.master
     env.update(
         calib_sched_job_ms=102.34,

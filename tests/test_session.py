@@ -4,6 +4,7 @@ failure paths.  Pure-python — no Spark session."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import subprocess
 
@@ -68,8 +69,6 @@ def test_bench_scaling_reports_failed_run(monkeypatch, capsys):
 
 
 def test_bench_scaling_ratio_guards_zero_times(monkeypatch, capsys):
-    import json
-
     mod = _bench_scaling()
     steady = {"4": {"a": 1.0, "b": 0.0, "c": 2.0}, "1": {"a": 2.0, "b": 1.0, "c": 0.0}}
 
@@ -84,3 +83,212 @@ def test_bench_scaling_ratio_guards_zero_times(monkeypatch, capsys):
     assert mod.main() == 0
     art = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert art["ratio_low_over_high"] == {"a": 2.0}
+
+
+def test_default_cpus_follow_affinity_not_host(monkeypatch):
+    """Under ``taskset -c 0`` a 4-core host grants one CPU: the session
+    gets ``local[1]``, not ``local[os.cpu_count()]``."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0})
+    assert session.default_cpus() == 1
+    opts = _launch(monkeypatch, session.ArchivePlan("off"))[0]
+    assert opts["spark.master"] == "local[1]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cpus() == 3
+
+
+# --- the driver JVM's class-data-sharing archive -------------------------
+
+
+def _launch(monkeypatch, plan, extra_conf=None):
+    """Run ``get_spark`` up to the JVM launch with no JVM: the launch
+    records the builder's options and ``$SPARK_CONF_DIR`` as it saw them.
+    Returns (options, launch-time SPARK_CONF_DIR)."""
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    seen = []
+
+    def launch(builder):
+        seen.append((dict(builder._options), os.environ.get("SPARK_CONF_DIR")))
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", launch)
+    monkeypatch.setattr(session, "_archive_plan", lambda conf: plan)
+    monkeypatch.setattr(session, "CDS_STATE", "off")
+    session.get_spark(extra_conf=extra_conf)
+    return seen[0]
+
+
+def _isolate(monkeypatch, tmp_path, conf_files=()):
+    """A private cache under ``tmp_path`` and a conf dir holding
+    ``conf_files``; no other launcher classpath source."""
+    conf = tmp_path / "spark_conf"
+    conf.mkdir()
+    for name in conf_files:
+        (conf / name).write_text("# x\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
+    for var in session._CLASSPATH_ENV + ("PYSPARK_GATEWAY_PORT",):
+        monkeypatch.delenv(var, raising=False)
+    return tmp_path / "xdg" / "processo_etl_spark"
+
+
+def _key():
+    from pyspark.find_spark_home import _find_spark_home
+
+    return session._archive_key(session._java_home(), _find_spark_home())
+
+
+def test_archive_on_with_template_only_conf_dir(monkeypatch, tmp_path):
+    cache = _isolate(monkeypatch, tmp_path, ["spark-defaults.conf.template", "log4j2.properties.template"])
+    plan = session._archive_plan({})
+    assert plan.state in ("hit", "dump")
+    assert plan.conf_dir == str(cache / "conf") and os.listdir(plan.conf_dir) == []
+    assert "-Xlog:cds*=off" in plan.java_options
+    assert os.stat(cache).st_mode & 0o777 == 0o700
+
+
+def test_archive_off_with_real_conf_file(monkeypatch, tmp_path):
+    _isolate(monkeypatch, tmp_path, ["spark-defaults.conf.template", "spark-defaults.conf"])
+    assert session._archive_plan({}) == session.ArchivePlan("off")
+
+
+def test_archive_off_with_caller_xshare(monkeypatch, tmp_path):
+    _isolate(monkeypatch, tmp_path)
+    conf = {"spark.driver.extraJavaOptions": "-Dx=1 -Xshare:off"}
+    assert session._archive_plan(conf) == session.ArchivePlan("off")
+
+
+def test_archive_off_with_shared_cache_dir(monkeypatch, tmp_path):
+    cache = _isolate(monkeypatch, tmp_path)
+    cache.mkdir(parents=True)
+    cache.chmod(0o777)
+    assert session._archive_plan({}) == session.ArchivePlan("off")
+    assert not any(cache.iterdir())  # nothing written into it
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def test_leftover_dump_promoted_only_when_valid(monkeypatch, tmp_path):
+    cache = _isolate(monkeypatch, tmp_path)
+    cache.mkdir(parents=True, mode=0o700)
+    key, pid = _key(), _dead_pid()
+    tmp, record = cache / f"{key}.{pid}.tmp", cache / f"{key}.{pid}.dump"
+
+    def leave(content: bytes):
+        tmp.write_bytes(content)
+        tmp.chmod(0o444)
+        record.write_text(f"{pid}\nx.jar")
+
+    # A garbage file fails the real validator: deleted, and a new dump planned.
+    leave(b"not a CDS archive" * 100)
+    plan = session._archive_plan({})
+    assert plan.state == "dump" and not tmp.exists() and not record.exists()
+    assert not (cache / f"{key}.jsa").exists()
+    os.remove(plan.dump_record)
+
+    # One the validator accepts is promoted with os.replace, and mapped.
+    checked = []
+    monkeypatch.setattr(session, "_archive_valid", lambda java, path, cp: checked.append(cp) or True)
+    leave(b"valid")
+    plan = session._archive_plan({})
+    assert checked == ["x.jar"]
+    assert plan.state == "hit" and (cache / f"{key}.jsa").read_bytes() == b"valid"
+    assert f"-XX:SharedArchiveFile={cache / f'{key}.jsa'}" in plan.java_options
+    assert sorted(os.listdir(cache)) == sorted(["conf", f"{key}.jsa"])
+
+
+def test_live_dump_turns_archive_off(monkeypatch, tmp_path):
+    cache = _isolate(monkeypatch, tmp_path)
+    cache.mkdir(parents=True, mode=0o700)
+    (cache / f"{_key()}.{os.getpid()}.dump").write_text("")  # a launch in flight
+    assert session._archive_plan({}) == session.ArchivePlan("off")
+
+
+def test_archive_of_another_key_deleted(monkeypatch, tmp_path):
+    cache = _isolate(monkeypatch, tmp_path)
+    cache.mkdir(parents=True, mode=0o700)
+    (cache / "0123456789abcdef.jsa").write_bytes(b"old jdk")
+    session._archive_plan({})
+    assert not (cache / "0123456789abcdef.jsa").exists()
+
+
+def test_get_spark_restores_caller_environ(monkeypatch, tmp_path):
+    monkeypatch.setenv("SPARK_CONF_DIR", "/caller/conf")
+    before = dict(os.environ)
+    plan = session.ArchivePlan("hit", "-XX:SharedArchiveFile=/c/k.jsa -Xlog:cds*=off", str(tmp_path))
+    opts, launch_conf = _launch(monkeypatch, plan, {"spark.driver.extraJavaOptions": "-Dpe.probe=1"})
+    assert launch_conf == str(tmp_path)
+    assert opts["spark.driver.defaultJavaOptions"] == plan.java_options
+    assert opts["spark.driver.extraJavaOptions"] == "-Dpe.probe=1"
+    assert dict(os.environ) == before and session.CDS_STATE == "hit"
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    before = dict(os.environ)
+    _launch(monkeypatch, plan)
+    assert dict(os.environ) == before
+
+
+def test_get_spark_off_adds_no_archive_flag(monkeypatch, tmp_path):
+    _isolate(monkeypatch, tmp_path, ["spark-defaults.conf"])
+    conf_dir = os.environ["SPARK_CONF_DIR"]
+    plan = session._archive_plan({})
+    opts, launch_conf = _launch(monkeypatch, plan)
+    assert "spark.driver.defaultJavaOptions" not in opts
+    assert launch_conf == conf_dir
+
+
+_ROUND_TRIP = """
+import json, os
+from processo_etl_spark import session
+spark = session.get_spark(cpus=1, extra_conf={
+    "spark.driver.extraJavaOptions": "-Dpe.probe=1", "spark.ui.showConsoleProgress": "false"})
+sc = spark.sparkContext
+out = {"cds": session.CDS_STATE,
+       "rows": [tuple(r) for r in spark.range(100).selectExpr("id % 3 k", "id * id v")
+                .groupBy("k").sum("v").orderBy("k").collect()],
+       "probe": sc._jvm.java.lang.System.getProperty("pe.probe"),
+       "conf_env": os.environ.get("SPARK_CONF_DIR")}
+gateway = sc._gateway
+spark.stop()
+gateway.shutdown()
+gateway.proc.stdin.close()
+gateway.proc.wait(timeout=120)  # the archive is written at JVM exit
+print(json.dumps(out))
+"""
+
+
+def test_archive_round_trip_in_fresh_processes(tmp_path):
+    """First process dumps the archive at JVM exit, the second promotes
+    and maps it: same result, caller options kept, no cds lines on
+    stdout."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k not in session._CLASSPATH_ENV + ("PYSPARK_GATEWAY_PORT",)}
+    env.update(XDG_CACHE_HOME=str(tmp_path), SPARK_CONF_DIR=str(tmp_path / "no_conf"),
+               SPARK_DRIVER_MEMORY="1g", PYTHONPATH=root)
+    cache, key = tmp_path / "processo_etl_spark", _key()
+
+    def run():
+        proc = subprocess.run(["python", "-c", _ROUND_TRIP], cwd=root, env=env,
+                              capture_output=True, text=True, timeout=300)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        assert "cds" not in proc.stdout.replace('"cds"', ""), proc.stdout[-2000:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+
+    first = run()
+    assert first["cds"] == "dump"
+    assert not (cache / f"{key}.jsa").exists()
+    assert any(n.endswith(".tmp") for n in os.listdir(cache))
+    second = run()
+    assert second["cds"] == "hit"
+    assert sorted(os.listdir(cache)) == sorted(["conf", f"{key}.jsa"])
+    assert second["rows"] == first["rows"]
+    assert first["probe"] == second["probe"] == "1"
+    assert first["conf_env"] == second["conf_env"] == str(tmp_path / "no_conf")

@@ -147,7 +147,7 @@ def main() -> int:
         return 2
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     name_filter = argv[1:]
-    spark = session.get_spark(cpus=16)
+    spark = session.get_spark()
     con = duckdb.connect()
     for t in catalog.TABLES:
         con.execute(
