@@ -20,9 +20,12 @@ at test scale:
   batch job pays the JVM start on every run, and parsing and verifying
   those classes from the jars is most of it: the archive roughly halves
   the session start.  It holds class metadata only, so results cannot
-  change.  The first run dumps it at JVM exit into
-  ``$XDG_CACHE_HOME/processo_etl_spark/`` (default ``~/.cache``), keyed
-  on the JDK and the Spark jar list; later runs map it.  The archive is
+  change.  It lives in ``$XDG_CACHE_HOME/processo_etl_spark/`` (default
+  ``~/.cache``), keyed on the JDK and the Spark jar list, and pays off
+  only where that cache persists between runs: the dump costs its run
+  ~3 s of start and ~10 s of JVM exit.  So the first run on a cache
+  only marks it, a later run (once the first has ended) dumps the
+  archive at JVM exit, and the runs after it map it.  The archive is
   trusted like code, so it is used only from a directory and file that
   this uid owns and nobody else can write.  It is off, and the launch is
   exactly Spark's own, when ``$SPARK_CONF_DIR`` holds a real file (the
@@ -98,14 +101,22 @@ def _private(path: str, is_kind) -> bool:
     return is_kind(st.st_mode) and st.st_uid == os.getuid() and not st.st_mode & 0o022
 
 
-def _pid_alive(pid: int) -> bool:
+def _identity(pid: int) -> str | None:
+    """``<pid>-<start time>`` of a running process (the start time is
+    field 22 of ``/proc/<pid>/stat``), None when there is none: a pid
+    alone may name a later process that reused it."""
     try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass  # alive, under another uid
-    return True
+        with open(f"/proc/{pid}/stat") as f:
+            return f"{pid}-{f.read().rpartition(')')[2].split()[19]}"
+    except (OSError, IndexError):
+        return None
+
+
+def _alive(identity: str) -> bool:
+    """The process ``identity`` names still runs.  This process never
+    counts: it plans a launch only while it has no JVM."""
+    pid = identity.partition("-")[0]
+    return pid.isdigit() and int(pid) != os.getpid() and _identity(int(pid)) == identity
 
 
 def _java_home() -> str | None:
@@ -119,14 +130,17 @@ def _java_home() -> str | None:
 
 def _archive_key(java_home: str, spark_home: str) -> str | None:
     """Hash of what an archive depends on: the JDK build (its ``release``
-    file and ``libjvm.so``) and the Spark jars (name, size, mtime).  Pure
-    file reads, so a hit spawns no process."""
+    file, ``libjvm.so`` and the base archive ``classes.jsa`` that a
+    dynamic archive extends; the JVM skips the dynamic one silently once
+    the base is regenerated) and the Spark jars (name, size, mtime).
+    Pure file reads, so a hit spawns no process."""
     h = hashlib.sha256()
     try:
         with open(os.path.join(java_home, "release"), "rb") as f:
             h.update(f.read())
-        jvm = os.stat(os.path.join(java_home, "lib", "server", "libjvm.so"))
-        h.update(f"libjvm {jvm.st_size} {jvm.st_mtime_ns}\n".encode())
+        for lib in ("libjvm.so", "classes.jsa"):
+            st = os.stat(os.path.join(java_home, "lib", "server", lib))
+            h.update(f"{lib} {st.st_size} {st.st_mtime_ns}\n".encode())
         with os.scandir(os.path.join(spark_home, "jars")) as it:
             jars = sorted((e.name, e.stat()) for e in it)
     except OSError:
@@ -168,15 +182,35 @@ def _remove(*paths: str) -> None:
             os.remove(p)
 
 
-def _dump_record(path: str) -> tuple[int, str] | None:
-    """``(JVM pid, classpath)`` from a dump record; None while the JVM is
-    still starting (the record is empty) or when it is unreadable."""
+def _dump_record(path: str) -> tuple[str, str] | None:
+    """``(JVM identity, classpath)`` from a dump record; None while the
+    JVM is still starting (the record is empty) or when it is
+    unreadable."""
     try:
         with open(path) as f:
-            pid, _, classpath = f.read().partition("\n")
-        return int(pid), classpath
-    except (OSError, ValueError):
+            jvm, _, classpath = f.read().partition("\n")
+    except OSError:
         return None
+    return (jvm, classpath) if jvm else None
+
+
+def _outlived_a_run(cache: str, me: str) -> bool:
+    """The cache's ``seen`` file names a process that has ended: the
+    cache persists from one run to the next, so an archive dumped now is
+    there for later runs.  Otherwise ``seen`` names this process (if it
+    names none yet) and the answer is no: a cache that starts empty on
+    every run would pay a dump on every run and never map an archive."""
+    path = os.path.join(cache, "seen")
+    try:
+        with open(path) as f:
+            writer = f.read()
+    except FileNotFoundError:
+        writer = ""
+    if not writer:
+        with open(path, "w") as f:
+            f.write(me)
+        return False
+    return writer != me and not _alive(writer)
 
 
 class ArchivePlan(NamedTuple):
@@ -190,16 +224,18 @@ def _archive_plan(extra_conf: dict[str, str]) -> ArchivePlan:
     """How the next driver JVM uses the class-data-sharing archive.
 
     The cache holds ``<key>.jsa``, the archive a "hit" maps, and per dump
-    a record ``<key>.<pid>.dump`` (``pid`` is the dumping Python process)
-    beside the JVM's output ``<key>.<pid>.tmp``, which it writes when it
-    exits.  The record exists from before the launch, so a dump in flight
-    is visible; once the JVM is up it names the JVM's pid and classpath.
-    When neither pid is alive, the tmp is promoted with ``os.replace`` if
-    :func:`_archive_valid` accepts it under that classpath, and deleted
-    otherwise; while one is alive, the plan is "off".  Archives of other
-    keys are deleted.  The conf dir is an empty one in the cache, standing
-    in for Spark's template-only conf dir so that the classpath holds
-    only jars."""
+    a record ``<key>.<id>.dump`` (``id`` is the dumping Python process's
+    :func:`_identity`) beside the JVM's output ``<key>.<id>.tmp``, which
+    it writes when it exits.  The record exists from before the launch,
+    so a dump in flight is visible; once the JVM is up it names the JVM's
+    identity and classpath.  When neither process is alive, the tmp is
+    promoted with ``os.replace`` if :func:`_archive_valid` accepts it
+    under that classpath, and deleted otherwise; while one is alive, the
+    plan is "off".  Archives of other keys are deleted.  With no archive,
+    the plan dumps only once :func:`_outlived_a_run` shows that the cache
+    persists, and is "off" before.  The conf dir is an empty one in the
+    cache, standing in for Spark's template-only conf dir so that the
+    classpath holds only jars."""
     off = ArchivePlan("off")
     if (
         any(f in extra_conf.get("spark.driver.extraJavaOptions", "") for f in _CDS_FLAGS)
@@ -212,7 +248,8 @@ def _archive_plan(extra_conf: dict[str, str]) -> ArchivePlan:
         return off
     java_home, spark_home = _java_home(), _find_spark_home()
     key = java_home and _archive_key(java_home, spark_home)
-    if not key or not _conf_dir_unused(spark_home):
+    me = _identity(os.getpid())
+    if not key or not me or not _conf_dir_unused(spark_home):
         return off
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
     cache = os.path.join(base, "processo_etl_spark")
@@ -231,15 +268,15 @@ def _archive_plan(extra_conf: dict[str, str]) -> ArchivePlan:
     dumping = False
     for name in names:
         stem, _, ext = name.rpartition(".")
-        owner, _, pid = stem.partition(".")
+        owner, _, dumper = stem.partition(".")
         path = os.path.join(cache, name)
         if ext == "jsa" and owner != key:
             _remove(path)  # built for another JDK or jar set
         elif ext == "tmp" and f"{stem}.dump" not in names:
             _remove(path)  # output whose record is gone
-        elif ext == "dump" and pid.isdigit():
+        elif ext == "dump":
             record = _dump_record(path)
-            if _pid_alive(int(pid)) or (record and _pid_alive(record[0])):
+            if _alive(dumper) or (record and _alive(record[0])):
                 dumping = dumping or owner == key
                 continue
             tmp = os.path.join(cache, f"{stem}.tmp")
@@ -260,10 +297,10 @@ def _archive_plan(extra_conf: dict[str, str]) -> ArchivePlan:
         if not _private(archive, stat.S_ISREG):
             return off
         return ArchivePlan("hit", f"-XX:SharedArchiveFile={archive} {quiet}", conf)
-    if dumping:
-        return off
-    stem = os.path.join(cache, f"{key}.{os.getpid()}")
+    stem = os.path.join(cache, f"{key}.{me}")
     try:
+        if dumping or not _outlived_a_run(cache, me):
+            return off
         os.close(os.open(stem + ".dump", os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o600))
     except OSError:
         return off
@@ -335,7 +372,8 @@ def get_spark(
     CDS_STATE = plan.state
     if plan.dump_record:
         with open(plan.dump_record, "w") as f:
-            f.write(f"{sc._gateway.proc.pid}\n{sc._jvm.java.lang.System.getProperty('java.class.path')}")
+            jvm = _identity(sc._gateway.proc.pid) or ""
+            f.write(f"{jvm}\n{sc._jvm.java.lang.System.getProperty('java.class.path')}")
     sc.setLogLevel("WARN")
     return spark
 

@@ -7,6 +7,7 @@ import importlib.util
 import json
 import os
 import subprocess
+import sys
 
 from processo_etl_spark import session
 
@@ -143,8 +144,22 @@ def _key():
     return session._archive_key(session._java_home(), _find_spark_home())
 
 
+def _dead_identity() -> str:
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return f"{proc.pid}-1"
+
+
+def _persisted(cache):
+    """The cache as an earlier, ended run left it: ``seen`` names a
+    process that is gone."""
+    cache.mkdir(parents=True, mode=0o700, exist_ok=True)
+    (cache / "seen").write_text(_dead_identity())
+
+
 def test_archive_on_with_template_only_conf_dir(monkeypatch, tmp_path):
     cache = _isolate(monkeypatch, tmp_path, ["spark-defaults.conf.template", "log4j2.properties.template"])
+    _persisted(cache)
     plan = session._archive_plan({})
     assert plan.state in ("hit", "dump")
     assert plan.conf_dir == str(cache / "conf") and os.listdir(plan.conf_dir) == []
@@ -171,22 +186,33 @@ def test_archive_off_with_shared_cache_dir(monkeypatch, tmp_path):
     assert not any(cache.iterdir())  # nothing written into it
 
 
-def _dead_pid() -> int:
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    return proc.pid
+def test_first_run_on_a_cache_marks_it_and_does_not_dump(monkeypatch, tmp_path):
+    """A cache that starts empty on every run never pays a dump: only a
+    run after the one that marked the cache has ended dumps."""
+    cache = _isolate(monkeypatch, tmp_path)
+    me = session._identity(os.getpid())
+    assert session._archive_plan({}) == session.ArchivePlan("off")
+    assert (cache / "seen").read_text() == me
+    assert session._archive_plan({}) == session.ArchivePlan("off")  # same process
+    with subprocess.Popen(["sleep", "30"]) as other:
+        (cache / "seen").write_text(session._identity(other.pid))  # a concurrent first run
+        assert session._archive_plan({}) == session.ArchivePlan("off")
+        other.kill()
+    plan = session._archive_plan({})  # the marking run has ended
+    assert plan.state == "dump" and plan.dump_record == str(cache / f"{_key()}.{me}.dump")
+    assert f"-XX:ArchiveClassesAtExit={cache / f'{_key()}.{me}.tmp'}" in plan.java_options
 
 
 def test_leftover_dump_promoted_only_when_valid(monkeypatch, tmp_path):
     cache = _isolate(monkeypatch, tmp_path)
-    cache.mkdir(parents=True, mode=0o700)
-    key, pid = _key(), _dead_pid()
-    tmp, record = cache / f"{key}.{pid}.tmp", cache / f"{key}.{pid}.dump"
+    _persisted(cache)
+    key, dumper = _key(), _dead_identity()
+    tmp, record = cache / f"{key}.{dumper}.tmp", cache / f"{key}.{dumper}.dump"
 
     def leave(content: bytes):
         tmp.write_bytes(content)
         tmp.chmod(0o444)
-        record.write_text(f"{pid}\nx.jar")
+        record.write_text(f"{_dead_identity()}\nx.jar")
 
     # A garbage file fails the real validator: deleted, and a new dump planned.
     leave(b"not a CDS archive" * 100)
@@ -203,14 +229,41 @@ def test_leftover_dump_promoted_only_when_valid(monkeypatch, tmp_path):
     assert checked == ["x.jar"]
     assert plan.state == "hit" and (cache / f"{key}.jsa").read_bytes() == b"valid"
     assert f"-XX:SharedArchiveFile={cache / f'{key}.jsa'}" in plan.java_options
-    assert sorted(os.listdir(cache)) == sorted(["conf", f"{key}.jsa"])
+    assert sorted(os.listdir(cache)) == sorted(["conf", "seen", f"{key}.jsa"])
 
 
 def test_live_dump_turns_archive_off(monkeypatch, tmp_path):
     cache = _isolate(monkeypatch, tmp_path)
-    cache.mkdir(parents=True, mode=0o700)
-    (cache / f"{_key()}.{os.getpid()}.dump").write_text("")  # a launch in flight
-    assert session._archive_plan({}) == session.ArchivePlan("off")
+    _persisted(cache)
+    key = _key()
+    with subprocess.Popen(["sleep", "30"]) as dumper:
+        ident = session._identity(dumper.pid)
+        (cache / f"{key}.{ident}.dump").write_text("")  # its launch is in flight
+        assert session._archive_plan({}) == session.ArchivePlan("off")
+        # The Python side has ended, its JVM still writes the archive.
+        os.rename(cache / f"{key}.{ident}.dump", cache / f"{key}.{_dead_identity()}.dump")
+        next(cache.glob("*.dump")).write_text(f"{ident}\nx.jar")
+        assert session._archive_plan({}) == session.ArchivePlan("off")
+        dumper.kill()
+
+
+def test_dump_record_naming_a_reused_pid_is_not_in_flight(monkeypatch, tmp_path):
+    """A record's pid now held by another process (this one, or any
+    live one started after the dumper) does not hold the archive off:
+    the start time differs."""
+    cache = _isolate(monkeypatch, tmp_path)
+    _persisted(cache)
+    key = _key()
+    monkeypatch.setattr(session, "_archive_valid", lambda java, path, cp: True)
+    with subprocess.Popen(["sleep", "30"]) as other:
+        reused = [session._identity(os.getpid()), f"{other.pid}-1"]
+        for dumper, jvm in (reused, reused[::-1]):
+            (cache / f"{key}.{dumper}.tmp").write_bytes(b"valid")
+            (cache / f"{key}.{dumper}.dump").write_text(f"{jvm}\nx.jar")
+            plan = session._archive_plan({})
+            assert plan.state == "hit" and not list(cache.glob("*.dump"))
+            os.remove(cache / f"{key}.jsa")
+        other.kill()
 
 
 def test_archive_of_another_key_deleted(monkeypatch, tmp_path):
@@ -266,7 +319,8 @@ print(json.dumps(out))
 
 
 def test_archive_round_trip_in_fresh_processes(tmp_path):
-    """First process dumps the archive at JVM exit, the second promotes
+    """The first process marks the empty cache and launches as Spark
+    does, the second dumps the archive at JVM exit, the third promotes
     and maps it: same result, caller options kept, no cds lines on
     stdout."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -276,19 +330,21 @@ def test_archive_round_trip_in_fresh_processes(tmp_path):
     cache, key = tmp_path / "processo_etl_spark", _key()
 
     def run():
-        proc = subprocess.run(["python", "-c", _ROUND_TRIP], cwd=root, env=env,
+        proc = subprocess.run([sys.executable, "-c", _ROUND_TRIP], cwd=root, env=env,
                               capture_output=True, text=True, timeout=300)
         assert proc.returncode == 0, proc.stderr[-2000:]
         assert "cds" not in proc.stdout.replace('"cds"', ""), proc.stdout[-2000:]
         return json.loads(proc.stdout.strip().splitlines()[-1])
 
-    first = run()
-    assert first["cds"] == "dump"
+    runs = [run()]
+    assert runs[0]["cds"] == "off" and sorted(os.listdir(cache)) == ["conf", "seen"]
+    runs.append(run())
+    assert runs[1]["cds"] == "dump"
     assert not (cache / f"{key}.jsa").exists()
     assert any(n.endswith(".tmp") for n in os.listdir(cache))
-    second = run()
-    assert second["cds"] == "hit"
-    assert sorted(os.listdir(cache)) == sorted(["conf", f"{key}.jsa"])
-    assert second["rows"] == first["rows"]
-    assert first["probe"] == second["probe"] == "1"
-    assert first["conf_env"] == second["conf_env"] == str(tmp_path / "no_conf")
+    runs.append(run())
+    assert runs[2]["cds"] == "hit"
+    assert sorted(os.listdir(cache)) == sorted(["conf", "seen", f"{key}.jsa"])
+    assert [r["rows"] for r in runs] == [runs[0]["rows"]] * 3
+    assert [r["probe"] for r in runs] == ["1"] * 3
+    assert [r["conf_env"] for r in runs] == [str(tmp_path / "no_conf")] * 3
