@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).  ``tools/check_oracles.py`` runs the
+same comparison locally.
 
 Implementation lives in ``processo_etl_spark``; this file only adapts
 the plan registry (processo_etl_spark/plans) to the driver's interface.

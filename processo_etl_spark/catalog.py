@@ -39,8 +39,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` has shipped in two physical forms across testdata
     generations: parquet TIMESTAMP(NANOS) — which Spark's vectorized
     reader surfaces only as a nanosecond long via ``nanosAsLong`` — and
-    plain TIMESTAMP_NTZ.  The shim branches on the dtype actually read
-    (VERDICT r3 #4): only a ``bigint`` ts is rebuilt as a microsecond
+    plain TIMESTAMP_NTZ.  The shim branches on the dtype actually read:
+    only a ``bigint`` ts is rebuilt as a microsecond
     TIMESTAMP_NTZ (integer division, no double round-trip — ns epoch >
     2^53); a native timestamp passes through untouched.
     """

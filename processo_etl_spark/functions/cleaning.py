@@ -142,7 +142,7 @@ def winsorize_robust(
     x = F.col(col).cast("double")
     iqr = q["q3"] - q["q1"]
     if iqr is None or iqr == 0:
-        # Constant / near-constant column (ADVICE r4): dividing by a zero
+        # Constant / near-constant column: dividing by a zero
         # IQR would emit ±Inf/NaN at scan speed with no warning.  The
         # quantile probe already ran driver-side, so fail loudly here.
         raise ValueError(

@@ -9,13 +9,13 @@ tests/test_scale.py's plan audit, so widening a ban is a single edit.
 They hold for every registered query; the raw-double rule's per-column
 allow-list below is the only carve-out:
 
-- **No DecimalType outputs** (r2 lesson: the driver hashes Spark vs
+- **No DecimalType outputs** (the driver hashes Spark vs
   DuckDB decimals differently regardless of value).
-- **No array/map/struct outputs** (r5 lesson: pandas ``sort_values``
+- **No array/map/struct outputs** (pandas ``sort_values``
   throws ``unhashable type: 'list'``, so any non-scalar column is an
   automatic driver ERR even when the values match).  Flatten with
   ``posexplode`` ⇔ ``unnest(generate_series)``.
-- **No raw-double fold outputs** (r7 lesson: ``drift_chi2_sources``
+- **No raw-double fold outputs** (``drift_chi2_sources``
   hash-failed on the driver even though its 512-term value-sorted
   double fold was locally bit-identical under DuckDB 1.0.0 — the
   driver's DuckDB build evaluated the fold one ULP differently, the
@@ -65,7 +65,7 @@ def nonscalar_output_cols(schema) -> list[str]:
     ]
 
 
-# --- raw-double fold guard (r7 lesson, VERDICT r7 #2) -----------------------------
+# --- raw-double fold guard --------------------------------------------------------
 
 # Oracle-SQL idioms that materialize a multi-term float reduction.  The
 # Spark side of such a query necessarily replays the same fold (that is
@@ -114,8 +114,7 @@ def _last_alias_round_wrapped(sql: str, col: str) -> bool | None:
     to be ``ROUND(...)`` or ``CAST(ROUND(...) AS type)`` in its
     entirety: a trailing ROUND sub-expression (``raw_fold + ROUND(adj,
     6) AS col``) must NOT mask an unrounded fold reaching the output
-    (review r8 — the paren-match-only version had exactly that false
-    negative)."""
+    (the paren-match-only version had exactly that false negative)."""
     matches = list(re.finditer(rf"\bAS\s+{re.escape(col)}\b", sql, re.IGNORECASE))
     if not matches:
         return None
@@ -142,7 +141,7 @@ def _last_alias_round_wrapped(sql: str, col: str) -> bool | None:
     # them).  Testing every candidate is safe because the whole-call
     # check below requires the ENTIRE candidate to be one balanced
     # ROUND(...) call: a mid-expression suffix can never fake that
-    # (review r8 — the trim-at-last-SELECT version broke
+    # (the trim-at-last-SELECT version broke
     # ``ROUND((SELECT ...) * x, 6) AS col``).
     sl = pre[start:]
     candidates = [sl] + [
@@ -173,7 +172,7 @@ def _last_alias_round_wrapped(sql: str, col: str) -> bool | None:
             expr = expr[len("DISTINCT ") :].strip()
         # unwrap CAST layers repeatedly: CAST(CAST(ROUND(v, 2) AS
         # DECIMAL(12,2)) AS DOUBLE) is the repo's standard exact-value
-        # emission idiom (review r8 — one layer was not enough)
+        # emission idiom (one layer was not enough)
         while True:
             inner = whole_call(expr, "cast")
             if inner is None:

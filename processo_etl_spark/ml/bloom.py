@@ -110,7 +110,7 @@ def bloom_probe(
     their columns AND their multiplicity: the k-bit reassembly groups on
     a per-row ``monotonically_increasing_id``, not on the item columns,
     so duplicate input rows stay distinct outputs and non-groupable
-    column types (map, …) pass through untouched (ADVICE r4).  A word
+    column types (map, …) pass through untouched.  A word
     the build never touched is an all-zero word (left join NULL →
     miss).  False negatives are impossible by construction; false
     positives are the documented trade-off.
@@ -166,7 +166,7 @@ def bloom_words_relation(
     stays IN the plan and attaches to consumers as a broadcast one-row
     scalar (``crossJoin(F.broadcast(...))``, the module family's
     documented scalar-attach shape) instead of a driver ``collect``
-    (r15, guide §5 — no driver round-trip in a query path; the filter
+    (guide §5 — no driver round-trip in a query path; the filter
     build becomes one more broadcast-exchange job inside the consuming
     query, overlapping its other builds)."""
     key = F.col(key_col) if isinstance(key_col, str) else key_col
@@ -244,7 +244,7 @@ def join_bloom_pruned(
     """
     # keys hash as strings (md5 is a string/binary hash); both sides use
     # the same canonical form so the zero-false-negative guarantee holds.
-    # The filter enters the plan as a broadcast one-row scalar (r15) —
+    # The filter enters the plan as a broadcast one-row scalar —
     # no driver collect; the probe expression itself is unchanged.
     filt = bloom_words_relation(
         right.select(F.col(right_key).cast("string").alias(right_key)),
@@ -284,8 +284,7 @@ def bloom_contamination(
     row-by-row — the registered query exposes both so the guarantee is
     hash-graded, and ``n_bloom_hits − n_exact_hits`` measures the FP
     cost of the m-bit compression.  ``id_col`` must be UNIQUE per
-    corpus row (ADVICE r14; the same precondition the dedup operators
-    state): the per-document aggregate emits one row per distinct id,
+    corpus row (the same precondition the dedup operators state): the per-document aggregate emits one row per distinct id,
     so duplicate ids would collapse into one merged row where the old
     restore-join plan emitted one output row per corpus row.
 
@@ -310,8 +309,8 @@ def bloom_contamination(
         .distinct()
         .transform(persist_once)
     )
-    # The filter attaches IN-PLAN as a broadcast one-row scalar (r15,
-    # VERDICT r14 #3): the old bloom_filter_words collect was a blocking
+    # The filter attaches IN-PLAN as a broadcast one-row scalar: the
+    # old bloom_filter_words collect was a blocking
     # per-pass driver round-trip serialized BEFORE the main query; as a
     # broadcast build it overlaps the query's other exchange builds and
     # the query path holds zero driver collects.  The probed word array
@@ -319,7 +318,7 @@ def bloom_contamination(
     # projection under the per-doc aggregate, so the 16 KiB array never
     # enters the exchange.
     filt = bloom_words_relation(eval_grams, "gram", n_bits=n_bits, k=k)
-    # explode_outer, not explode (r14): word_shingles yields >= 1 gram
+    # explode_outer, not explode: word_shingles yields >= 1 gram
     # for every text, NULL included (['']), and the outer explode would
     # keep even an empty array's row, so EVERY corpus document survives
     # into the aggregate and the old restore join (corpus ids left-joined

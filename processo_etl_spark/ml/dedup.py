@@ -396,13 +396,20 @@ def connected_components(
     min-label propagation.
 
     Each node's label converges to the minimum id reachable from it;
-    one `groupBy(node).min(label)` + one join per round, O(log D)
-    rounds for graph diameter D (dup clusters are tiny — a handful of
+    one `groupBy(node).min(label)` + one join per round.  A label moves
+    one hop per round, so a component of diameter D needs D rounds, plus
+    one that changes nothing (dup clusters are tiny — a handful of
     rounds).  The loop is driver-side but every step is distributed;
     ``localCheckpoint`` truncates the growing lineage each round.
 
     Returns (doc, cluster) where cluster = min doc id of the component
     — the canonical survivor for keep-one dedup.
+
+    Raises ``ValueError`` when round ``max_iterations`` still changed a
+    label, as on any component of diameter ``max_iterations`` or more
+    (a path of more than ``max_iterations`` nodes): the labels may not
+    be components yet, and returning them would split one cluster into
+    several without an error.
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -442,6 +449,13 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        edges.unpersist()
+        raise ValueError(
+            f"connected_components did not converge in max_iterations="
+            f"{max_iterations} rounds: a component's diameter exceeds the "
+            "bound; raise max_iterations"
+        )
     edges.unpersist()
     return labels
 
@@ -704,9 +718,9 @@ def simhash_dedup_pairs_banded(
     split the 60-bit signature into ``max_hamming + 1`` contiguous
     bands; a pair differing in ≤ max_hamming bits can corrupt at most
     max_hamming bands, so it agrees EXACTLY on at least one — an
-    equi-join on (band, band_value) finds every such pair.  (VERDICT r3
-    suggested 4 rotated 16-bit prefix tables, but 4 tables pigeonhole
-    only hamming ≤ 3; hamming ≤ 8 needs 9 bands.)
+    equi-join on (band, band_value) finds every such pair.  (4 rotated 16-bit prefix tables would
+    not do: 4 tables pigeonhole only hamming ≤ 3; hamming ≤ 8 needs 9
+    bands.)
 
     Scale shape: signatures are computed once (one narrow fold per doc,
     persisted), exploded 9× into (band, val) keys, self-equi-joined —
@@ -932,7 +946,7 @@ def excise_duplicate_spans(
     fully-boilerplate document survives as an empty ``clean_text`` row
     rather than vanishing, so downstream counts reconcile.
 
-    Plan shape (r14): the same gram doc-frequency shuffle as
+    Plan shape: the same gram doc-frequency shuffle as
     :func:`duplicate_spans` (grams likewise PERSISTED — the frequency
     branch and the hit branch both read them), then the dup-gram START
     positions aggregate per doc (one shuffle carrying ONLY hit rows —

@@ -86,7 +86,7 @@ def chi2_token_drift(
     term = (d("ca") - ea) * (d("ca") - ea) / ea + (d("cb") - eb) * (
         d("cb") - eb
     ) / eb
-    # Runtime magnitude guard (ADVICE r9): |d_b| ≤ na·nb, so 10⁶·d²
+    # Runtime magnitude guard: |d_b| ≤ na·nb, so 10⁶·d²
     # exceeds decimal(38,0) once na·nb ≥ 1e16 — where Spark's non-ANSI
     # decimal overflow yields NULL and F.sum would SILENTLY drop the
     # bucket, while DuckDB's HUGEINT overflow raises.  Fail loudly like

@@ -43,7 +43,7 @@ def target_encode_loo(
     mean, and m the smoothing pseudo-count.  Categories of size 1
     reduce to ȳ exactly (the leave-one-out numerator drops to m·ȳ).
 
-    NULL handling (ADVICE r4): Σ_c, n_c, and ȳ aggregate only NON-NULL
+    NULL handling: Σ_c, n_c, and ȳ aggregate only NON-NULL
     targets, so a null target never inflates a denominator.  A row with
     a null target keeps its category's plain m-estimate (no
     leave-one-out — it contributed nothing to Σ_c).  Rows whose

@@ -169,7 +169,7 @@ def binary_file_media(
                 )
             ),
         )
-    # Length guard (ADVICE r6): a signature-valid file truncated to 9–23
+    # Length guard: a signature-valid file truncated to 9–23
     # bytes would make substring() return 1–3 bytes and conv(hex(...))
     # yield a garbage small integer instead of NULL — require the full
     # 8-byte signature + IHDR length/type/width/height (bytes 9–24).
@@ -287,7 +287,7 @@ def decode_image_png(payload: bytes, n_features: int = 8) -> list[float]:
             for c in range(n)
         ]
     # Both dimensions are box-resized to the n×n grid, then each column
-    # of cell means is averaged (ADVICE r5: averaging each column band
+    # of cell means is averaged (averaging each column band
     # over the FULL image height left vertical structure unresized).
     cells = _box_sums(px, w, h, n, n)
     out = []

@@ -1,5 +1,5 @@
 """Minimal pure-stdlib PNG codec (8-bit grayscale) — the engine's one
-image decoder (VERDICT r4 #4), so "multimodal columns" decodes real
+image decoder, so "multimodal columns" decodes real
 pixels with no imaging library installed.
 
 Scope is deliberately tiny and fully standard (PNG spec / RFC 2083,
@@ -103,7 +103,7 @@ def iter_chunks(payload: bytes):
         pos += 12 + length
     # A stream cut at an EXACT chunk boundary before IEND would
     # otherwise end the walk silently, reporting partial metadata as
-    # complete (ADVICE r7) — every full walk must end at IEND.
+    # complete — every full walk must end at IEND.
     raise ValueError("truncated PNG (missing IEND)")
 
 

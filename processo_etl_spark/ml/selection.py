@@ -69,7 +69,7 @@ def importance_weights(
     """
     b = n_buckets
     tok_arr = tokens_ws(text_col, toks_col)
-    # Persisted (r14): the hashed token stream feeds BOTH the bucket
+    # Persisted: the hashed token stream feeds BOTH the bucket
     # stats and the final per-doc scoring join — un-persisted, the
     # explode + md5 ran twice per call.  Slimmed to the three columns
     # the two consumers need before caching.

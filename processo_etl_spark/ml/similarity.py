@@ -412,8 +412,8 @@ def margin_bitext_pairs(
         "rkr", F.row_number().over(wr)
     )
     # Persisted for the three consumers below (the two top-k
-    # neighborhood means + the margin join).  CALLERS OWN THE CLEANUP
-    # (ADVICE r5): repeated calls over the SAME inputs reuse this one
+    # neighborhood means + the margin join).  CALLERS OWN THE CLEANUP:
+    # repeated calls over the SAME inputs reuse this one
     # cache entry (plan-keyed, no growth); batch loops over many
     # DIFFERENT input pairs should `spark.catalog.clearCache()` between
     # batches.  An eager localCheckpoint was tried instead and
@@ -520,7 +520,7 @@ def hamming_topk(
     )
     # the corpus side of the scan carries ONLY the packed words — the
     # whole point of the tier is that the float vectors never ride
-    # through the candidate scan (review r8)
+    # through the candidate scan
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         *[w.alias(f"cw{j}") for j, w in enumerate(qw)],

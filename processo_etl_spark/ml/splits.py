@@ -288,8 +288,8 @@ def _mixture_plan_body(
         ).alias("_S")
     )
     share = F.lit(float(budget)) * F.col("_r") / F.col("_S")
-    # target_tokens floors the ROUND(·,6) quotient, not the raw one
-    # (ADVICE r8): the quotient's denominator _S is a value-sorted float
+    # target_tokens floors the ROUND(·,6) quotient, not the raw one:
+    # the quotient's denominator _S is a value-sorted float
     # fold, and a floor over the raw value flips on cross-build ULP
     # drift exactly when the quotient sits at an integer boundary — the
     # same hazard class the raw-double-fold guard bans for float
@@ -297,7 +297,7 @@ def _mixture_plan_body(
     # scale must dominate the ABSOLUTE drift at the share's magnitude
     # (~budget = 1e6 here): fold drift of a few ULPs relative (~1e-14)
     # is ~1e-8 absolute at 1e6, so scale 9's 5e-10 radius would NOT
-    # cover it (review r9) — scale 6's 5e-7 radius does, with decades
+    # cover it — scale 6's 5e-7 radius does, with decades
     # to spare.  The oracle mirrors floor(ROUND(·, 6)).
     return (
         per.crossJoin(F.broadcast(tot))

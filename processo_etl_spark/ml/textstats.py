@@ -347,8 +347,8 @@ def corpus_frequency_score(
     are summed as DECIMAL(38,0) (a 100 TB corpus puts freq ~1e11 × tf
     ~1e3 past int64) then emitted as DOUBLE.
     """
-    # Two independent explode passes, deliberately (r14 measured the
-    # alternatives): deriving freq from the (doc, term) tf partials —
+    # Two independent explode passes, deliberately (the alternatives
+    # were measured): deriving freq from the (doc, term) tf partials —
     # either persisted or via exchange reuse — reads/ships the WIDER
     # pair relation and lost 35–65% on the operator at sf0.1, because a
     # re-explode over the cached corpus is a near-free narrow pass while

@@ -130,7 +130,7 @@ def pagerank_distributed(
     iterations: int = 10,
     bit_deterministic: bool = True,
 ) -> DataFrame:
-    """Pregel-style distributed PageRank (VERDICT r4 #5): join + aggregate
+    """Pregel-style distributed PageRank: join + aggregate
     per superstep, the ``connected_components`` loop shape — NO
     driver-side node/edge collect, so the plan holds when the node set
     scales with the data (billion-node graphs), unlike
@@ -148,9 +148,9 @@ def pagerank_distributed(
     ``(rank·w)/out_w`` route along edges via ONE equi-join on src and
     combine per dst; the update is ``(1−d)/n + d·(S + dang/n)`` with
     the same bracketing as the driver twin.  ``localCheckpoint`` (the
-    superstep's single job) truncates lineage each round — r14 measured
-    the lazier alternatives (full unroll with exchange reuse;
-    persist-chained supersteps) and both LOST to the eager checkpoint
+    superstep's single job) truncates lineage each round — the lazier alternatives were
+    measured (full unroll with exchange reuse; persist-chained
+    supersteps) and both LOST to the eager checkpoint
     on fixed overhead, because the dangling-mass branch forks the
     lineage every superstep and nested cache materialization serializes
     the stage graph anyway.
@@ -163,7 +163,7 @@ def pagerank_distributed(
     self-edge per node in the static edge cache guarantees the combine
     covers every node, so the next superstep reads the scalar off the
     same broadcast it already ships — no separate dangling aggregate,
-    no second broadcast-exchange build per superstep (r15; the r14
+    no second broadcast-exchange build per superstep (the earlier
     shape spent 1 aggregate job + 1 broadcast build per superstep on
     it).  A 0.0 contribution term is an exact identity for both combine
     modes (the value-sorted fold starts at 0.0 and sorts the extra 0.0
@@ -201,7 +201,7 @@ def pagerank_distributed(
         def combine(c):
             return F.sum(c)
 
-    # Node universe + out-weights in ONE shuffle (r14: previously a
+    # Node universe + out-weights in ONE shuffle (previously a
     # distinct over the endpoint union PLUS a separate out-weight
     # groupBy PLUS a left join to flag dangling nodes — three exchanges
     # where one combinable aggregate suffices): every edge emits its src
@@ -210,7 +210,7 @@ def pagerank_distributed(
     # The raw edge relation is consumed TWICE (the fused node aggregate
     # below and the routed join) — un-persisted, its whole lineage (for
     # the bench graph: an orders scan plus a lineitem pre-aggregation)
-    # executed once per consumer (r15, measured ~0.9 s of the steady
+    # executed once per consumer (measured ~0.9 s of the steady
     # pass at sf0.1).  MEMORY_AND_DISK is the standard iterative-graph
     # edge-cache posture (GraphX persists the edge RDD); released at
     # function exit with the other statics.
@@ -235,7 +235,7 @@ def pagerank_distributed(
     flagged = node_info.select("node", (~has_out).alias("dangling"))
     n = node_info.count()
     base = (1.0 - damping) / n
-    # Vertex-mirroring dispatch (r14, the GraphX small-vertex-state
+    # Vertex-mirroring dispatch (the GraphX small-vertex-state
     # optimization): when the WHOLE rank vector fits under the broadcast
     # threshold, ship it to the edge partitions each superstep and keep
     # the edges partitioned by DST — the contribution join then streams
@@ -257,11 +257,11 @@ def pagerank_distributed(
     # re-exchanges the edges (measured 2× off the superstep at sf0.1).
     rt = edges.join(outs, "src").select("src", "dst", "w", "out_w")
     if broadcast_ranks:
-        # One zero-weight self-edge per node (broadcast mode only, r15):
+        # One zero-weight self-edge per node (broadcast mode only):
         # guarantees every node receives ≥ 1 contribution row, so the
         # superstep collapses to ONE join — the combine aggregate reads
         # the node's own dangling flag and the global dangling scalar
-        # off the self row's broadcast-side columns, and the r14 shape's
+        # off the self row's broadcast-side columns, and the earlier shape's
         # second join (flagged ⨝ sums) plus the per-superstep dangling
         # aggregate + broadcast-exchange build are gone.  The self
         # contribution is (rank·0)/1 = 0.0 — an exact identity for both
@@ -327,7 +327,7 @@ def pagerank_distributed(
             .drop(run)
         )
 
-    # Measured and rejected (r15): two-supersteps-per-checkpoint in
+    # Measured and rejected: two-supersteps-per-checkpoint in
     # broadcast mode (every other superstep left lazy — sound now that
     # the single-join shape references the previous rank state exactly
     # once, under its broadcast).  Interleaved min-of-7 at sf0.1: 3.59 s
@@ -383,7 +383,7 @@ def pagerank_distributed(
         # coalesce: with bit_deterministic=False the combine is F.sum,
         # which returns NULL (not 0.0) over an empty set — on a graph
         # with no dangling nodes that NULL would propagate through the
-        # rank update and wipe every rank after iteration 1 (ADVICE r5).
+        # rank update and wipe every rank after iteration 1.
         # The fold path already yields 0.0 on empty input.
         dang = ranks.filter("dangling").agg(
             F.coalesce(combine(F.col("rank")), F.lit(0.0)).alias("d")
@@ -477,16 +477,16 @@ def label_propagation(
     truncates lineage per round.  Votes are exact int64 sums, so any
     engine agrees bit-for-bit.
 
-    Vertex-mirroring dispatch (r15, ported from
+    Vertex-mirroring dispatch (ported from
     ``pagerank_distributed``): when the label vector fits under the
     broadcast threshold (probed with one ``approx_count_distinct`` over
     the raw endpoints, 80 B/row — pagerank's 64 B/row sizing plus a
     1.25× margin for the ±5 % probe error), the labels broadcast each
     round and the neighbor view persists partitioned by **node**, so
     the vote join streams the static cache and BOTH groupBys are
-    already node-clustered — a round runs with ZERO shuffle (the r14
+    already node-clustered — a round runs with ZERO shuffle (the earlier
     shape exchanged labels into the join plus two aggregate exchanges
-    per round).  Past the threshold the r14 layout stays: neighbor view
+    per round).  Past the threshold that layout stays: neighbor view
     partitioned by **nbr** (the join key), shuffled vote aggregation.
     The probe is a DISPATCH probe, as in ``pagerank_auto``: one eager
     ``approx_count_distinct(...).first()`` job runs while the plan is
@@ -495,7 +495,7 @@ def label_propagation(
     the plan.
     The seed's eager ``localCheckpoint`` is gone in both modes (it
     re-materialized a projection of the persisted neighbor view; the
-    r14 pagerank change measured that job as pure overhead).  Both
+    same change to pagerank measured that job as pure overhead).  Both
     layouts run identical exact-integer arithmetic, so the dispatch
     never changes a bit of output.
 
@@ -744,7 +744,7 @@ def kcore_peel(
     lineage per round.  Self-loops are dropped (a self-loop would give
     its node 2 phantom degrees and survive peeling forever).
 
-    Measured and rejected (r15, both on REST counters + interleaved
+    Measured and rejected (both on REST counters + interleaved
     min-of-5 at sf0.1): (a) explicit broadcast hints on the alive set's
     two semi-join references — AQE's runtime join selection ALREADY
     rewrites them to broadcast form when the materialized alive set is
@@ -754,7 +754,7 @@ def kcore_peel(
     (b) persisting the per-round alive set so its two semi-join builds
     share one degree aggregate — the per-round cache materialize +
     release churn cost more jobs than the duplicated aggregate saves
-    (25→43 jobs, wall 4.44→4.43 s — neutral).  The r14 shape stands.
+    (25→43 jobs, wall 4.44→4.43 s — neutral).  The current shape stands.
 
     Returns (node, degree): the endpoints of the surviving edge set
     with their degree AFTER the final round (if the fixpoint was

@@ -319,7 +319,7 @@ def grouped_exact_quantiles(
     picked = dedup_keep_first(walked, ["g", "q"], ["v"]).select(
         "g", "q", "k", F.col("v").alias("value")
     )
-    # Loud bracket-violation check (ADVICE r4): the ungrouped twin
+    # Loud bracket-violation check: the ungrouped twin
     # exact_quantiles_twopass raises RuntimeError when the sketch bracket
     # misses; here a miss would silently DROP the (group, q) row.  Every
     # (g, q) in the bracket spec must produce a pick (k ≥ 1 and groups
@@ -427,8 +427,17 @@ def grouped_topk(
     which cannot be re-evaluated as values, so the default never
     touches them).  Pass the row key explicitly when a cheaper or
     stabler salt exists; a salt CONSTANT within a group would put the
-    whole group in one bucket and restore the skew."""
+    whole group in one bucket and restore the skew.
+
+    Raises ``ValueError`` when ``df`` already has a ``rank_col`` column:
+    the rank would silently overwrite it."""
     from processo_etl_spark.ml.dedup import md5_long
+
+    if rank_col in df.columns:
+        raise ValueError(
+            f"grouped_topk: input already has a column {rank_col!r}; "
+            "pass another rank_col"
+        )
 
     if salt_key is not None:
         skc = (

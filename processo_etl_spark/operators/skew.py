@@ -64,7 +64,7 @@ def skew_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
     oracle-checkable: cov = √((K·Σc² − N²)) / N with that literal
     bracketing on both engines.  ``cov`` is emitted ROUND(·, 9): its
     K·Σc² − N² is a multiply-subtract an FMA-contracting engine build
-    can evaluate one ULP differently (the r7 drift lesson); the other
+    can evaluate one ULP differently (a drift seen on the driver); the other
     ratios are single correctly-rounded ops and stay raw."""
     counts = df.groupBy(F.col(key_col).alias("k")).agg(
         F.count(F.lit(1)).alias("c")

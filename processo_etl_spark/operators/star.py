@@ -11,7 +11,7 @@ row order).  Here the key is row_number-by-natural-key-order — contiguous
 1..N AND deterministic — computed by the two-phase distributed rank
 (operators/ranking.py: range-repartition → local rank → broadcast
 prefix-sum offsets), so there is NO single-partition window at any
-dimension size (r2: replaces the r1 global-window + 1M-row zipWithIndex
+dimension size (it replaces a global window + 1M-row zipWithIndex
 fallback; the fallback remains for order-insensitive bulk ids).
 
 All dimensions of a star can come from one aggregation

@@ -45,7 +45,8 @@ def q1_pricing_summary(spark, sf_dir):
     pipeline is one WholeStageCodegen span over a pruned parquet scan
     with the shipdate predicate pushed down.  Sums are exact decimal
     internally then DOUBLE out; averages are exact-sum-double ÷ count
-    (``avg_exact``) — the r2 hash-mismatch fix.
+    (``avg_exact``), because the driver hashes decimals differently
+    from DuckDB's.
     """
     li = t(spark, sf_dir, "lineitem")
     disc_price = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
@@ -250,7 +251,7 @@ def constraint_violation_count(spark, sf_dir):
 def rollup_revenue(spark, sf_dir):
     """Hierarchical subtotals — `rollup` (absent in reference, free in Spark).
 
-    Pre-aggregated to the finest grouping set FIRST (r14, guide §2.3
+    Pre-aggregated to the finest grouping set FIRST (guide §2.3
     "aggregate before you shuffle"): Spark plans rollup as
     Expand(3 grouping sets)→HashAggregate, tripling the partial-agg
     input at fact-table width; aggregating by (flag, status) first and
@@ -278,7 +279,7 @@ def rollup_revenue(spark, sf_dir):
 )
 def cube_counts(spark, sf_dir):
     """All grouping-set combinations — `cube`.  Pre-aggregated to the
-    finest grouping set first (r14, same lossless sum-of-counts
+    finest grouping set first (same lossless sum-of-counts
     re-aggregation as rollup_revenue) so the 4-way Expand runs over the
     ~dozen (status, priority) partials, not the fact rows."""
     base = (
@@ -303,10 +304,11 @@ def cube_counts(spark, sf_dir):
 def grouping_sets_revenue(spark, sf_dir):
     """Explicit GROUPING SETS (the general form rollup/cube specialize):
     per-status, per-priority, and grand-total revenue in one pass.
-    Exact decimal sum internally, DOUBLE out (r2 hash-mismatch fix)."""
+    Exact decimal sum internally, DOUBLE out (decimal outputs
+    hash-mismatch)."""
     view = internal("orders_gs")
     t(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    # Pre-aggregated to (status, priority) first (r14): the grouping-set
+    # Pre-aggregated to (status, priority) first: the grouping-set
     # Expand then runs over the handful of exact-decimal partials
     # instead of 3x the fact rows — sum-of-sums is lossless in decimal.
     return spark.sql(
@@ -374,7 +376,7 @@ def profile_lineitem(spark, sf_dir):
 )
 def approx_distinct_users(spark, sf_dir):
     """HLL++ approx_count_distinct — the 100 TB path for A5-style checks —
-    as a self-validating tolerance check (VERDICT r1 #3).
+    as a self-validating tolerance check.
 
     DuckDB's approx sketch differs bit-for-bit, so the query emits the
     EXACT distinct count (hash-comparable) plus ``within_tolerance`` =
@@ -409,7 +411,7 @@ def approx_distinct_users(spark, sf_dir):
 def quartiles_quantity_approx(spark, sf_dir):
     """A8's 100 TB path: single-pass approx_percentile (Greenwald-Khanna
     sketch, mergeable across partitions — no global sort, no second
-    pass) — as a self-validating tolerance check (VERDICT r1 #3).
+    pass) — as a self-validating tolerance check.
 
     Emits the EXACT interpolating quartiles (hash-comparable with the
     DuckDB oracle) plus ``within_tolerance``: each GK estimate within
@@ -620,7 +622,7 @@ def q17_small_quantity_revenue(spark, sf_dir):
     one extra pass over (the brand-pruned slice of) lineitem instead of
     a subquery per row; the brand filter broadcasts part and prunes both
     sides before the heavy join.  Exercises scalar-subquery
-    decorrelation, the remaining subquery family member r1 lacked.
+    decorrelation.
     """
     lv, pv = internal("lineitem_q17"), internal("part_q17")
     t(spark, sf_dir, "lineitem").createOrReplaceTempView(lv)
@@ -696,7 +698,8 @@ def q18_large_quantity_orders(spark, sf_dir):
     semi-join prunes orders AND lineitem before the final aggregate; the
     big fact shuffles once on l_orderkey and the exchange is reused.
     o_totalprice round-trips through DECIMAL(18,2) then DOUBLE on both
-    sides (r2 hash-mismatch fix: exact decimal internally, DOUBLE out)."""
+    sides (decimal outputs hash-mismatch: exact decimal internally,
+    DOUBLE out)."""
     o = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
     big = (

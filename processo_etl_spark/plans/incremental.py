@@ -135,7 +135,7 @@ def dedup_incremental_batch(spark, sf_dir):
     itself, and survivors' fingerprints are appended to the store.
 
     The fixture simulates the real ingest mix deterministically at
-    EVERY scale (review r11: a plain doc_id split left the anti-join
+    EVERY scale (a plain doc_id split left the anti-join
     vacuous — nothing ever straddled it): the store holds docs with
     doc_id % 5 != 0; the batch is the % 5 == 0 slice PLUS a re-crawl
     of the % 7 == 0 slice under fresh ids (+10^12).  Re-crawled docs

@@ -333,7 +333,7 @@ _BAND_VALUES = ", ".join(f"({b}, {s}, {m})" for b, s, m in _SIMHASH_BANDS)
 )
 def dedup_simhash_banded(spark, sf_dir):
     """SimHash near-dup pairs with GUARANTEED hamming ≤ 8 recall
-    (9-band pigeonhole — VERDICT r3 #7; see
+    (9-band pigeonhole; see
     ml/dedup.simhash_dedup_pairs_banded for why 9 bands, not 4
     rotated 16-bit prefixes).  Oracle mirrors the banding exactly."""
     return dedup.simhash_dedup_pairs_banded(
@@ -367,8 +367,7 @@ def similarity_topk_bruteforce(spark, sf_dir):
 
     Ranking uses the raw double zip_with/aggregate fold (replayed
     term-for-term by the oracle); the EMITTED cos is ROUND(·, 6) on
-    both sides per the raw-double-fold guard (grading.py — the r7
-    drift lesson: a raw multi-term fold output can differ at the last
+    both sides per the raw-double-fold guard (grading.py: a raw multi-term fold output can differ at the last
     ULP between DuckDB builds).
     """
     emb = t(spark, sf_dir, "embeddings")
@@ -417,7 +416,7 @@ def similarity_topk_lsh(spark, sf_dir):
     dimension windows), candidates = union of per-table bucket matches,
     exact cosine re-rank.
 
-    r1's single 6-bit table measured recall@5 of 0.05–0.30 — unusable;
+    A single 6-bit table measured recall@5 of 0.05–0.30 — unusable;
     8×4-bit tables measure 0.71 at sf0.01 while each probe still prunes
     ~15/16 of the corpus (total candidate budget probes/2^bits = 1/2).
     The oracle replicates the same candidate set as an OR of per-table
@@ -676,9 +675,8 @@ def dedup_semantic_kmeans(spark, sf_dir):
     """The paper's quantizer: k-means cells (shared with the IVF ANN
     index) + the same keep-lowest-id prune.
 
-    Partial certificate oracle (VERDICT r5 #6 — the last non-streaming
-    rows-only entry, upgraded on the text_compression_ratio precedent):
-    iterative k-means has no SQL twin, so the graded projection emits
+    Partial certificate oracle (on the text_compression_ratio
+    precedent): iterative k-means has no SQL twin, so the graded projection emits
     what IS externally assertable — the exact input count plus two
     guarantee booleans the oracle pins unconditionally:
     ``kept_nonempty`` (a prune may never empty the corpus) and
@@ -1236,7 +1234,7 @@ def multimodal_features(spark, sf_dir):
     handling — not the stubbed decode math.
 
     Output is FLATTENED to scalar rows ``(media_id, n_bytes,
-    feature_idx, value)`` via ``posexplode`` (VERDICT r5 #1): the
+    feature_idx, value)`` via ``posexplode``: the
     grading driver's pandas canonicalizer sorts with ``sort_values``,
     which throws ``unhashable type: 'list'`` on any array-typed column,
     so array outputs are banned registry-wide (check_oracles enforces
@@ -1267,7 +1265,7 @@ def multimodal_features(spark, sf_dir):
     """,
 )
 def multimodal_png_decode(spark, sf_dir):
-    """REAL image decode, hash-graded (VERDICT r4 #4): deterministic 8×8
+    """REAL image decode, hash-graded: deterministic 8×8
     grayscale PNGs (real DEFLATE streams, ml/png.encode_gray) are decoded
     back by the vendored stdlib codec and reduced to per-column mean
     intensities.  The pixel pattern is closed-form ((id·31 + r·7 + c·13)
@@ -1277,9 +1275,9 @@ def multimodal_png_decode(spark, sf_dir):
     Scale shape: two Arrow-batched mapInPandas stages, zero shuffles.
 
     Output is FLATTENED to scalar rows ``(media_id, feature_idx,
-    value)`` — the r5 driver ERR on this query was the pandas
-    canonicalizer choking on the ArrayType column, not a decode bug
-    (VERDICT r5 #1); arrays are now banned from every registry output.
+    value)`` — a driver ERR on this query was the pandas
+    canonicalizer choking on the ArrayType column, not a decode bug;
+    arrays are now banned from every registry output.
     """
     from processo_etl_spark.ml import multimodal
 
@@ -1373,8 +1371,8 @@ def multimodal_audio_features(spark, sf_dir):
     """,
 )
 def multimodal_binary_ingest(spark, sf_dir):
-    """REAL-FILE media ingestion, end-to-end and hash-graded (VERDICT r6
-    #5): a deterministic 64-file PNG corpus is materialized on local
+    """REAL-FILE media ingestion, end-to-end and hash-graded: a
+    deterministic 64-file PNG corpus is materialized on local
     disk at plan time (ml/multimodal.write_png_corpus — idempotent,
     atomic renames), scanned with Spark's ``binaryFile`` source via
     :func:`read_binary_media`, keyed by the id embedded in the filename
@@ -1482,7 +1480,7 @@ def multimodal_phash_dedup(spark, sf_dir):
 )
 def similarity_topk_ivf(spark, sf_dir):
     """IVF-Flat ANN — the engine's DEFAULT similarity-search scale path —
-    emitted as a self-validating tolerance check (VERDICT r1 #3/#5).
+    emitted as a self-validating tolerance check.
 
     The k-means quantizer isn't SQL-expressible, so instead of raw
     neighbor rows the query measures itself against exact brute-force
@@ -1775,10 +1773,9 @@ def drift_chi2_sources(spark, sf_dir):
     reference slice and the src10-src19 candidate slice —
     ml/drift.chi2_token_drift.  Transcendental-free (no PSI/KL ``ln``).
 
-    Third-round hardening (VERDICT r8 #1): the r7 (raw fold) and r8
-    (ROUND(·,6)) emissions BOTH hash-failed on the driver despite
-    bit-identical local Spark↔DuckDB results, so the hashed output is
-    now 100% float-free — ``chi2_micros`` is the exact integer
+    Hardening: the raw-fold and the ROUND(·,6) emissions BOTH
+    hash-failed on the driver despite bit-identical local Spark↔DuckDB
+    results, so the hashed output is now 100% float-free — ``chi2_micros`` is the exact integer
     Σ_b (10⁶·d_b²) DIV (na·nb·rb) with d_b = ca·nb − na·cb (integer
     multiply + integer division, deterministic on any engine; the
     fixed-point-EWMA precedent), on decimal(38,0) / HUGEINT internals
@@ -2683,7 +2680,7 @@ def mixture_token_plan(spark, sf_dir):
     # guard: the normalizer S is a value-sorted fold of per-source
     # sqrt terms; both are O(1)-magnitude values, where scale 9's
     # 5e-10 radius dominates the ~1e-14-relative drift); target_tokens
-    # floors the ROUND(·,6) quotient on both sides (ADVICE r8 — a raw
+    # floors the ROUND(·,6) quotient on both sides (a raw
     # floor is the same fold hazard wearing an integer type; scale 6
     # because the snap radius must dominate ABSOLUTE drift at the
     # quotient's ~1e6 magnitude).
@@ -3058,7 +3055,7 @@ def text_compression_ratio(spark, sf_dir):
     zlib(text)/len(text) per document via Arrow-batched mapInPandas —
     the justified-Python hot path (DEFLATE has no Column form).
 
-    Partial oracle (VERDICT r4 #8): DuckDB ships no zlib, so the graded
+    Partial oracle: DuckDB ships no zlib, so the graded
     projection emits what IS predictable without one — the exact utf-8
     byte count plus two guarantee booleans the oracle can assert
     unconditionally: ``ratio_defined`` (non-empty input) and

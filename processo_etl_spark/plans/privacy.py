@@ -1,6 +1,4 @@
-"""Privacy-audit queries (quality/privacy.py) — registry-TAIL module
-(added mid-r7, after the r7 window was pre-verified; see the
-registry-tail note on ``_PLAN_MODULES``).
+"""Privacy-audit queries (quality/privacy.py).
 
 The quasi-identifier projection for all three heads is the classic
 linkage-attack triple over ``customer``: (nation, market segment,
@@ -130,7 +128,7 @@ def dp_noisy_counts(spark, sf_dir):
     Dwork et al. 2006) over (nation, market segment): exact counts plus
     centered Binomial(60, 1/2) noise derived from the md5 of the
     NULL-SAFELY encoded group identity + salt (each column coalesces
-    NULL to a chr(0) sentinel before concat — ADVICE r7), so the
+    NULL to a chr(0) sentinel before concat), so the
     oracle replays every coin — the release step that completes the
     privacy family (k/l AUDIT → suppression ENFORCEMENT → noisy
     RELEASE).  The fixture salt stands in for the production secret

@@ -1,6 +1,4 @@
-"""Data-contract profiling and pipeline-analytics heads — registry-TAIL
-module (added mid-r8, after the r8 window was pre-verified; see the
-registry-tail note on ``_PLAN_MODULES``): candidate-key /
+"""Data-contract profiling and pipeline-analytics heads: candidate-key /
 functional-dependency audits and categorical concentration
 (quality/profile.py), small-file compaction planning
 (operators/maintenance.py), k-core graph degeneracy
@@ -851,7 +849,7 @@ def eval_agreement_kappa(spark, sf_dir):
     attach is the allow-listed linear shape.  At 100 TB the whole
     reduction after the first groupBy touches ≤ 9 rows.
 
-    Magnitude bound (review r11, same discipline as the drift_chi2
+    Magnitude bound (same discipline as the drift_chi2
     guard): kappa_den = N² − pe_num requires N ≤ ⌊√(2⁶³−1)⌋ ≈ 3.037e9
     docs to fit BIGINT — beyond that Spark's non-ANSI long multiply
     would WRAP silently while the DuckDB oracle raises.  The guard

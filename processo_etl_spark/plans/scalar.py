@@ -344,7 +344,8 @@ def region_name_valid(spark, sf_dir):
 )
 def hour_decimal_avg(spark, sf_dir):
     """C17 (Análise.ipynb:~1113): hour + minute/60 arithmetic — exact
-    decimal sums internally, DOUBLE out (r2 hash-mismatch fix)."""
+    decimal sums internally, DOUBLE out (the driver hashes decimals
+    differently from DuckDB's)."""
     ev = t(spark, sf_dir, "events")
     hd = derive.hour_decimal("ts").cast("decimal(12,6)")
     return ev.groupBy("event_type").agg(

@@ -342,11 +342,11 @@ def q3_shipping_priority(spark, sf_dir):
     o = o_raw.filter(F.col("o_orderdate") < cutoff)
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     revenue = dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
-    # Explicit broadcast of the doubly-filtered orders⨝customer side
-    # (r14): post-filter size estimates made the planner broadcast the
+    # Explicit broadcast of the doubly-filtered orders⨝customer side:
+    # post-filter size estimates made the planner broadcast the
     # ~6× larger shipdate-filtered lineitem side instead (guide §3.1 —
     # estimates are often wrong after filters; hint the side you know
-    # is small).  Scale gate (r15, ADVICE r14): a blanket hint bypasses
+    # is small).  Scale gate: a blanket hint bypasses
     # autoBroadcastJoinThreshold and would OOM on a huge orders table,
     # so it only applies while a conservative bound on the broadcast
     # side fits the threshold — raw orders scan bytes (file-size

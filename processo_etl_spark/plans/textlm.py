@@ -5,7 +5,7 @@ text-analysis family extends dag.py's quality checks to LM statistics;
 no reference counterpart — extension surface like ml/textstats.py).
 
 All three queries derive from the tokenize-once ``plans/common.corpus``
-relation (VERDICT r4 #7), so they share the normalize→split pass with
+relation, so they share the normalize→split pass with
 the curation heads instead of re-scanning raw text.
 
 Oracle-parity design: every emitted double is a single IEEE expression
@@ -171,7 +171,7 @@ def collocations_lift_topk(spark, sf_dir):
     so ranking and hash agree bit-for-bit.  Top-100 with full
     tie-break = TakeOrderedAndProject.
     """
-    # Both count relations PERSIST (r14): ``nab`` feeds the pair join
+    # Both count relations PERSIST: ``nab`` feeds the pair join
     # AND the t_bg total, ``uni`` is referenced three times (t_uni, the
     # two per-side joins) — un-persisted, the bigram expansion and the
     # unigram groupBy re-executed per reference.
@@ -523,7 +523,7 @@ def heaps_vocab_growth(spark, sf_dir):
         "doc_id",
         F.expr("size(filter(toks, t -> t != ''))").alias("ntoks"),
     )
-    # Both multi-referenced relations PERSIST (r14): ``ranked`` feeds the
+    # Both multi-referenced relations PERSIST: ``ranked`` feeds the
     # boundary lookup AND the tokens-seen branch, ``bounds`` feeds vocab,
     # seen, and the final projection — un-persisted, each reference
     # re-executed the range-partition window (three extra sorts at

@@ -141,7 +141,7 @@ def window_revenue_deciles(spark, sf_dir):
     Exact NTILE(10) semantics via the two-phase distributed rank
     (operators/ranking.py): range-repartition → local rank → broadcast
     prefix-sum offsets.  No unpartitioned window, no single-partition
-    exchange — the r1 ``WindowExec: No Partition Defined`` scale-killer
+    exchange — the ``WindowExec: No Partition Defined`` scale-killer
     is gone while the oracle (true SQL NTILE) stays hash-green.  The
     global-ntile twin below is the exact-parity reference variant.
     """
@@ -207,7 +207,7 @@ def window_trailing_24h_value(spark, sf_dir):
     Spark's rangeBetween is numeric, so the frame runs over epoch
     MICROseconds — full timestamp precision, so frame membership at the
     24h boundary matches the oracle's INTERVAL frame even for sub-second
-    timestamps (ADVICE r1: whole-second unix_timestamp would diverge
+    timestamps (whole-second unix_timestamp would diverge
     there).  Ties in ts share the frame, unlike a rows frame.  One
     shuffle on user_id; frame state is bounded by events-per-24h, not
     history length."""

@@ -130,7 +130,7 @@ def dp_binomial_noisy_counts(
     The hash-derived coins make the release REPLAYABLE (the testing and
     oracle-grading requirement; DuckDB re-derives every noisy count
     bit-for-bit).  ``salt`` is REQUIRED and must be a fresh secret per
-    release (ADVICE r7): the noise depends only on (group identity,
+    release: the noise depends only on (group identity,
     salt), so reusing one salt across releases of neighboring datasets
     lets differencing cancel the noise exactly, voiding the DP
     guarantee.  The plan shape is identical either way, and DP holds
@@ -147,7 +147,7 @@ def dp_binomial_noisy_counts(
     """
     from processo_etl_spark.ml.dedup import md5_long
 
-    # NULL-safe group encoding (ADVICE r7): concat_ws SKIPS nulls, so
+    # NULL-safe group encoding: concat_ws SKIPS nulls, so
     # ('A', NULL) and (NULL, 'A') would share one noise key (correlated
     # noise).  Each column encodes NULL as a chr(0)-prefixed sentinel
     # no real string equals (chr(0) never survives text ingestion).

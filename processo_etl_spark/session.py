@@ -335,7 +335,7 @@ def get_spark(
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Whole-stage-codegen COMPILE cache (r15): the default 100
+        # Whole-stage-codegen COMPILE cache: the default 100
         # entries thrash on any long-lived session running this
         # engine's registry (37 headline / 296 registered queries hold
         # far more distinct codegen units), so every re-run recompiled

@@ -56,8 +56,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file source wants a directory: stream the sf_dir with a glob
     # pinned to the events file.  ts may arrive as a nanosecond long
     # (nanosAsLong — see catalog.load) or as a native timestamp depending
-    # on the testdata generation; only the bigint form is rebuilt
-    # (VERDICT r3 #5).  Watermarks require a timestamp type; the session
+    # on the testdata generation; only the bigint form is rebuilt.
+    # Watermarks require a timestamp type; the session
     # tz is pinned UTC.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(catalog.table_path(sf_dir, "events"))
@@ -545,7 +545,7 @@ def run_sessionize_tws_availablenow(spark: SparkSession, sf_dir: str) -> DataFra
 def run_sessionize_tws_or_twin_availablenow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The un-gated TWS entry point (VERDICT r4 #6): run the
+    """The un-gated TWS entry point: run the
     transformWithStateInPandas sessionizer when its protobuf runtime
     exists, else degrade TRANSPARENTLY to the applyInPandasWithState
     twin — the two are row-identical on any input split (same
@@ -594,8 +594,8 @@ def ewma_stateful(
     everything settles the streaming ewma IS that batch ewma
     bit-for-bit (asserted across out-of-order micro-batches in
     tests/test_streaming.py).  The oracle-graded batch HEAD
-    (``ewma_user_value``) runs the fixed-point integer variant since
-    r8, which agrees with this float recurrence only to its
+    (``ewma_user_value``) runs the fixed-point integer variant,
+    which agrees with this float recurrence only to its
     < 4·10⁻⁸ quantization bias — twin equivalence is against the
     float operator, not the graded head.
     """

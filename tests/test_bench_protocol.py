@@ -43,9 +43,9 @@ def test_warm_dir_one_rule_for_testdata_and_generated_scales(tmp_path):
 def test_printed_line_fits_the_stdout_tail(spark):
     """The printed line must survive a ~2000-char stdout tail with the
     full env fingerprint.  The artifact has the shape of a calib-gated
-    run with a stall retry and a regression-gate reading (the widest
-    committed line, BENCH_quiet_r15.json, printed 1,818 chars before the
-    fingerprint grew its session fields)."""
+    run against a same-host baseline, with a stall retry and a
+    regression-gate reading (the widest stored line printed 1,818 chars
+    before the fingerprint grew its session fields)."""
     env = bench._env_fingerprint(spark)
     for key in ("master", "parallelism", "SPARK_GRAFT_CPUS", "driver_memory", "java_version"):
         assert key in env
@@ -72,11 +72,11 @@ def test_printed_line_fits_the_stdout_tail(spark):
         "env": env,
         "queries_cold": per_query,
         "calib_unstable": False,
+        "blessed_value": 40.658,
         "vs_blessed_raw": 1.123,
         "vs_blessed_normalized": 1.123,
         "perf_slow_vs_blessed": {"multimodal_png_decode": 2.04},
-        "perf_gate_prior_round": 15,
-        "perf_gate_prior_artifact": "BENCH_quiet_r15.json",
+        "perf_gate_prior": 44.321,
     }
     line = bench._printed_line(full)
     assert len(line) < 2000, len(line)

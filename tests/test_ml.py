@@ -157,6 +157,16 @@ def test_connected_components_long_chain(spark):
     assert len(out) == 9
 
 
+def test_connected_components_raises_when_the_bound_cuts_it_short(spark):
+    # A label moves one hop per round, so a 61-node path needs 60 rounds.
+    # Stopped at the default 20, its labels would read as 41 clusters.
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], ["id_a", "id_b"]
+    )
+    with pytest.raises(ValueError, match="max_iterations=20"):
+        dedup.connected_components(pairs)
+
+
 def test_gopher_flags_and_pii(spark):
     df = spark.createDataFrame(
         [
@@ -426,6 +436,17 @@ def test_scd2_history_intervals(spark):
             assert a["valid_to"] == b["valid_from"]  # seamless intervals
             assert a["event_type"] != b["event_type"]  # runs are maximal
         assert runs[-1]["valid_to"] is None  # current version open-ended
+
+
+def test_scd2_history_refuses_a_caller_version_column(spark):
+    from processo_etl_spark.operators.temporal import scd2_history_from_log
+
+    ev = spark.createDataFrame(
+        [(1, "view", 1, 1, "v7")],
+        ["user_id", "event_type", "ts", "event_id", "version"],
+    )
+    with pytest.raises(ValueError, match="'version'"):
+        scd2_history_from_log(ev, "user_id", "event_type", "ts", "event_id")
 
 
 def test_registered_lsh_config_recall_floor(spark):

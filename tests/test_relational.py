@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from processo_etl_spark.operators import relational, star
@@ -398,3 +399,13 @@ def test_grouped_topk_default_salt_handles_sortorder_columns(spark):
         .filter(F.col("rk") <= 3)
     )
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
+
+
+def test_grouped_topk_refuses_a_caller_rank_column(spark):
+    from processo_etl_spark.operators import ranking
+
+    df = spark.createDataFrame([("g", 1, 9)], "g string, id long, rk long")
+    with pytest.raises(ValueError, match="'rk'"):
+        ranking.grouped_topk(df, ["g"], [F.asc("id")], k=1)
+    out = ranking.grouped_topk(df, ["g"], [F.asc("id")], k=1, rank_col="pos")
+    assert [tuple(r) for r in out.collect()] == [("g", 1, 9, 1)]

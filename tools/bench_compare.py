@@ -3,12 +3,11 @@ environment fingerprints side by side.
 
 ``python tools/bench_compare.py OLD.json NEW.json [top_n]``
 
-Reads the full artifacts (BENCH_last_run.json / BENCH_local.json /
-BENCH_r*.json — the driver-recorded files hold the compact line under
-``parsed``, handled here).  The env fingerprint (loadavg, memory, JVM
-count, calibration microbenchmarks — bench.py since r7) is what turns a
-"+16% across the board" into either "host was loaded, calibration moved
-the same way" or "same machine state, so it's the code" in one read.
+Reads the artifacts bench.py writes (BENCH_last_run.json, or the blessed
+BENCH_local.json).  The env fingerprint (loadavg, memory, JVM count,
+calibration microbenchmarks) is what turns a "+16% across the board"
+into either "host was loaded, calibration moved the same way" or "same
+machine state, so it's the code" in one read.
 """
 
 from __future__ import annotations
@@ -19,10 +18,7 @@ import sys
 
 def load(path: str) -> dict:
     with open(path) as fh:
-        d = json.load(fh)
-    if "queries" not in d and isinstance(d.get("parsed"), dict):
-        d = d["parsed"]  # driver BENCH_r*.json wrapper
-    return d
+        return json.load(fh)
 
 
 def main() -> int:
@@ -34,7 +30,7 @@ def main() -> int:
         if a and b:
             print(f"{label:>7}: {a:8.2f} -> {b:8.2f}  ({(b - a) / a:+.1%})")
 
-    # Calibration-normalized ratio (VERDICT r10 #6): divide the raw
+    # Calibration-normalized ratio: divide the raw
     # steady-total ratio by the CPU-calibration ratio so host slowdown
     # cancels mechanically.  calib_cpu_2m_ms is a fixed single-thread
     # 2M-iteration microbench recorded by bench.py on the same host
@@ -45,9 +41,9 @@ def main() -> int:
     def _calib(art: dict):
         """Mean of the start/end calibration samples — the SAME estimator
         bench.py uses for vs_blessed_normalized, so both tools print
-        identical ratios for the same artifacts (review r11: the mean
-        and the start-only sample can disagree by >50% on a host whose
-        speed swings mid-run)."""
+        identical ratios for the same artifacts (the mean and the
+        start-only sample can disagree by >50% on a host whose speed
+        swings mid-run)."""
         e = art.get("env") or {}
         c1 = e.get("calib_cpu_2m_ms")
         c2 = e.get("calib_cpu_2m_ms_after", c1)
@@ -87,7 +83,7 @@ def main() -> int:
         for k in sorted(set(eo) | set(en)):
             print(f"  {k:<22} {eo.get(k)!s:>22} | {en.get(k)!s}")
     else:
-        print("\n(no env fingerprint in either artifact — pre-r7 files)")
+        print("\n(no env fingerprint in either artifact)")
     return 0
 
 

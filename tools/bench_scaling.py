@@ -1,4 +1,4 @@
-"""Larger-SF scaling spot-bench (VERDICT r14 #4): the headline bench at
+"""Larger-SF scaling spot-bench: the headline bench at
 sf0.1 sits at the ~0.2-0.5 s per-query job-scheduling floor, so its
 8-core/32-core ratios measure fixed overhead, not parallel code.  This
 tool times the heaviest headline queries at a LARGER scale factor at two
@@ -31,10 +31,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The heaviest headline queries by driver-measured share (BENCH_r14),
-# spanning the suite's axes: the Pregel graph loop, the Bloom
-# decontamination probe, the ExactSubstr gram pipeline, exact-decimal
-# TPC-H aggregation, and the 5-dimension broadcast star join.
+# Heavy headline queries spanning the suite's axes: the Pregel graph
+# loop, the Bloom decontamination probe, the ExactSubstr gram pipeline,
+# exact-decimal TPC-H aggregation, and the 5-dimension broadcast star
+# join.  In the blessed BENCH_local.json (4 vCPU, sf0.1) the steady pass
+# ranks four of them in its top five by share (pagerank 17.9%, bloom
+# 5.1%, q5 4.1%, q1 3.5%; dedup_semantic_cells 3.8% is the fifth) and
+# dedup_duplicate_spans ninth at 3.3%; the cold pass ranks it fourth.
 DEFAULT_QUERIES = [
     "graph_pagerank_distributed",
     "decontaminate_bloom",

@@ -40,11 +40,11 @@ def norm_cell(v):
 def decimal_cast_hazards(oracle_sql: str) -> list[str]:
     """Flag ORACLE-side decimal CASTs whose operand isn't ROUNDed.
 
-    The r1 driver hash mismatches came from exactly this shape: tie
+    Driver hash mismatches came from exactly this shape: tie
     rounding of a raw double cast to DECIMAL is engine/version-dependent
     on the driver's (version-unknown) DuckDB, while
     ``CAST(ROUND(x, s) AS DECIMAL)`` is stable because the data is never
-    near a tie at its intent scale (ADVICE r1).  The Spark side is
+    near a tie at its intent scale.  The Spark side is
     version-pinned and deliberately uses a plain cast (plans/common.dec),
     so the scan targets the oracle SQL text, where the hazard lives.
     """
@@ -69,7 +69,7 @@ from processo_etl_spark.grading import output_violations  # noqa: E402
 def hugeint_cols(columns, types) -> list[str]:
     """Result columns DuckDB typed as HUGEINT/UHUGEINT (int128).
 
-    r9 conviction: the grading hasher canonicalizes int128 differently
+    The grading hasher canonicalizes int128 differently
     from Spark LongType, and the local DuckDB compare can't see it — so
     the ban is structural on the oracle's result schema, mirroring the
     DecimalType output ban."""
@@ -80,7 +80,7 @@ def driver_canon_probe(cols, rows) -> str | None:
     """Emulate the grading driver's pandas canonicalization; return an
     error string if it would crash.
 
-    The r5 lesson: this harness normalizes cells itself (``norm_cell``
+    This harness normalizes cells itself (``norm_cell``
     tuple-izes lists), but the DRIVER canonicalizes with a raw pandas
     ``DataFrame(...).sort_values(by=all columns)`` — which throws on
     unhashable cells (lists/dicts) and on unorderable mixed-type object
@@ -102,7 +102,7 @@ def driver_canon_probe(cols, rows) -> str | None:
 def _quantize12_cell(c):
     """Re-round a norm_cell tag to 12 significant digits, RECURSIVELY.
 
-    ADVICE r10: float cells nested inside array columns are tagged
+    Float cells nested inside array columns are tagged
     ("l", (inner tags...)) by norm_cell — quantizing only top-level
     ("f", ...) tags would leave an array<double> output failing on
     1-ulp DECIMAL→DOUBLE cast noise at stress scale (a false FAIL).
@@ -131,7 +131,7 @@ def table_multiset(cols, rows, quantize: bool = False):
 def main() -> int:
     argv = [a for a in sys.argv[1:] if a not in ("--json", "--quantize12")]
     write_json = "--json" in sys.argv[1:]
-    # --quantize12 (r10, sf2.5 stress conviction): round float cells to
+    # --quantize12 (an sf2.5 stress finding): round float cells to
     # 12 significant digits before the multiset compare.  DuckDB's
     # DECIMAL→DOUBLE cast double-rounds (int128→double, then the scale
     # division) and lands 1 ulp off the correctly-rounded value once the
@@ -193,7 +193,7 @@ def main() -> int:
             continue
         try:
             rel = con.sql(oracles[name])
-            # HUGEINT ban (r9 conviction, VERDICT r9 #4): the grading
+            # HUGEINT ban: the grading
             # hasher canonicalizes DuckDB int128 outputs differently
             # from Spark LongType, and the divergence is specific to
             # the grading environment — the local DuckDB compare below

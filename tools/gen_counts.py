@@ -1,7 +1,7 @@
-"""Single source of truth for registry counts in the docs (VERDICT r4 #9).
+"""Single source of truth for registry counts in the docs.
 
 The docs in ``DOCS`` state the registered-query / oracle / test counts;
-through r4 they were hand-maintained and drifted twice despite "sync
+once they were hand-maintained and drifted twice despite "sync
 counts" commits.  This tool derives the counts from
 ``plans.all_queries()`` / ``plans.all_oracles()`` and the test files and
 rewrites every ``N registered queries`` / ``N queries, M
@@ -28,8 +28,8 @@ DOCS = ("README.md", "COVERAGE.md", "SURVEY.md", ".claude/skills/verify/SKILL.md
 
 def count_tests() -> int:
     """Number of pytest test functions/methods under tests/ — the
-    mechanical source for every '(N tests)' phrase in the docs (ADVICE
-    r9: the hand-maintained counts drifted to three different values)."""
+    mechanical source for every '(N tests)' phrase in the docs (the
+    hand-maintained counts drifted to three different values)."""
     n = 0
     for p in sorted((ROOT / "tests").glob("test_*.py")):
         n += len(re.findall(r"^\s*def (test_\w+)", p.read_text(), re.M))

@@ -9,7 +9,7 @@ tiny fixed dimensions (region, nation) are copied verbatim and their FK
 columns (nationkey/regionkey) are NOT shifted, so each copy joins into
 the same 25-nation world exactly like the base data.
 
-Purpose (VERDICT r6 #7): a spot sweep of the most scale-sensitive
+Purpose: a spot sweep of the most scale-sensitive
 queries at ~5× the driver's bench scale — numeric edges (corr_matrix's
 catastrophic-cancellation class) and plan cliffs (broadcast→shuffle
 flips, skew) historically surfaced only on the 10× jump from sf0.01 to

@@ -11,7 +11,7 @@ over that steady run — jobs, complete stages, their tasks, shuffle
 read/write and input bytes, from Spark's in-process status store.  Wall
 clock on a shared host swings with steal bursts; these counts do not.
 ``repeats`` > 1 adds ``steady_samples`` and their ``steady_min``.
-The r14/r15 before/after plan dumps are in git history at c57a332.
+Earlier before/after plan dumps are in git history at c57a332.
 """
 
 from __future__ import annotations
