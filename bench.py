@@ -66,8 +66,9 @@ HEADLINE = (
     "snapshot_diff_orders",
     "sequence_double_click_purchase",
     "skew_report_events_user",
-    # Distributed Pregel PageRank and the hash-graded real PNG decode
-    # (vendored stdlib codec).
+    # Distributed Pregel PageRank (the graded plan, exact integer
+    # combine; no bench-only variant) and the hash-graded real PNG
+    # decode (vendored stdlib codec).
     "graph_pagerank_distributed",
     "multimodal_png_decode",
     # Statistical-LM analytics heads (plans/textlm, shared corpus).
@@ -75,30 +76,6 @@ HEADLINE = (
     "heaps_vocab_growth",
 )
 
-
-# Bench-only plan overrides: the graded registry row
-# keeps oracle-parity semantics; the benched variant drops parity-only
-# costs that a production run would not pay.  One entry today:
-# graph_pagerank_distributed benches with plain map-side-combinable
-# F.sum (bit_deterministic=False — the documented 100 TB posture,
-# tested on dangling graphs) instead of the value-sorted fold the
-# DuckDB bit-exact oracle requires.  Kept because the fold costs far
-# more than the noise: sf0.1, 4 vCPU / 15.7 GB, 2026-10-17, 9 interleaved
-# steady pairs: 5.66 s median (min 4.61) fold vs 3.89 s (min 2.80) plain,
-# +46%, fold slower in every pair; cold 7.69 vs 4.39 s.
-def _pagerank_plain(spark, sf_dir):
-    from processo_etl_spark.operators import graph
-    from processo_etl_spark.plans.events import pagerank_order_graph_edges
-
-    return graph.pagerank_distributed(
-        pagerank_order_graph_edges(spark, sf_dir),
-        damping=0.85,
-        iterations=3,
-        bit_deterministic=False,
-    )
-
-
-BENCH_OVERRIDES = {"graph_pagerank_distributed": _pagerank_plain}
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -108,13 +85,6 @@ LAST_RUN = os.path.join(ROOT, "BENCH_last_run.json")  # gitignored
 
 
 # The run protocol, shared with tools/profile_queries.py and bench_scaling.py.
-
-
-def resolve(names) -> dict:
-    """Registry names → the callables a measurement runs, in order: the
-    bench override where one exists, else the registry query."""
-    queries = plans.all_queries()
-    return {n: BENCH_OVERRIDES.get(n) or queries[n] for n in names}
 
 
 def warm_dir(sf_dir: str) -> str:
@@ -395,7 +365,8 @@ def main() -> int:
     blessed = blessed if _same_host(blessed, sf_val, env) else None
     prior = prior if _same_host(prior, sf_val, env) else None
 
-    fns = resolve(HEADLINE)
+    queries = plans.all_queries()
+    fns = {n: queries[n] for n in HEADLINE}
     # A warm-up at sf0.001 is not enough: AQE re-plans at the target
     # scale, so the first sf0.1 execution still pays whole-stage-codegen
     # compile + JIT for the plans AQE actually picks (measured:

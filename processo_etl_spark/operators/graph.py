@@ -10,20 +10,52 @@ whose NODE set scales with the data — e.g. document near-dup graphs —
 the distributed iterative template is ``ml/dedup.connected_components``;
 this operator is the small-aggregated-graph complement.)
 
-Bit-determinism (oracle replays every double): per-node incoming
-contributions are summed as a LEFT FOLD over the VALUE-SORTED list
-(Python ``sorted`` + fold = DuckDB ``list_reduce(list_sort(...))`` =
-the same IEEE sequence), and every arithmetic step mirrors the oracle's
-operator order exactly.  Dangling-node mass is redistributed uniformly
-each iteration, so ranks always sum to 1.
+Bit-determinism (oracle replays every double): every sum of doubles —
+a node's incoming contributions, the dangling mass — is an EXACT
+integer sum, ``sum(floor(x·2^52)) / 2^52`` (:func:`_exact_sum`).
+Integer addition does not depend on order, so the same bits come out
+on any partitioning, in either distributed layout, in Python and in
+DuckDB; every other arithmetic step mirrors the oracle's operator
+order exactly.  Dangling-node mass is redistributed uniformly each
+iteration, so ranks sum to 1 up to the truncation (at most one 2^-52
+quantum per summed term, per iteration).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from processo_etl_spark.columns import internal
+
+# 2^52: a term x in [0, 2) maps to the integer floor(x·2^52) < 2^53,
+# and the scaling itself is exact (a power of two).
+_SCALE = 4503599627370496.0
+
+
+def _exact_sum(c, over=None):
+    """The order-free exact combine over a double column (as a window
+    aggregate when ``over`` is given): each term is truncated to a
+    multiple of 2^-52 and summed as a long.  With non-negative weights
+    every term is at most its source's rank and the ranks sum to about
+    1, so a sum stays below 2^53 and the long→double conversion is
+    exact.  NULL over an empty set, like ``F.sum``."""
+    total = F.sum(F.floor(c * F.lit(_SCALE)))
+    if over is not None:
+        total = total.over(over)
+    return total / F.lit(_SCALE)
+
+
+def _exact_sum_py(xs) -> float:
+    """:func:`_exact_sum` in Python, the same bits (0.0 when empty)."""
+    return sum(math.floor(x * _SCALE) for x in xs) / _SCALE
+
+
+def _negative_weight(w) -> ValueError:
+    return ValueError(
+        f"pagerank: edge weight {w} is negative; weights must be >= 0"
+    )
 
 
 def transition_edges(
@@ -53,16 +85,18 @@ def pagerank_from_edges(
 ) -> dict[str, float]:
     """Fixed-iteration power method on the (tiny) aggregated graph.
 
-    Weights must be non-negative; a node whose out-weights sum to 0
-    is dangling, the same as a node without out-edges.  Every float op
-    mirrors the SQL oracle exactly:
-    ``contrib = (rank * w) / out`` left-associated, per-node sums are
-    value-sorted left folds, and the update is
+    Weights must be non-negative (a negative one raises ``ValueError``);
+    a node whose out-weights sum to 0 is dangling, the same as a node
+    without out-edges.  Every float op mirrors the SQL oracle exactly:
+    ``contrib = (rank * w) / out`` left-associated, per-node and
+    dangling sums are :func:`_exact_sum_py`, and the update is
     ``(1−d)/n + d·(S + dang/n)`` with that literal bracketing.
     """
     n = float(len(nodes))
     out: dict[str, float] = {}
     for s, _, w in edges:
+        if w < 0:
+            raise _negative_weight(w)
         out[s] = out.get(s, 0.0) + float(w)
     # a node whose out-weights sum to 0 is dangling, like a sink
     out = {s: w for s, w in out.items() if w != 0.0}
@@ -73,17 +107,11 @@ def pagerank_from_edges(
         contribs: dict[str, list[float]] = {v: [] for v in nodes}
         for s, d_, w in edges:
             contribs[d_].append((rank[s] * float(w)) / out[s])
-        dang_terms = sorted(rank[v] for v in nodes if v not in out)
-        dang = 0.0
-        for t in dang_terms:
-            dang = dang + t
-        new = {}
-        for v in nodes:
-            s_ = 0.0
-            for c in sorted(contribs[v]):
-                s_ = s_ + c
-            new[v] = base + damping * (s_ + dang / n)
-        rank = new
+        dang = _exact_sum_py(rank[v] for v in nodes if v not in out)
+        rank = {
+            v: base + damping * (_exact_sum_py(contribs[v]) + dang / n)
+            for v in nodes
+        }
     return rank
 
 
@@ -128,7 +156,6 @@ def pagerank_distributed(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 10,
-    bit_deterministic: bool = True,
 ) -> DataFrame:
     """Pregel-style distributed PageRank: join + aggregate
     per superstep, the ``connected_components`` loop shape — NO
@@ -136,14 +163,15 @@ def pagerank_distributed(
     scales with the data (billion-node graphs), unlike
     ``pagerank_from_edges``' driver power method.
 
-    ``edges`` is (src, dst, w), with NON-NULL, NON-NEGATIVE weights as
-    a precondition: the fused node aggregate classifies a node as
-    dangling iff its summed out-weight is NULL or 0, and drops its
-    edges from the routing join.  So a node whose out-edges all weigh 0
-    redistributes its mass uniformly like a sink (instead of dividing
-    by zero), and a node whose every out-edge carries a NULL ``w`` is
-    treated the same way — coalesce weights to a default upstream if
-    your graph can contain NULLs.  Per iteration:
+    ``edges`` is (src, dst, w) with NON-NEGATIVE weights: a negative
+    ``w`` raises ``ValueError`` naming it (checked inside the node-count
+    action, so no extra job).  The fused node aggregate classifies a
+    node as dangling iff its summed out-weight is NULL or 0, and drops
+    its edges from the routing join.  So a node whose out-edges all
+    weigh 0 redistributes its mass uniformly like a sink (instead of
+    dividing by zero), and a node whose every out-edge carries a NULL
+    ``w`` is treated the same way — coalesce weights to a default
+    upstream if your graph can contain NULLs.  Per iteration:
     contributions
     ``(rank·w)/out_w`` route along edges via ONE equi-join on src and
     combine per dst; the update is ``(1−d)/n + d·(S + dang/n)`` with
@@ -155,52 +183,32 @@ def pagerank_distributed(
     lineage every superstep and nested cache materialization serializes
     the stage graph anyway.
 
+    Every sum — a node's contributions and the dangling mass — is the
+    module's :func:`_exact_sum`: a map-side-combinable ``sum`` of longs,
+    so the result is the same bits on any partitioning, in both layouts,
+    as the driver twin and as a DuckDB fixed-iteration replay.
+
     Dangling mass (nodes without out-edges): in the broadcast
     (vertex-mirrored) layout the scalar rides the rank state itself —
-    each checkpointed rank relation carries a ``d`` column (its own
-    dangling-rank total, computed by one unpartitioned window at the
-    superstep's tail, INSIDE the checkpoint job), and one zero-weight
+    each checkpointed rank relation but the last carries a ``d`` column
+    (its own dangling-rank total, computed by one unpartitioned window
+    at the superstep's tail, INSIDE the checkpoint job), and one zero-weight
     self-edge per node in the static edge cache guarantees the combine
     covers every node, so the next superstep reads the scalar off the
     same broadcast it already ships — no separate dangling aggregate,
     no second broadcast-exchange build per superstep (the earlier
     shape spent 1 aggregate job + 1 broadcast build per superstep on
-    it).  A 0.0 contribution term is an exact identity for both combine
-    modes (the value-sorted fold starts at 0.0 and sorts the extra 0.0
-    first; plain ``F.sum`` adds 0.0 to a positive partial), so the
-    self-edges never change a bit of output.  The single-partition
+    it).  A 0.0 contribution adds the integer 0, so the self-edges
+    never change a bit of output.  The single-partition
     window is bounded by the same n ≤ threshold/64 that justifies the
     broadcast itself.  In the big-graph shuffle layout the dangling
     scalar stays a tiny in-plan aggregate re-attached as a broadcast
     one-row scalar — no per-superstep driver action in either mode.
 
-    ``bit_deterministic=True`` combines per-node contributions as a
-    VALUE-SORTED left fold (``aggregate(array_sort(collect_list(..)))``)
-    — the module's oracle-parity convention, giving results identical
-    bit-for-bit to the driver twin and to a DuckDB fixed-iteration
-    replay.  Fold state is one node's in-degree of doubles for the
-    combine, and — the larger bound — the GLOBAL dangling mass is
-    summed in sorted order over |dangling| ranks in a single task
-    (sequential summation is what bit-exactness requires; a partial-sum
-    tree is not the same IEEE value).  For celebrity nodes or
-    billion-node dangling sets at 100 TB pass ``False`` to use plain
-    ``F.sum`` everywhere (order-free map-side-combinable partial
-    aggregation, last-ulp nondeterministic — the standard trade-off,
-    same as exact_median vs percentile_approx).
-
-    Returns (node, pagerank); ranks sum to 1 every iteration.
+    Returns (node, pagerank); ranks sum to 1 less the truncation of
+    the exact sums, at most one 2^-52 quantum per summed term per
+    iteration.
     """
-    if bit_deterministic:
-        def combine(c):
-            return F.aggregate(
-                F.array_sort(F.collect_list(c)),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-    else:
-        def combine(c):
-            return F.sum(c)
-
     # Node universe + out-weights in ONE shuffle (previously a
     # distinct over the endpoint union PLUS a separate out-weight
     # groupBy PLUS a left join to flag dangling nodes — three exchanges
@@ -224,7 +232,7 @@ def pagerank_distributed(
     )
     node_info = (
         ends.groupBy("node")
-        .agg(F.sum("ow").alias("out_w"))
+        .agg(F.sum("ow").alias("out_w"), F.min("ow").alias("min_w"))
         .repartition("node")
         .persist()
     )
@@ -233,7 +241,11 @@ def pagerank_distributed(
         F.col("node").alias("src"), "out_w"
     )
     flagged = node_info.select("node", (~has_out).alias("dangling"))
-    n = node_info.count()
+    n, min_w = node_info.agg(F.count(F.lit(1)), F.min("min_w")).first()
+    if min_w is not None and min_w < 0:
+        node_info.unpersist()
+        edges.unpersist()
+        raise _negative_weight(min_w)
     base = (1.0 - damping) / n
     # Vertex-mirroring dispatch (the GraphX small-vertex-state
     # optimization): when the WHOLE rank vector fits under the broadcast
@@ -247,8 +259,8 @@ def pagerank_distributed(
     # ranks cannot broadcast: fall back to the src-partitioned layout
     # where each superstep shuffles only the slim evolving rank side.
     # Both paths run the same arithmetic on the same per-node value
-    # multisets — the value-sorted fold makes the combine
-    # order-insensitive, so the choice never changes a bit of output.
+    # multisets — the exact integer combine is order-insensitive, so
+    # the choice never changes a bit of output.
     thresh_b = _broadcast_threshold_bytes(edges)
     broadcast_ranks = thresh_b > 0 and n * 64 <= thresh_b
     # Static relations are persisted PRE-PARTITIONED on the key their
@@ -264,9 +276,7 @@ def pagerank_distributed(
         # off the self row's broadcast-side columns, and the earlier shape's
         # second join (flagged ⨝ sums) plus the per-superstep dangling
         # aggregate + broadcast-exchange build are gone.  The self
-        # contribution is (rank·0)/1 = 0.0 — an exact identity for both
-        # combine modes (sorted fold: the extra 0.0 sorts first and
-        # 0.0+0.0 = 0.0; plain sum: +0.0 is exact on positive ranks).
+        # contribution is (rank·0)/1 = 0.0, which adds the integer 0.
         tmap = {f.name: f.dataType for f in rt.schema.fields}
         ntype = node_info.schema["node"].dataType
         rt = rt.select(
@@ -297,35 +307,15 @@ def pagerank_distributed(
     # The unpartitioned window that puts the dangling-mass scalar ON the
     # rank state (broadcast mode): one Exchange SinglePartition over ≤
     # threshold/64 rows, executed inside the superstep's checkpoint job.
-    # Same value multiset as the old filter+aggregate, so the fold is
-    # IEEE-identical; the plain-sum mode is documented last-ulp
-    # nondeterministic either way.
-    w_all = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    # Same value multiset as the shuffle layout's filter+aggregate, so
+    # the exact sum is the same bits.
+    w_all = Window.partitionBy()
+    # coalesce: a sum of longs over no dangling node is NULL, which
+    # would wipe every rank in the next update.
+    dang_mass = F.coalesce(
+        _exact_sum(F.when(F.col("dangling"), F.col("rank")), over=w_all),
+        F.lit(0.0),
     )
-    dang_rank = F.when(F.col("dangling"), F.col("rank"))
-
-    def with_dangling_mass(df):
-        if not bit_deterministic:
-            return df.withColumn(
-                "d", F.coalesce(F.sum(dang_rank).over(w_all), F.lit(0.0))
-            )
-        # The value-sorted left fold as a running sum over the dangling
-        # ranks in ascending order: a ROWS frame adds one term to the
-        # previous row's partial, the same IEEE sequence as the sorted
-        # fold, and its last partial (the max, since ranks are
-        # non-negative) is the total every row reads.  A fold over
-        # collect_list(...) OVER the whole partition would re-sort the
-        # dangling array once per output row instead.
-        w_run = Window.orderBy(dang_rank.asc_nulls_first()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        run = internal("dang_run")
-        return (
-            df.withColumn(run, F.sum(dang_rank).over(w_run))
-            .withColumn("d", F.coalesce(F.max(run).over(w_all), F.lit(0.0)))
-            .drop(run)
-        )
 
     # Measured and rejected: two-supersteps-per-checkpoint in
     # broadcast mode (every other superstep left lazy — sound now that
@@ -336,8 +326,8 @@ def pagerank_distributed(
     # as its own AQE stage job inside the next broadcast build, so no
     # driver round-trip is actually saved).  Kept the eager checkpoint.
     if broadcast_ranks:
-        ranks = with_dangling_mass(ranks)
-    for _ in range(iterations):
+        ranks = ranks.withColumn("d", dang_mass)
+    for i in range(iterations):
         if broadcast_ranks:
             # ONE broadcast hash join per superstep: the rank vector
             # (with its dangling scalar) ships to the dst-partitioned
@@ -346,7 +336,7 @@ def pagerank_distributed(
             # the global scalar from any row (d is constant across the
             # broadcast side).
             b_ranks = F.broadcast(ranks)
-            ranks = with_dangling_mass(
+            ranks = (
                 routed.join(b_ranks, routed["src"] == b_ranks["node"])
                 .select(
                     F.col("dst").alias("node"),
@@ -359,7 +349,7 @@ def pagerank_distributed(
                 )
                 .groupBy("node")
                 .agg(
-                    combine(F.col("c")).alias("s"),
+                    _exact_sum(F.col("c")).alias("s"),
                     F.max(
                         F.when(F.col("is_self"), F.col("dangling"))
                     ).alias("dangling"),
@@ -374,19 +364,20 @@ def pagerank_distributed(
                         * (F.col("s") + F.col("d") / F.lit(float(n)))
                     ).alias("rank"),
                 )
-            ).localCheckpoint()
+            )
+            # The last superstep's scalar would go unread, and its
+            # single-partition window would leave the result in one
+            # partition for every consumer downstream.
+            if i + 1 < iterations:
+                ranks = ranks.withColumn("d", dang_mass)
+            ranks = ranks.localCheckpoint()
             continue
         # Shuffle layout (big graphs): dangling mass stays IN-PLAN as a
         # broadcast one-row scalar attach (the module's documented
         # crossJoin allow-list shape) — no per-superstep driver action;
-        # the checkpoint is the one job.
-        # coalesce: with bit_deterministic=False the combine is F.sum,
-        # which returns NULL (not 0.0) over an empty set — on a graph
-        # with no dangling nodes that NULL would propagate through the
-        # rank update and wipe every rank after iteration 1.
-        # The fold path already yields 0.0 on empty input.
+        # the checkpoint is the one job.  coalesce: as in the window.
         dang = ranks.filter("dangling").agg(
-            F.coalesce(combine(F.col("rank")), F.lit(0.0)).alias("d")
+            F.coalesce(_exact_sum(F.col("rank")), F.lit(0.0)).alias("d")
         )
         rank_side = ranks.withColumnRenamed("node", "src")
         sums = (
@@ -396,7 +387,7 @@ def pagerank_distributed(
                 ((F.col("rank") * F.col("w")) / F.col("out_w")).alias("c"),
             )
             .groupBy("node")
-            .agg(combine(F.col("c")).alias("s"))
+            .agg(_exact_sum(F.col("c")).alias("s"))
         )
         ranks = (
             flagged.join(sums, "node", "left")
@@ -419,36 +410,6 @@ def pagerank_distributed(
     node_info.unpersist()
     edges.unpersist()
     return ranks.select("node", F.col("rank").alias("pagerank"))
-
-
-def pagerank_auto(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 10,
-    driver_max_nodes: int = 1000,
-) -> DataFrame:
-    """Dispatch on graph size (the ``build_dimension_auto`` pattern): an
-    ``approx_count_distinct`` probe of the node domain picks the driver
-    power method for tiny aggregated graphs (event-type journeys — one
-    collect, zero iterative jobs) and the Pregel loop otherwise.  Both
-    paths use value-sorted folds with identical bracketing, so the
-    choice never changes a single bit of output.
-    """
-    probe = edges.agg(
-        (
-            F.approx_count_distinct("src") + F.approx_count_distinct("dst")
-        ).alias("n")
-    ).first()["n"]
-    if probe <= driver_max_nodes:
-        spark = edges.sparkSession
-        rows = edges.collect()
-        es = [(r["src"], r["dst"], r["w"]) for r in rows]
-        ns = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-        ranks = pagerank_from_edges(ns, es, damping, iterations)
-        return spark.createDataFrame(
-            [(v, ranks[v]) for v in ns], ["node", "pagerank"]
-        )
-    return pagerank_distributed(edges, damping, iterations)
 
 
 def label_propagation(
@@ -488,7 +449,7 @@ def label_propagation(
     shape exchanged labels into the join plus two aggregate exchanges
     per round).  Past the threshold that layout stays: neighbor view
     partitioned by **nbr** (the join key), shuffled vote aggregation.
-    The probe is a DISPATCH probe, as in ``pagerank_auto``: one eager
+    The probe is a DISPATCH probe: one eager
     ``approx_count_distinct(...).first()`` job runs while the plan is
     being BUILT, before any action on the result (and even when the
     result is never executed), because the layout it picks is part of

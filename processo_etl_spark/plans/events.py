@@ -810,8 +810,12 @@ def hll_daily_merge_distinct(spark, sf_dir):
 def _pagerank_oracle(damping: float = 0.85, iterations: int = 10) -> str:
     """Generate the fixed-iteration PageRank replay as chained CTEs —
     every double op mirrors operators/graph.pagerank_from_edges exactly
-    (value-sorted list folds, identical bracketing)."""
-    fold = "coalesce(list_reduce(list_sort({xs}), (x, y) -> x + y), 0.0)"
+    (exact integer sums of 2^-52 quanta, identical bracketing).  The
+    scale is a DOUBLE cast: DuckDB parses a bare literal as DECIMAL."""
+    fold = (
+        "coalesce(sum(CAST(floor({x} * CAST(4503599627370496 AS DOUBLE))"
+        " AS BIGINT)) / CAST(4503599627370496 AS DOUBLE), 0.0)"
+    )
     parts = [
         "WITH nodes AS MATERIALIZED (SELECT DISTINCT event_type AS v FROM events)",
         "n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)",
@@ -828,7 +832,7 @@ def _pagerank_oracle(damping: float = 0.85, iterations: int = 10) -> str:
     ]
     for k in range(1, iterations + 1):
         p = k - 1
-        dang_fold = fold.format(xs="list(val)")
+        dang_fold = fold.format(x="val")
         parts.append(
             f"""d{k} AS MATERIALIZED (
               SELECT {dang_fold} AS dang
@@ -842,7 +846,7 @@ def _pagerank_oracle(damping: float = 0.85, iterations: int = 10) -> str:
               JOIN r{p} r ON e.src = r.v
               JOIN outw o ON e.src = o.src)"""
         )
-        c_fold = fold.format(xs="list(c.c) FILTER (c.c IS NOT NULL)")
+        c_fold = fold.format(x="c.c")
         parts.append(
             f"""r{k} AS MATERIALIZED (
               SELECT nodes.v,
@@ -867,7 +871,7 @@ def events_pagerank_journeys(spark, sf_dir):
     extraction (per-user lag window + combinable groupBy), then the
     10-iteration power method driver-side on the |types|²-row summary
     — the train-on-summary shape.  The oracle replays all 10
-    iterations as generated CTEs with value-sorted folds; the EMITTED
+    iterations as generated CTEs with exact integer sums; the EMITTED
     rank is ROUND(·, 9) on both sides (raw-double-fold guard — the
     replay survived driver grading bit-for-bit, but a later drift
     failure showed driver-side DuckDB builds can diverge at the last
@@ -884,12 +888,12 @@ def events_pagerank_journeys(spark, sf_dir):
 def _pagerank_distributed_oracle(iterations: int = 5) -> str:
     """Fixed-iteration replay of operators/graph.pagerank_distributed as
     generated CTEs.  Every double mirrors the engine bit-for-bit: the
-    per-node combine is a value-sorted fold, contributions bracket as
+    per-node and dangling sums add ``floor(x * 2^52)`` as BIGINTs and
+    divide by 2^52 (the scale a DOUBLE cast — a bare literal would be
+    DECIMAL), contributions bracket as
     ``(rank * w) / out_w``, and the update as
     ``(1.0 - d)/n + d * (S + dang/n)`` — the engine's exact operator
-    order.  list_reduce has no init, but ``0.0 + x == x`` for the
-    positive operands here, so the folds agree with the engine's
-    0.0-seeded ``aggregate``.  The damping complement is written
+    order.  The damping complement is written
     ``CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)``: DuckDB parses bare
     ``1.0 - 0.85`` as exact DECIMAL 0.15, whose double conversion is
     one ulp BELOW the engine's binary ``1.0 - 0.85``
@@ -913,20 +917,20 @@ def _pagerank_distributed_oracle(iterations: int = 5) -> str:
     nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
     outs AS (SELECT src, SUM(w) AS out_w FROM edges GROUP BY src),
     it0 AS (SELECT node, 1.0 / nn.n AS rank FROM nodes, nn)"""
+    q = "CAST(4503599627370496 AS DOUBLE)"
     its = []
     for i in range(1, iterations + 1):
         p = i - 1
         its.append(f""",
     d{i} AS (
-      SELECT CASE WHEN dl IS NULL OR len(dl) = 0 THEN 0.0
-                  ELSE list_reduce(list_sort(dl), (x, y) -> x + y) END AS dang
-      FROM (SELECT list(r.rank) AS dl
-            FROM it{p} r LEFT JOIN outs o ON r.node = o.src
-            WHERE o.src IS NULL)),
+      SELECT COALESCE(sum(CAST(floor(r.rank * {q}) AS BIGINT)) / {q}, 0.0)
+               AS dang
+      FROM it{p} r LEFT JOIN outs o ON r.node = o.src
+      WHERE o.src IS NULL),
     s{i} AS (
       SELECT e.dst AS node,
-             list_reduce(list_sort(list((r.rank * e.w) / o.out_w)),
-                         (x, y) -> x + y) AS s
+             sum(CAST(floor(((r.rank * e.w) / o.out_w) * {q}) AS BIGINT))
+               / {q} AS s
       FROM edges e
       JOIN it{p} r ON e.src = r.node
       JOIN outs o ON e.src = o.src
@@ -963,7 +967,7 @@ def graph_pagerank_distributed(spark, sf_dir):
     run: what the grade certifies is the distributed superstep itself,
     and each extra iteration just repeats it at ~2 s of local-mode
     fixed stage cost; production runs pass iterations=20+.)  The oracle
-    replays all 3 iterations as generated CTEs with value-sorted folds;
+    replays all 3 iterations as generated CTEs with exact integer sums;
     the EMITTED rank is ROUND(·, 9) on both sides (raw-double-fold
     guard — the earlier bit-exact grades were empirical protection, the
     ROUND is structural; rank ≈ 1/|nodes| keeps ~4-5 significant
@@ -979,8 +983,7 @@ def graph_pagerank_distributed(spark, sf_dir):
 
 def pagerank_order_graph_edges(spark, sf_dir):
     """The customer→order→part edge list behind the graded PageRank
-    query (and bench.py's plain-sum benched variant — one shared
-    definition so the two can never drift)."""
+    query, shared with the k-core head in ``plans/profile``."""
     orders = t(spark, sf_dir, "orders")
     li = t(spark, sf_dir, "lineitem")
     e1 = orders.select(

@@ -1,4 +1,4 @@
-"""The shared run protocol in bench.py (name resolution, warm-up scale,
+"""The shared run protocol in bench.py (the headline names, warm-up scale,
 the compact printed line) and the one profiler built on it,
 tools/profile_queries.py."""
 
@@ -17,15 +17,11 @@ from processo_etl_spark.plans import common
 TOOLS = Path(__file__).resolve().parents[1] / "tools"
 
 
-def test_resolve_benches_the_override_else_the_registry_query():
+def test_headline_names_distinct_registered_queries():
+    """bench.py and the tools time the registry's own plans by name."""
     queries = plans.all_queries()
-    fns = bench.resolve(["graph_pagerank_distributed", "q1_pricing_summary"])
-    assert list(fns) == ["graph_pagerank_distributed", "q1_pricing_summary"]
-    assert fns["graph_pagerank_distributed"] is bench._pagerank_plain
-    assert bench.BENCH_OVERRIDES == {
-        "graph_pagerank_distributed": bench._pagerank_plain
-    }
-    assert fns["q1_pricing_summary"] is queries["q1_pricing_summary"]
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+    assert [n for n in bench.HEADLINE if n not in queries] == []
 
 
 def test_warm_dir_one_rule_for_testdata_and_generated_scales(tmp_path):

@@ -1682,9 +1682,8 @@ def test_pagerank_hand_graphs(spark):
 
 def test_pagerank_distributed_matches_driver_twin(spark):
     """The Pregel loop and the driver power method are the SAME math
-    (value-sorted folds, identical bracketing): bit-equal ranks on a
-    skewed graph with dangling nodes, and pagerank_auto picks either
-    path without changing a single bit."""
+    (exact integer sums, identical bracketing): bit-equal ranks on a
+    skewed graph with dangling nodes."""
     from processo_etl_spark.operators import graph
 
     # hub-and-chain with dangling leaves and a weighted edge
@@ -1701,62 +1700,64 @@ def test_pagerank_distributed_matches_driver_twin(spark):
     }
     assert dist == ref  # bit-for-bit, not approx
     assert abs(sum(dist.values()) - 1.0) < 1e-9
-    # auto: small graph -> driver path; forced distributed -> same bits
-    auto_small = {
-        r["node"]: r["pagerank"]
-        for r in graph.pagerank_auto(edf, 0.85, 7).collect()
-    }
-    auto_dist = {
-        r["node"]: r["pagerank"]
-        for r in graph.pagerank_auto(
-            edf, 0.85, 7, driver_max_nodes=0
-        ).collect()
-    }
-    assert auto_small == ref == auto_dist
 
 
-def test_pagerank_distributed_plain_sum_no_dangling(spark):
-    """ADVICE r5: with ``bit_deterministic=False`` the combine is
-    ``F.sum``, which is NULL over an empty set — on a dangling-free
-    graph the dangling-mass scalar must coalesce to 0.0 instead of
-    propagating NULL through every rank update."""
+def test_pagerank_distributed_no_dangling_node_keeps_every_rank(spark):
+    """A sum of longs over an empty set is NULL: on a graph with no
+    dangling node the dangling-mass scalar must coalesce to 0.0 in both
+    layouts instead of propagating NULL through every rank update."""
     from processo_etl_spark.operators import graph
 
     # strongly-connected triangle + chord: every node has out-edges
     es = [("a", "b", 1), ("b", "c", 1), ("c", "a", 1), ("a", "c", 1)]
     edf = spark.createDataFrame(es, ["src", "dst", "w"])
-    rows = graph.pagerank_distributed(
-        edf, 0.85, 5, bit_deterministic=False
-    ).collect()
-    ranks = {r["node"]: r["pagerank"] for r in rows}
-    assert set(ranks) == {"a", "b", "c"}
-    assert all(v is not None and v > 0.0 for v in ranks.values())
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-    # same graph, deterministic path: identical up to fold-order ulps
-    det = {
+    bcast = {
         r["node"]: r["pagerank"]
         for r in graph.pagerank_distributed(edf, 0.85, 5).collect()
     }
-    assert all(abs(ranks[k] - det[k]) < 1e-12 for k in det)
-    # and WITH dangling nodes (bench.py runs the plain-sum variant on
-    # the customer→order→part graph, where every part is dangling):
-    # plain F.sum must redistribute the dangling mass like the fold,
-    # not NULL it away — ranks match the fold path up to ulps.
-    es_d = [("a", "b", 1), ("b", "c", 1), ("a", "d", 2), ("d", "a", 1)]
-    edf_d = spark.createDataFrame(es_d, ["src", "dst", "w"])
-    plain_d = {
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuf = {
+            r["node"]: r["pagerank"]
+            for r in graph.pagerank_distributed(edf, 0.85, 5).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert set(bcast) == {"a", "b", "c"}
+    assert all(v is not None and v > 0.0 for v in bcast.values())
+    assert abs(sum(bcast.values()) - 1.0) < 1e-9
+    assert bcast == shuf == graph.pagerank_from_edges(["a", "b", "c"], es, 0.85, 5)
+
+
+def test_pagerank_from_edges_rejects_a_negative_weight():
+    """A negative weight would give negative ranks (c = -0.394 here)
+    and break the exact combine's 2^53 bound: it raises, naming it."""
+    from processo_etl_spark.operators import graph
+
+    es = [("a", "b", 2), ("a", "c", -1), ("b", "a", 1), ("c", "a", 1)]
+    with pytest.raises(ValueError, match="weight -1 is negative"):
+        graph.pagerank_from_edges(["a", "b", "c"], es)
+
+
+def test_pagerank_distributed_rejects_a_negative_weight(spark):
+    """The distributed path raises the same error, found by the
+    node-count action it already runs; NULL weights stay dangling."""
+    from processo_etl_spark.operators import graph
+
+    es = [("a", "b", 2), ("a", "c", -1), ("b", "a", 1), ("c", "a", 1)]
+    edf = spark.createDataFrame(es, "src string, dst string, w long")
+    with pytest.raises(ValueError, match="weight -1 is negative"):
+        graph.pagerank_distributed(edf, 0.85, 3)
+    nulls = spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", None)], "src string, dst string, w long"
+    )
+    ranks = {
         r["node"]: r["pagerank"]
-        for r in graph.pagerank_distributed(
-            edf_d, 0.85, 5, bit_deterministic=False
-        ).collect()
+        for r in graph.pagerank_distributed(nulls, 0.85, 3).collect()
     }
-    det_d = {
-        r["node"]: r["pagerank"]
-        for r in graph.pagerank_distributed(edf_d, 0.85, 5).collect()
-    }
-    assert set(plain_d) == set(det_d) == {"a", "b", "c", "d"}
-    assert abs(sum(plain_d.values()) - 1.0) < 1e-9
-    assert all(abs(plain_d[k] - det_d[k]) < 1e-12 for k in det_d)
+    assert set(ranks) == {"a", "b", "c"}
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9
 
 
 def test_shared_corpus_relation_caches_and_matches(spark):
@@ -1962,7 +1963,7 @@ def test_pagerank_broadcast_and_shuffle_modes_bitequal(spark):
     """r14 vertex-mirroring dispatch: the broadcast-mode superstep
     (rank vector mirrored to dst-partitioned edges, zero shuffle) and
     the shuffle-mode superstep (src-partitioned edges) must produce
-    BIT-IDENTICAL ranks — the value-sorted fold makes the combine
+    BIT-IDENTICAL ranks — the exact integer combine is
     order-insensitive, so mode choice may never change output."""
     from processo_etl_spark.operators import graph
 

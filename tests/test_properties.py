@@ -716,6 +716,54 @@ def test_label_propagation_matches_pure_python(spark, edge_list, iters):
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=7),
+            st.integers(min_value=0, max_value=9),
+            st.integers(min_value=0, max_value=5),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    st.randoms(use_true_random=False),
+)
+def test_pagerank_exact_combine_is_bit_equal_on_any_layout(spark, edges, rnd):
+    """Under ANSI mode, on small weighted digraphs with dangling nodes
+    (ids 8 and 9 only receive), zero-out-weight nodes, self loops and
+    duplicate edges, fed in shuffled row order over a random number of
+    input partitions: ``pagerank_distributed`` equals the driver twin
+    bit for bit in the broadcast layout and in the shuffle layout, every
+    rank is positive and the ranks sum to 1."""
+    from processo_etl_spark.operators import graph
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
+    ref = graph.pagerank_from_edges(nodes, edges, 0.85, 4)
+    assert all(v > 0.0 for v in ref.values())
+    assert abs(sum(ref.values()) - 1.0) < 1e-9
+    rows = list(edges)
+    rnd.shuffle(rows)
+    edf = spark.createDataFrame(rows, "src long, dst long, w long").repartition(
+        rnd.randint(1, 4)
+    )
+
+    def run():
+        return {
+            r["node"]: r["pagerank"]
+            for r in graph.pagerank_distributed(edf, 0.85, 4).collect()
+        }
+
+    assert run() == ref  # broadcast layout, bit for bit
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert run() == ref  # shuffle layout
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    st.lists(
         st.binary(min_size=0, max_size=4096),
         min_size=1,
         max_size=12,

@@ -49,11 +49,12 @@ DEFAULT_QUERIES = [
 
 def inner(cpus: int, sf_dir: str, names: list[str]) -> int:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    from bench import resolve, timed_pass, warm_up  # noqa: E402
-    from processo_etl_spark import session  # noqa: E402
+    from bench import timed_pass, warm_up  # noqa: E402
+    from processo_etl_spark import plans, session  # noqa: E402
 
     spark = session.get_spark(app_name=f"bench_scaling_{cpus}")
-    fns = resolve(names)
+    queries = plans.all_queries()
+    fns = {n: queries[n] for n in names}
     warm_up(spark, fns, sf_dir, tag="scaling_warmup")
     cold = timed_pass(spark, fns, sf_dir, tag="scaling_cold")  # primes caches
     out = timed_pass(spark, fns, sf_dir, tag="scaling")  # the reported number

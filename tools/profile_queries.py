@@ -23,8 +23,8 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from bench import DEFAULT_SF_DIR, HEADLINE, resolve, timed_pass, timed_run, warm_up  # noqa: E402
-from processo_etl_spark import session  # noqa: E402
+from bench import DEFAULT_SF_DIR, HEADLINE, timed_pass, timed_run, warm_up  # noqa: E402
+from processo_etl_spark import plans, session  # noqa: E402
 
 COUNTERS = ("jobs", "stages", "tasks", "shuffle_read_bytes", "shuffle_write_bytes", "input_bytes")
 
@@ -94,7 +94,8 @@ def main() -> int:
     out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = session.get_spark(app_name=f"profile_{tag}")
-    fns = resolve(names)
+    queries = plans.all_queries()
+    fns = {n: queries[n] for n in names}
     warm_up(spark, fns, sf_dir, tag="warmup")
 
     cold: dict[str, float] = {}
