@@ -386,78 +386,84 @@ def minhash_lsh_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Duplicate CLUSTERS from near-dup pairs: connected components via
-    min-label propagation.
+def _neighbours(edges: DataFrame) -> DataFrame:
+    """(u, lo, hi, m) per node of an edge set of (v, p) rows, p <= v: its
+    smaller and larger neighbours, and m = min(u, lo).  A (u, u) row only
+    keeps u in the graph."""
+    both = edges.select(F.col("v").alias("u"), F.col("p").alias("w")).union(
+        edges.select("p", "v")
+    )
+    return (
+        both.groupBy("u")
+        .agg(
+            F.collect_set(F.when(F.col("w") < F.col("u"), F.col("w"))).alias("lo"),
+            F.collect_set(F.when(F.col("w") > F.col("u"), F.col("w"))).alias("hi"),
+        )
+        .withColumn("m", F.least(F.col("u"), F.array_min("lo")))
+    )
 
-    Each node's label converges to the minimum id reachable from it;
-    one `groupBy(node).min(label)` + one join per round.  A label moves
-    one hop per round, so a component of diameter D needs D rounds, plus
-    one that changes nothing (dup clusters are tiny — a handful of
-    rounds).  The loop is driver-side but every step is distributed;
-    ``localCheckpoint`` truncates the growing lineage each round.
+
+def _large_star(edges: DataFrame) -> DataFrame:
+    """Each node hangs its larger neighbours on m; a node with no smaller
+    neighbour also keeps itself, as (u, u)."""
+    g = _neighbours(edges)
+    hung = F.when(F.size("lo") > 0, F.col("hi")).otherwise(
+        F.array_union("hi", F.array("u"))
+    )
+    return g.select(F.explode(hung).alias("v"), F.col("m").alias("p"))
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """Each node hangs itself and its smaller neighbours on m, and says
+    whether its input was not yet a star: two smaller neighbours, or a
+    smaller and a larger one."""
+    g = _neighbours(edges)
+    n_lo = F.size("lo")
+    hung = F.array_union(F.array_remove("lo", F.col("m")), F.array("u"))
+    return g.select(
+        F.explode(hung).alias("v"),
+        F.col("m").alias("p"),
+        ((n_lo > 1) | ((n_lo == 1) & (F.size("hi") > 0))).alias("unsettled"),
+    )
+
+
+def connected_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
+    """Duplicate CLUSTERS from near-dup ``(id_a, id_b)`` pairs: connected
+    components by alternating Large-Star and Small-Star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014).
+
+    The graph is kept as (v, p) rows with p < v, plus one (u, u) row for
+    a node with no smaller neighbour, so every node stays in it.
+    Large-Star hangs every node's larger neighbours on the smallest id
+    it sees; Small-Star hangs every node and its smaller neighbours on
+    the smallest of them.  Both keep the components; the paper bounds the
+    alternation by O(log² n) rounds, and paths take 6 (61 nodes) to 10
+    (1000 nodes).  A round is one ``groupBy`` per star plus one
+    ``localCheckpoint``.  The loop ends once the Large-Star output is a
+    set of stars (no node has two smaller neighbours, or a smaller and a
+    larger one), which Small-Star counts in its own aggregate: each star
+    is then a component, and its centre its minimum.
 
     Returns (doc, cluster) where cluster = min doc id of the component
-    — the canonical survivor for keep-one dedup.
+    — the canonical survivor for keep-one dedup.  The nodes are every
+    endpoint of a pair, a node whose only pair is (x, x) included; a
+    pair with a NULL endpoint is dropped, so NULL is never a node.
 
-    Raises ``ValueError`` when round ``max_iterations`` still changed a
-    label, as on any component of diameter ``max_iterations`` or more
-    (a path of more than ``max_iterations`` nodes): the labels may not
-    be components yet, and returning them would split one cluster into
-    several without an error.
+    Raises ``ValueError`` when round ``max_iterations`` still left a
+    node unsettled: the labels may not be components yet, and returning
+    them would split one cluster into several without an error.
     """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("cluster", F.col("doc"))
+    edges = pairs.dropna(subset=["id_a", "id_b"]).select(
+        F.greatest("id_a", "id_b").alias("v"), F.least("id_a", "id_b").alias("p")
     )
     for _ in range(max_iterations):
-        # Propagate: each node adopts min(own label, neighbors' labels).
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["doc"])
-            .groupBy("src")
-            .agg(F.min("cluster").alias("nbr_cluster"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["doc"] == neighbor_min["src"], "left")
-            .select(
-                "doc",
-                F.least(
-                    F.col("cluster"), F.coalesce(F.col("nbr_cluster"), F.col("cluster"))
-                ).alias("cluster"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="doc")
-            .filter(F.col("n.cluster") != F.col("o.cluster"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise ValueError(
-            f"connected_components did not converge in max_iterations="
-            f"{max_iterations} rounds: a component's diameter exceeds the "
-            "bound; raise max_iterations"
-        )
-    edges.unpersist()
-    return labels
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        if edges.filter("unsettled").limit(1).count() == 0:
+            return edges.select(F.col("v").alias("doc"), F.col("p").alias("cluster"))
+    raise ValueError(
+        f"connected_components did not converge in max_iterations="
+        f"{max_iterations} rounds; raise max_iterations"
+    )
 
 
 def _block_pairs(
@@ -1071,6 +1077,30 @@ def minhash_lsh_incremental(
     )
 
 
+def label_clusters(
+    rows: DataFrame, pairs: DataFrame, id_col: str, cluster_col: str = "cluster"
+) -> DataFrame:
+    """``rows`` plus ``cluster_col``: the :func:`connected_components`
+    cluster of each row's ``id_col``, or the id itself for a row no pair
+    touches (a singleton cluster).  The cluster map covers only
+    pair-touched ids, orders of magnitude fewer than the rows, so the
+    corpus-wide step is one broadcast left join.
+
+    Raises ``ValueError`` when ``rows`` already has ``cluster_col``: the
+    label would be ambiguous with the caller's column."""
+    if cluster_col in rows.columns:
+        raise ValueError(
+            f"input already has a column {cluster_col!r}; "
+            "rename it before clustering"
+        )
+    clusters = connected_components(pairs).select(
+        F.col("doc").alias(id_col), F.col("cluster").alias(cluster_col)
+    )
+    return rows.join(F.broadcast(clusters), on=id_col, how="left").withColumn(
+        cluster_col, F.coalesce(F.col(cluster_col), F.col(id_col))
+    )
+
+
 def cluster_representatives(
     docs: DataFrame,
     pairs: DataFrame,
@@ -1086,18 +1116,14 @@ def cluster_representatives(
     any pair are their own singleton cluster and always kept.  Winner =
     max ``score_col``, ties broken by min id — fully deterministic.
 
-    Scale shape: components are O(log D) distributed rounds over the
-    (tiny) pair graph only; the corpus-wide work is one left join on id
-    (broadcastable — the cluster map is |pair-touched docs|, orders of
-    magnitude smaller than the corpus) plus one window shuffle on
+    Scale shape: components are a few distributed rounds over the
+    (tiny) pair graph only; the corpus-wide work is the
+    :func:`label_clusters` broadcast join plus one window shuffle on
     cluster.  Skew-safe: a pathological mega-cluster is itself the
     signal to fix upstream thresholds, and the window state per cluster
     is one row_number counter, not a buffer.
     """
-    clusters = connected_components(pairs).withColumnRenamed("doc", id_col)
-    labeled = docs.join(F.broadcast(clusters), on=id_col, how="left").withColumn(
-        "cluster", F.coalesce(F.col("cluster"), F.col(id_col))
-    )
+    labeled = label_clusters(docs, pairs, id_col)
     w = Window.partitionBy("cluster").orderBy(
         F.col(score_col).desc(), F.col(id_col)
     )

@@ -18,9 +18,9 @@ Design for 100 TB:
 - **All JVM-side.** ``F.levenshtein`` is a built-in codegen expression;
   no Python touches the hot path, and the DuckDB oracle's
   ``levenshtein`` agrees exactly (both are the standard unit-cost DP).
-- Clustering reuses ``dedup.connected_components`` (distributed
-  min-label propagation, O(log D) rounds) — match pairs in, entity ids
-  out.
+- Clustering reuses ``dedup.label_clusters`` (distributed
+  Large-Star/Small-Star connected components, then one broadcast left
+  join) — match pairs in, entity ids out.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import connected_components
+from processo_etl_spark.ml.dedup import label_clusters
 
 
 def blocked_fuzzy_pairs(
@@ -87,22 +87,11 @@ def resolve_entities(
 ) -> DataFrame:
     """Full resolution: fuzzy pairs → connected components → one
     ``entity_id`` (the cluster's min record id) per input row.
-    Singletons resolve to themselves.  The cluster map covers only
-    pair-touched records, so the corpus-wide step is one broadcastable
-    left join."""
+    Singletons resolve to themselves (``dedup.label_clusters``).
+
+    Raises ``ValueError`` when ``id_col``, ``name_col`` or a block column
+    is named ``entity_id``: the output would carry two of them."""
     pairs = blocked_fuzzy_pairs(df, id_col, name_col, block_cols, max_edit)
-    clusters = connected_components(pairs)  # (doc, cluster)
-    return (
-        df.select(id_col, name_col, *block_cols)
-        .join(
-            F.broadcast(clusters.withColumnRenamed("doc", id_col)),
-            id_col,
-            "left",
-        )
-        .select(
-            id_col,
-            name_col,
-            *block_cols,
-            F.coalesce("cluster", F.col(id_col)).alias("entity_id"),
-        )
+    return label_clusters(
+        df.select(id_col, name_col, *block_cols), pairs, id_col, "entity_id"
     )

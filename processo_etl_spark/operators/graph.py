@@ -6,9 +6,11 @@ event log (one lag window per user — the sessionize shuffle shape); the
 resulting graph aggregates to |event_types|² rows, so the power
 iteration runs driver-side on that summary — the same
 train-on-summary pattern as the k-means/PQ/BPE trainers.  (For graphs
-whose NODE set scales with the data — e.g. document near-dup graphs —
-the distributed iterative template is ``ml/dedup.connected_components``;
-this operator is the small-aggregated-graph complement.)
+whose NODE set scales with the data, :func:`pagerank_distributed`,
+:func:`label_propagation` and :func:`kcore_peel` run a driver loop of
+distributed supersteps, each truncated by ``localCheckpoint``;
+``ml/dedup.connected_components`` clusters document near-dup graphs the
+same way.)
 
 Bit-determinism (oracle replays every double): every sum of doubles —
 a node's incoming contributions, the dangling mass — is an EXACT
@@ -158,7 +160,7 @@ def pagerank_distributed(
     iterations: int = 10,
 ) -> DataFrame:
     """Pregel-style distributed PageRank: join + aggregate
-    per superstep, the ``connected_components`` loop shape — NO
+    per superstep, each ``localCheckpoint``ed — NO
     driver-side node/edge collect, so the plan holds when the node set
     scales with the data (billion-node graphs), unlike
     ``pagerank_from_edges``' driver power method.
@@ -428,7 +430,7 @@ def label_propagation(
     schedule (synchronous, k rounds), not from convergence detection,
     so a SQL oracle can replay every round exactly.
 
-    Scale shape (the ``connected_components`` loop template): the
+    Scale shape (a driver loop of distributed supersteps): the
     undirected neighbor view is built once, weight-combined and
     persisted; each round is ONE equi-join (labels onto the neighbor
     side) + TWO combinable groupBys (vote sum per (node, label), then
@@ -698,7 +700,7 @@ def kcore_peel(
     the loop is done, so rounds ≤ the graph's degeneracy ordering
     depth, typically small).
 
-    Scale shape (the ``connected_components`` / LPA loop template):
+    Scale shape (the :func:`label_propagation` superstep loop):
     each round is ONE combinable degree groupBy over the endpoint view
     + TWO semi-joins filtering the edge list — no windows, no driver
     collect, all-integer arithmetic, ``localCheckpoint`` truncating

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import t
-from processo_etl_spark.plans.mlops import _LSH_CTES, _NORM
+from processo_etl_spark.plans.mlops import _CLUSTER_CTES, _NORM, _lsh_pairs
 
 # Argmax encoding base: kept = max over members of
 #   q1000 * _ENC + (_ENC - 1 - doc_id)
@@ -44,18 +44,7 @@ _ENC = 10**12
 # SQL, so the raw-double-fold guard applies and is satisfied by having
 # no double outputs at all.
 DEDUP_CANONICAL_ORACLE = f"""
-    WITH RECURSIVE {_LSH_CTES},
-    edges AS (
-      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
-    und AS (
-      SELECT id_a AS a, id_b AS b FROM edges
-      UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-    cl AS (
-      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+    WITH RECURSIVE {_CLUSTER_CTES},
     feats AS (
       SELECT doc_id,
         len(string_split({_NORM}, ' ')) AS n_tokens,
@@ -91,7 +80,7 @@ def dedup_cluster_canonical(spark, sf_dir):
     """One canonical document per duplicate cluster, chosen by quality.
 
     Pipeline: MinHash-LSH candidate pairs (banded, never all-pairs) →
-    connected components (min-label propagation, O(log D) rounds) →
+    connected components (Large-Star/Small-Star, a few rounds) →
     join each member's floor-scaled quality score → ONE combinable
     groupBy per cluster with an integer argmax key (max over
     q1000·10¹² + (10¹²−1−doc)), so the representative choice is exact,
@@ -110,10 +99,7 @@ def dedup_cluster_canonical(spark, sf_dir):
     from processo_etl_spark.ml import dedup, textstats
 
     docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=8, bands=2, threshold=0.2
-    )
-    members = dedup.connected_components(pairs)  # (doc, cluster)
+    members = dedup.connected_components(_lsh_pairs(docs))  # (doc, cluster)
     q = textstats.quality_features(docs, "text").select(
         F.col("doc_id"),
         # quality_score is floor(score*1000)/1000 — an exact multiple

@@ -96,7 +96,7 @@ def minhash_signature(spark, sf_dir):
 
 # --- MinHash + LSH near-dup pairs ----------------------------------------------------
 # Shared CTE chain (k=8, 2 bands × 4 rows, Jaccard ≥ 0.2) — used by both
-# the pairs query and the connected-components clustering oracle.
+# the pairs query and the connected-components clustering oracles.
 _LSH_CTES = f"""
     base AS (
       SELECT doc_id AS doc, {_SHINGLES} AS sh FROM documents),
@@ -122,6 +122,31 @@ _LSH_CTES = f"""
       JOIN base a ON a.doc = c.id_a
       JOIN base b ON b.doc = c.id_b)
 """
+
+# The cluster oracles' components: the recursive transitive closure of
+# the verified pairs (exact at gate scale, right on any graph), ending in
+# cl(doc, cluster) with cluster = the component's min doc id.  Opens with
+# _LSH_CTES, so a cluster oracle reads ``WITH RECURSIVE {_CLUSTER_CTES}``.
+_CLUSTER_CTES = f"""{_LSH_CTES},
+    edges AS (
+      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
+    und AS (
+      SELECT id_a AS a, id_b AS b FROM edges
+      UNION SELECT id_b, id_a FROM edges),
+    reach AS (
+      SELECT a, b FROM und
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+    cl AS (
+      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a)"""
+
+
+def _lsh_pairs(docs):
+    """The engine side of ``_LSH_CTES``: near-dup (id_a, id_b, jaccard)
+    pairs of ``documents`` at the registry's parameters."""
+    return dedup.minhash_lsh_pairs(
+        docs, "doc_id", "text", k=8, bands=2, shingle_n=3, threshold=0.2
+    )
 
 
 @register(
@@ -1005,33 +1030,21 @@ def text_quality_score(spark, sf_dir):
 @register(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE {_LSH_CTES},
-    edges AS (
-      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
-    und AS (
-      SELECT id_a AS a, id_b AS b FROM edges
-      UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
-    SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a
+    WITH RECURSIVE {_CLUSTER_CTES}
+    SELECT doc, cluster FROM cl
     """,
 )
 def dedup_clusters(spark, sf_dir):
-    """Duplicate clusters: MinHash-LSH pairs → connected components via
-    min-label propagation; (doc, cluster) with cluster = min doc id of
+    """Duplicate clusters: MinHash-LSH pairs → connected components by
+    Large-Star/Small-Star; (doc, cluster) with cluster = min doc id of
     the component.
 
-    The engine runs O(log D) distributed label-propagation rounds (the
-    scalable plan); the oracle computes the same fixpoint as a recursive
-    transitive closure — exponential-ish in SQL but exact at gate scale,
-    which is what makes an iterative algorithm differentially checkable.
+    The engine runs a few distributed star rounds (the scalable plan);
+    the oracle computes the same components as a recursive transitive
+    closure — exponential-ish in SQL but exact at gate scale, which is
+    what makes an iterative algorithm differentially checkable.
     """
-    pairs = dedup.minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"), "doc_id", "text", k=8, bands=2, threshold=0.2
-    )
-    return dedup.connected_components(pairs)
+    return dedup.connected_components(_lsh_pairs(t(spark, sf_dir, "documents")))
 
 
 # --- Gopher-style quality flags ---------------------------------------------------------------
@@ -2433,21 +2446,10 @@ def chunk_documents_sliding(spark, sf_dir):
 @register(
     "dedup_cluster_keep_best",
     oracle=f"""
-    WITH RECURSIVE {_LSH_CTES},
-    edges AS (
-      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
-    und AS (
-      SELECT id_a AS a, id_b AS b FROM edges
-      UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-    clusters AS (
-      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+    WITH RECURSIVE {_CLUSTER_CTES},
     labeled AS (
       SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster, d.n_chars
-      FROM documents d LEFT JOIN clusters c ON c.doc = d.doc_id)
+      FROM documents d LEFT JOIN cl c ON c.doc = d.doc_id)
     SELECT doc_id, cluster, n_chars,
       row_number() OVER (PARTITION BY cluster ORDER BY n_chars DESC, doc_id) = 1
         AS kept
@@ -2460,11 +2462,8 @@ def dedup_cluster_keep_best(spark, sf_dir):
     to min id.  Singletons always kept.  Corpus-side cost: one
     broadcast join + one window shuffle on cluster."""
     docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=8, bands=2, shingle_n=3, threshold=0.2
-    )
     return dedup.cluster_representatives(
-        docs.select("doc_id", "n_chars"), pairs, "doc_id", "n_chars"
+        docs.select("doc_id", "n_chars"), _lsh_pairs(docs), "doc_id", "n_chars"
     )
 
 
@@ -2867,9 +2866,7 @@ def dedup_lexical_semantic_agreement(spark, sf_dir):
     join itself is a slim equi-join on id pairs."""
     docs = t(spark, sf_dir, "documents")
     emb = t(spark, sf_dir, "embeddings")
-    lex = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=8, bands=2, shingle_n=3, threshold=0.2
-    ).select("id_a", "id_b", F.lit(True).alias("lexical"))
+    lex = _lsh_pairs(docs).select("id_a", "id_b", F.lit(True).alias("lexical"))
     sem = similarity.embedding_cosine_pairs(
         emb, "vec_id", "embedding", threshold=0.4, bits=6
     ).select("id_a", "id_b", F.lit(True).alias("semantic"))
@@ -2891,21 +2888,10 @@ _CLUSTER_BUCKET = f"{_md5_long_sql('CAST(cluster AS VARCHAR)')} % 10000"
 @register(
     "split_leakage_safe",
     oracle=f"""
-    WITH RECURSIVE {_LSH_CTES},
-    edges AS (
-      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
-    und AS (
-      SELECT id_a AS a, id_b AS b FROM edges
-      UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-    clusters AS (
-      SELECT a AS doc, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+    WITH RECURSIVE {_CLUSTER_CTES},
     labeled AS (
       SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster
-      FROM documents d LEFT JOIN clusters c ON c.doc = d.doc_id)
+      FROM documents d LEFT JOIN cl c ON c.doc = d.doc_id)
     SELECT doc_id, cluster,
            CASE WHEN {_CLUSTER_BUCKET} < 9800 THEN 'train'
                 WHEN {_CLUSTER_BUCKET} < 9900 THEN 'val'
@@ -2920,20 +2906,14 @@ def split_leakage_safe(spark, sf_dir):
     hash split cannot give.  Clusters come from the same LSH pair graph
     as ``dedup_clusters``; singletons hash as themselves, so untouched
     docs keep the plain split behavior.  Corpus-side cost over
-    ``split_train_val_test``: one broadcast left join of the (tiny,
-    pair-touched-only) cluster map."""
+    ``split_train_val_test``: the one broadcast left join of
+    ``dedup.label_clusters``."""
     from processo_etl_spark.ml import splits
 
     docs = t(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", k=8, bands=2, shingle_n=3, threshold=0.2
+    labeled = dedup.label_clusters(
+        docs.select("doc_id"), _lsh_pairs(docs), "doc_id"
     )
-    clusters = dedup.connected_components(pairs).withColumnRenamed(
-        "doc", "doc_id"
-    )
-    labeled = docs.select("doc_id").join(
-        F.broadcast(clusters), on="doc_id", how="left"
-    ).withColumn("cluster", F.coalesce(F.col("cluster"), F.col("doc_id")))
     return splits.with_split(labeled, "cluster").select(
         "doc_id", "cluster", "split"
     )

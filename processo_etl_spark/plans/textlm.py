@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from processo_etl_spark.plans import register
-from processo_etl_spark.plans.common import corpus
-from processo_etl_spark.plans.mlops import _NORM
+from processo_etl_spark.plans.common import corpus, t
+from processo_etl_spark.plans.mlops import _CLUSTER_CTES, _NORM, _lsh_pairs
 from processo_etl_spark.session import persist_once
 
 # Distinct bigram relation over normalized whitespace tokens.  DuckDB
@@ -221,32 +221,18 @@ def collocations_lift_topk(spark, sf_dir):
     )
 
 
-def _cluster_size_oracle() -> str:
-    from processo_etl_spark.plans.mlops import _LSH_CTES
-
-    return f"""
-    WITH RECURSIVE {_LSH_CTES},
-    edges AS (
-      SELECT id_a, id_b FROM verified WHERE jaccard >= 0.2),
-    und AS (
-      SELECT id_a AS a, id_b AS b FROM edges
-      UNION SELECT id_b, id_a FROM edges),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-    cl AS (SELECT a AS doc, least(a, min(b)) AS cluster
-           FROM reach GROUP BY a),
+@register(
+    "dedup_cluster_size_histogram",
+    oracle=f"""
+    WITH RECURSIVE {_CLUSTER_CTES},
     sizes AS (SELECT cluster, CAST(count(*) AS BIGINT) AS cluster_size
               FROM cl GROUP BY cluster)
     SELECT cluster_size,
            CAST(count(*) AS BIGINT) AS n_clusters,
            CAST(cluster_size * count(*) AS BIGINT) AS n_docs
     FROM sizes GROUP BY cluster_size ORDER BY cluster_size
-    """
-
-
-@register("dedup_cluster_size_histogram", oracle=_cluster_size_oracle())
+    """,
+)
 def dedup_cluster_size_histogram(spark, sf_dir):
     """Near-dup cluster-size distribution: how many duplicate clusters
     of each size the corpus contains and how many documents they absorb
@@ -255,26 +241,17 @@ def dedup_cluster_size_histogram(spark, sf_dir):
     dumps), which need different keep-one strategies and predict the
     dedup survival rate before running the excision.
 
-    Composition: the same MinHash-LSH pair generator + min-label
-    connected components as ``dedup_clusters`` (banded candidates, one
-    combinable label round per iteration — never all-pairs), then two
+    Composition: the same MinHash-LSH pair generator + Large-Star/
+    Small-Star connected components as ``dedup_clusters`` (banded
+    candidates, two groupBys per round — never all-pairs), then two
     slim groupBys over the cluster-sized (doc, cluster) relation.  The
     oracle replays the closure as a recursive CTE — exact at gate
     scale — and aggregates the same histogram; all outputs are exact
     integers.
     """
     from processo_etl_spark.ml import dedup as mldedup
-    from processo_etl_spark.plans.common import t
 
-    pairs = mldedup.minhash_lsh_pairs(
-        t(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        k=8,
-        bands=2,
-        threshold=0.2,
-    )
-    cc = mldedup.connected_components(pairs)
+    cc = mldedup.connected_components(_lsh_pairs(t(spark, sf_dir, "documents")))
     sizes = cc.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

@@ -770,7 +770,7 @@ def graph_communities_lpa(spark, sf_dir):
     sums, and the (votes DESC, label ASC) tie-break are each graded
     exactly.  Scale shape: per round ONE equi-join on the (persisted,
     pre-partitioned) neighbor view + two combinable groupBys — the
-    ``connected_components``/PageRank superstep template; nothing
+    PageRank superstep shape; nothing
     collects to the driver, so the plan holds on billion-node host
     graphs where LPA is the standard cheap community pass."""
     from processo_etl_spark.operators import graph

@@ -139,12 +139,16 @@ def test_langid_and_quality(spark):
 
 
 def test_connected_components_clusters(spark):
-    # Two components: {1,2,3} chained (1-2, 2-3) and {10,11}; singleton 99 absent.
+    # Two components: {1,2,3} chained (1-2, 2-3) and {10,11}; singleton 99
+    # absent.  A pair with a NULL endpoint is dropped, so NULL is never a
+    # node (3 stays one through its other pair); the self pair makes 5
+    # its own cluster.
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
+        [(1, 2), (2, 3), (10, 11), (None, 3), (12, None), (5, 5)],
+        "id_a long, id_b long",
     )
     out = {r["doc"]: r["cluster"] for r in dedup.connected_components(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5}
 
 
 def test_connected_components_long_chain(spark):
@@ -158,13 +162,16 @@ def test_connected_components_long_chain(spark):
 
 
 def test_connected_components_raises_when_the_bound_cuts_it_short(spark):
-    # A label moves one hop per round, so a 61-node path needs 60 rounds.
-    # Stopped at the default 20, its labels would read as 41 clusters.
+    # A 61-node path converges in 6 star rounds, inside the default bound
+    # of 20; stopped after 3, its labels would not be components yet.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], ["id_a", "id_b"]
     )
-    with pytest.raises(ValueError, match="max_iterations=20"):
-        dedup.connected_components(pairs)
+    out = dedup.connected_components(pairs).collect()
+    assert {r["cluster"] for r in out} == {0}
+    assert sorted(r["doc"] for r in out) == list(range(61))
+    with pytest.raises(ValueError, match="max_iterations=3"):
+        dedup.connected_components(pairs, max_iterations=3)
 
 
 def test_gopher_flags_and_pii(spark):
@@ -1179,6 +1186,17 @@ def test_cluster_representatives_keeps_best_and_singletons(spark):
     assert cluster == {1: 1, 2: 1, 3: 1, 4: 4}
 
 
+def test_cluster_representatives_refuses_a_caller_cluster_column(spark):
+    from processo_etl_spark.ml import dedup
+
+    docs = spark.createDataFrame(
+        [(1, 10, 7), (2, 30, 7)], ["doc_id", "score", "cluster"]
+    )
+    pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    with pytest.raises(ValueError, match="'cluster'"):
+        dedup.cluster_representatives(docs, pairs, "doc_id", "score")
+
+
 def test_hard_negatives_exclude_anchor_label(spark):
     """Hard-negative mining returns nearest DIFFERENT-label vectors:
     a same-label near-twin is skipped in favor of the best cross-label
@@ -2131,6 +2149,17 @@ def test_fuzzy_linkage_blocks_and_resolves(spark):
     }
     assert resolved[1] == resolved[2] == resolved[3] == 1  # transitive closure
     assert resolved[4] == 4 and resolved[5] == 5           # singletons self-resolve
+
+
+def test_resolve_entities_refuses_a_caller_entity_id_column(spark):
+    from processo_etl_spark.ml import linkage
+
+    df = spark.createDataFrame(
+        [(1, "acme corp", "US"), (2, "acme corp.", "US")],
+        ["rid", "name", "entity_id"],
+    )
+    with pytest.raises(ValueError, match="'entity_id'"):
+        linkage.resolve_entities(df, "rid", "name", ["entity_id"], max_edit=1)
 
 
 def test_join_bloom_pruned_equals_plain_join(spark):

@@ -10,7 +10,7 @@ import math
 import re
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -311,6 +311,84 @@ def test_cluster_representatives_exactly_one_kept_per_cluster(spark, edges):
         by_cluster.setdefault(r["cluster"], []).append(r["kept"])
     for c, kept in by_cluster.items():
         assert sum(kept) == 1, f"cluster {c} kept {sum(kept)}"
+
+
+def _union_find(pairs):
+    """{node: min id of its component} over the non-NULL pairs."""
+    parent = {}
+
+    def root(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in parent}
+
+
+@st.composite
+def _graphs(draw):
+    """Pairs of a forest of paths, stars, cycles and random trees on
+    shuffled ids, plus self pairs, duplicate pairs and reversed pairs, in
+    shuffled order."""
+    shapes = draw(
+        st.lists(
+            st.tuples(
+                st.sampled_from(["path", "star", "cycle", "tree"]),
+                st.integers(1, 9),
+            ),
+            min_size=1,
+            max_size=5,
+        )
+    )
+    ids = draw(st.permutations(range(sum(k for _, k in shapes))))
+    pairs, at = [], 0
+    for shape, k in shapes:
+        c, at = ids[at : at + k], at + k
+        if shape == "path":
+            pairs += zip(c, c[1:])
+        elif shape == "cycle":
+            pairs += zip(c, c[1:] + c[:1])
+        elif shape == "star":
+            pairs += [(c[0], x) for x in c[1:]]
+        else:
+            pairs += [(c[draw(st.integers(0, i - 1))], c[i]) for i in range(1, k)]
+    pairs += [(x, x) for x in draw(st.lists(st.sampled_from(ids), max_size=3))]
+    if pairs:
+        pairs += draw(st.lists(st.sampled_from(pairs), max_size=4))
+    flips = draw(st.lists(st.booleans(), min_size=len(pairs), max_size=len(pairs)))
+    pairs = [(b, a) if f else (a, b) for (a, b), f in zip(pairs, flips)]
+    return draw(st.permutations(pairs))
+
+
+def _shuffled(pairs, seed):
+    import random
+
+    ids = list(range(max(max(p) for p in pairs) + 1))
+    random.Random(seed).shuffle(ids)
+    return [(ids[a], ids[b]) for a, b in pairs]
+
+
+@settings(max_examples=5, deadline=None)
+@given(_graphs())
+@example(_shuffled([(i, i + 1) for i in range(60)], 61))
+@example(_shuffled([(i, (i + 1) % 300) for i in range(300)], 300))
+def test_connected_components_equal_union_find(spark, pairs):
+    """Under ANSI mode, on any forest of paths, stars, cycles and trees
+    with self, duplicate and reversed pairs (and a 61-node path and a
+    300-node cycle on shuffled ids), ``connected_components`` labels
+    every endpoint with its component's minimum, as a union-find does."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = dedup.connected_components(df).collect()
+    assert len(got) == len({r["doc"] for r in got})
+    assert {r["doc"]: r["cluster"] for r in got} == _union_find(pairs)
 
 
 @settings(max_examples=5, deadline=None)
