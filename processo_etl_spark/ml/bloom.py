@@ -14,17 +14,26 @@ reference cardinality, built by one map-side-combinable groupBy whose
 key space is the m/32-word grid (hot keys collapse map-side — the same
 skew-proof shape as ``ml.sketches.cms_build``).  Filters MERGE by
 OR-ing words cell-wise, so per-suite / per-day filters compose without
-raw data, and the corpus side probes via a broadcast of m/32 words —
-never a shuffle of corpus keys.
+raw data.
+
+One probe path: ``bloom_words_relation`` folds the filter into a
+one-row dense word array (``WORDS_COL``, m/32 longs — 16 KiB at
+m = 2^16) that consumers attach with a broadcast ``crossJoin``, and
+``bloom_hit_expr`` tests a key against it as k flat codegen checks —
+never a shuffle of probe-side keys.  That one broadcast row is m/4
+bytes, so m is bounded by what a broadcast can carry.
 
 This is the same structure Spark itself injects for runtime join
 pruning (Bloom-filtered sort-merge joins); here it is a first-class,
 persistable operator.
 
 Hash family: the deterministic md5-affine family shared with
-MinHash/CMS (``dedup.md5_long`` → ``perm_constants`` maps mod P mod m)
+MinHash/CMS (``dedup.md5_long`` → ``dedup.affine_hashes`` mod P mod m)
 — no randomness to ship, and a DuckDB oracle replays the ENTIRE filter
 bit-for-bit, so the registered query is exact-hash graded.
+
+NULL keys are not members: the build skips them and a NULL probe reads
+False.
 
 Words are 32-bit (stored in BIGINT): masks stay positive on engines
 whose ``<<`` checks BIGINT overflow, and bit_or/& semantics are
@@ -37,50 +46,52 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from processo_etl_spark.columns import internal
-from processo_etl_spark.ml.dedup import MERSENNE_P, md5_long, perm_constants
+from processo_etl_spark.ml.dedup import MERSENNE_P, affine_hashes, md5_long
 from processo_etl_spark.session import persist_once
 
 WORD_BITS = 32
 
 
-def _position(h: Column, a: int, b: int, n_bits: int) -> Column:
-    """Bit position i of base hash h: ((a·h + b) mod P) mod m.  h < P
-    and a < P keep the int64 product under 2^62 — no overflow."""
-    return ((h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)) % F.lit(n_bits)
-
-
-def _word_masks(key: Column, k: int, n_bits: int) -> Column:
-    """array<struct<word, mask>> of the key's k filter bits."""
+def _word_masks(key: Column, k: int, n_bits: int) -> list[tuple[Column, Column]]:
+    """The key's k filter bits as (word index, 32-bit mask) pairs; the
+    index is the unrounded ``pos / 32`` each caller casts."""
     h = md5_long(key) % F.lit(MERSENNE_P)
-    out = []
-    for a, b in perm_constants(k):
-        pos = _position(h, a, b, n_bits)
-        out.append(
-            F.struct(
-                (pos / F.lit(WORD_BITS)).cast("long").alias("word"),
-                F.call_function(
-                    "shiftleft",
-                    F.lit(1).cast("long"),
-                    (pos % F.lit(WORD_BITS)).cast("int"),
-                ).alias("mask"),
-            )
+    return [
+        (
+            pos / F.lit(WORD_BITS),
+            F.call_function(
+                "shiftleft",
+                F.lit(1).cast("long"),
+                (pos % F.lit(WORD_BITS)).cast("int"),
+            ),
         )
-    return F.array(*out)
+        for pos in affine_hashes(h, k, n_bits)
+    ]
 
 
 def bloom_build(
     df: DataFrame, key_col: str | Column, n_bits: int = 1 << 16, k: int = 4
 ) -> DataFrame:
-    """Build the filter: (word, bits), ≤ m/32 rows total.
+    """Build the filter: (word, bits), ≤ m/32 rows total.  Rows whose
+    key is NULL are skipped: they set no bit.
 
     One explode (bounded k× fan-out) + one map-side-combinable groupBy
     — the only shuffle, and its key space is the fixed word grid, so a
     skewed key domain CANNOT skew the shuffle.  Cost is independent of
-    the key set's cardinality; only the FP rate depends on it.
+    the key set's cardinality; only the FP rate depends on it.  The
+    build is a plain aggregate, so it runs unchanged over a streaming
+    source (state is at most m/32 words).
     """
     key = F.col(key_col) if isinstance(key_col, str) else key_col
+    masks = F.array(
+        *[
+            F.struct(word.cast("long").alias("word"), mask.alias("mask"))
+            for word, mask in _word_masks(key, k, n_bits)
+        ]
+    )
     return (
-        df.select(F.explode(_word_masks(key, k, n_bits)).alias("c"))
+        df.filter(key.isNotNull())
+        .select(F.explode(masks).alias("c"))
         .groupBy(F.col("c.word").alias("word"))
         .agg(F.bit_or(F.col("c.mask")).alias("bits"))
     )
@@ -96,61 +107,6 @@ def bloom_merge(*filters: DataFrame) -> DataFrame:
     return u.groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
-def bloom_probe(
-    items: DataFrame,
-    bloom: DataFrame,
-    key_col: str | Column,
-    n_bits: int = 1 << 16,
-    k: int = 4,
-    flag_col: str = "might_contain",
-) -> DataFrame:
-    """Append ``flag_col``: True iff ALL k of the key's bits are set.
-
-    The filter side is ≤ m/32 rows — always broadcast; items keep all
-    their columns AND their multiplicity: the k-bit reassembly groups on
-    a per-row ``monotonically_increasing_id``, not on the item columns,
-    so duplicate input rows stay distinct outputs and non-groupable
-    column types (map, …) pass through untouched.  A word
-    the build never touched is an all-zero word (left join NULL →
-    miss).  False negatives are impossible by construction; false
-    positives are the documented trade-off.
-    """
-    key = F.col(key_col) if isinstance(key_col, str) else key_col
-    others = list(items.columns)
-    rid = internal("bloom_rid")
-    probed = items.withColumn(rid, F.monotonically_increasing_id()).select(
-        rid, *others, F.explode(_word_masks(key, k, n_bits)).alias("c")
-    ).select(
-        rid, *others, F.col("c.word").alias("word"), F.col("c.mask").alias("mask")
-    )
-    hit = F.col("mask").bitwiseAND(F.coalesce(F.col("bits"), F.lit(0))) == F.col(
-        "mask"
-    )
-    return (
-        probed.join(F.broadcast(bloom), on="word", how="left")
-        .groupBy(rid)
-        .agg(
-            *[F.first(c).alias(c) for c in others],
-            F.bool_and(hit).alias(flag_col),
-        )
-        .drop(rid)
-    )
-
-
-def bloom_filter_words(
-    df: DataFrame, key_col: str | Column, n_bits: int = 1 << 16, k: int = 4
-) -> list[int]:
-    """Build the filter and collect it as a DENSE word array (length
-    m/32, int64 each) — m/32 longs of driver state (16 KiB at m=2^16),
-    the bounded-size collect that makes the map-side probe possible.
-    This is a two-pass scalar in the sense of functions/cleaning: one
-    tiny job whose result re-enters the main plan as a literal."""
-    words = [0] * (n_bits // WORD_BITS)
-    for r in bloom_build(df, key_col, n_bits=n_bits, k=k).collect():
-        words[r["word"]] = r["bits"]
-    return words
-
-
 # Column of the one-row filter relation.  Reserved (``columns.internal``):
 # it is cross-joined onto caller frames, so a plain name such as ``words``
 # would be ambiguous with — and then dropped along with — a caller column.
@@ -161,14 +117,12 @@ def bloom_words_relation(
     df: DataFrame, key_col: str | Column, n_bits: int = 1 << 16, k: int = 4
 ) -> DataFrame:
     """The filter as a ONE-ROW relation (``WORDS_COL``: dense array<long>,
-    length m/32) — the in-plan twin of :func:`bloom_filter_words`: the
-    same dense word array, built by the same fixed-grid groupBy, but it
-    stays IN the plan and attaches to consumers as a broadcast one-row
-    scalar (``crossJoin(F.broadcast(...))``, the module family's
-    documented scalar-attach shape) instead of a driver ``collect``
-    (guide §5 — no driver round-trip in a query path; the filter
-    build becomes one more broadcast-exchange job inside the consuming
-    query, overlapping its other builds)."""
+    length m/32, a word the build never touched read as 0), built by
+    :func:`bloom_build`'s fixed-grid groupBy.  It stays IN the plan and
+    attaches to consumers as a broadcast one-row scalar
+    (``crossJoin(F.broadcast(...))``) instead of a driver ``collect``:
+    the filter build is one more broadcast-exchange job inside the
+    consuming query, overlapping its other builds."""
     key = F.col(key_col) if isinstance(key_col, str) else key_col
     n_words = n_bits // WORD_BITS
     return (
@@ -191,27 +145,16 @@ def bloom_words_relation(
     )
 
 
-def bloom_hit_expr(
-    words: list[int] | Column, key: Column, n_bits: int, k: int
-) -> Column:
-    """Pure map-side membership test against a collected filter: k flat
-    (word, mask) checks against ONE array literal — no join, no
+def bloom_hit_expr(words: Column, key: Column, n_bits: int, k: int) -> Column:
+    """Map-side membership test of ``key`` against ``words``, the
+    ``WORDS_COL`` array of a :func:`bloom_words_relation` row attached
+    by a broadcast crossJoin: k flat (word, mask) checks — no join, no
     shuffle, whole-stage-codegen friendly (constant-table loops are
     unrolled, not HOF-folded; see SCALE.md on HOFs over constants).
-
-    ``words`` may also be a Column (the ``WORDS_COL`` array of a
-    :func:`bloom_words_relation` row attached by a broadcast crossJoin)
-    — identical arithmetic, the array is just read from the joined row
-    instead of a plan literal."""
-    arr = words if isinstance(words, Column) else F.lit(words)
-    h = md5_long(key) % F.lit(MERSENNE_P)
-    hit = F.lit(True)
-    for a, b in perm_constants(k):
-        pos = _position(h, a, b, n_bits)
-        mask = F.call_function(
-            "shiftleft", F.lit(1).cast("long"), (pos % F.lit(WORD_BITS)).cast("int")
-        )
-        word = F.element_at(arr, (pos / F.lit(WORD_BITS)).cast("int") + F.lit(1))
+    A NULL key reads False, never NULL."""
+    hit = key.isNotNull()
+    for word_idx, mask in _word_masks(key, k, n_bits):
+        word = F.element_at(words, word_idx.cast("int") + F.lit(1))
         hit = hit & (word.bitwiseAND(mask) == mask)
     return hit
 
@@ -291,14 +234,14 @@ def bloom_contamination(
     Scale shape vs ``decontaminate.ngram_contamination``: the filter is
     m/32 words instead of the eval set's distinct-gram relation —
     constant-size no matter how many benchmark suites merge in — and it
-    enters the corpus scan as ONE array literal (``bloom_hit_expr``),
-    so the per-gram membership test is a flat codegen expression with
-    ZERO probe-side shuffle; the only corpus shuffles are the gram
-    explode's per-document aggregation (map-side combinable).  For
-    filters too big to inline (m beyond a few MiB of words) use the
-    broadcast-join probe (``bloom_probe``) instead.  Keep the exact
-    side only while auditing; the production path drops it and with it
-    the gram-set broadcast entirely.
+    enters the corpus scan as ONE broadcast word array
+    (``bloom_words_relation`` + ``bloom_hit_expr``), so the per-gram
+    membership test is a flat codegen expression with ZERO probe-side
+    shuffle; the only corpus shuffles are the gram explode's
+    per-document aggregation (map-side combinable).  The broadcast row
+    is m/4 bytes, whatever the eval set's size.  Keep the exact side
+    only while auditing; the production path drops it and with it the
+    gram-set broadcast entirely.
     """
     from processo_etl_spark.ml.dedup import shingle_set
 
@@ -309,11 +252,9 @@ def bloom_contamination(
         .distinct()
         .transform(persist_once)
     )
-    # The filter attaches IN-PLAN as a broadcast one-row scalar: the
-    # old bloom_filter_words collect was a blocking
-    # per-pass driver round-trip serialized BEFORE the main query; as a
-    # broadcast build it overlaps the query's other exchange builds and
-    # the query path holds zero driver collects.  The probed word array
+    # The filter attaches IN-PLAN as a broadcast one-row scalar: its
+    # build overlaps the query's other exchange builds and the query
+    # path holds zero driver collects.  The probed word array
     # is read off the joined row and immediately dropped by the
     # projection under the per-doc aggregate, so the 16 KiB array never
     # enters the exchange.

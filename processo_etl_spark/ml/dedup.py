@@ -278,6 +278,20 @@ def perm_constants(k: int) -> list[tuple[int, int]]:
     return out
 
 
+def affine_hashes(h: Column, k: int, m: int | None = None) -> list[Column]:
+    """The k family values ``(a_i·h + b_i) % P`` of base hash ``h`` (an
+    ``md5_long(key) % P``), each taken ``% m`` when ``m`` is given —
+    the one hash family under MinHash (no ``m``), the Bloom filter
+    (``m`` = bits) and Count-Min (``m`` = width).  ``plans/mlops._affine_sql``
+    spells the same values as DuckDB text.  h < P and a < P keep the int64
+    product under 2^62 — no overflow."""
+    out = []
+    for a, b in perm_constants(k):
+        v = (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
+        out.append(v if m is None else v % F.lit(m))
+    return out
+
+
 def shingle_hashes(shingles: Column) -> Column:
     """One 31-bit base hash per shingle: md5_long(s) % P (single md5 pass)."""
     return F.transform(shingles, lambda s: md5_long(s) % F.lit(MERSENNE_P))
@@ -293,12 +307,9 @@ def minhash_signature(shingles: Column, k: int = 16) -> Column:
     md5 pass k times.)  Per-row and narrow — no shuffle; at 100 TB this
     is |shingles| md5 calls per row, not k·|shingles|.
     """
-    consts = perm_constants(k)
 
     def merge(acc: Column, h: Column) -> Column:
-        fams = F.array(
-            *[(h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P) for a, b in consts]
-        )
+        fams = F.array(*affine_hashes(h, k))
         return F.zip_with(acc, fams, lambda x, y: F.least(x, y))
 
     init = F.array_repeat(F.lit(MERSENNE_P).cast("long"), k)

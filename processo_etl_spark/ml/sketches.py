@@ -16,7 +16,7 @@ sketches union and re-aggregate without touching raw data — the
 streaming/backfill composition exact top-k can't offer.
 
 Hash family: the same deterministic md5-affine family as the
-MinHash/DSIR ops (``dedup.md5_long`` → affine ``perm_constants`` maps
+MinHash/Bloom ops (``dedup.md5_long`` → ``dedup.affine_hashes``
 mod P mod w) — no randomness to ship, and a DuckDB oracle replays the
 ENTIRE sketch bit-for-bit, so the registered query is exact-hash
 graded, not tolerance-graded.
@@ -27,26 +27,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from processo_etl_spark.ml.dedup import MERSENNE_P, md5_long, perm_constants
-
-
-def _bucket(h: Column, a: int, b: int, width: int) -> Column:
-    """Row-i bucket of base hash h: ((a·h + b) mod P) mod w.  h < P and
-    a < P keep the int64 product under 2^62 — no overflow."""
-    return ((h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)) % F.lit(width)
+from processo_etl_spark.ml.dedup import MERSENNE_P, affine_hashes, md5_long
 
 
 def _bucket_structs(key: Column, depth: int, width: int) -> Column:
     """array<struct<row, bucket>> of the key's d sketch cells."""
     h = md5_long(key) % F.lit(MERSENNE_P)
-    consts = perm_constants(depth)
     return F.array(
         *[
-            F.struct(
-                F.lit(i).cast("int").alias("row"),
-                _bucket(h, a, b, width).alias("bucket"),
-            )
-            for i, (a, b) in enumerate(consts)
+            F.struct(F.lit(i).cast("int").alias("row"), bucket.alias("bucket"))
+            for i, bucket in enumerate(affine_hashes(h, depth, width))
         ]
     )
 
@@ -70,6 +60,11 @@ def cms_build(
     ``weight_col="count"`` yields cell-for-cell the same sketch as
     building from the raw stream (sums commute), while hashing each
     distinct key ONCE instead of once per occurrence.
+
+    Rows whose key is NULL are skipped: they increment no cell, so the
+    grid stays within d·w cells and a NULL key estimates as 0.  The
+    build is a plain aggregate, so it runs unchanged over a streaming
+    source (state is at most d·w counters).
     """
     key = F.col(key_col) if isinstance(key_col, str) else key_col
     w = (
@@ -78,7 +73,8 @@ def cms_build(
         else (F.col(weight_col) if isinstance(weight_col, str) else weight_col)
     )
     return (
-        df.select(
+        df.filter(key.isNotNull())
+        .select(
             F.explode(_bucket_structs(key, depth, width)).alias("c"),
             w.alias("_w"),
         )
@@ -108,7 +104,7 @@ def cms_estimate(
     """Append ``est_col`` = min over the item's d counters (the CMS
     point estimate).  The sketch side is ≤ d·w rows — always broadcast;
     items keep all their columns.  Keys the sketch never saw estimate
-    as NULL-safe 0 (an empty cell means count 0).
+    as NULL-safe 0 (an empty cell means count 0); so does a NULL key.
     """
     key = F.col(key_col) if isinstance(key_col, str) else key_col
     others = [c for c in items.columns]

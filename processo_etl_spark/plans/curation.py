@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import t
-from processo_etl_spark.plans.mlops import _CLUSTER_CTES, _NORM, _lsh_pairs
+from processo_etl_spark.plans.mlops import _CLUSTER_CTES, _QUALITY_CTES, _lsh_pairs
 
 # Argmax encoding base: kept = max over members of
 #   q1000 * _ENC + (_ENC - 1 - doc_id)
@@ -38,29 +38,17 @@ _ENC = 10**12
 
 # The oracle replays the full pipeline in SQL: the shared LSH CTEs
 # (same md5-prefix hash constants as ml/dedup), the recursive
-# transitive-closure CC (exact at gate scale), the text_quality_score
-# feats fragment (hash-green since its registration), and the same
-# integer argmax.  All outputs BIGINT — with-recursive appears in the
+# transitive-closure CC (exact at gate scale), the shared quality-score
+# CTEs (``q1000`` rounds the floor-scaled score back onto its integer
+# grid, as the Spark side does), and the same integer argmax.  All outputs BIGINT — with-recursive appears in the
 # SQL, so the raw-double-fold guard applies and is satisfied by having
 # no double outputs at all.
 DEDUP_CANONICAL_ORACLE = f"""
     WITH RECURSIVE {_CLUSTER_CTES},
-    feats AS (
-      SELECT doc_id,
-        len(string_split({_NORM}, ' ')) AS n_tokens,
-        length(text) AS n_chars_m,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
-        CAST(len(list_filter(string_split({_NORM}, ' '),
-             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
-      FROM documents),
+    {_QUALITY_CTES},
     q AS (
-      SELECT doc_id,
-        CAST(FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-             + least(sw_ratio * 5.0, 1.0) * 0.3
-             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
-              ) * 1000) AS BIGINT) AS q1000
-      FROM feats),
+      SELECT doc_id, CAST(round(quality_score * 1000) AS BIGINT) AS q1000
+      FROM scored),
     agg AS (
       SELECT cl.cluster, count(*) AS n_members,
              max(q.q1000 * {_ENC} + ({_ENC} - 1 - cl.doc)) AS mk

@@ -65,15 +65,36 @@ def sliding_window_counts(spark, sf_dir):
     )
 
 
-@register(
-    "sessionize_gap",
-    oracle="""
-    WITH seq AS (
+# Gap sessionization in SQL: one row per event, ``new_session`` = 1 where
+# the user's previous event (by ts, event_id) is absent or over 30 min back.
+_GAP_SEQ = """seq AS (
       SELECT user_id, ts,
         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
              THEN 1 ELSE 0 END AS new_session
-      FROM events)
+      FROM events)"""
+
+# The stream ⇔ batch certificate of the sessionizers (applyInPandasWithState
+# and its transformWithState twin): the per-user batch sessions, n_mismatch 0.
+SESSIONIZE_CERT_ORACLE = f"""
+    WITH {_GAP_SEQ},
+    batch AS (
+      SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
+             count(*) AS n_events
+      FROM seq GROUP BY user_id)
+    SELECT CAST(count(*) AS BIGINT) AS n_users_stream,
+           CAST(count(*) AS BIGINT) AS n_users_batch,
+           CAST(SUM(n_sessions) AS BIGINT) AS total_sessions,
+           CAST(SUM(n_events) AS BIGINT) AS total_events,
+           CAST(0 AS BIGINT) AS n_mismatch
+    FROM batch
+    """
+
+
+@register(
+    "sessionize_gap",
+    oracle=f"""
+    WITH {_GAP_SEQ}
     SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events
     FROM seq GROUP BY user_id
     """,
@@ -1004,13 +1025,13 @@ def pagerank_order_graph_edges(spark, sf_dir):
 
 @register("stream_bloom_filter")  # rows-only: streaming drains execute
 def stream_bloom_filter(spark, sf_dir):
-    """Streaming Bloom-filter build over user_id
-    (streaming/jobs.bloom_filter_stream): bounded m/32-word state
-    regardless of key cardinality — the live membership index that
-    merges word-wise with batch-built filters (ml/bloom.bloom_merge).
-    Batch equivalence (streaming filter == batch ``bloom_build``
-    word-for-word) is asserted in tests/test_streaming.py; the batch
-    filter family is oracle-checked via ``decontaminate_bloom``."""
+    """Streaming Bloom-filter build over user_id: the batch
+    ``ml/bloom.bloom_build`` drained from the events stream
+    (streaming/jobs.run_bloom_filter_availablenow), so its state is
+    bounded at m/32 words regardless of key cardinality and its
+    (word, bits) rows OR word-wise with a batch-built filter.  The
+    ``stream_batch_equiv_bloom`` certificate pins it word-for-word to
+    the batch build against a DuckDB replay of the filter."""
     from processo_etl_spark.streaming import jobs
 
     return jobs.run_bloom_filter_availablenow(spark, sf_dir)
@@ -1018,13 +1039,13 @@ def stream_bloom_filter(spark, sf_dir):
 
 @register("stream_cms_heavy_hitters")  # rows-only: streaming drains execute
 def stream_cms_heavy_hitters(spark, sf_dir):
-    """Streaming Count-Min sketch over event_type
-    (streaming/jobs.cms_sketch_stream): bounded d·w state regardless of
-    key cardinality — the sketch-shaped alternative to unbounded
-    per-key streaming counts.  Batch equivalence (streaming sketch ==
-    batch ``cms_build`` cell-for-cell) is asserted in
-    tests/test_streaming.py; the batch CMS is oracle-checked as
-    ``cms_heavy_hitters``."""
+    """Streaming Count-Min sketch over event_type: the batch
+    ``ml/sketches.cms_build`` drained from the events stream
+    (streaming/jobs.run_cms_sketch_availablenow), so its state is
+    bounded at d·w counters regardless of key cardinality — the
+    sketch-shaped alternative to unbounded per-key streaming counts.
+    The ``stream_batch_equiv_cms`` certificate pins it cell-for-cell to
+    the batch build against a DuckDB replay of the sketch."""
     from processo_etl_spark.streaming import jobs
 
     return jobs.run_cms_sketch_availablenow(spark, sf_dir)
@@ -1730,27 +1751,7 @@ def new_vs_returning_daily(spark, sf_dir):
 # SQL with n_mismatch pinned to 0.
 
 
-@register(
-    "stream_batch_equiv_sessionize",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, ts,
-        CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-               OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-             THEN 1 ELSE 0 END AS new_session
-      FROM events),
-    batch AS (
-      SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-             count(*) AS n_events
-      FROM seq GROUP BY user_id)
-    SELECT CAST(count(*) AS BIGINT) AS n_users_stream,
-           CAST(count(*) AS BIGINT) AS n_users_batch,
-           CAST(SUM(n_sessions) AS BIGINT) AS total_sessions,
-           CAST(SUM(n_events) AS BIGINT) AS total_events,
-           CAST(0 AS BIGINT) AS n_mismatch
-    FROM batch
-    """,
-)
+@register("stream_batch_equiv_sessionize", oracle=SESSIONIZE_CERT_ORACLE)
 def stream_batch_equiv_sessionize(spark, sf_dir):
     """Certificate: the applyInPandasWithState interval-merge
     sessionizer (streaming/jobs.sessionize_stateful, drained with

@@ -29,22 +29,86 @@ _SHINGLES = f"""
                         string_split({_NORM}, ' ')[i+1],
                         string_split({_NORM}, ' ')[i+2])))
 """
+# CTEs ``feats`` (every ``documents`` column plus the quality features)
+# and ``scored`` (plus the floor-scaled ``quality_score``) replaying
+# ml.textstats.quality_features.
+_QUALITY_CTES = f"""feats AS (
+      SELECT *,
+        len(string_split({_NORM}, ' ')) AS n_tokens,
+        length(text) AS n_chars_m,
+        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
+        CAST(len(list_filter(string_split({_NORM}, ' '),
+             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
+          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
+      FROM documents),
+    scored AS (
+      SELECT *,
+        FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
+             + least(sw_ratio * 5.0, 1.0) * 0.3
+             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
+              ) * 1000) / 1000 AS quality_score
+      FROM feats)"""
 
 
 def _md5_long_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-# MinHash family i over base hash h = md5_long(s) % P: (a_i*h + b_i) % P.
-# Constants come from ml.dedup.perm_constants so SQL and Spark share one
-# definition; min over shingles = the signature component.
+# The md5-affine hash family of ml.dedup.affine_hashes as DuckDB text:
+# value i over base hash h = md5_long(key) % P is (a_i*h + b_i) % P, taken
+# % m for the Bloom filter (m = bits) and Count-Min (m = width).  The
+# constants come from ml.dedup.perm_constants, so SQL and Spark share one
+# definition and the oracles replay MinHash, Bloom and CMS bit-for-bit.
 _P = dedup.MERSENNE_P
 
 
-def _minhash_sql(i: int, k: int) -> str:
-    a, b = dedup.perm_constants(k)[i]
-    h = f"({_md5_long_sql('s')} % {_P})"
-    return f"list_min(list_transform(sh, s -> ({a} * {h} + {b}) % {_P}))"
+def _base_hash_sql(key: str) -> str:
+    return f"({_md5_long_sql(key)} % {_P})"
+
+
+def _affine_sql(h: str, k: int, m: int | None = None) -> list[str]:
+    """The k values of ``dedup.affine_hashes`` over the base hash ``h``,
+    an atomic SQL term (a column name or a parenthesized expression)."""
+    out = []
+    for a, b in dedup.perm_constants(k):
+        v = f"({a} * {h} + {b}) % {_P}"
+        out.append(v if m is None else f"({v}) % {m}")
+    return out
+
+
+# MinHash signature components over the shingle list ``sh``: the min of
+# each family over the shingles.  Component i depends only on i, so a
+# k-wide signature is the first k.
+_MINHASH_SQL = [
+    f"list_min(list_transform(sh, s -> {v}))"
+    for v in _affine_sql(_base_hash_sql("s"), 8)
+]
+
+
+def _bloom_filter_sql(src: str, key: str, n_bits: int, k: int) -> str:
+    """CTE ``filt(word, bits)``: ``ml.bloom.bloom_build`` of ``key`` over
+    ``src`` — k positions per non-NULL key, OR'd into 32-bit words."""
+    pos = ", ".join(_affine_sql(_base_hash_sql(key), k, n_bits))
+    return f"""filt AS (
+      SELECT pos // 32 AS word,
+             bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
+      FROM (SELECT unnest([{pos}]) AS pos FROM {src} WHERE {key} IS NOT NULL)
+      GROUP BY 1)"""
+
+
+def _cms_sketch_sql(src: str, key: str, depth: int, width: int) -> str:
+    """CTEs ``hashed(<key>, h)``, ``cells(row, bucket)`` and
+    ``sketch(row, bucket, cnt)``: ``ml.sketches.cms_build`` of the
+    column ``key`` of ``src``, NULL keys skipped."""
+    cells = " UNION ALL ".join(
+        f"SELECT {i} AS row, {v} AS bucket FROM hashed"
+        for i, v in enumerate(_affine_sql("h", depth, width))
+    )
+    return f"""hashed AS (
+      SELECT {key}, {_md5_long_sql(key)} % {_P} AS h
+      FROM {src} WHERE {key} IS NOT NULL),
+    cells AS ({cells}),
+    sketch AS (SELECT row, bucket, count(*) AS cnt FROM cells GROUP BY 1, 2)"""
 
 
 # --- exact dedup ---------------------------------------------------------------
@@ -76,10 +140,10 @@ def doc_fingerprint(spark, sf_dir):
     oracle=f"""
     WITH base AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents)
     SELECT doc_id,
-      {_minhash_sql(0, 4)} AS mh0,
-      {_minhash_sql(1, 4)} AS mh1,
-      {_minhash_sql(2, 4)} AS mh2,
-      {_minhash_sql(3, 4)} AS mh3
+      {_MINHASH_SQL[0]} AS mh0,
+      {_MINHASH_SQL[1]} AS mh1,
+      {_MINHASH_SQL[2]} AS mh2,
+      {_MINHASH_SQL[3]} AS mh3
     FROM base
     """,
 )
@@ -102,7 +166,7 @@ _LSH_CTES = f"""
       SELECT doc_id AS doc, {_SHINGLES} AS sh FROM documents),
     sigs AS (
       SELECT doc, sh,
-        [{", ".join(_minhash_sql(i, 8) for i in range(8))}] AS sig
+        [{", ".join(_MINHASH_SQL)}] AS sig
       FROM base),
     banded AS (
       SELECT doc, sh, b.band,
@@ -180,7 +244,7 @@ def dedup_minhash_lsh(spark, sf_dir):
       FROM documents),
     sigs AS (
       SELECT doc, sh, is_batch,
-        [{", ".join(_minhash_sql(i, 8) for i in range(8))}] AS sig
+        [{", ".join(_MINHASH_SQL)}] AS sig
       FROM base),
     banded AS (
       SELECT doc, is_batch, b.band,
@@ -1002,21 +1066,8 @@ def text_langid(spark, sf_dir):
 @register(
     "text_quality_score",
     oracle=f"""
-    WITH feats AS (
-      SELECT doc_id,
-        len(string_split({_NORM}, ' ')) AS n_tokens,
-        length(text) AS n_chars_m,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
-        CAST(len(list_filter(string_split({_NORM}, ' '),
-             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
-      FROM documents)
-    SELECT doc_id, n_tokens,
-      FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-           + least(sw_ratio * 5.0, 1.0) * 0.3
-           + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
-            ) * 1000) / 1000 AS quality_score
-    FROM feats
+    WITH {_QUALITY_CTES}
+    SELECT doc_id, n_tokens, quality_score FROM scored
     """,
 )
 def text_quality_score(spark, sf_dir):
@@ -1865,11 +1916,6 @@ def bpe_tokenize_stats(spark, sf_dir):
     )
 
 
-def _cms_bucket_sql(i: int, depth: int, width: int, h: str = "h") -> str:
-    a, b = dedup.perm_constants(depth)[i]
-    return f"((({a} * {h} + {b}) % {dedup.MERSENNE_P}) % {width})"
-
-
 _CMS_D, _CMS_W = 4, 256
 
 
@@ -1878,15 +1924,7 @@ _CMS_D, _CMS_W = 4, 256
     oracle=f"""
     WITH toks AS (
       SELECT unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
-    hashed AS (
-      SELECT tok, {_md5_long_sql('tok')} % {dedup.MERSENNE_P} AS h FROM toks),
-    cells AS (
-      {" UNION ALL ".join(
-          f"SELECT {i} AS row, {_cms_bucket_sql(i, 4, 256)} AS bucket FROM hashed"
-          for i in range(4)
-      )}),
-    sketch AS (
-      SELECT row, bucket, count(*) AS cnt FROM cells GROUP BY 1, 2),
+    {_cms_sketch_sql("toks", "tok", _CMS_D, _CMS_W)},
     tot AS (SELECT count(*) AS n FROM toks),
     exact AS (
       SELECT tok, count(*) AS exact_cnt, min(h) AS h
@@ -1894,9 +1932,8 @@ _CMS_D, _CMS_W = 4, 256
       ORDER BY exact_cnt DESC, tok LIMIT 20),
     probes AS (
       {" UNION ALL ".join(
-          f"SELECT tok, exact_cnt, {i} AS row,"
-          f" {_cms_bucket_sql(i, 4, 256)} AS bucket FROM exact"
-          for i in range(4)
+          f"SELECT tok, exact_cnt, {i} AS row, {v} AS bucket FROM exact"
+          for i, v in enumerate(_affine_sql("h", _CMS_D, _CMS_W))
       )}),
     est AS (
       SELECT p.tok, p.exact_cnt, min(s.cnt) AS est_cnt
@@ -2181,30 +2218,19 @@ _BLOOM_BITS = 1 << 14
 _BLOOM_K = 4
 
 
-def _bloom_pos_sql(h: str, i: int) -> str:
-    a, b = dedup.perm_constants(_BLOOM_K)[i]
-    return f"((({h}) * {a} + {b}) % {_P}) % {_BLOOM_BITS}"
-
-
 @register(
     "decontaminate_bloom",
     oracle=f"""
     WITH ev AS (
       SELECT DISTINCT unnest({_shingles_k_sql(5)}) AS gram
       FROM documents WHERE doc_id % 31 = 0),
-    evpos AS (
-      SELECT unnest([{", ".join(_bloom_pos_sql(f"{_md5_long_sql('gram')} % {_P}", i) for i in range(_BLOOM_K))}]) AS pos
-      FROM ev),
-    filt AS (
-      SELECT pos // 32 AS word,
-             bit_or(CAST(1 AS BIGINT) << CAST(pos % 32 AS INT)) AS bits
-      FROM evpos GROUP BY 1),
+    {_bloom_filter_sql("ev", "gram", _BLOOM_BITS, _BLOOM_K)},
     corp AS (
       SELECT doc_id, unnest({_shingles_k_sql(5)}) AS gram
       FROM documents WHERE doc_id % 31 <> 0),
     probe AS (
       SELECT doc_id, gram,
-        unnest([{", ".join(_bloom_pos_sql(f"{_md5_long_sql('gram')} % {_P}", i) for i in range(_BLOOM_K))}]) AS pos
+        unnest([{", ".join(_affine_sql(_base_hash_sql("gram"), _BLOOM_K, _BLOOM_BITS))}]) AS pos
       FROM corp),
     grams AS (
       SELECT doc_id, gram,
@@ -2248,22 +2274,7 @@ def decontaminate_bloom(spark, sf_dir):
 @register(
     "quality_budget_per_source",
     oracle=f"""
-    WITH feats AS (
-      SELECT doc_id, source,
-        len(string_split({_NORM}, ' ')) AS n_tokens,
-        length(text) AS n_chars_m,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
-        CAST(len(list_filter(string_split({_NORM}, ' '),
-             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
-      FROM documents),
-    scored AS (
-      SELECT doc_id, source,
-        FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-             + least(sw_ratio * 5.0, 1.0) * 0.3
-             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
-              ) * 1000) / 1000 AS quality_score
-      FROM feats),
+    WITH {_QUALITY_CTES},
     ranked AS (
       SELECT source, doc_id, quality_score,
              CAST(row_number() OVER (PARTITION BY source

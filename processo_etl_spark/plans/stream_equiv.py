@@ -31,11 +31,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from processo_etl_spark.columns import internal
-from processo_etl_spark.ml.dedup import MERSENNE_P, perm_constants
 from processo_etl_spark.operators.relational import dedup_keep_first
 from processo_etl_spark.plans import register
 from processo_etl_spark.plans.common import certify, t
-from processo_etl_spark.plans.mlops import _md5_long_sql, _NORM
+from processo_etl_spark.plans.events import SESSIONIZE_CERT_ORACLE
+from processo_etl_spark.plans.mlops import (
+    _QUALITY_CTES,
+    _bloom_filter_sql,
+    _cms_sketch_sql,
+)
 
 
 @register(
@@ -142,22 +146,7 @@ def stream_batch_equiv_enrich(spark, sf_dir):
 @register(
     "stream_batch_equiv_curate",
     oracle=f"""
-    WITH feats AS (
-      SELECT doc_id,
-        len(string_split({_NORM}, ' ')) AS n_tokens,
-        length(text) AS n_chars_m,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS punct,
-        CAST(len(list_filter(string_split({_NORM}, ' '),
-             x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS DOUBLE)
-          / CAST(greatest(len(string_split({_NORM}, ' ')), 1) AS DOUBLE) AS sw_ratio
-      FROM documents),
-    scored AS (
-      SELECT doc_id, n_tokens,
-        FLOOR((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4
-             + least(sw_ratio * 5.0, 1.0) * 0.3
-             + (1.0 - least(CAST(punct AS DOUBLE) / CAST(greatest(n_chars_m, 1) AS DOUBLE) * 10.0, 1.0)) * 0.3
-              ) * 1000) / 1000 AS quality_score
-      FROM feats),
+    WITH {_QUALITY_CTES},
     kept AS (SELECT * FROM scored WHERE quality_score >= 0.3)
     SELECT CAST(count(*) AS BIGINT) AS n_docs_stream,
            CAST(count(*) AS BIGINT) AS n_docs_batch,
@@ -190,29 +179,10 @@ def stream_batch_equiv_curate(spark, sf_dir):
     )
 
 
-def _bloom_word_sql(n_bits: int, k: int) -> str:
-    """SQL CTE body rebuilding ml/bloom._word_masks for the events
-    user_id key: k affine positions over the md5-prefix base hash, OR'd
-    into m/32 words — the same shared-constant discipline as the
-    MinHash/CMS oracles (constants from ml.dedup.perm_constants)."""
-    h = f"{_md5_long_sql('CAST(user_id AS VARCHAR)')} % {MERSENNE_P}"
-    pos = ", ".join(
-        f"((({a} * h) + {b}) % {MERSENNE_P}) % {n_bits}"
-        for a, b in perm_constants(k)
-    )
-    return f"""
-    hashed AS (SELECT {h} AS h FROM events),
-    pos AS (SELECT unnest([{pos}]) AS p FROM hashed),
-    filt AS (
-      SELECT p // 32 AS word,
-             bit_or(CAST(1 AS BIGINT) << CAST(p % 32 AS INT)) AS bits
-      FROM pos GROUP BY 1)"""
-
-
 @register(
     "stream_batch_equiv_bloom",
     oracle=f"""
-    WITH {_bloom_word_sql(1 << 16, 4)}
+    WITH {_bloom_filter_sql("events", "CAST(user_id AS VARCHAR)", 1 << 16, 4)}
     SELECT CAST(count(*) AS BIGINT) AS n_words_stream,
            CAST(count(*) AS BIGINT) AS n_words_batch,
            CAST(SUM(bit_count(bits)) AS BIGINT) AS n_set_bits,
@@ -221,8 +191,9 @@ def _bloom_word_sql(n_bits: int, k: int) -> str:
     """,
 )
 def stream_batch_equiv_bloom(spark, sf_dir):
-    """Certificate: the streaming Bloom build (bounded m/32-word state)
-    equals the batch ``bloom_build`` word-for-word, bit-for-bit — the
+    """Certificate: ``bloom_build`` drained from the events stream
+    (bounded m/32-word state) equals the same build over the events
+    table word-for-word, bit-for-bit — the
     oracle rebuilds the whole filter in SQL from the shared hash
     constants and pins the word count AND the exact number of set bits,
     so a single flipped bit anywhere in the 64 Kb filter is a hash
@@ -242,26 +213,10 @@ def stream_batch_equiv_bloom(spark, sf_dir):
     )
 
 
-def _cms_cells_sql(depth: int, width: int) -> str:
-    """SQL CTE body rebuilding ml/sketches._bucket_structs for the
-    events event_type key (same constants as the cms_heavy_hitters
-    oracle, same d×w grid as streaming/jobs.cms_sketch_stream)."""
-    h = f"{_md5_long_sql('event_type')} % {MERSENNE_P}"
-    rows = " UNION ALL ".join(
-        f"SELECT {i} AS row,"
-        f" ((({a} * h) + {b}) % {MERSENNE_P}) % {width} AS bucket FROM hashed"
-        for i, (a, b) in enumerate(perm_constants(depth))
-    )
-    return f"""
-    hashed AS (SELECT {h} AS h FROM events),
-    cells AS ({rows}),
-    sketch AS (SELECT row, bucket, count(*) AS cnt FROM cells GROUP BY 1, 2)"""
-
-
 @register(
     "stream_batch_equiv_cms",
     oracle=f"""
-    WITH {_cms_cells_sql(4, 256)}
+    WITH {_cms_sketch_sql("events", "event_type", 4, 256)}
     SELECT CAST(count(*) AS BIGINT) AS n_cells_stream,
            CAST(count(*) AS BIGINT) AS n_cells_batch,
            CAST(SUM(cnt) AS BIGINT) AS total_count,
@@ -270,10 +225,11 @@ def _cms_cells_sql(depth: int, width: int) -> str:
     """,
 )
 def stream_batch_equiv_cms(spark, sf_dir):
-    """Certificate: the streaming Count-Min build (bounded d·w state)
-    equals the batch ``cms_build`` cell-for-cell — the oracle rebuilds
-    the sketch in SQL and pins the occupied-cell count and total mass
-    (= depth × |events|), so one miscounted cell anywhere in the 4×256
+    """Certificate: ``cms_build`` drained from the events stream
+    (bounded d·w state) equals the same build over the events table
+    cell-for-cell — the oracle rebuilds the sketch in SQL and pins the
+    occupied-cell count and total mass (= depth × the non-NULL keys),
+    so one miscounted cell anywhere in the 4×256
     grid is a hash red."""
     from processo_etl_spark.ml import sketches
     from processo_etl_spark.streaming import jobs
@@ -400,27 +356,7 @@ def stream_batch_equiv_media(spark, sf_dir):
     )
 
 
-@register(
-    "stream_batch_equiv_sessionize_tws",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, ts,
-        CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-               OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-             THEN 1 ELSE 0 END AS new_session
-      FROM events),
-    batch AS (
-      SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-             count(*) AS n_events
-      FROM seq GROUP BY user_id)
-    SELECT CAST(count(*) AS BIGINT) AS n_users_stream,
-           CAST(count(*) AS BIGINT) AS n_users_batch,
-           CAST(SUM(n_sessions) AS BIGINT) AS total_sessions,
-           CAST(SUM(n_events) AS BIGINT) AS total_events,
-           CAST(0 AS BIGINT) AS n_mismatch
-    FROM batch
-    """,
-)
+@register("stream_batch_equiv_sessionize_tws", oracle=SESSIONIZE_CERT_ORACLE)
 def stream_batch_equiv_sessionize_tws(spark, sf_dir):
     """Certificate: the UN-GATED transformWithStateInPandas sessionizer
     surface (Spark 4 typed-state API where its protobuf runtime exists;

@@ -98,6 +98,47 @@ SESSION_STATE_SCHEMA = (
 )
 
 
+def _fold_sessions(user_id, state, pdfs, gap_seconds: int, watermark_s: float = 0.0):
+    """The gap-session fold of both stateful sessionizers: merge a user's
+    new events (``pdfs``, pandas frames with a ``ts`` column) into its
+    state ``(starts, ends, n_events, closed)`` — None for a new user.
+
+    Each event is a [t, t] interval and intervals within
+    ``gap_seconds`` merge; interval-merge is order-independent, so the
+    result equals the batch ``sessionize_gap`` plan for ANY arrival
+    order across micro-batches.  With ``watermark_s`` > 0, intervals
+    whose end precedes (watermark − gap) can never merge with a
+    non-late event, so they fold into ``closed`` and leave the arrays.
+    Returns the new state and the user's one ``SESSION_OUTPUT_SCHEMA``
+    row as a pandas frame."""
+    import pandas as pd
+
+    starts, ends, n_events, closed = state if state is not None else ([], [], 0, 0)
+    intervals = [[s, e] for s, e in zip(starts, ends)]
+    for pdf in pdfs:
+        n_events += len(pdf)
+        intervals.extend([ts.timestamp(), ts.timestamp()] for ts in pdf["ts"])
+    merged: list[list[float]] = []
+    for iv in sorted(intervals):
+        if merged and iv[0] - merged[-1][1] <= gap_seconds:
+            merged[-1][1] = max(merged[-1][1], iv[1])
+        else:
+            merged.append(iv)
+    if watermark_s > 0:
+        closed += sum(1 for iv in merged if iv[1] + gap_seconds < watermark_s)
+        merged = [iv for iv in merged if iv[1] + gap_seconds >= watermark_s]
+    new_state = ([iv[0] for iv in merged], [iv[1] for iv in merged], n_events, closed)
+    row = pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_sessions": [closed + len(merged)],
+            "n_events": [n_events],
+            "n_open": [len(merged)],
+        }
+    )
+    return new_state, row
+
+
 def sessionize_stateful(
     events: DataFrame,
     gap_seconds: int = 1800,
@@ -108,64 +149,27 @@ def sessionize_stateful(
     built-in window operators can't express).
 
     State per user = the MERGED SESSION INTERVALS (start/end arrays) +
-    event count.  Each event is a [t, t] interval; intervals within
-    ``gap_seconds`` merge.  Interval-merge is order-independent, so the
-    result equals the batch ``sessionize_gap`` plan for ANY arrival
-    order across micro-batches — a last-timestamp fold undercounts
-    sessions whenever a later batch delivers earlier events (caught by
+    event count, folded by ``_fold_sessions``; interval-merge is
+    order-independent, where a last-timestamp fold undercounts sessions
+    whenever a later batch delivers earlier events (caught by
     tests/test_streaming.py's out-of-order multi-batch case).
 
     State is O(open sessions) per user.  ``finalize_by_watermark=True``
-    bounds it further: intervals whose end precedes (watermark −
-    gap) can never merge with a non-late event (any future event has
-    ts ≥ watermark > end + gap), so they fold into a ``closed`` counter
-    and leave the arrays — the state held per user is then only the
-    sessions still inside the lateness horizon.  Requires an upstream
-    ``withWatermark("ts", ...)``.
+    bounds it further: sessions that can no longer merge with a
+    non-late event (any future event has ts ≥ watermark > end + gap)
+    fold into a ``closed`` counter, so the state held per user is only
+    the sessions still inside the lateness horizon.  Requires an
+    upstream ``withWatermark("ts", ...)``.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fold(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            starts, ends, n_events, closed = state.get
-            intervals = [[s, e] for s, e in zip(starts, ends)]
-        else:
-            intervals, n_events, closed = [], 0, 0
-        new_points = []
-        for pdf in pdf_iter:
-            n_events += len(pdf)
-            new_points.extend(ts.timestamp() for ts in pdf["ts"])
-        merged: list[list[float]] = []
-        for iv in sorted(intervals + [[p, p] for p in new_points]):
-            if merged and iv[0] - merged[-1][1] <= gap_seconds:
-                merged[-1][1] = max(merged[-1][1], iv[1])
-            else:
-                merged.append(iv)
-        if finalize_by_watermark:
-            wm = state.getCurrentWatermarkMs() / 1000.0
-            if wm > 0:
-                settled = [iv for iv in merged if iv[1] + gap_seconds < wm]
-                closed += len(settled)
-                merged = [iv for iv in merged if iv[1] + gap_seconds >= wm]
-        state.update(
-            (
-                [iv[0] for iv in merged],
-                [iv[1] for iv in merged],
-                n_events,
-                closed,
-            )
+        wm = state.getCurrentWatermarkMs() / 1000.0 if finalize_by_watermark else 0.0
+        new_state, row = _fold_sessions(
+            key[0], state.get if state.exists else None, pdf_iter, gap_seconds, wm
         )
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_sessions": [closed + len(merged)],
-                "n_events": [n_events],
-                "n_open": [len(merged)],
-            }
-        )
+        state.update(new_state)
+        yield row
 
     return events.groupBy("user_id").applyInPandasWithState(
         fold,
@@ -363,68 +367,36 @@ def run_curate_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(curate_documents_stream(docs), "append")
 
 
-def cms_sketch_stream(events: DataFrame, depth: int = 4, width: int = 256) -> DataFrame:
-    """Streaming Count-Min build over event_type: the same fixed d×w
-    grid groupBy as the batch ``ml/sketches.cms_build``, running as an
-    incremental streaming aggregate — the state store holds at most
-    d·w counters NO MATTER the key cardinality or stream length, which
-    is the whole point of sketch-shaped streaming state (an exact
-    per-key count grows state unboundedly without a watermark).
-    """
-    from processo_etl_spark.ml.sketches import _bucket_structs
-
-    return (
-        events.select(
-            F.explode(
-                _bucket_structs(F.col("event_type"), depth, width)
-            ).alias("c")
-        )
-        .groupBy(F.col("c.row").alias("row"), F.col("c.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def run_cms_sketch_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the events source through the streaming sketch build; the
-    result is the full-corpus sketch, byte-identical to the batch build
-    (asserted in tests) because CMS cells are order-insensitive sums."""
+    """Drain the events source through the batch Count-Min build
+    (``ml/sketches.cms_build`` over event_type): a plain grouped
+    aggregate, so it runs as an incremental streaming aggregate whose
+    state holds at most d·w counters NO MATTER the key cardinality or
+    stream length.  The result is the full-corpus sketch, cell-identical
+    to the batch build because CMS cells are order-insensitive sums."""
+    from processo_etl_spark.ml import sketches
+
     return _drain(
-        cms_sketch_stream(read_events_stream(spark, sf_dir)),
+        sketches.cms_build(read_events_stream(spark, sf_dir), "event_type"),
         "complete",
     )
 
 
-def bloom_filter_stream(
-    events: DataFrame, key_col: str = "user_id", n_bits: int = 1 << 16, k: int = 4
-) -> DataFrame:
-    """Streaming Bloom-filter build over a key column: the same fixed
-    m/32-word grid groupBy as the batch ``ml/bloom.bloom_build``,
-    running as an incremental streaming aggregate — state is at most
-    m/32 words NO MATTER the key cardinality or stream length (the
-    same bounded-state argument as the streaming CMS).  The drained
-    filter merges with batch-built filters word-wise, so a live
-    membership index (yesterday's batch ∪ today's stream) needs no
-    raw-data reprocessing.
-    """
-    from processo_etl_spark.ml.bloom import _word_masks
-
-    return (
-        events.select(
-            F.explode(
-                _word_masks(F.col(key_col).cast("string"), k, n_bits)
-            ).alias("c")
-        )
-        .groupBy(F.col("c.word").alias("word"))
-        .agg(F.bit_or(F.col("c.mask")).alias("bits"))
-    )
-
-
 def run_bloom_filter_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the events source through the streaming Bloom build; the
-    result equals the batch ``bloom_build`` word-for-word (asserted in
-    tests) because bit-OR is order-insensitive and idempotent."""
+    """Drain the events source through the batch Bloom build
+    (``ml/bloom.bloom_build`` over user_id as a string): state is at
+    most m/32 words NO MATTER the key cardinality or stream length.  The
+    result equals the batch build word-for-word because bit-OR is
+    order-insensitive and idempotent, and it merges word-wise with
+    batch-built filters (``bloom_merge``), so a live membership index
+    (yesterday's batch ∪ today's stream) needs no raw-data
+    reprocessing."""
+    from processo_etl_spark.ml import bloom
+
     return _drain(
-        bloom_filter_stream(read_events_stream(spark, sf_dir)),
+        bloom.bloom_build(
+            read_events_stream(spark, sf_dir), F.col("user_id").cast("string")
+        ),
         "complete",
     )
 
@@ -452,7 +424,7 @@ def sessionize_tws(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     output equals ``sessionize_stateful`` row-for-row on any input
     split (asserted in tests/test_streaming.py when the TWS runtime is
     available — see ``_has_tws_runtime``) — the operator's semantics
-    live in the interval fold, not the API.
+    live in the interval fold (``_fold_sessions``), not the API.
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -480,40 +452,14 @@ def sessionize_tws(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
             self._state = handle.getValueState("sessions", state_schema)
 
         def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            if self._state.exists():
-                starts, ends, n_events, closed = self._state.get()
-                intervals = [[s, e] for s, e in zip(starts, ends)]
-            else:
-                intervals, n_events, closed = [], 0, 0
-            new_points = []
-            for pdf in rows:
-                n_events += len(pdf)
-                new_points.extend(ts.timestamp() for ts in pdf["ts"])
-            merged: list[list[float]] = []
-            for iv in sorted(intervals + [[p, p] for p in new_points]):
-                if merged and iv[0] - merged[-1][1] <= gap_seconds:
-                    merged[-1][1] = max(merged[-1][1], iv[1])
-                else:
-                    merged.append(iv)
-            self._state.update(
-                (
-                    [iv[0] for iv in merged],
-                    [iv[1] for iv in merged],
-                    n_events,
-                    closed,
-                )
+            new_state, row = _fold_sessions(
+                key[0],
+                self._state.get() if self._state.exists() else None,
+                rows,
+                gap_seconds,
             )
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_sessions": [closed + len(merged)],
-                    "n_events": [n_events],
-                    "n_open": [len(merged)],
-                }
-            )
+            self._state.update(new_state)
+            yield row
 
         def close(self) -> None:
             pass

@@ -1507,6 +1507,25 @@ def test_cms_build_estimate_and_merge(spark):
     assert whole.exceptAll(merged).count() == 0
 
 
+def test_cms_build_skips_null_keys(spark):
+    """A NULL key increments no cell: the sketch of ["a", NULL, "b",
+    "a"] is the sketch of its non-NULL keys, every cell has a bucket,
+    and a NULL key estimates as 0."""
+    from processo_etl_spark.ml import sketches
+
+    df = spark.createDataFrame([("a",), (None,), ("b",), ("a",)], "k string")
+    got = sketches.cms_build(df, "k", depth=4, width=64).collect()
+    want = sketches.cms_build(df.na.drop(), "k", depth=4, width=64).collect()
+    assert all(r["bucket"] is not None for r in got)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert sum(r["cnt"] for r in got) == 4 * 3
+    nulls = spark.createDataFrame([(None,)], "k string")
+    est = sketches.cms_estimate(
+        nulls, spark.createDataFrame(got), "k", depth=4, width=64
+    )
+    assert [r["est_cnt"] for r in est.collect()] == [0]
+
+
 def test_text_classifier_learns_separable_vocab(spark):
     """LR over hashed BoW must learn a perfectly separable vocabulary
     split (distinct token sets per class) and score unseen docs from
@@ -1858,6 +1877,19 @@ def test_margin_bitext_mining_prefers_true_pair_over_hub(spark):
     assert got[1]["margin"] > 1.0 and got[2]["margin"] > 1.0
 
 
+def _bloom_hits(items, keys, n_bits, k):
+    """Probe ``items.k`` against the filter of ``keys.k`` through the one
+    probe path: the one-row word relation and ``bloom_hit_expr``."""
+    from processo_etl_spark.ml import bloom
+
+    filt = bloom.bloom_words_relation(keys, "k", n_bits=n_bits, k=k)
+    hit = bloom.bloom_hit_expr(F.col(bloom.WORDS_COL), F.col("k"), n_bits, k)
+    return [
+        r["hit"]
+        for r in items.crossJoin(F.broadcast(filt)).select(hit.alias("hit")).collect()
+    ]
+
+
 def test_bloom_zero_false_negatives_and_merge(spark):
     from processo_etl_spark.ml import bloom
 
@@ -1868,8 +1900,7 @@ def test_bloom_zero_false_negatives_and_merge(spark):
         assert 0 <= r["word"] < (1 << 12) // 32
         assert 0 < r["bits"] < (1 << 32)
     # zero false negatives: every inserted key must probe True
-    probed = bloom.bloom_probe(keys, filt, "k", n_bits=1 << 12, k=4)
-    assert all(r["might_contain"] for r in probed.collect())
+    assert all(_bloom_hits(keys, keys, 1 << 12, 4))
     # merge == build over the union (bit-for-bit)
     a = spark.createDataFrame([(f"key-{i}",) for i in range(100)], ["k"])
     b = spark.createDataFrame([(f"key-{i}",) for i in range(100, 200)], ["k"])
@@ -1881,12 +1912,24 @@ def test_bloom_zero_false_negatives_and_merge(spark):
     assert {(r["word"], r["bits"]) for r in merged.collect()} == whole
     # absent keys mostly miss (FP rate far below 50% at this load factor)
     absent = spark.createDataFrame([(f"other-{i}",) for i in range(200)], ["k"])
-    fp = sum(
-        1
-        for r in bloom.bloom_probe(absent, filt, "k", n_bits=1 << 12, k=4).collect()
-        if r["might_contain"]
-    )
+    fp = sum(_bloom_hits(absent, keys, 1 << 12, 4))
     assert fp < 50
+
+
+def test_bloom_build_skips_null_keys_and_null_probe_reads_false(spark):
+    """A NULL key sets no bit: the filter of ["a", NULL, "b"] is the
+    filter of its non-NULL keys, with no NULL word, and probing a NULL
+    key reads False rather than NULL."""
+    from processo_etl_spark.ml import bloom
+
+    keys = spark.createDataFrame([("a",), (None,), ("b",)], "k string")
+    got = bloom.bloom_build(keys, "k", n_bits=1 << 12, k=4).collect()
+    want = bloom.bloom_build(keys.na.drop(), "k", n_bits=1 << 12, k=4).collect()
+    assert all(r["word"] is not None for r in got)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    nulls = spark.createDataFrame([(None,)], "k string")
+    assert _bloom_hits(nulls, keys, 1 << 12, 4) == [False]
+    assert _bloom_hits(keys.na.drop(), keys, 1 << 12, 4) == [True, True]
 
 
 def test_excise_spans_fully_covered_doc_empty(spark):
@@ -2175,12 +2218,14 @@ def test_join_bloom_pruned_equals_plain_join(spark):
     pruned = bloom.join_bloom_pruned(left, right, "lk", "rk", n_bits=1 << 12, k=4)
     assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, plain.collect()))
     # the filter really prunes: far fewer left rows survive than entered
-    words = bloom.bloom_filter_words(
-        right.selectExpr("CAST(rk AS STRING) AS rk"), "rk", n_bits=1 << 12, k=4
+    kept = sum(
+        _bloom_hits(
+            left.selectExpr("CAST(lk AS STRING) AS k"),
+            right.selectExpr("CAST(rk AS STRING) AS k"),
+            1 << 12,
+            4,
+        )
     )
-    kept = left.filter(
-        bloom.bloom_hit_expr(words, F.col("lk").cast("string"), 1 << 12, 4)
-    ).count()
     assert 20 <= kept < 100  # 20 true keys + few FPs, ≪ 500
 
 

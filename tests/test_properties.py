@@ -392,6 +392,49 @@ def test_connected_components_equal_union_find(spark, pairs):
 
 
 @settings(max_examples=5, deadline=None)
+@given(HOSTILE_TEXTS, TEXTS)
+@example(["日本語 テキスト", "emoji 🙂 text", "\t", "ß Ω ﬁ"], ["", " "])
+def test_hash_family_spark_equals_duckdb(spark, hostile, texts):
+    """Under ANSI mode, on arbitrary keys (NULL, empty, blank, unicode)
+    the Spark owner of the md5-affine family (``dedup.affine_hashes``)
+    and its SQL owner (``plans/mlops._affine_sql``, run in DuckDB) give
+    the same k values bit for bit: the MinHash family (no ``% m``),
+    Bloom positions (``% bits``) and Count-Min buckets (``% width``)."""
+    import duckdb
+
+    from processo_etl_spark.plans.mlops import _affine_sql, _base_hash_sql
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    keys = list(enumerate(hostile + texts))
+    shapes = [("minhash", 8, None), ("bloom", 4, 1 << 14), ("cms", 4, 256)]
+    h = dedup.md5_long(F.col("k")) % F.lit(dedup.MERSENNE_P)
+    got = {
+        r["i"]: tuple(tuple(r[name]) for name, _, _ in shapes)
+        for r in spark.createDataFrame(keys, "i long, k string")
+        .select(
+            "i",
+            *[
+                F.array(*dedup.affine_hashes(h, k, m)).alias(name)
+                for name, k, m in shapes
+            ],
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE keys (i BIGINT, k VARCHAR)")
+    con.executemany("INSERT INTO keys VALUES (?, ?)", keys)
+    lists = ", ".join(
+        f"[{', '.join(_affine_sql(_base_hash_sql('k'), k, m))}]" for _, k, m in shapes
+    )
+    want = {
+        row[0]: tuple(tuple(v) for v in row[1:])
+        for row in con.execute(f"SELECT i, {lists} FROM keys").fetchall()
+    }
+    con.close()
+    assert got == want
+
+
+@settings(max_examples=5, deadline=None)
 @given(TEXTS)
 def test_bloom_never_false_negative(spark, texts):
     """Zero false negatives for ARBITRARY key strings: every inserted
@@ -399,15 +442,14 @@ def test_bloom_never_false_negative(spark, texts):
     from processo_etl_spark.ml import bloom
 
     keys = spark.createDataFrame([(t,) for t in texts], ["k"])
-    filt = bloom.bloom_build(keys, "k", n_bits=1 << 10, k=3)
-    probed = bloom.bloom_probe(keys, filt, "k", n_bits=1 << 10, k=3)
-    assert all(r["might_contain"] for r in probed.collect())
-    # the literal-array form agrees with the join form on every key
-    words = bloom.bloom_filter_words(keys, "k", n_bits=1 << 10, k=3)
-    lit = keys.select(
-        "k", bloom.bloom_hit_expr(words, F.col("k"), 1 << 10, 3).alias("hit")
+    filt = bloom.bloom_words_relation(keys, "k", n_bits=1 << 10, k=3)
+    probed = keys.crossJoin(F.broadcast(filt)).select(
+        "k",
+        bloom.bloom_hit_expr(F.col(bloom.WORDS_COL), F.col("k"), 1 << 10, 3).alias(
+            "hit"
+        ),
     )
-    assert all(r["hit"] for r in lit.collect())
+    assert all(r["hit"] for r in probed.collect())
 
 
 @settings(max_examples=5, deadline=None)
