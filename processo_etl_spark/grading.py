@@ -1,10 +1,17 @@
-"""Grading-contract definitions shared by the local harness and the
+"""The grading contract and the one Spark⇔DuckDB differential
+comparison, shared by the local sweep (tools/check_oracles.py) and the
 test suite.
+
+:func:`oracle_connection` is the one DuckDB setup the oracle SQL runs
+against, and :func:`compare` grades one query's Spark result against
+its oracle: output-schema rules, the HUGEINT ban, the driver
+canonicalizer probe, then columns, row count and the value multiset
+(:func:`table_multiset`), in that order.
 
 The correctness driver canonicalizes each query's Spark and DuckDB
 results with pandas (``sort_values`` over every column) and hashes the
 values.  Three output-schema rules follow; :func:`output_violations` is
-the ONE check of all three, run by tools/check_oracles.py and
+the ONE check of all three, run by :func:`compare` and
 tests/test_scale.py's plan audit, so widening a ban is a single edit.
 They hold for every registered query; the raw-double rule's per-column
 allow-list below is the only carve-out:
@@ -31,7 +38,9 @@ allow-list below is the only carve-out:
 
 from __future__ import annotations
 
+import math
 import re
+from decimal import Decimal
 
 
 def decimal_output_cols(schema) -> list[str]:
@@ -237,3 +246,165 @@ def output_violations(name: str, schema, oracle_sql: str) -> list[str]:
             "(ROUND both sides or allow-list in grading.py)"
         )
     return out
+
+
+# --- the differential comparison -------------------------------------------------
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per catalog table over
+    ``sf_dir``'s parquet files: the world every oracle SQL reads.  Keep
+    it alive while its relations are read (they weak-ref it)."""
+    import duckdb
+
+    from processo_etl_spark import catalog
+
+    con = duckdb.connect()
+    for t in catalog.TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{catalog.table_path(sf_dir, t)}'"
+        )
+    return con
+
+
+def norm_cell(v):
+    if isinstance(v, Decimal):
+        return ("dec", str(v))
+    if isinstance(v, float):
+        if math.isnan(v):
+            return ("f", "nan")
+        return ("f", repr(v))
+    if isinstance(v, bool):
+        return ("b", v)
+    if isinstance(v, (list, tuple)):
+        return ("l", tuple(norm_cell(x) for x in v))
+    return ("v", str(v))
+
+
+def _quantize12_cell(c):
+    """Re-round a norm_cell tag to 12 significant digits, RECURSIVELY.
+
+    Float cells nested inside array columns are tagged
+    ("l", (inner tags...)) by norm_cell — quantizing only top-level
+    ("f", ...) tags would leave an array<double> output failing on
+    1-ulp DECIMAL→DOUBLE cast noise at stress scale (a false FAIL).
+    nan stays "nan" (its string form compares fine)."""
+    if isinstance(c, tuple):
+        if c[0] == "f" and c[1] != "nan":
+            return ("f", f"{float(c[1]):.12g}")
+        if c[0] == "l":
+            return ("l", tuple(_quantize12_cell(x) for x in c[1]))
+    return c
+
+
+def table_multiset(cols, rows, quantize: bool = False):
+    """(sorted column names, {typed row: count}).  ``quantize`` rounds
+    float cells to 12 significant digits, for stress scales only:
+    DuckDB's DECIMAL→DOUBLE cast double-rounds (int128→double, then the
+    scale division) and lands 1 ulp off the correctly-rounded value once
+    the UNSCALED decimal exceeds 2^53 — measured on q1's sum_charge at
+    sf2.5: exact 70632264676.794900, Spark …6.7949 (correct), DuckDB
+    …6.79489."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    out = {}
+    for r in rows:
+        key = tuple(norm_cell(r[i]) for i in order)
+        if quantize:
+            # norm_cell tags floats as ("f", repr(v)); re-round to 12
+            # significant digits, descending into ("l", ...) arrays.
+            key = tuple(_quantize12_cell(c) for c in key)
+        out[key] = out.get(key, 0) + 1
+    return sorted(cols), out
+
+
+def hugeint_cols(columns, types) -> list[str]:
+    """Result columns DuckDB typed as HUGEINT/UHUGEINT (int128).
+
+    The grading hasher canonicalizes int128 differently
+    from Spark LongType, and the local DuckDB compare can't see it — so
+    the ban is structural on the oracle's result schema, mirroring the
+    DecimalType output ban."""
+    return [c for c, t in zip(columns, types) if "HUGEINT" in str(t).upper()]
+
+
+def driver_canon_probe(cols, rows) -> str | None:
+    """Emulate the grading driver's pandas canonicalization; return an
+    error string if it would crash.
+
+    This harness normalizes cells itself (``norm_cell``
+    tuple-izes lists), but the DRIVER canonicalizes with a raw pandas
+    ``DataFrame(...).sort_values(by=all columns)`` — which throws on
+    unhashable cells (lists/dicts) and on unorderable mixed-type object
+    columns.  Running the same operation here makes "local green ⇒
+    driver green" hold for the whole crash class, not just the types
+    the schema ban enumerates.
+    """
+    import pandas as pd
+
+    try:
+        pdf = pd.DataFrame(list(rows), columns=list(cols))
+        if len(pdf):
+            pdf.sort_values(by=sorted(pdf.columns), inplace=True, kind="mergesort")
+        return None
+    except Exception as e:  # noqa: BLE001
+        return f"{type(e).__name__}: {str(e)[:120]}"
+
+
+def decimal_cast_hazards(oracle_sql: str) -> list[str]:
+    """Operands of ORACLE-side decimal CASTs with a fractional scale
+    whose operand isn't ROUNDed.
+
+    Driver hash mismatches came from exactly this shape: tie
+    rounding of a raw double cast to DECIMAL is engine/version-dependent
+    on the driver's (version-unknown) DuckDB, while
+    ``CAST(ROUND(x, s) AS DECIMAL)`` is stable because the data is never
+    near a tie at its intent scale.  The Spark side is
+    version-pinned and deliberately uses a plain cast (plans/common.dec),
+    so the scan targets the oracle SQL text, where the hazard lives.  A
+    scale-0 cast (``DECIMAL(38,0)`` of an integer count) has no
+    fractional digit to round and is not flagged.
+    """
+    casts = re.finditer(
+        r"CAST\(\s*([A-Za-z_][\w.]*)\s+AS\s+DECIMAL\(\d+,(\d+)\)\)", oracle_sql, re.I
+    )
+    return sorted({m.group(1) for m in casts if int(m.group(2)) > 0})
+
+
+def compare(
+    name: str, sdf, srows, oracle_sql: str, con, quantize: bool = False
+) -> list[str]:
+    """Why query ``name``'s result (DataFrame ``sdf``, collected rows
+    ``srows``) fails its grading against ``oracle_sql`` run on ``con``
+    (:func:`oracle_connection`); empty when it passes.  The first
+    failing check gives the reasons, in this order: output-schema rules,
+    HUGEINT oracle columns, the driver-canonicalizer probe, column
+    names, row count, value multiset.  With no oracle (``""``) only the
+    schema rules apply.  ``quantize``: see :func:`table_multiset`."""
+    violations = output_violations(name, sdf.schema, oracle_sql)
+    if violations or not oracle_sql:
+        return violations
+    try:
+        rel = con.sql(oracle_sql)
+        huge = hugeint_cols(rel.columns, rel.types)
+        if huge:
+            return [
+                f"oracle HUGEINT output columns {huge} "
+                "(CAST the integer aggregate AS BIGINT)"
+            ]
+        dcols, drows = rel.columns, rel.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return [f"duckdb error {str(e)[:200]}"]
+    scols = sdf.columns
+    canon_err = driver_canon_probe(scols, srows) or driver_canon_probe(dcols, drows)
+    if canon_err:
+        return [f"driver-canonicalizer probe would crash: {canon_err}"]
+    sc, sm = table_multiset(scols, srows, quantize)
+    dc, dm = table_multiset(dcols, drows, quantize)
+    if sc != dc:
+        return [f"columns differ spark={sc} duck={dc}"]
+    if len(srows) != len(drows):
+        return [f"rowcount spark={len(srows)} duck={len(drows)}"]
+    if sm != dm:
+        diff = list(set(sm) ^ set(dm))[:2]
+        return [f"values differ, e.g. {str(diff)[:200]}"]
+    return []

@@ -7,7 +7,9 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.append(str(ROOT / "tools"))  # the tools import as plain modules
 
 from processo_etl_spark import session  # noqa: E402
 

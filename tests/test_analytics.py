@@ -1,15 +1,14 @@
 """Differential + semantic tests for the analytics heads
 (plans/analytics): each Spark plan runs against its DuckDB oracle at
-sf0.001 with the same multiset compare the local harness uses, plus
+sf0.001 through ``grading.compare``, the sweep's own comparison, plus
 hand-computed and simulated semantics for every head."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from processo_etl_spark import catalog, plans
+from processo_etl_spark import catalog, grading, plans
 from processo_etl_spark.plans import analytics
 
 QUERIES = plans.all_queries()
@@ -21,45 +20,12 @@ NAMES = sorted(
 SF = "/root/testdata/sf0.001"
 
 
-def _oracle_con():
-    con = duckdb.connect()
-    for tname in catalog.TABLES:
-        con.execute(
-            f"CREATE VIEW {tname} AS SELECT * FROM "
-            f"'{catalog.table_path(SF, tname)}'"
-        )
-    return con
-
-
-def _norm(v):
-    import datetime
-    from decimal import Decimal
-
-    if isinstance(v, Decimal):
-        return float(v)
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    return v
-
-
-def _multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    key = lambda r: tuple(_norm(r[i]) for i in order)  # noqa: E731
-    return sorted(cols), sorted(map(key, rows), key=repr)
-
-
 @pytest.mark.parametrize("name", NAMES)
 def test_head_matches_oracle(spark, name):
-    fn, oracle = QUERIES[name], ORACLES[name]
-    sdf = fn(spark, SF)
+    sdf = QUERIES[name](spark, SF)
     srows = sdf.collect()
-    scols = sdf.columns
-    con = _oracle_con()   # keep alive: the relation weak-refs it
-    res = con.sql(oracle)
-    dcols, drows = res.columns, res.fetchall()
-    assert _multiset(scols, [tuple(r) for r in srows]) == _multiset(
-        dcols, drows
-    ), f"{name}: Spark vs DuckDB multiset mismatch"
+    con = grading.oracle_connection(SF)
+    assert grading.compare(name, sdf, srows, ORACLES[name], con) == []
     assert len(srows) > 0
 
 

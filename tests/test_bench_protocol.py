@@ -4,17 +4,14 @@ tools/profile_queries.py."""
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import sys
-from pathlib import Path
 
 import bench
+import profile_queries
 from processo_etl_spark import plans
 from processo_etl_spark.plans import common
-
-TOOLS = Path(__file__).resolve().parents[1] / "tools"
 
 
 def test_headline_names_distinct_registered_queries():
@@ -79,20 +76,10 @@ def test_printed_line_fits_the_stdout_tail(spark):
     assert "queries_cold" not in json.loads(line)
 
 
-def _load_profile_queries():
-    spec = importlib.util.spec_from_file_location(
-        "profile_queries", TOOLS / "profile_queries.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_profile_queries_writes_plan_counters_and_samples(
     spark, tmp_path, monkeypatch, capsys
 ):
-    pq = _load_profile_queries()
-    monkeypatch.setattr(pq, "ROOT", tmp_path)
+    monkeypatch.setattr(profile_queries, "ROOT", tmp_path)
     sf_dir = bench.warm_dir(bench.DEFAULT_SF_DIR)
     monkeypatch.setattr(
         sys,
@@ -100,7 +87,7 @@ def test_profile_queries_writes_plan_counters_and_samples(
         ["profile_queries.py", "t", sf_dir, "q1_pricing_summary", "2"],
     )
     try:
-        assert pq.main() == 0
+        assert profile_queries.main() == 0
     finally:
         # The warm-up's clearCache un-persists the session's shared
         # corpus; drop its memo with it, as tests/test_persist_audit does.
@@ -115,7 +102,7 @@ def test_profile_queries_writes_plan_counters_and_samples(
     assert samples[0] == record["steady"]["q1_pricing_summary"]
     assert record["steady_min"]["q1_pricing_summary"] == min(samples)
     counters = record["counters"]["q1_pricing_summary"]
-    assert set(counters) == set(pq.COUNTERS)
+    assert set(counters) == set(profile_queries.COUNTERS)
     assert counters["jobs"] >= 1
     assert counters["stages"] >= 1 and counters["tasks"] >= counters["stages"]
     assert counters["input_bytes"] > 0

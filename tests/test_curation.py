@@ -1,14 +1,14 @@
 """Differential + semantic tests for the curation heads
 (plans/curation): each Spark plan against its DuckDB oracle at sf0.001
-(multiset compare), plus hand-computed semantics."""
+(``grading.compare``, the sweep's own comparison), plus hand-computed
+semantics."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from processo_etl_spark import catalog, plans
+from processo_etl_spark import grading, plans
 from processo_etl_spark.plans import curation
 
 QUERIES = plans.all_queries()
@@ -20,32 +20,12 @@ NAMES = sorted(
 SF = "/root/testdata/sf0.001"
 
 
-def _oracle_con():
-    con = duckdb.connect()
-    for tname in catalog.TABLES:
-        con.execute(
-            f"CREATE VIEW {tname} AS SELECT * FROM "
-            f"'{catalog.table_path(SF, tname)}'"
-        )
-    return con
-
-
-def _multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    key = lambda r: tuple(r[i] for i in order)  # noqa: E731
-    return sorted(cols), sorted(map(key, rows))
-
-
 @pytest.mark.parametrize("name", NAMES)
 def test_head_matches_oracle(spark, name):
-    fn, oracle = QUERIES[name], ORACLES[name]
-    sdf = fn(spark, SF)
-    srows = [tuple(r) for r in sdf.collect()]
-    con = _oracle_con()  # keep alive: the relation weak-refs it
-    res = con.sql(oracle)
-    assert _multiset(sdf.columns, srows) == _multiset(
-        res.columns, res.fetchall()
-    ), f"{name}: Spark vs DuckDB multiset mismatch"
+    sdf = QUERIES[name](spark, SF)
+    srows = sdf.collect()
+    con = grading.oracle_connection(SF)
+    assert grading.compare(name, sdf, srows, ORACLES[name], con) == []
     assert len(srows) > 0
 
 

@@ -1,4 +1,5 @@
-"""Docs stay mechanically in sync with the registry (VERDICT r4 #9)."""
+"""Docs stay mechanically in sync with the registry: every count they
+quote is derived, never hand-edited."""
 
 from pathlib import Path
 

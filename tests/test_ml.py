@@ -118,7 +118,7 @@ def test_build_dimension_auto_strategies(spark):
     small = star.build_dimension_auto(df.select("k1").distinct(), ["k1"], "id")
     assert sorted(r["id"] for r in small.collect()) == [1, 2, 3, 4]
     # Force the scalable path with a tiny threshold: still contiguous,
-    # ordered, deterministic 1..N (distributed rank, r2).
+    # ordered, deterministic 1..N (the distributed rank path).
     big = star.build_dimension_auto(df, ["k1", "k2"], "id", max_agg_rows=10)
     ids = sorted(r["id"] for r in big.collect())
     assert ids == list(range(1, 101))
@@ -524,8 +524,9 @@ def test_chunk_dedup_keeps_first_occurrence(spark):
 
 
 def test_simhash_banded_recall_guarantee(spark):
-    """Pigeonhole guarantee (VERDICT r3 #7): the 9-band blocked join finds
-    EVERY pair at hamming <= 8 — zero missed vs the all-pairs truth."""
+    """Pigeonhole guarantee (banding must lose no pair): the 9-band
+    blocked join finds EVERY pair at hamming <= 8 — zero missed vs the
+    all-pairs truth."""
     from processo_etl_spark import catalog
 
     docs = catalog.load(spark, "/root/testdata/sf0.001", "documents")
@@ -554,12 +555,13 @@ def test_simhash_banded_recall_guarantee(spark):
 
 
 def test_real_image_decode_runs_without_pillow(spark):
-    """REAL decode executes with no imaging library installed (VERDICT
-    r4 #4): every payload goes through the vendored stdlib PNG codec
-    (ml/png), which decodes real DEFLATE-compressed pixels.  Decoder
-    contract, row by row: a PNG yields the column means of its decoded
-    pixels; a non-PNG, empty or NULL payload — or a PNG whose CRC-valid
-    IDAT chunk is not a DEFLATE stream — yields ``_decode_image_stub``."""
+    """REAL decode executes with no imaging library installed (no
+    stub output where a real decoder can run): every payload goes
+    through the vendored stdlib PNG codec (ml/png), which decodes real
+    DEFLATE-compressed pixels.  Decoder contract, row by row: a PNG
+    yields the column means of its decoded pixels; a non-PNG, empty or
+    NULL payload — or a PNG whose CRC-valid IDAT chunk is not a DEFLATE
+    stream — yields ``_decode_image_stub``."""
     import struct
 
     from processo_etl_spark.ml import png
@@ -595,7 +597,7 @@ def test_real_image_decode_runs_without_pillow(spark):
 
 
 def test_png_decode_nonsquare_box_average():
-    """ADVICE r5: non-n×n inputs must be box-resized in BOTH dimensions
+    """Non-n×n inputs must be box-resized in BOTH dimensions
     (2-D integer-boundary box average), matching the documented
     '(box-resized) n_features square' contract — the old path averaged
     each column band over the full image height, so any vertical
@@ -687,7 +689,7 @@ def test_binary_file_source_to_real_decode_end_to_end(spark, tmp_path):
 
 
 def test_binary_media_truncated_png_null_dims(spark, tmp_path):
-    """ADVICE r6 guard: a signature-valid PNG truncated to 9–23 bytes
+    """Truncated-header guard: a signature-valid PNG truncated to 9–23 bytes
     must yield NULL width/height (the pre-fix parse ran substring() over
     1–3 bytes and conv(hex(...)) produced a garbage small integer)."""
     from processo_etl_spark.ml import multimodal, png
@@ -750,7 +752,7 @@ def test_write_png_corpus_idempotent_scan_keyed_by_filename(spark, tmp_path):
 
 
 def test_wav_pcm16_differential_vs_stdlib_wave():
-    """Cross-decoder differential (VERDICT r6 #7, the WAV analogue of
+    """Cross-decoder differential (an independent referee, the WAV analogue of
     the Pillow PNG differential): files written by the INDEPENDENT
     stdlib ``wave`` writer must unwrap to exactly the samples written,
     and our walker must agree with ``wave``'s own reader on params and
@@ -963,7 +965,8 @@ def test_binary_file_media_null_key_named_error(spark):
 
 def test_png_decoder_independent_encoder_shapes():
     """Spec-valid stream shapes an INDEPENDENT encoder may emit but our
-    own ``encode_gray`` never does (VERDICT r5 #7 hardening): the zlib
+    own ``encode_gray`` never does (a decoder must not be tested only on
+    its own encoder's output): the zlib
     stream split across multiple IDAT chunks, stored-block (level-0)
     zlib, maximum compression, and ancillary chunks between IHDR and
     IDAT.  Where Pillow exists the same streams are also cross-decoded
@@ -1632,13 +1635,15 @@ def test_chi2_drift_detects_planted_shift(spark):
     r2 = drift.chi2_token_drift(shifted, "text", F.col("ref"), n_buckets=64).collect()[0]
     assert r2["chi2"] > r["chi2"]
     assert r2["drift_detected"] is True     # disjoint vocab = maximal drift
-    # integer/float twin identity (review r9): chi2_micros is the exact
+    # integer/float twin identity (the two must not drift apart):
+    # chi2_micros is the exact
     # per-bucket-floored Sum (1e6*d^2) DIV (na*nb*rb); it trails 1e6*chi2
     # by at most 1 micro per hit bucket (+1 for the chi2 ROUND itself).
     # A broken algebraic collapse would diverge by orders of magnitude
     # while Spark and the oracle still agreed with each other.
     deficit = 1e6 * r2["chi2"] - r2["chi2_micros"]
-    # lower bound −1, not 0 (ADVICE r9): every per-bucket term happens
+    # lower bound −1, not 0 (floor noise may go either way): every
+    # per-bucket term happens
     # to be exactly double-representable in THIS fixture, but a fixture
     # whose exact micros sit on an integer boundary could see float-
     # fold/ROUND error of ~0.5 micro push the deficit slightly negative.
@@ -1648,7 +1653,7 @@ def test_chi2_drift_detects_planted_shift(spark):
 def test_chi2_drift_overflow_guard_raises(spark):
     """The decimal(38,0) chi2_micros intermediate overflows once
     na·nb ≥ 1e16, where Spark's non-ANSI decimal arithmetic NULLs the
-    product and F.sum would silently drop the bucket (ADVICE r9).  The
+    product and F.sum would silently drop the bucket.  The
     runtime guard must raise instead — exercised via a tiny threshold
     (the real 1e16 default needs ~1e8 tokens/slice)."""
     import pytest as _pytest
@@ -1933,7 +1938,7 @@ def test_bloom_build_skips_null_keys_and_null_probe_reads_false(spark):
 
 
 def test_excise_spans_fully_covered_doc_empty(spark):
-    """r14 array-local excision: a document whose every token is covered
+    """Array-local excision: a document whose every token is covered
     by cross-document duplicated trigrams survives as an EMPTY
     clean_text row (the old token-stream plan restored it via a join;
     the array plan must keep it through the left join + array_except)."""
@@ -1956,7 +1961,7 @@ def test_excise_spans_fully_covered_doc_empty(spark):
 
 
 def test_bloom_contamination_null_text_row_survives(spark):
-    """r14 explode_outer rewrite: the corpus-id restore join is gone, so
+    """explode_outer rewrite: the corpus-id restore join is gone, so
     every corpus document — including a NULL-text one — must still
     surface exactly once from the per-doc aggregate alone.  (A NULL
     text shingles to the single empty-string gram via concat_ws's
@@ -2021,7 +2026,7 @@ def test_bloom_reserved_filter_column_keeps_caller_words(spark):
 
 
 def test_pagerank_broadcast_and_shuffle_modes_bitequal(spark):
-    """r14 vertex-mirroring dispatch: the broadcast-mode superstep
+    """Vertex-mirroring dispatch: the broadcast-mode superstep
     (rank vector mirrored to dst-partitioned edges, zero shuffle) and
     the shuffle-mode superstep (src-partitioned edges) must produce
     BIT-IDENTICAL ranks — the exact integer combine is
@@ -2861,7 +2866,7 @@ def test_png_chunk_walk_truncation_always_valueerror():
     with pytest.raises(ValueError):
         png.text_chunks(p[: len(p) - 1])
     # a cut at an EXACT chunk boundary before IEND is still a
-    # truncation — a full walk must end at IEND (ADVICE r7)
+    # truncation — a full walk must end at IEND
     with pytest.raises(ValueError, match="IEND"):
         list(png.iter_chunks(p[: len(p) - 12]))  # drop the IEND chunk
     with pytest.raises(ValueError, match="IEND"):
@@ -2926,7 +2931,7 @@ def test_audio_silence_trim_voiced_tail_past_grid(spark):
 
 def test_dedup_incremental_batch_exercises_all_three_paths(spark):
     """The incremental-dedup certificate is only meaningful if every
-    phase carries rows (review r11: the first fixture split left the
+    phase carries rows (the first fixture split left the
     anti-join vacuous — nothing ever straddled it, so a broken join key
     would still have passed).  On sf0.001: batch = 100 new + 72
     re-crawls; 57 re-crawls hit the store (anti-join drops), 15

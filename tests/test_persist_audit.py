@@ -1,11 +1,12 @@
-"""Persist-leak audit (VERDICT r14 #5): caller-owned persists must be
-bounded — either released inside the operator (pagerank unpersists its
-edge/node/routed caches) or deduplicated by Spark's CacheManager so that
-REPEATED invocations of the same query never grow the cached-relation
-set (the bench's blessed sharing model: identical plans share the SAME
-InMemoryRelation entry, and ``session.persist_once`` skips the persist
-call when the plan is already cached, so Spark never logs "Asked to
-cache already cached data").
+"""Persist-leak audit (cached relations must not pile up): caller-owned
+persists must be bounded — either released inside the operator
+(pagerank unpersists its edge/node/routed caches) or deduplicated by
+Spark's CacheManager so that REPEATED invocations of the same query
+never grow the cached-relation set (the bench's blessed sharing model:
+identical plans share the SAME InMemoryRelation entry, and
+``session.persist_once`` skips the persist call when the plan is
+already cached, so Spark never logs "Asked to cache already cached
+data").
 
 Documented caller-owned persists that intentionally outlive their call
 (one cache entry per distinct plan, session-lifetime, relied on by the

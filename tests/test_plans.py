@@ -4,11 +4,9 @@ loses a pushdown or a broadcast fails CI."""
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import functions as F
 
-from processo_etl_spark import plans
+from processo_etl_spark import grading, plans
 from processo_etl_spark.sources import readers
 
 SF = "/root/testdata/sf0.001"
@@ -92,36 +90,56 @@ def test_registry_order_is_registration_order():
     assert list(__spark_entry__.queries()) == list(queries)
 
 
-def _load_check_oracles():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "check_oracles",
-        Path(__file__).resolve().parents[1] / "tools" / "check_oracles.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_hugeint_ban_catches_uncast_integer_sum():
-    """The q12 loss class (r9): DuckDB types bare SUM(INTEGER) as
+    """The loss class q12 once hit: DuckDB types bare SUM(INTEGER) as
     HUGEINT and the DRIVER hasher canonicalizes int128 differently from
     Spark LongType, while the local DuckDB compare passes — so
-    check_oracles must fail structurally on the oracle's result schema.
+    the grading must fail structurally on the oracle's result schema.
     A deliberately uncast SUM fixture is flagged; the BIGINT-cast twin
     is clean."""
     import duckdb
 
-    co = _load_check_oracles()
     con = duckdb.connect()
     bad = con.sql("SELECT SUM(x) AS s FROM (VALUES (1), (2)) t(x)")
-    assert co.hugeint_cols(bad.columns, bad.types) == ["s"]
+    assert grading.hugeint_cols(bad.columns, bad.types) == ["s"]
     ok = con.sql(
         "SELECT CAST(SUM(x) AS BIGINT) AS s, AVG(x) AS a "
         "FROM (VALUES (1), (2)) t(x)"
     )
-    assert co.hugeint_cols(ok.columns, ok.types) == []
+    assert grading.hugeint_cols(ok.columns, ok.types) == []
+
+
+def test_compare_rejects_cells_of_another_type(spark):
+    """The comparison types every cell: a Spark bigint against a DuckDB
+    double, or a Spark double against a DuckDB DECIMAL, fails on the
+    values even where the numbers are equal; a HUGEINT oracle column
+    fails on the schema.  The typed twin of each passes."""
+    import duckdb
+
+    con = duckdb.connect()
+    sdf = spark.createDataFrame([(1, 1.5)], "k bigint, v double")
+    rows = sdf.collect()
+
+    def grade(oracle):
+        return grading.compare("t", sdf, rows, oracle, con)
+
+    assert grade("SELECT CAST(1 AS BIGINT) AS k, 1.5::DOUBLE AS v") == []
+    int_vs_double = grade("SELECT 1.0::DOUBLE AS k, 1.5::DOUBLE AS v")
+    assert [r.split(",")[0] for r in int_vs_double] == ["values differ"]
+    dec_vs_double = grade("SELECT CAST(1 AS BIGINT) AS k, 1.5::DECIMAL(2,1) AS v")
+    assert [r.split(",")[0] for r in dec_vs_double] == ["values differ"]
+    huge = grade("SELECT SUM(x) AS k, 1.5::DOUBLE AS v FROM (VALUES (1)) t(x)")
+    assert len(huge) == 1
+    assert huge[0].startswith("oracle HUGEINT output columns ['k']")
+
+
+def test_decimal_cast_hazard_skips_scale_zero():
+    """An unrounded cast to a fractional-scale DECIMAL is flagged; a
+    scale-0 cast of an integer count is exact and is not."""
+    hazards = grading.decimal_cast_hazards
+    assert hazards("SELECT CAST(c AS DECIMAL(38,0)) AS n") == []
+    assert hazards("SELECT CAST(p AS DECIMAL(12,2)) AS x") == ["p"]
+    assert hazards("SELECT CAST(ROUND(p, 2) AS DECIMAL(12,2)) AS x") == []
 
 
 def test_registry_oracles_emit_no_hugeint_columns():
@@ -129,22 +147,11 @@ def test_registry_oracles_emit_no_hugeint_columns():
     DuckDB (sf0.001 views, no execution needed — .types comes from the
     bound plan) and assert none emits an int128 column.  Mirrors the
     DecimalType output ban; q12's class can never re-enter silently."""
-    import duckdb
-
-    from processo_etl_spark import catalog
-
-    co = _load_check_oracles()
-    con = duckdb.connect()
-    sf_dir = "/root/testdata/sf0.001"
-    for tname in catalog.TABLES:
-        con.execute(
-            f"CREATE VIEW {tname} AS SELECT * FROM "
-            f"'{catalog.table_path(sf_dir, tname)}'"
-        )
+    con = grading.oracle_connection("/root/testdata/sf0.001")
     offenders = {}
     for name, sql in plans.all_oracles().items():
         rel = con.sql(sql)
-        cols = co.hugeint_cols(rel.columns, rel.types)
+        cols = grading.hugeint_cols(rel.columns, rel.types)
         if cols:
             offenders[name] = cols
     assert not offenders, f"oracles with HUGEINT output columns: {offenders}"
@@ -183,40 +190,40 @@ def test_rollup_merge_is_order_insensitive_and_matches_direct(spark):
 
 
 def test_quantize12_multiset_tolerance():
-    """--quantize12 (r10 sf2.5 conviction): the 1-ulp DuckDB
+    """--quantize12 (an sf2.5 stress finding): the 1-ulp DuckDB
     DECIMAL->DOUBLE cast artifact (70632264676.79489 vs the correctly
     rounded 70632264676.7949) hashes equal under quantization, while a
     12th-significant-digit difference still mismatches, exact mode
     still catches the ulp, and non-float cells are untouched."""
-    co = _load_check_oracles()
     cols = ["x", "n"]
     spark_rows = [(70632264676.7949, 7)]
     duck_rows = [(70632264676.79489, 7)]
-    exact_s = co.table_multiset(cols, spark_rows)
-    exact_d = co.table_multiset(cols, duck_rows)
+    exact_s = grading.table_multiset(cols, spark_rows)
+    exact_d = grading.table_multiset(cols, duck_rows)
     assert exact_s != exact_d                      # exact mode: ulp caught
-    q_s = co.table_multiset(cols, spark_rows, quantize=True)
-    q_d = co.table_multiset(cols, duck_rows, quantize=True)
+    q_s = grading.table_multiset(cols, spark_rows, quantize=True)
+    q_d = grading.table_multiset(cols, duck_rows, quantize=True)
     assert q_s == q_d                              # quantized: artifact forgiven
     # a genuine 12th-digit error is NOT forgiven
-    off = co.table_multiset(cols, [(70632264686.7949, 7)], quantize=True)
+    off = grading.table_multiset(cols, [(70632264686.7949, 7)], quantize=True)
     assert off != q_s
     # integers / strings / NaN never change representation
     mixed_cols = ["a", "b", "c"]
     mixed = [(5, "x", float("nan"))]
-    assert co.table_multiset(mixed_cols, mixed, quantize=True) == \
-        co.table_multiset(mixed_cols, mixed)
-    # ADVICE r10: floats NESTED in array cells get the same tolerance —
+    assert grading.table_multiset(mixed_cols, mixed, quantize=True) == \
+        grading.table_multiset(mixed_cols, mixed)
+    # floats NESTED in array cells get the same tolerance —
     # a 1-ulp cast artifact inside array<double> must hash equal under
     # quantization (it was a false FAIL before the recursive re-round),
     # including arrays nested two deep.
     arr_cols = ["v"]
     arr_s = [([70632264676.7949, [1.25, 70632264676.7949]],)]
     arr_d = [([70632264676.79489, [1.25, 70632264676.79489]],)]
-    assert co.table_multiset(arr_cols, arr_s) != co.table_multiset(arr_cols, arr_d)
-    assert co.table_multiset(arr_cols, arr_s, quantize=True) == \
-        co.table_multiset(arr_cols, arr_d, quantize=True)
+    assert grading.table_multiset(arr_cols, arr_s) != \
+        grading.table_multiset(arr_cols, arr_d)
+    assert grading.table_multiset(arr_cols, arr_s, quantize=True) == \
+        grading.table_multiset(arr_cols, arr_d, quantize=True)
     # a genuine nested 12th-digit error is still caught
     arr_off = [([70632264686.7949, [1.25, 70632264676.7949]],)]
-    assert co.table_multiset(arr_cols, arr_off, quantize=True) != \
-        co.table_multiset(arr_cols, arr_s, quantize=True)
+    assert grading.table_multiset(arr_cols, arr_off, quantize=True) != \
+        grading.table_multiset(arr_cols, arr_s, quantize=True)

@@ -104,7 +104,7 @@ def test_dp_binomial_noisy_counts_replayable(spark):
 def test_dp_binomial_noisy_counts_null_keys_independent(spark):
     """NULL-bearing group keys get DISTINCT, non-null noise: ('a', NULL)
     and (NULL, 'a') must not share a noise key (concat_ws would have
-    collapsed both to 'a' — ADVICE r7), and each replays from the
+    collapsed both to 'a'), and each replays from the
     chr(0)-sentinel encoding."""
     import hashlib
 

@@ -1,4 +1,4 @@
-"""Unit tests for the r8 profiling/maintenance/binary-ANN tranche:
+"""Unit tests for the profiling, maintenance and binary-ANN operators:
 quality/profile, operators/maintenance, operators/graph.kcore_peel,
 ml/similarity.sign_pack_words + hamming_topk."""
 

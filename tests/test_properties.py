@@ -205,7 +205,7 @@ def test_packing_conserves_tokens_any_sizes(spark, token_sizes):
 def test_concat_split_stats_matches_simulation(spark, sizes):
     """concat_split_stats equals a direct pure-Python simulation of the
     token stream for arbitrary doc lengths (zeros and an empty corpus
-    included — review r9's empty-frame contract)."""
+    included — the empty-frame contract)."""
     from pyspark.sql import functions as F
 
     from processo_etl_spark.ml import packing
@@ -585,7 +585,7 @@ def test_ewma_per_key_property_matches_sequential_fold(spark, xs):
     st.sampled_from([0.25, 0.5, 0.9]),
 )
 def test_ewma_chunked_property_matches_sequential_fold(spark, xs, alpha):
-    """The O(L) chunked affine-composition EWMA (VERDICT r8 #3's scale
+    """The O(L) chunked affine-composition EWMA (the long-key scale
     path) matches the pure-Python sequential recurrence to float
     noise, with chunk=3 so every example crosses several chunk
     boundaries and exercises the (a, b) chain fold.  Two keys verify
@@ -961,7 +961,7 @@ def test_ewma_fixed_point_property_matches_integer_reference(spark, xs):
     e = None
     for i, x in enumerate(xs):
         # half-away-from-zero to match Spark F.round / DuckDB ROUND on
-        # non-negative inputs; Python round() is half-even (ADVICE r8)
+        # non-negative inputs; Python round() is half-even
         v = math.floor(x * 10**8 + 0.5)
         e = v if e is None else (3 * e + v) >> 2
         assert got[i] == e / 10**8, (i, x)

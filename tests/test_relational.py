@@ -320,8 +320,8 @@ def test_skew_report_hand_computed(spark):
     assert r["top2_share"] == 7 / 9
     assert r["skew_factor"] == 6.0 * 4 / 9  # hottest key vs mean
     # cov = ROUND(sqrt(K*sum(c^2) - N^2)/N, 9) with sum(c^2)=39 — the
-    # r8 raw-double-fold convention: the K·Σc²−N² multiply-subtract is
-    # FMA-contractible, so the emitted cov is quantized (SCALE.md r8)
+    # raw-double-fold convention: the K·Σc²−N² multiply-subtract is
+    # FMA-contractible, so the emitted cov is quantized (SCALE.md)
     assert r["cov"] == round(math.sqrt(4 * 39 - 81) / 9, 9)
 
 

@@ -1,7 +1,7 @@
 """Comments and docstrings say what the code does and why, not which
-review round asked for it: no ``VERDICT r4 #7``, ``ADVICE r9``,
-``review r11`` or ``(r14)`` tag anywhere in the package, the tools, the
-bench or the driver entry point."""
+review round asked for it: no round tag (a review name followed by a
+round number, or a bare round number in parentheses) anywhere in the
+package, the tools, the tests, the bench or the driver entry point."""
 
 from __future__ import annotations
 
@@ -15,6 +15,7 @@ ROOT = Path(__file__).resolve().parents[1]
 PATHS = [
     *sorted((ROOT / "processo_etl_spark").rglob("*.py")),
     *sorted((ROOT / "tools").rglob("*.py")),
+    *sorted((ROOT / "tests").rglob("*.py")),
     ROOT / "bench.py",
     ROOT / "__spark_entry__.py",
 ]
@@ -24,7 +25,7 @@ TAG = re.compile(r"\b(?:VERDICT|ADVICE|[Rr]eview) r\d+|(?<![\w.])r\d{1,2}(?!\w)"
 
 def _prose(src: str):
     """(line, text) of every comment and docstring line in ``src`` —
-    code may still name a column ``r1`` or a CTE ``r0``."""
+    code may still name a column or a CTE after a round number."""
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
         if tok.type == tokenize.COMMENT:
             yield tok.start[0], tok.string

@@ -165,17 +165,17 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         # recall certificate) cross-attached — linear scalar attach;
         # the ANN search itself is the certified cell-equi-join plan.
         "ann_index_incremental_update",
-        # r15: the Bloom filter's dense word array as a ONE-ROW
+        # the Bloom filter's dense word array as a ONE-ROW
         # relation (bloom_words_relation) cross-attached under the
         # corpus gram stream / the pruned join's left side — the same
         # linear scalar-attach shape; replaced the per-pass driver
-        # collect (VERDICT r14 #3: no collects in a query path).
+        # collect (no collects in a query path).
         "decontaminate_bloom",
         "join_bloom_pruned_orders",
     }
     # Unpartitioned ranking/analytic windows move the WHOLE input through
     # one task (Exchange SinglePartition under a Window).  Only the
-    # documented exact-parity reference twin may do that (VERDICT r1 #4).
+    # documented exact-parity reference twin may do that.
     allow_global_window = {
         "window_revenue_deciles_global",
         # the cum-before-group base is a global ordered window over the
@@ -189,11 +189,12 @@ def test_plan_audit_no_cartesian_no_python_rowudf(spark):
         # groupBys on the bounded bucket grid.
         "quantile_daily_histogram_merge",
     }
-    # Output-schema guard (VERDICT r5 #1): the grading driver's pandas
+    # Output-schema guard: the grading driver's pandas
     # canonicalizer throws on unhashable cells, so every registry output
     # column must be scalar — no array/map/struct — and no DecimalType
-    # (r2 hasher lesson).
-    # The raw-double-fold guard (r7 drift lesson, VERDICT r7 #2) rides
+    # (the driver hashes Spark and DuckDB decimals differently).
+    # The raw-double-fold guard (a fold once drifted one ULP on the
+    # driver's DuckDB) rides
     # along: a multi-term float-reduction oracle may not hash a raw
     # double — ROUND on both sides or an explicit grading.py allow-list
     # entry.  One check: processo_etl_spark/grading.output_violations.
@@ -306,8 +307,8 @@ def test_raw_double_fold_guard_semantics():
     rec = "WITH RECURSIVE r AS (SELECT 1.0 AS e UNION ALL SELECT e*0.5 FROM r)\n"
     assert raw_double_fold_hazards("q", rec + "SELECT e AS ewma FROM r", ["ewma"]) == ["ewma"]
     assert raw_double_fold_hazards("q", rec + "SELECT ROUND(e, 6) AS ewma FROM r", ["ewma"]) == []
-    # a trailing ROUND sub-expression must NOT mask a raw fold (review
-    # r8 false negative), in either operand order
+    # a trailing ROUND sub-expression must NOT mask a raw fold (a
+    # former false negative), in either operand order
     assert raw_double_fold_hazards("q", fold + "SELECT s + ROUND(z, 6) AS s FROM t", ["s"]) == ["s"]
     assert raw_double_fold_hazards("q", fold + "SELECT ROUND(z, 6) + s AS s FROM t", ["s"]) == ["s"]
     # ...and CAST(ROUND(...) AS type) is wrapped, not a false positive —

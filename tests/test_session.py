@@ -3,12 +3,12 @@ failure paths.  Pure-python — no Spark session."""
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import subprocess
 import sys
 
+import bench_scaling
 from processo_etl_spark import session
 
 
@@ -42,35 +42,24 @@ def test_default_driver_memory_cap_and_override(monkeypatch, tmp_path):
     assert session.default_driver_memory(str(small)) == "3g"
 
 
-def _bench_scaling():
-    path = os.path.join(os.path.dirname(__file__), "..", "tools", "bench_scaling.py")
-    spec = importlib.util.spec_from_file_location("bench_scaling", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_bench_scaling_default_cpus_fit_host():
-    counts = [int(c) for c in _bench_scaling().default_cpus().split(",")]
+    counts = [int(c) for c in bench_scaling.default_cpus().split(",")]
     usable = len(os.sched_getaffinity(0))
     assert max(counts) == usable and 1 <= min(counts) <= usable
 
 
 def test_bench_scaling_reports_failed_run(monkeypatch, capsys):
-    mod = _bench_scaling()
-
     def failing(cmd, **kwargs):
         return subprocess.CompletedProcess(cmd, 3, stdout="", stderr="JVM died")
 
-    monkeypatch.setattr(mod.subprocess, "run", failing)
-    monkeypatch.setattr(mod.sys, "argv", ["bench_scaling.py", "q1_pricing_summary"])
-    assert mod.main() == 1
+    monkeypatch.setattr(bench_scaling.subprocess, "run", failing)
+    monkeypatch.setattr(bench_scaling.sys, "argv", ["bench_scaling.py", "q1_pricing_summary"])
+    assert bench_scaling.main() == 1
     err = capsys.readouterr().err
     assert "exit 3" in err and "JVM died" in err
 
 
 def test_bench_scaling_ratio_guards_zero_times(monkeypatch, capsys):
-    mod = _bench_scaling()
     steady = {"4": {"a": 1.0, "b": 0.0, "c": 2.0}, "1": {"a": 2.0, "b": 1.0, "c": 0.0}}
 
     def fake(cmd, **kwargs):
@@ -78,10 +67,10 @@ def test_bench_scaling_ratio_guards_zero_times(monkeypatch, capsys):
         line = json.dumps({"cpus": int(cpus), "steady": steady[cpus], "cold": {}})
         return subprocess.CompletedProcess(cmd, 0, stdout=line + "\n", stderr="")
 
-    monkeypatch.setattr(mod.subprocess, "run", fake)
+    monkeypatch.setattr(bench_scaling.subprocess, "run", fake)
     monkeypatch.setenv("SPARK_GRAFT_SCALE_CPUS", "4,1")
-    monkeypatch.setattr(mod.sys, "argv", ["bench_scaling.py", "a,b,c"])
-    assert mod.main() == 0
+    monkeypatch.setattr(bench_scaling.sys, "argv", ["bench_scaling.py", "a,b,c"])
+    assert bench_scaling.main() == 0
     art = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert art["ratio_low_over_high"] == {"a": 2.0}
 

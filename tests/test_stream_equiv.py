@@ -19,15 +19,15 @@ CERT_HEADS = [
     "stream_batch_equiv_cms",
     "stream_batch_equiv_ewma",
     "stream_batch_equiv_sessionize_tws",
-    # r12 addendum: the binaryFile-stream ingest/decode surface, with a
+    # the binaryFile-stream ingest/decode surface, with a
     # closed-form pixel-mass oracle binding the decoded content.
     "stream_batch_equiv_media",
 ]
 
 
 def test_certificates_registered_and_oracle_backed():
-    """All eight r12 certificates are registered WITH oracles, so the
-    differential sweep grades them against DuckDB (VERDICT r11 #4)."""
+    """All eight certificates are registered WITH oracles, so the
+    differential sweep grades them against DuckDB."""
     queries = plans.all_queries()
     oracles = plans.all_oracles()
     for name in CERT_HEADS:
@@ -37,7 +37,7 @@ def test_certificates_registered_and_oracle_backed():
 
 
 def test_disagree_counts_one_sided_nulls(spark):
-    """ADVICE r11 regression, generalized: a row where exactly one
+    """One-sided NULL regression, generalized: a row where exactly one
     side's VALUE is NULL while the join key matched must count as a
     mismatch — plain `!=` yields NULL there, the OR stays NULL, and
     sum() would silently skip the exact corruption class the

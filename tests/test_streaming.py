@@ -316,7 +316,7 @@ def test_stream_cms_sketch_equals_batch_build(spark):
 
 
 def test_sessionize_tws_or_twin_runs_everywhere(spark):
-    """The TWS sessionizer is UN-GATED (VERDICT r4 #6): where the
+    """The TWS sessionizer is UN-GATED (no feature-flag skip): where the
     protobuf runtime exists this compares transformWithStateInPandas
     against the applyInPandasWithState twin row-for-row (same
     interval-merge fold); where it does not, the public entry point

@@ -163,7 +163,7 @@ def test_ewma_fixed_point_matches_integer_reference(spark):
                 continue
             # half-away-from-zero (what Spark F.round / DuckDB ROUND do
             # for these non-negative inputs) — Python round() is
-            # half-EVEN and diverges exactly on .5 ties (ADVICE r8)
+            # half-EVEN and diverges exactly on .5 ties
             v = math.floor(x * 10**8 + 0.5)
             e = v if e is None else (3 * e + v) >> 2
             f = x if f is None else 0.75 * f + 0.25 * x
@@ -185,7 +185,7 @@ def test_ewma_fixed_point_rejects_non_binary_alpha():
 
 def test_ewma_chunked_rejects_bad_params():
     """chunk <= 0 would produce negative chunk ids that silently drop
-    rows at the chunk-start join (review r9) — reject up front."""
+    rows at the chunk-start join — reject up front."""
     import pytest
 
     from processo_etl_spark.operators import temporal
@@ -298,7 +298,7 @@ def test_peak_concurrency_half_open_semantics(spark):
 
 
 def test_ewma_chunked_certificate_head(spark):
-    """The r10 driver head ewma_user_value_chunked: one certificate row
+    """The driver head ewma_user_value_chunked: one certificate row
     whose integers match the DuckDB closed form (Σ n, #keys, Σ⌈n/16⌉)
     and whose booleans pin the chunked path inside the property-tested
     deviation bounds against BOTH referee implementations."""

@@ -364,7 +364,7 @@ def test_label_propagation_ignores_self_loops(spark):
 
 
 def test_label_propagation_broadcast_and_shuffle_modes_equal(spark):
-    """r15 vertex-mirroring dispatch (ported from pagerank): the
+    """Vertex-mirroring dispatch (ported from pagerank): the
     broadcast-label layout (node-partitioned neighbor view, zero
     shuffle per round) and the shuffled layout (nbr-partitioned) must
     produce IDENTICAL labels — all-integer votes, so mode choice can
